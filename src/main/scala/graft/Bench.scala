@@ -219,7 +219,9 @@ object Bench {
     // ordering we tried), so: one untimed full-corpus warm run, then
     // interleaved small/big/small/big measurements, best-of-3 per level.
     val bigCpus = smallCpus * 4
-    val benchOut = "/tmp/graft_bench_out"
+    // per-process scratch: a fixed path let two concurrent bench processes
+    // overwrite each other's output mid-job
+    val benchOut = Files.createTempDirectory("graft_bench_out").toString
     def runOnce(cores: Int): Double = {
       val s = newSession(cores)
       val sec = timedExtract(s, corpusPath, benchOut)
@@ -231,7 +233,7 @@ object Bench {
     // sample that FITS the window (the host probes taken with the sample
     // still qualify it either way)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val (secSmall, secBig) =
+    val (secSmall, secBig) = try {
       if (localCluster) {
         // cluster mode: each session forks FRESH executor JVMs, so the
         // thread-mode interleaving (new session per measurement) would
@@ -254,7 +256,7 @@ object Bench {
         val pairs = (0 until reps).map(_ => (runOnce(smallCpus), runOnce(bigCpus)))
         (pairs.map(_._1).min, pairs.map(_._2).min)
       }
-    deleteRecursively(new java.io.File(benchOut))
+    } finally deleteRecursively(new java.io.File(benchOut))
 
     // ---- operator queries at local[cpus] (after the scaling phase: the
     // query mix bloats the shared JVM's heap and skews later measurements)

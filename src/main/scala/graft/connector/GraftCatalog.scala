@@ -151,8 +151,9 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     *
     * No data file is touched by any of them — at 10^12 turns that is the
     * only acceptable cost. Old snapshots keep reading correctly: the scan
-    * resolves parquet columns by physical name and surfaces logical names
-    * ([[SnapshotTableMeta.toPhysical]]/[[SnapshotTableMeta.toLogical]]).
+    * resolves parquet columns by physical name
+    * ([[SnapshotTableMeta.toPhysical]]) and, rows being positional,
+    * surfaces them under the table schema's logical names.
     * Type changes are still rejected (a widening read is engine-specific;
     * migrate by rewrite). The table key (`conv_id`, `turn_idx`) and the
     * stats column `ts` are immutable — bucketing, manifest pruning and

@@ -1,6 +1,5 @@
 package graft.connector
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import graft.table.SnapshotTable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -10,8 +9,6 @@ import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder}
 import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import java.nio.file.{Files, Paths}
-import scala.jdk.CollectionConverters._
 
 /** Iceberg-style SQL metadata tables over the snapshot format:
   *
@@ -70,21 +67,13 @@ object SnapshotMetaTables {
     val table = SnapshotTable.open(dir)
     val cur = table.currentSnapshotId.getOrElse(-1L)
     val staged = table.stagedIds.toSet
-    val mapper = new ObjectMapper()
     table.snapshotIds.map { id =>
-      val lines = Files.readAllLines(
-        Paths.get(dir, "manifests", s"snap-$id.json")).asScala.filter(_.nonEmpty)
-      val nodes = lines.map(mapper.readTree)
-      val parent = nodes.headOption.map(_.get("parentId").asLong()).getOrElse(-1L)
-      val buckets = nodes.headOption.map(_.get("buckets").asInt()).getOrElse(-1)
+      val m = SnapshotTable.readManifest(dir, id)
       // MOR delete key-sets are counted as file-sets but their key counts
       // are not turns
-      val entries = nodes.filterNot(_.has("tombstone"))
-      val dataEntries = entries.filterNot(n =>
-        n.has("kind") && n.get("kind").asText() == "delete")
       new GenericInternalRow(Array[Any](
-        id, parent, buckets, entries.size,
-        dataEntries.map(_.get("turns").asLong()).sum,
+        id, m.parentId, m.bucketCount.getOrElse(-1), m.entries.size,
+        m.entries.filter(_.kind == "data").map(_.turns).sum,
         id == cur, staged(id)))
     }
   }

@@ -252,27 +252,12 @@ object SnapshotTableMeta {
         filters.flatMap(go)
     }
 
-  /** Overlay a PHYSICAL schema (what data files / manifest entries carry)
-    * with the logical mapping: renamed columns surface under their current
-    * logical name, dropped columns vanish. Identity without a mapping. */
-  def toLogical(dir: String, physical: StructType): StructType =
-    mapping(dir) match {
-      case None => physical
-      case Some(ms) =>
-        val byPhys = ms.map(m => m.phys -> m).toMap
-        StructType(physical.fields.flatMap(f => byPhys.get(f.name) match {
-          case Some(m) if m.dropped => None
-          case Some(m)              => Some(f.copy(name = m.name))
-          case None                 => Some(f)
-        }))
-    }
-
   def exists(dir: String): Boolean = Files.exists(file(dir))
 }
 
-/** One manifest line, parsed driver-side (Jackson — no Spark job at
-  * planning time; Iceberg likewise reads manifests on the driver). `maxTsMs`
-  * is widened by +1 s: the manifest formats ts at second granularity, so the
+/** The connector's view of one manifest line
+  * ([[graft.table.SnapshotTable.readManifest]] parses it). `maxTsMs` is
+  * widened by +1 s: the manifest formats ts at second granularity, so the
   * recorded max FLOORS the true max — an overlap test against the raw value
   * could prune a file-set whose last rows sit inside the truncated second.
   * `minTsMs` floors too, which only widens the range (safe). */
@@ -287,43 +272,15 @@ object SnapshotManifest {
 
   /** Bucket count of a snapshot, including tombstone-only (empty)
     * manifests — the count a delete-everything table keeps resolving with. */
-  def numBucketsAt(dir: String, snapshotId: Long): Option[Int] = {
-    val f = Paths.get(dir, "manifests", s"snap-$snapshotId.json")
-    if (!Files.exists(f)) None
-    else {
-      val mapper = new ObjectMapper()
-      Files.readAllLines(f).asScala.iterator.filter(_.nonEmpty)
-        .map(mapper.readTree).collectFirst {
-          case n if n.has("buckets") => n.get("buckets").asInt()
-        }
-    }
-  }
+  def numBucketsAt(dir: String, snapshotId: Long): Option[Int] =
+    if (!Files.exists(Paths.get(dir, "manifests", s"snap-$snapshotId.json"))) None
+    else SnapshotTable.readManifest(dir, snapshotId).numBuckets
 
   def read(dir: String, snapshotId: Long): Seq[ManifestEntry] = {
-    val f = Paths.get(dir, "manifests", s"snap-$snapshotId.json")
-    require(Files.exists(f), s"snapshot $snapshotId does not exist in $dir")
-    val mapper = new ObjectMapper()
-    Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
-      // tombstone lines mark a published-but-empty (delete-everything)
-      // snapshot — no entries, but the manifest must exist and carry buckets
-      .filterNot(l => mapper.readTree(l).has("tombstone"))
-      .map { line =>
-      val n = mapper.readTree(line)
-      val buckets =
-        if (n.has("buckets")) n.get("buckets").asInt()
-        else -1 // pre-field manifest: resolved below from max(bucket)+1
-      ManifestEntry(
-        n.get("bucket").asInt(), n.get("path").asText(), n.get("runId").asText(),
-        n.get("turns").asLong(),
-        tsMs(n.get("minTs").asText()), tsMs(n.get("maxTs").asText()) + 1000L,
-        if (n.has("schema")) n.get("schema").asText() else "", buckets,
-        if (n.has("kind")) n.get("kind").asText() else "data")
-    } match {
-      case es if es.exists(_.numBuckets < 0) =>
-        val nb = es.map(_.bucket).max + 1
-        es.map(e => if (e.numBuckets < 0) e.copy(numBuckets = nb) else e)
-      case es => es
-    }
+    val m = SnapshotTable.readManifest(dir, snapshotId)
+    val nb = m.bucketCount.getOrElse(0) // None only when there are no entries
+    m.entries.map(e => ManifestEntry(e.bucket, e.path, e.runId, e.turns,
+      tsMs(e.minTs), tsMs(e.maxTs) + 1000L, e.schema, nb, e.kind))
   }
 }
 

@@ -205,7 +205,7 @@ private[graft] object SnapshotWriterUtil {
     val table = new SnapshotTable(dir, numBuckets)
     val schemaDdl = schema.catalogString
     val entries = merged.toSeq.sortBy(_._1).map { case (b, s) =>
-      table.BucketEntry(b, s"$dataPath/bucket=$b", runId,
+      SnapshotTable.BucketEntry(b, s"$dataPath/bucket=$b", runId,
         s.turns, s.blocksKept, s.blocksDropped, s.charsEmitted,
         TsFmt.format(Instant.ofEpochMilli(s.minTsUs / 1000L)),
         TsFmt.format(Instant.ofEpochMilli(s.maxTsUs / 1000L)), schemaDdl)

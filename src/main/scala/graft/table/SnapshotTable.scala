@@ -31,12 +31,18 @@ import scala.jdk.CollectionConverters._
   *    last).
   *  - Resume: a restarted run asks [[committedBuckets]] and processes only
   *    the complement (anti-join of input buckets vs committed — SURVEY §2.10).
+  *  - Planning happens on the driver, as in Iceberg: the manifest is parsed
+  *    with Jackson ([[SnapshotTable.readManifest]], the one reader of the
+  *    format) and data is read under the schema each entry recorded, so
+  *    choosing the files of a read launches no Spark job and a point lookup
+  *    runs exactly one (the scan).
   *
   * Reference precedent for at-least-once + idempotent naming: unique upload
   * names `/root/reference/src/controller/webapp.py:19-22`; batch-id matched
   * scatter/gather `src/extras/weinman/interface/linepredictor.py:32-51`.
   */
 final class SnapshotTable(val dir: String, val numBuckets: Int) {
+  import SnapshotTable.BucketEntry
 
   private def manifestsDir: Path = Paths.get(dir, "manifests")
   private def currentFile: Path = Paths.get(dir, "CURRENT")
@@ -50,12 +56,6 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val h = XxHash64Function.hash(UTF8String.fromString(convId), StringType, 42L)
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
-
-  final case class BucketEntry(
-      bucket: Int, path: String, runId: String,
-      turns: Long, blocksKept: Long, blocksDropped: Long, charsEmitted: Long,
-      minTs: String, maxTs: String, schema: String,
-      kind: String = "data") // "data" | "delete" (merge-on-read key file-set)
 
   def currentSnapshotId: Option[Long] =
     if (Files.exists(currentFile))
@@ -74,8 +74,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       s""""schema":"${esc(e.schema)}"""" +
       (if (e.kind == "data") "}" else s""","kind":"${esc(e.kind)}"}""")
 
-  /** All bucket entries of the live snapshot (empty if none). Parsed with
-    * Spark's JSON reader — the manifest is data. */
+  /** All bucket entries of the live snapshot (empty if none), planned on
+    * the driver: one Jackson parse of the manifest, no Spark job. `spark`
+    * is not needed for that and is kept for the callers' signature. */
   def committedEntries(spark: SparkSession): Seq[BucketEntry] =
     currentSnapshotId match {
       case None     => Seq.empty
@@ -85,29 +86,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   /** Bucket entries of a SPECIFIC snapshot — time travel: older manifests
     * stay on disk (until [[expireSnapshots]]), so any historical snapshot
     * remains readable. */
-  def entriesAt(spark: SparkSession, snapshotId: Long): Seq[BucketEntry] = {
-    val f = manifestsDir.resolve(s"snap-$snapshotId.json")
-    require(Files.exists(f), s"snapshot $snapshotId does not exist in $dir")
-    import spark.implicits._
-    val raw = spark.read.json(f.toString)
-    // a tombstone-only manifest (delete-everything snapshot) has no bucket
-    // column: the snapshot is published and EMPTY
-    if (!raw.columns.contains("bucket")) return Seq.empty
-    val noTomb = if (raw.columns.contains("tombstone")) raw.filter(col("tombstone").isNull)
-                 else raw
-    // pre-schema-tracking manifests carry no `schema` field: treat as "";
-    // pre-MOR manifests carry no `kind` (all entries are data)
-    val withSchema = if (noTomb.columns.contains("schema")) noTomb
-             else noTomb.withColumn("schema", lit(""))
-    val df = if (withSchema.columns.contains("kind"))
-               withSchema.withColumn("kind", coalesce(col("kind"), lit("data")))
-             else withSchema.withColumn("kind", lit("data"))
-    df.select("bucket", "path", "runId", "turns", "blocksKept",
-        "blocksDropped", "charsEmitted", "minTs", "maxTs", "schema", "kind")
-      .as[(Long, String, String, Long, Long, Long, Long, String, String, String, String)]
-      .collect().toSeq
-      .map(t => BucketEntry(t._1.toInt, t._2, t._3, t._4, t._5, t._6, t._7, t._8, t._9, t._10, t._11))
-  }
+  def entriesAt(spark: SparkSession, snapshotId: Long): Seq[BucketEntry] =
+    SnapshotTable.readManifest(dir, snapshotId).entries
 
   def committedBuckets(spark: SparkSession): Set[Int] =
     committedEntries(spark).map(_.bucket).toSet
@@ -418,11 +398,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       s"staged snapshot $snapshotId does not exist in $dir")
     require(Files.exists(stagedMarker(snapshotId)),
       s"snapshot $snapshotId is not staged (already published, or a foreign claim)")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val parent = Files.readAllLines(m).asScala.iterator.filter(_.nonEmpty)
-      .map(mapper.readTree).collectFirst {
-        case n if n.has("parentId") => n.get("parentId").asLong()
-      }.getOrElse(-1L)
+    val parent = SnapshotTable.readManifest(dir, snapshotId).parentId
     val cur = currentSnapshotId.getOrElse(-1L)
     require(parent == cur,
       s"staged snapshot $snapshotId has parent $parent but CURRENT is $cur — " +
@@ -474,8 +450,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       delEntries: Seq[BucketEntry]): DataFrame =
     if (delEntries.isEmpty) df
     else df.join(
-      spark.read.parquet(delEntries.map(_.path): _*)
-        .select(col("conv_id"), col("turn_idx")),
+      spark.read.schema(SnapshotTable.DeleteKeySchema)
+        .parquet(delEntries.map(_.path): _*),
       Seq("conv_id", "turn_idx"), "left_anti")
 
   /** The catalog's field-id column mapping from TABLE_META.json, parsed
@@ -523,32 +499,31 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       } catch { case _: Exception => None }
     }
 
-  /** Data rows of an entry set under the widest compatible schema —
-    * WITHOUT delete application (callers decide). */
+  /** Data rows of an entry set under the schema the manifest recorded —
+    * WITHOUT delete application (callers decide). A schema handed to the
+    * parquet reader spares the footer-inference job, so the only job of a
+    * read is its scan; inference is left to legacy entries that recorded
+    * no schema. */
   private def dataRead(spark: SparkSession, dataEntries: Seq[BucketEntry]): DataFrame = {
     val ddls = dataEntries.map(_.schema).filter(_.nonEmpty).distinct
-    if (ddls.size > 1)
-      // additive evolution left old and new file-sets in one snapshot:
-      // read under the WIDEST schema — parquet null-fills the columns an
-      // old file doesn't carry (no mergeSchema footer sweep needed; the
-      // manifest already knows the answer)
-      SnapshotTable.widestSchema(ddls) match {
-        case Some(w) =>
-          return spark.read
-            .schema(org.apache.spark.sql.types.DataType.fromDDL(w)
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-            .parquet(dataEntries.map(_.path): _*)
-        case None =>
+    val schema =
+      if (ddls.size > 1)
+        // additive evolution left old and new file-sets in one snapshot:
+        // read under the WIDEST schema — parquet null-fills the columns an
+        // old file doesn't carry (no mergeSchema footer sweep needed; the
+        // manifest already knows the answer)
+        SnapshotTable.widestSchema(ddls).flatMap(SnapshotTable.parseSchema)
           // an EVOLUTION-MANAGED table (mapping present) that dropped or
           // widened a column holds a mix no single entry schema covers:
           // read under the meta-derived PHYSICAL schema — dropped columns
           // project away by omission, widened columns upcast per file
-          metaPhysicalSchema.foreach(ps =>
-            return spark.read.schema(ps)
-              .parquet(dataEntries.map(_.path): _*))
-        // otherwise: incompatible mix (pre-guard table) — infer as before
-      }
-    spark.read.parquet(dataEntries.map(_.path): _*)
+          .orElse(metaPhysicalSchema)
+          // otherwise: incompatible mix (pre-guard table) — infer as before
+      else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
+        SnapshotTable.parseSchema(ddls.head)
+      else None
+    schema.fold(spark.read)(s => spark.read.schema(s))
+      .parquet(dataEntries.map(_.path): _*)
   }
 
   /** Logical rows of an entry set: data minus pending MOR deletes. */
@@ -708,26 +683,29 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       .distinct()
       .withColumn("bucket", bucketOf)
       .filter(col("bucket").isin(live.toSeq: _*)) // keys to nowhere are inert
+      .persist()
     // Count per bucket BEFORE writing: a zero-match delete must be an
     // inert no-op, but an empty partitionBy write leaves only _SUCCESS and
-    // the read-back would throw UNABLE_TO_INFER_SCHEMA. `k` is
-    // deterministic (distinct over the caller's keys), so the counted set
-    // is the written set.
+    // the read-back would throw UNABLE_TO_INFER_SCHEMA. `k` is persisted,
+    // so the caller's keys are evaluated once and the counted set is the
+    // written set.
     import spark.implicits._
-    val counts = k.groupBy(col("bucket")).count()
-      .as[(Int, Long)].collect().sortBy(_._1)
-    if (counts.isEmpty) return None
-    // DATA FIRST (same crash posture as every commit: unreferenced until
-    // the manifest lands)
-    k.repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("conv_id"), col("turn_idx"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dataPath)
-    val keyDdl = "struct<conv_id:string,turn_idx:int>"
-    val entries = counts.toSeq.map { case (b, n) =>
-      BucketEntry(b, s"$dataPath/bucket=$b", runId, n, 0L, 0L, 0L,
-        "1970-01-01T00:00:00", "1970-01-01T00:00:00", keyDdl, kind = "delete")
-    }
-    commitEntries(spark, entries, replaceBuckets = false)
+    try {
+      val counts = k.groupBy(col("bucket")).count()
+        .as[(Int, Long)].collect().sortBy(_._1)
+      if (counts.isEmpty) return None
+      // DATA FIRST (same crash posture as every commit: unreferenced until
+      // the manifest lands)
+      k.repartition(col("bucket"))
+        .sortWithinPartitions(col("bucket"), col("conv_id"), col("turn_idx"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(dataPath)
+      val entries = counts.toSeq.map { case (b, n) =>
+        BucketEntry(b, s"$dataPath/bucket=$b", runId, n, 0L, 0L, 0L,
+          "1970-01-01T00:00:00", "1970-01-01T00:00:00", SnapshotTable.DeleteKeyDdl,
+          kind = "delete")
+      }
+      commitEntries(spark, entries, replaceBuckets = false)
+    } finally k.unpersist()
   }
 
   /** [[deleteRowsMor]] by predicate: the matching keys are computed from
@@ -1010,15 +988,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   }
 
   /** Parent snapshot id of a manifest (the lineage pointer every entry
-    * line carries), without a Spark job — one line of the file. */
-  private[table] def parentOf(id: Long): Option[Long] = {
-    val f = manifestsDir.resolve(s"snap-$id.json")
-    if (!Files.exists(f)) return None
-    scala.util.Using(Files.newBufferedReader(f)) { r =>
-      Option(r.readLine()).flatMap(l =>
-        SnapshotTable.ParentField.findFirstMatchIn(l).map(_.group(1).toLong))
-    }.toOption.flatten
-  }
+    * line carries); None when the manifest is gone or unreadable. */
+  private[table] def parentOf(id: Long): Option[Long] =
+    scala.util.Try(SnapshotTable.readManifest(dir, id).parentId).toOption
 
   /** Every snapshot id reachable by parent pointers from a branch head —
     * the set GC must treat as published branch history, not crashed
@@ -1328,9 +1300,58 @@ object SnapshotTable {
     extends IllegalStateException(msg)
   private val SnapName = """snap-(\d+)\.json""".r
   private val StagedName = """snap-(\d+)\.staged""".r
-  private val ParentField = """"parentId":(-?\d+)""".r
-  private val BucketsField = """"buckets":(\d+)""".r
-  private val BucketField = """"bucket":(\d+)""".r
+
+  /** One committed file-set of a snapshot: a manifest line with lineage
+    * stripped. `schema` is the DDL the file-set was written under ("" for
+    * entries older than schema tracking). */
+  final case class BucketEntry(
+      bucket: Int, path: String, runId: String,
+      turns: Long, blocksKept: Long, blocksDropped: Long, charsEmitted: Long,
+      minTs: String, maxTs: String, schema: String,
+      kind: String = "data") // "data" | "delete" (merge-on-read key file-set)
+
+  /** A parsed `snap-<id>.json`: the lineage header and the entries.
+    * `numBuckets` is None for manifests older than bucket-count tracking. */
+  final case class Manifest(parentId: Long, numBuckets: Option[Int],
+      entries: Seq[BucketEntry]) {
+    /** The bucket count, back-filled as max(bucket)+1 for pre-field
+      * manifests — exact for them because their writers always filled the
+      * id range densely enough for tests; new manifests carry the field. */
+    def bucketCount: Option[Int] =
+      numBuckets.orElse(entries.map(_.bucket).maxOption.map(_ + 1))
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The one reader of the manifest format, on the driver (Jackson, no
+    * Spark job — Iceberg likewise plans from manifests on the driver).
+    * Every face reads manifests through it: the library's reads and
+    * commits, the V2 connector, the metadata tables. Older writers are
+    * read as they always were: a tombstone-only manifest (a
+    * delete-everything snapshot) has no entries; a missing `schema` reads
+    * as ""; a missing `kind` as "data". */
+  def readManifest(dir: String, snapshotId: Long): Manifest = {
+    val f = Paths.get(dir, "manifests", s"snap-$snapshotId.json")
+    require(Files.exists(f), s"snapshot $snapshotId does not exist in $dir")
+    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map(Json.readTree)
+    def text(n: com.fasterxml.jackson.databind.JsonNode, field: String,
+        absent: String): String =
+      Option(n.get(field)).filterNot(_.isNull).map(_.asText()).getOrElse(absent)
+    Manifest(
+      lines.collectFirst { case n if n.has("parentId") => n.get("parentId").asLong() }
+        .getOrElse(-1L),
+      lines.collectFirst { case n if n.has("buckets") => n.get("buckets").asInt() },
+      lines.filterNot(_.has("tombstone")).map(n => BucketEntry(
+        n.get("bucket").asInt(), n.get("path").asText(), n.get("runId").asText(),
+        n.get("turns").asLong(), n.get("blocksKept").asLong(),
+        n.get("blocksDropped").asLong(), n.get("charsEmitted").asLong(),
+        n.get("minTs").asText(), n.get("maxTs").asText(),
+        text(n, "schema", ""), text(n, "kind", "data"))))
+  }
+
+  /** The schema of merge-on-read delete key file-sets. */
+  private[table] val DeleteKeyDdl = "struct<conv_id:string,turn_idx:int>"
+  private lazy val DeleteKeySchema = parseSchema(DeleteKeyDdl).get
 
   /** Additive-evolution compatibility: true iff the shorter schema's
     * fields are an exact name+type prefix of the longer's (nullability and
@@ -1398,19 +1419,12 @@ object SnapshotTable {
     * current manifest — the reason the count is a manifest field and not
     * caller configuration: after a [[SnapshotTable.rebucket]] every reader
     * constructed with the old count would mis-hash point reads. Pre-field
-    * manifests (written before bucket-count tracking) fall back to
-    * max(bucket)+1 — exact for them because their writers always filled
-    * the id range densely enough for tests; new manifests always carry the
-    * field. */
+    * manifests fall back to max(bucket)+1 ([[Manifest.bucketCount]]). */
   def open(dir: String): SnapshotTable = {
     val cur = Paths.get(dir, "CURRENT")
     require(Files.exists(cur), s"no committed snapshot in $dir")
     val snapId = Files.readString(cur).trim.toLong
-    val manifest = Files.readString(
-      Paths.get(dir, "manifests", s"snap-$snapId.json"))
-    val n = BucketsField.findFirstMatchIn(manifest).map(_.group(1).toInt)
-      .orElse(BucketField.findAllMatchIn(manifest)
-        .map(_.group(1).toInt).maxOption.map(_ + 1))
+    val n = readManifest(dir, snapId).bucketCount
       .getOrElse(sys.error(s"manifest snap-$snapId.json carries no bucket ids"))
     new SnapshotTable(dir, n)
   }

@@ -254,6 +254,24 @@ class MorDeleteSpec extends AnyFunSuite with SparkTestBase {
     assert(table.read(spark).count() == n)
   }
 
+  test("deleteRowsMor evaluates the caller's keys once: the per-bucket count " +
+    "and the key write share one evaluation") {
+    import testImplicits._
+    val (_, table) = freshTable()
+    val victims = table.read(spark).select("conv_id", "turn_idx")
+      .as[(String, Int)].collect().sortBy(identity).take(5)
+    val n = table.read(spark).count()
+    val evals = spark.sparkContext.longAccumulator("mor-key-evals")
+    val counted = udf { (i: Long) => evals.add(1L); i }.asNondeterministic()
+    val keys = spark.range(victims.length).select(counted(col("id")).as("i"))
+      .select(element_at(typedLit(victims.map(_._1).toSeq), col("i").cast("int") + 1).as("conv_id"),
+        element_at(typedLit(victims.map(_._2).toSeq), col("i").cast("int") + 1).as("turn_idx"))
+    assert(table.deleteRowsMor(spark, keys, "mor-once").isDefined)
+    assert(evals.value == victims.length.toLong,
+      s"keys evaluated ${evals.value} times for ${victims.length} rows")
+    assert(table.read(spark).count() == n - victims.length)
+  }
+
   test("readChanges: data appended AFTER an older MOR delete has that " +
     "delete's keys applied — the delta never over-delivers logically " +
     "deleted rows") {
