@@ -428,7 +428,7 @@ object SparkEntry {
     // round — `labels` lost its partitioner at every map, so each join
     // RE-shuffled the full label state, and every cogroup/combiner ran an
     // ExternalAppendOnlyMap whose SizeTracker sampling dominated the
-    // profile (QTime round 3b). This formulation keeps `labels`
+    // profile (BENCH/TUNING.md round 3b). This formulation keeps `labels`
     // hash-partitioned by `part` across rounds and does all per-partition
     // work in plain LongMaps:
     //   S1  prop:   edges look labels up via narrow zipPartitions (both
@@ -462,10 +462,8 @@ object SparkEntry {
       .cache()
     var converged = false
     var rounds = 0
-    val ccDebug = sys.env.contains("SPARK_GRAFT_CC_DEBUG")
     while (!converged) {
       rounds += 1
-      val tR = System.nanoTime()
       val changed = s.sparkContext.longAccumulator(s"graft.cc.changed.$rounds")
       // S1: propose min labels along edges (lookup narrow, pre-combined)
       val prop = und.zipPartitions(labels) { (eIt, lIt) =>
@@ -499,12 +497,6 @@ object SparkEntry {
       labels.unpersist(false)
       merged.unpersist(false)
       labels = next
-      if (ccDebug) {
-        val st = s.sparkContext.getRDDStorageInfo
-          .map(r => s"${r.id}:${r.numCachedPartitions}/${r.numPartitions}").mkString(" ")
-        println(f"[cc] round $rounds%2d lp=$lp undId=${und.id} " +
-          f"${(System.nanoTime() - tR) / 1e9}%6.2f s changed=${changed.value} cached[$st]")
-      }
     }
     // free the edge cache: the returned frame depends only on the FINAL
     // labels (cached + fully materialized by the convergence count); if

@@ -147,11 +147,6 @@ object ExtractPipeline {
     */
   def orderRestore(ds: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] = {
     import ds.sparkSession.implicits._
-    // A/B kill switch (BENCH/TUNING.md carries the ablation): =0 ships the
-    // fat rows — the pre-optimization shape
-    if (sys.env.get("SPARK_GRAFT_SLIM_SPANS").contains("0"))
-      return ds.repartition(col("conv_id"))
-        .sortWithinPartitions(col("conv_id"), col("turn_idx"))
     graft.functions.SpanShuffle.register(ds.sparkSession)
     ds.toDF()
       .withColumn("spans", graft.functions.SpanShuffle.slim(col("spans")))

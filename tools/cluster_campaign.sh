@@ -6,8 +6,9 @@
 # wide level) -> only when the window is clean (host_retention in
 # [MIN_HOST, MAX_HOST] and mem_retention >= MIN_MEM) spend a full
 # spark-submit local-cluster sample (REPS=1, ~4 min, cores shape by
-# default). Samples append to BENCH/cluster_history.jsonl via graft.Bench;
-# the headline policy in BENCH/BASELINE.md gates them again at read time.
+# default). Samples append to BENCH/cluster_history.jsonl via graft.Bench,
+# which gates them again per shape for the `headline` field of its JSON
+# line (policy: BENCH/BASELINE.md).
 #
 #   sbt -batch package && nohup tools/cluster_campaign.sh &
 #
