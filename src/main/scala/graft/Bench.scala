@@ -169,7 +169,7 @@ object Bench {
     p.delete()
   }
 
-  /** Timed flagship job: read corpus parquet → gates → salted kernel →
+  /** Timed flagship job: read corpus parquet → gates → kernel step →
     * order restore → write parquet. Returns wall seconds. */
   private def timedExtract(spark: SparkSession, corpusPath: String, outPath: String): Double = {
     import spark.implicits._

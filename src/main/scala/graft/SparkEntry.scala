@@ -87,7 +87,8 @@ object SparkEntry {
   }
 
   /** Flagship: full extraction pipeline over the deterministic transcript
-    * corpus (gates → salted shuffle → kernels → order restore). */
+    * corpus (gates → kernel step → repartition(conv_id) → sort →
+    * `spans_fatten`; see [[ExtractPipeline]]). */
   def entry(spark: SparkSession): DataFrame =
     ExtractPipeline.run(spark,
       TranscriptGen.dataset(spark, seed = 42L, nConvs = 100, hotBase = 400))

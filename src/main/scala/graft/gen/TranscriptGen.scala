@@ -10,7 +10,7 @@ import scala.collection.mutable.ArrayBuffer
   * no shared RNG state — so the corpus can be generated DISTRIBUTED (flatMap
   * over a range of conversations) and regenerated bit-identically at any
   * scale. Conversation lengths follow a Zipf-ish law to create hot
-  * conversations (the skew the salted repartition must defuse).
+  * conversations (the skew the fused kernel step must stay immune to).
   *
   * Crucially the generator also emits the EXPECTED extraction per turn
   * (text, spans, kept/dropped counts), derived from the kernel SPEC while
@@ -355,7 +355,7 @@ object TranscriptGen {
   /** DISTRIBUTED corpus: each task generates its conversation slice
     * independently (turns are pure functions of (seed, conv, idx)), so the
     * same corpus materializes identically at any parallelism — the property
-    * the salt-invariance and scaling benches rely on. */
+    * the scaling benches rely on. */
   def dataset(spark: org.apache.spark.sql.SparkSession, seed: Long, nConvs: Int,
       hotBase: Int, partitions: Int = 0): org.apache.spark.sql.Dataset[Turn] = {
     import spark.implicits._

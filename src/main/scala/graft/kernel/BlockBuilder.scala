@@ -113,15 +113,18 @@ final class BlockBuilder extends HtmlTokenizer.Sink {
 }
 
 object BlockBuilder {
-  val BlockTags: Set[String] = Set(
+  /** Probed once per tag on the kernel's hot path: a `java.util.HashSet`
+    * lookup is one hash and one `equals`, where an immutable Scala `Set` of
+    * this size walks a hash-trie node. */
+  val BlockTags: java.util.Set[String] = new java.util.HashSet(java.util.Arrays.asList(
     "p", "div", "br", "hr", "h1", "h2", "h3", "h4", "h5", "h6",
     "li", "ul", "ol", "dl", "dt", "dd",
     "nav", "header", "footer", "aside", "article", "section", "main",
     "table", "thead", "tbody", "tr", "td", "th",
     "blockquote", "pre", "form", "title", "body", "html", "head",
     "figure", "figcaption", "address"
-  )
-  val VoidTags: Set[String] = Set("br", "hr")
+  ))
+  val VoidTags: java.util.Set[String] = new java.util.HashSet(java.util.Arrays.asList("br", "hr"))
 
   /** Tokenize + assemble in one pass. */
   def build(html: String): Vector[Block] = build(html, new BlockBuilder)

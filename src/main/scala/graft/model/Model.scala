@@ -76,20 +76,11 @@ final case class ExtractedTurn(
   *                     (`src/controller/pagepredictor.py:131-148`).
   * @param maxLinkDensity jusText/boilerpipe-style link-density gate; plays
   *                     the role of the components-per-width density reject.
-  * @param saltBuckets  pre-kernel skew handling: 0 (default) = NO pre-kernel
-  *                     exchange — the kernel fuses onto the size-bounded scan
-  *                     splits, so per-task work is bounded by construction
-  *                     (`files.maxPartitionBytes`) no matter how hot a
-  *                     conversation is, and the raw payloads are never
-  *                     shuffled; > 0 = salted repartition by
-  *                     (conv_id, hash(turn_idx) % salt) for kernels whose
-  *                     per-row cost is unbounded (cost skew, not size skew).
   */
 final case class ExtractConfig(
     maxTextLen: Int = 1 << 20,
     minBlockLen: Int = 15,
     maxLinkDensity: Double = 0.5,
-    saltBuckets: Int = 0,
     lineHeight: Int = 10,
     /** F2 confidence gate: turns whose dialect classification scored below
       * this are dropped (reference gate `idcardprocesser.py:135`, `< 0.3`). */

@@ -1,30 +1,30 @@
 package graft.pipe
 
-import graft.kernel.Extractor
+import graft.kernel.{Extractor, ExtractorContext}
 import graft.model.{ExtractConfig, ExtractedTurn, Turn}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
 /** The flagship extraction job (SURVEY §3.1 "Spark shape"):
   *
-  * scan → cheap gates (BEFORE the kernel — Catalyst cannot reorder filters
-  * through an opaque mapPartitions, so we author them first, the same
-  * cheap-predicate-first discipline as the reference's blur gate
-  * `/root/reference/src/cmnd/main.py:57-60`) → mapPartitions kernel FUSED
-  * onto the scan partitions (per-partition batched, broadcast config, lazy
-  * per-executor init ≈ per-daemon model load `template.py:73`) → stable
-  * (conv_id, turn_idx) order restore → sink.
+  * scan → cheap gates (Catalyst filters BEFORE the kernel — the optimizer
+  * cannot move filters through the kernel step, so we author them first,
+  * the same cheap-predicate-first discipline as the reference's blur gate
+  * `/root/reference/src/cmnd/main.py:57-60`) → [[KernelStep]] FUSED onto
+  * the scan partitions (one pass per partition over `InternalRow`,
+  * broadcast config, per-task kernel buffers ≈ per-daemon model load
+  * `template.py:73`; it writes rows with slim spans and applies the F2 gate)
+  * → repartition(conv_id) → (conv_id, turn_idx) sort → `spans_fatten` →
+  * sink.
   *
-  * Exactly ONE exchange in the default configuration: the order-restoring
-  * repartition by conv_id. Skew is handled structurally, not by a salt
-  * shuffle: scan splits are size-bounded (`files.maxPartitionBytes`) and
-  * per-turn kernel cost is bounded (maxTextLen gate), so no conversation
-  * can concentrate more than one split's worth of kernel work in one task —
-  * and the raw payloads never cross the network (measured: the fused plan
-  * does ~1/3 the task-time of the salted one and runs 2.5× faster at 16
-  * cores). `cfg.saltBuckets > 0` re-enables the salted pre-kernel exchange
-  * for cost-skewed kernels (BENCH/SKEW.md carries both ablations).
+  * Exactly ONE exchange: the order-restoring repartition by conv_id. Skew
+  * is handled structurally, not by a salt shuffle: scan splits are
+  * size-bounded (`files.maxPartitionBytes`) and per-turn kernel cost is
+  * bounded (maxTextLen gate), so no conversation can concentrate more than
+  * one split's worth of kernel work in one task — and the raw payloads
+  * never cross the network (BENCH/SKEW.md has the ablation against a salted
+  * pre-kernel exchange: ~1/3 the task time, 2.5× faster at 16 cores).
   */
 object ExtractPipeline {
 
@@ -71,66 +71,55 @@ object ExtractPipeline {
     )
   }
 
-  /** Gates → salt → kernel. Output is UNORDERED (post-shuffle); callers that
-    * need the stable order apply [[orderRestore]] (kept separate so the
-    * snapshot writer can instead sort within bucket files). */
+  /** The default kernel. [[extract]] runs it over the row's `text` and
+    * `tool` only; any other kernel passed to the seam gets whole Turns. */
+  val DefaultKernel: (Turn, ExtractConfig, ExtractorContext) => ExtractedTurn =
+    Extractor.extractTurn(_, _, _)
+
+  /** Gates → kernel step → `spans_fatten`. Output is in scan order; callers
+    * that need the stable order use [[run]] or apply [[orderRestore]] (kept
+    * separate so the snapshot writer can instead sort within bucket files).
+    *
+    * The kernel seam is injectable so the poison-row guard is testable (the
+    * shipped kernels are total functions — no input makes them throw — so
+    * QuarantineSpec injects a throwing one). A kernel must keep the
+    * extraction invariant `text` = its span texts joined with `"\n"`:
+    * spans cross the step slim and are sliced back out of `text`. The
+    * output's identity columns (conv_id, turn_idx, role, tool, ts) are the
+    * input row's. */
   def extract(
       spark: SparkSession,
       turns: Dataset[Turn],
       cfg: ExtractConfig = ExtractConfig.default,
       metrics: Option[Metrics] = None,
-      // kernel seam: injectable so the poison-row guard below is testable
-      // (the shipped kernels are total functions — no input makes them
-      // throw — so QuarantineSpec injects a throwing one)
-      kernel: (Turn, ExtractConfig, graft.kernel.ExtractorContext) => ExtractedTurn =
-        Extractor.extractTurn(_, _, _)
-  ): Dataset[ExtractedTurn] = {
-    import spark.implicits._
-    val bcCfg = spark.sparkContext.broadcast(cfg)
-    val m = metrics
+      kernel: (Turn, ExtractConfig, ExtractorContext) => ExtractedTurn = DefaultKernel
+  ): Dataset[ExtractedTurn] =
+    fatten(kernelStep(spark, turns, cfg, metrics, kernel))
 
-    val gated = turns.filter(
-      col("text").isNotNull && col("conv_id").isNotNull &&
-        length(col("text")) > 0 && length(col("text")) <= cfg.maxTextLen
-    )
-    val salted = Salting.salted(gated, cfg.saltBuckets)
-    salted.mapPartitions { it =>
-      val c = bcCfg.value // one broadcast fetch per task, not per row
-      val ctx = new graft.kernel.ExtractorContext // per-task reusable buffers
-      it.map { t =>
-        val out = try kernel(t, c, ctx) catch {
-          // Poison-row quarantine: emit a sentinel the F2 gate drops
-          // (classifyScore −1 < any sane gate) and alarm via the
-          // accumulator; fatal JVM errors (OOM, stack overflow) still kill
-          // the task — only application-level failures are survivable.
-          case scala.util.control.NonFatal(e) if !c.failFast =>
-            m.foreach { acc =>
-              acc.turnsFailed.add(1)
-              acc.failedSamples.add(QuarantineRecord(
-                t.conv_id, t.turn_idx, e.toString.take(200)))
-            }
-            ExtractedTurn(t.conv_id, t.turn_idx, t.role, t.tool, t.ts,
-              "", Vector.empty, 0, 0, 0, -1.0)
-        }
-        // the accumulator test mirrors the declarative F2 filter below
-        // (same deterministic predicate on the kernel's own output), so
-        // counts reflect rows that actually reach the sink
-        m.foreach { acc =>
-          if (out.classifyScore >= c.minClassifyScore) {
-            acc.turnsOut.add(1)
-            acc.blocksKept.add(out.blocksKept)
-            acc.blocksDropped.add(out.blocksDropped)
-            acc.charsEmitted.add(out.charsEmitted)
-          } else if (out.classifyScore >= 0) acc.turnsGated.add(1)
-          // (score −1 = quarantine sentinel: already counted in turnsFailed)
-        }
-        out
-      }
-    }
-      // F2 confidence gate (reference classify-score gate < 0.3,
-      // idcardprocesser.py:135): a no-op for turns whose `tool` named the
-      // dialect (score 1.0); sniffed low-confidence turns are dropped here
-      .filter(col("classifyScore") >= cfg.minClassifyScore)
+  /** Gates (Catalyst filters, pushable into the scan) → [[KernelStep]]:
+    * rows in [[KernelStep.OutputSchema]], spans slim. */
+  private def kernelStep(
+      spark: SparkSession,
+      turns: Dataset[Turn],
+      cfg: ExtractConfig,
+      metrics: Option[Metrics],
+      kernel: (Turn, ExtractConfig, ExtractorContext) => ExtractedTurn
+  ): DataFrame = {
+    val text = col("text")
+    // F1/F6 cheap gates, O(1) per row: the UTF-8 byte count bounds the
+    // char count from above, so `length` (a scan over the bytes) runs only
+    // for texts with more bytes than maxTextLen
+    val gated = turns
+      .filter(text.isNotNull && col("conv_id").isNotNull && octet_length(text) > 0 &&
+        (octet_length(text) <= cfg.maxTextLen || length(text) <= cfg.maxTextLen))
+      .select(KernelStep.InputColumns.map { case (n, t) => col(n).cast(t).as(n) }: _*)
+    val step = new KernelStep(spark.sparkContext.broadcast(cfg), metrics,
+      if (kernel eq DefaultKernel) None else Some(kernel))
+    ExtractKernelStrategy.install(spark)
+    new org.apache.spark.sql.classic.Dataset[Row](
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      ExtractKernel(step, gated.queryExecution.analyzed),
+      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder(KernelStep.OutputSchema))
   }
 
   /** Restore the north-rule stable ordering: each output partition holds
@@ -144,16 +133,26 @@ object ExtractPipeline {
     * — lossless, codegen'd both sides ([[graft.functions.SpanShuffle]]).
     * The exchange (serialize → sort → fetch) is the flagship's measured
     * memory-bandwidth ceiling, so bytes through it cost scaling efficiency.
+    * [[run]] feeds it the kernel step's rows, which are slim already.
     */
   def orderRestore(ds: Dataset[ExtractedTurn]): Dataset[ExtractedTurn] = {
-    import ds.sparkSession.implicits._
     graft.functions.SpanShuffle.register(ds.sparkSession)
-    ds.toDF()
-      .withColumn("spans", graft.functions.SpanShuffle.slim(col("spans")))
-      .repartition(col("conv_id"))
-      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-      .withColumn("spans", graft.functions.SpanShuffle.fatten(col("text"), col("spans")))
-      .as[ExtractedTurn]
+    sorted(ds.toDF().withColumn("spans", graft.functions.SpanShuffle.slim(col("spans"))))
+  }
+
+  private def sorted(slim: DataFrame): Dataset[ExtractedTurn] =
+    fatten(slim.repartition(col("conv_id")).sortWithinPartitions(col("conv_id"), col("turn_idx")))
+
+  /** Every output column is aliased here, so a self-join of the result
+    * renews its attributes at this projection (the analyzer cannot renew
+    * the kernel step's own output). */
+  private def fatten(slim: DataFrame): Dataset[ExtractedTurn] = {
+    import slim.sparkSession.implicits._
+    graft.functions.SpanShuffle.register(slim.sparkSession)
+    slim.select(slim.columns.toSeq.map {
+      case "spans" => graft.functions.SpanShuffle.fatten(col("text"), col("spans")).as("spans")
+      case c => col(c).as(c)
+    }: _*).as[ExtractedTurn]
   }
 
   /** Wrap an extraction output with `Dataset.observe` metrics (name
@@ -170,12 +169,13 @@ object ExtractPipeline {
       sum(col("blocksDropped")).as("blocksDropped"),
       sum(col("charsEmitted")).as("charsEmitted"))
 
-  /** End-to-end: gates → salt → kernel → order restore. */
+  /** End-to-end: gates → kernel step → repartition(conv_id) → sort →
+    * `spans_fatten`. */
   def run(
       spark: SparkSession,
       turns: Dataset[Turn],
       cfg: ExtractConfig = ExtractConfig.default,
       metrics: Option[Metrics] = None
   ): Dataset[ExtractedTurn] =
-    orderRestore(extract(spark, turns, cfg, metrics))
+    sorted(kernelStep(spark, turns, cfg, metrics, DefaultKernel))
 }

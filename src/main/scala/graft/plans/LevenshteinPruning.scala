@@ -51,7 +51,8 @@ object LevenshteinPruning extends Rule[LogicalPlan] {
 }
 
 /** `spark.sql.extensions` entry point: the engine's whole Catalyst surface
-  * in one switch — the optimizer rule above plus every native expression
+  * in one switch — the optimizer rule above, the kernel step's planner
+  * strategy ([[graft.pipe.ExtractKernelStrategy]]), plus every native expression
   * registered as a PERMANENT SQL function (`injectFunction` lands in the
   * session's FunctionRegistry at build time, so a pure-SQL user — a
   * notebook, a Thrift server, `spark-sql` with
@@ -62,6 +63,7 @@ object LevenshteinPruning extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => LevenshteinPruning)
+    e.injectPlannerStrategy(_ => graft.pipe.ExtractKernelStrategy)
     GraftExtensions.functions.foreach { case (name, builder) =>
       e.injectFunction((org.apache.spark.sql.catalyst.FunctionIdentifier(name),
         new ExpressionInfo("graft.functions", name), builder))

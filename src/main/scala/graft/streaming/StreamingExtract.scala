@@ -1,6 +1,5 @@
 package graft.streaming
 
-import graft.kernel.{Extractor, ExtractorContext}
 import graft.model.{ExtractConfig, ExtractedTurn, Turn}
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,24 +19,12 @@ import org.apache.spark.sql.functions._
   */
 object StreamingExtract {
 
-  /** Per-turn streaming extraction: same kernels, same per-task lazy init —
-    * mapPartitions works identically under micro-batch execution. */
+  /** Per-turn streaming extraction: the batch kernel step
+    * ([[graft.pipe.ExtractPipeline.extract]] — same gates, kernel,
+    * quarantine and F2 gate) under micro-batch execution. */
   def extract(spark: SparkSession, turns: Dataset[Turn],
-      cfg: ExtractConfig = ExtractConfig.default): Dataset[ExtractedTurn] = {
-    import spark.implicits._
-    val bcCfg = spark.sparkContext.broadcast(cfg)
-    turns
-      // column-based gate (Catalyst-visible — pushable into a real source),
-      // same predicate as the batch pipeline; a typed lambda here would be
-      // an opaque filter the optimizer cannot move into the scan
-      .filter(col("text").isNotNull && length(col("text")) > 0
-        && length(col("text")) <= cfg.maxTextLen)
-      .mapPartitions { it =>
-        val c = bcCfg.value
-        val ctx = new ExtractorContext
-        it.map(Extractor.extractTurn(_, c, ctx))
-      }
-  }
+      cfg: ExtractConfig = ExtractConfig.default): Dataset[ExtractedTurn] =
+    graft.pipe.ExtractPipeline.extract(spark, turns, cfg)
 
   /** Streaming exact dedup: drop turns whose (conv_id, turn_idx) was
     * already seen, with state bounded by the watermark (a duplicate older

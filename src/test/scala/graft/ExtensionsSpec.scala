@@ -71,6 +71,17 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
     assert(fp == graft.functions.TextFingerprint.compute("abc"))
   }
 
+  test("the kernel step's planner strategy rides in through the same switch") {
+    withExtSession { ext =>
+      assert(ext.sessionState.planner.strategies.contains(graft.pipe.ExtractKernelStrategy))
+      assert(!ext.experimental.extraStrategies.contains(graft.pipe.ExtractKernelStrategy))
+      val out = graft.pipe.ExtractPipeline.run(ext,
+        graft.gen.TranscriptGen.dataset(ext, 42L, nConvs = 3, hotBase = 5))
+      assert(out.queryExecution.executedPlan.toString.contains("ExtractKernel"))
+      assert(out.count() == graft.gen.TranscriptGen.totalTurns(3, 5))
+    }
+  }
+
   test("the optimizer rule rides in through the same extensions switch") {
     withExtSession { ext =>
       // a real scan, not VALUES — literal inputs would be constant-folded

@@ -155,15 +155,6 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     assert(exchanges == 1, s"expected 1 exchange, got $exchanges in:\n$plan")
   }
 
-  test("salted configuration adds exactly the salt fan-out exchange") {
-    val ds = ExtractPipeline.run(spark,
-      TranscriptGen.dataset(spark, 42L, nConvs = 10, hotBase = 20),
-      graft.model.ExtractConfig.default.copy(saltBuckets = 16))
-    val plan = ds.queryExecution.executedPlan.toString
-    val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(exchanges == 2, s"expected 2 exchanges, got $exchanges in:\n$plan")
-  }
-
   test("html_main_text runs as a codegen'd native expression, not a UDF") {
     val df = SparkEntry.queries("x_sql_extract")(spark, sf)
     df.collect()

@@ -98,6 +98,41 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("micro-batch extraction quarantines a throwing kernel turn and keeps running") {
+    import testImplicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.model.{ExtractConfig, ExtractedTurn, Turn}
+    val goldens = TranscriptGen.corpus(43L, nConvs = 8, hotBase = 16).toVector
+    val poisoned: (Turn, ExtractConfig, graft.kernel.ExtractorContext) => ExtractedTurn =
+      (t, c, ctx) =>
+        if (t.conv_id == "poison") throw new IllegalStateException("kernel bug")
+        else graft.kernel.Extractor.extractTurn(t, c, ctx)
+    val acc = graft.pipe.ExtractPipeline.newMetrics(spark)
+
+    val stream = MemoryStream[Turn]
+    val q = graft.pipe.ExtractPipeline.extract(spark, stream.toDS(),
+        metrics = Some(acc), kernel = poisoned)
+      .writeStream.format("memory").queryName("stream_quarantine_out")
+      .outputMode("append").trigger(Trigger.ProcessingTime(0)).start()
+    val (a, b) = goldens.map(_.turn).splitAt(goldens.size / 2)
+    stream.addData(a :+ Turn("poison", 0, "user", "any payload", "plain",
+      new java.sql.Timestamp(1000L)))
+    q.processAllAvailable()
+    assert(q.isActive && q.exception.isEmpty, "the poisoned batch did not stop the query")
+    stream.addData(b)
+    q.processAllAvailable()
+    assert(q.isActive)
+    q.stop()
+
+    val out = spark.table("stream_quarantine_out")
+      .select("conv_id", "turn_idx", "text").as[(String, Int, String)].collect()
+    assert(!out.exists(_._1 == "poison"))
+    assert(out.map { case (c, i, t) => (c, i) -> t }.toMap ==
+      goldens.map(g => (g.turn.conv_id, g.turn.turn_idx) -> g.expText).toMap)
+    assert(acc.turnsFailed.value == 1L)
+    assert(acc.failedSamples.sample.map(r => (r.conv_id, r.turn_idx)) == Vector(("poison", 0)))
+  }
+
   test("streaming dedup (dropDuplicatesWithinWatermark) drops in-batch and cross-batch repeats") {
     import testImplicits._
     implicit val sqlCtx = spark.sqlContext

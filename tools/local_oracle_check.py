@@ -28,6 +28,30 @@ def table_hash(cols, rows):
         h.update(b"\n")
     return h.hexdigest()
 
+def fetch(con, sql):
+    """Runs an oracle query once. Returns its column names, its rows as
+    tuples (the values the hash canonicalizes, as for the Spark side) and
+    the pandas frame DuckDB's own `.df()` would build (the driver's dtypes),
+    all from the one fetched Arrow table."""
+    tbl = con.execute(sql).fetch_arrow_table()
+    rows = list(zip(*(c.to_pylist() for c in tbl.columns)))
+    return tbl.column_names, rows, con.from_arrow(tbl).df()
+
+
+def ndarray_columns(df):
+    """Object columns whose first non-null cell is a numpy array (the driver
+    crashes sorting them); a leading None must not hide one."""
+    import numpy as np
+    out = []
+    for c in df.columns:
+        if df[c].dtype != object:
+            continue
+        first = df[c].first_valid_index()
+        if first is not None and isinstance(df[c].loc[first], np.ndarray):
+            out.append(c)
+    return out
+
+
 def main():
     out_dir, sf_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
@@ -50,12 +74,7 @@ def main():
         s_cols = st.column_names
         s_rows = [tuple(r[c] for c in s_cols) for r in st.to_pylist()]
         try:
-            res = con.execute(sql)
-            o_cols = [d[0] for d in res.description]
-            o_rows = res.fetchall()
-            # second execution for the pandas-materialized frame the
-            # driver actually compares (dtype simulation below)
-            res_df = con.execute(sql).df()
+            o_cols, o_rows, res_df = fetch(con, sql)
         except Exception as e:
             print(f"{name}: ORACLE ERROR {e}")
             fails.append(name)
@@ -72,16 +91,13 @@ def main():
         #      canon() strings diverge ("5.0e+10" vs "50000000000").
         dtype_warn = []
         try:
-            import pandas as _pd, numpy as _np
             sdf = st.to_pandas()
             odf = res_df if res_df is not None else None
             for df, side in ((sdf, "spark"), (odf, "oracle")):
                 if df is None:
                     continue
-                for c in df.columns:
-                    if df[c].dtype == object and len(df) and isinstance(
-                            df[c].iloc[0], _np.ndarray):
-                        dtype_warn.append(f"{side}.{c}=ndarray(DRIVER CRASH)")
+                for c in ndarray_columns(df):
+                    dtype_warn.append(f"{side}.{c}=ndarray(DRIVER CRASH)")
             if odf is not None:
                 for c in set(sdf.columns) & set(odf.columns):
                     sk, ok_ = sdf[c].dtype.kind, odf[c].dtype.kind
