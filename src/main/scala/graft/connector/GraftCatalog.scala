@@ -286,11 +286,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
   // ---- FunctionCatalog: the bucket transform as a V2 function ----
 
   override def listFunctions(namespace: Array[String]): Array[Identifier] =
-    Array(Identifier.of(namespace, "bucket"))
+    BucketFunctions.listFunctions(namespace)
 
   override def loadFunction(ident: Identifier): UnboundFunction =
-    if (ident.name().equalsIgnoreCase("bucket")) GraftBucketFunction
-    else throw new NoSuchFunctionException(ident)
+    BucketFunctions.loadFunction(ident)
 
   // ---- ProcedureCatalog: SQL maintenance (CALL graft.system.…) ----
 
@@ -300,6 +299,21 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
 
   override def listProcedures(namespace: Array[String]): Array[Identifier] =
     GraftProcedures.list(namespace)
+}
+
+/** The function catalog of the layout hash alone: the catalog's
+  * function face, and what a library write's relation carries so that
+  * [[SnapshotWrite]] can require clustering by `bucket(n, conv_id)`. */
+private[connector] object BucketFunctions extends FunctionCatalog {
+  override def name(): String = "graft-snapshot"
+  override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = ()
+
+  override def listFunctions(namespace: Array[String]): Array[Identifier] =
+    Array(Identifier.of(namespace, "bucket"))
+
+  override def loadFunction(ident: Identifier): UnboundFunction =
+    if (ident.name().equalsIgnoreCase("bucket")) GraftBucketFunction
+    else throw new NoSuchFunctionException(ident)
 }
 
 /** `bucket(numBuckets, conv_id)` — the table's physical layout as a V2

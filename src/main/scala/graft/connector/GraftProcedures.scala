@@ -58,31 +58,9 @@ object GraftProcedures {
         in => pathRows(t(in).removeOrphanManifests(in.getLong(1))))
       case "compact" => GraftProcedure("compact",
         Seq("table" -> StringType, "run_id" -> StringType), SnapRow,
-        in => {
-          val table = t(in)
-          val rid = in.getUTF8String(1).toString
-          val turnsSchema =
-            org.apache.spark.sql.Encoders.product[graft.model.ExtractedTurn].schema
-          val df = table.read(spark)
-          val id =
-            if (df.schema.fields.map(f => (f.name, f.dataType)).toSeq ==
-                turnsSchema.fields.map(f => (f.name, f.dataType)).toSeq)
-              table.compact(spark, rid) // typed path keeps the library stats pass
-            else {
-              // generic tables (including evolved schemas): fold every
-              // file-set through the V2 overwrite — same clustering + sort
-              // invariants via RequiresDistributionAndOrdering. Read
-              // through the CONNECTOR, not the library: a column-mapped
-              // table must compact its LOGICAL shape (renames applied,
-              // dropped physical columns folded away), and the V2 write
-              // translates back to physical names.
-              spark.read.format("graft-snapshot").load(table.dir)
-                .write.format("graft-snapshot").mode("overwrite")
-                .option("runId", rid).save(table.dir)
-              table.currentSnapshotId.getOrElse(sys.error("compact published no snapshot"))
-            }
-          snapRow(id)
-        })
+        // any schema: evolved and column-mapped tables compact at the
+        // physical level, pending merge-on-read deletes fold in
+        in => snapRow(t(in).compact(spark, in.getUTF8String(1).toString)))
       case "build_dup_index" => GraftProcedure("build_dup_index",
         // Persist a MinHash-LSH near-dup index over the table's live text
         // at <table>/index/dup; SQL users then probe it via the

@@ -3,8 +3,7 @@ package graft.connector
 import graft.table.SnapshotTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
@@ -63,10 +62,17 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[ManifestEntry],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SnapshotCowScanBuilder(this, dir, entries, tableSchema, numBuckets)
 
+  /** The replacement write: the shared [[SnapshotWrite]] shape
+    * (clustered by conv_id, sorted (conv_id, turn_idx)), committing a
+    * snapshot that swaps out exactly the scanned buckets. COW rewrites land
+    * under the PHYSICAL column names too, or a rewritten bucket would fork
+    * the file-level naming. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write =
-        new SnapshotCowWrite(SnapshotRowLevelOperation.this, dir, numBuckets, cmd, info)
+      override def build(): Write = new SnapshotWrite(info.schema(), () =>
+        new SnapshotCowBatchWrite(SnapshotRowLevelOperation.this, dir, numBuckets,
+          SnapshotTableMeta.toPhysical(dir, info.schema()),
+          s"cow-${cmd.toString.toLowerCase}-${info.queryId()}"))
     }
 }
 
@@ -201,34 +207,6 @@ final class SnapshotCowScan(dir: String, entries: Seq[ManifestEntry],
     SnapshotRead.readerFactory(spark, dir, dataSchema, required, Array.empty)
 }
 
-/** The replacement write: same clustered-by-conv_id, sorted
-  * (conv_id, turn_idx) shape as the append writer, committing a snapshot
-  * that swaps out exactly the scanned buckets. */
-final class SnapshotCowWrite(op: SnapshotRowLevelOperation, dir: String,
-    numBuckets: Int, cmd: RowLevelOperation.Command, info: LogicalWriteInfo)
-  extends Write with RequiresDistributionAndOrdering {
-
-  require(info.schema().fieldNames.contains("conv_id"),
-    s"graft-snapshot COW writes need a conv_id column; got [${info.schema().fieldNames.mkString(", ")}]")
-
-  override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(Expressions.column("conv_id")))
-
-  override def requiredOrdering(): Array[SortOrder] = {
-    val cols = Seq("conv_id") ++
-      (if (info.schema().fieldNames.contains("turn_idx")) Seq("turn_idx") else Nil)
-    cols.map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING)).toArray
-  }
-
-  override def toBatch: BatchWrite = {
-    val runId = s"cow-${cmd.toString.toLowerCase}-${info.queryId()}"
-    // column mapping: COW rewrites must land under the PHYSICAL names
-    // too, or a rewritten bucket would fork the file-level naming
-    new SnapshotCowBatchWrite(op, dir, numBuckets,
-      SnapshotTableMeta.toPhysical(dir, info.schema()), runId)
-  }
-}
-
 final class SnapshotCowBatchWrite(op: SnapshotRowLevelOperation, dir: String,
     numBuckets: Int, schema: StructType, runId: String) extends BatchWrite {
 
@@ -261,7 +239,7 @@ final class SnapshotCowBatchWrite(op: SnapshotRowLevelOperation, dir: String,
         s"runId $runId is already committed in $dir — a row-level operation " +
           "must not be replayed against the same table state")
     SnapshotWriterUtil.publish(spark, dir, numBuckets, dataPath, runId, schema,
-      messages, replaceExactly = Some(scan.scannedBuckets))
+      messages, PublishRule(replaceExactly = Some(scan.scannedBuckets)))
     ()
   }
 

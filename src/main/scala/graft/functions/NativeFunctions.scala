@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** THE one name→builder list for every native Catalyst expression the
@@ -26,11 +27,16 @@ object NativeFunctions {
     "plane_sig" -> (es => PlaneSigF(es.head)),
     "winnow_fp" -> (es => WinnowF(es.head)))
 
-  /** Register the whole surface on an already-built session (idempotent;
-    * the ad-hoc twin of the `spark.sql.extensions` path). */
-  def registerAll(spark: SparkSession): Unit =
+  /** Register the whole surface on an already-built session (the ad-hoc
+    * twin of the `spark.sql.extensions` path). Idempotent: names already
+    * registered keep their builder, so the per-call `register()` helpers
+    * (every `ExtractPipeline.extract`/`run` goes through one) cost a
+    * lookup and replace nothing. */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }

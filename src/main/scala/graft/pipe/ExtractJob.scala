@@ -13,7 +13,11 @@ import org.apache.spark.sql.functions._
   */
 object ExtractJob {
 
-  /** @return new snapshot id, or None if everything was already committed. */
+  /** `runId` names this run's data directory and must be fresh: a runId
+    * the table's history already references fails fast (published files
+    * untouched), while the runId of a run that crashed before its commit
+    * is reusable (the rerun's publish clears the crashed attempt's files).
+    * @return new snapshot id, or None if everything was already committed. */
   def runIncremental(
       spark: SparkSession,
       table: SnapshotTable,

@@ -86,7 +86,8 @@ object StreamingExtract {
   /** Commit one micro-batch into a [[graft.table.SnapshotTable]] with
     * replay-safe (exactly-once) semantics: the batchId IS the runId, and a
     * re-delivered batch (after a failure, foreachBatch may replay the last
-    * uncommitted batch) is detected via the manifest's runId lineage and
+    * uncommitted batch) is detected via the runId lineage of every
+    * retained manifest (a compaction in between keeps the evidence) and
     * skipped — the same idempotence protocol as the batch engine's
     * anti-join-vs-manifest resume, keyed by batch instead of bucket.
     * @return Some(snapshot id) if a new snapshot was cut. */
@@ -94,7 +95,7 @@ object StreamingExtract {
       batch: Dataset[ExtractedTurn], batchId: Long): Option[Long] = {
     val spark = batch.sparkSession
     val runId = s"stream-$batchId"
-    if (table.committedEntries(spark).exists(_.runId == runId)) None
+    if (graft.connector.SnapshotWriterUtil.runIdCommitted(table.dir, table.numBuckets, runId)) None
     else table.commit(spark, batch, runId, replaceBuckets = false)
   }
 
@@ -122,7 +123,7 @@ object StreamingExtract {
       batch: Dataset[ExtractedTurn], batchId: Long): Option[Long] = {
     val spark = batch.sparkSession
     val runId = s"stream-merge-$batchId"
-    if (table.committedEntries(spark).exists(_.runId == runId)) None
+    if (graft.connector.SnapshotWriterUtil.runIdCommitted(table.dir, table.numBuckets, runId)) None
     else if (batch.isEmpty) None
     else table.merge(spark, batch, runId)
   }

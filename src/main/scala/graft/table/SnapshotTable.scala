@@ -1,6 +1,6 @@
 package graft.table
 
-import org.apache.spark.TaskContext
+import graft.connector.{PublishRule, SnapshotWriterUtil}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
@@ -8,8 +8,6 @@ import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model.ExtractedTurn
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-STYLE snapshot table over plain Parquet (no Iceberg jar in this
@@ -92,19 +90,21 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   def committedBuckets(spark: SparkSession): Set[Int] =
     committedEntries(spark).map(_.bucket).toSet
 
-  private val TsFmt =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss").withZone(ZoneOffset.UTC)
-
-  /** Write `extracted` (all buckets it contains) as a new run's data files
-    * and commit a new snapshot = previous entries ∪ new entries.
-    * Data is sorted by (conv_id, turn_idx) within each bucket file — the
-    * stable-order invariant is materialized, not just asserted.
-    *
-    * Per-bucket manifest stats are collected by an accumulator IN the write
-    * pass (one scan total; the naive alternative — re-reading the written
-    * dataset to aggregate — is a second full table scan per commit at
-    * 100 TB). The stats observer runs pre-shuffle so the post-shuffle sort's
-    * ordering metadata survives to the writer (no redundant writer sort).
+  /** Write `rows` (all buckets it contains) as a new run's data files and
+    * commit a new snapshot = previous entries ∪ new entries. There is one
+    * writer for every face: the rows go through the DataSource V2 writer
+    * ([[graft.connector.SnapshotWrite]]) — Spark clusters them by bucket
+    * and sorts (bucket, conv_id, turn_idx), so each bucket gets one file
+    * per commit, in the stable order; executors stage per-attempt files
+    * and count the per-bucket manifest stats as they write, and the
+    * driver publishes data → manifest → CURRENT
+    * ([[graft.connector.SnapshotWriterUtil.publish]]). The stats come from
+    * the commit messages of successful task attempts only, so a retried
+    * task never double-counts and the written data is never re-scanned.
+    * `rows` is any frame with a string `conv_id`; its columns are written
+    * under their own names. `runId` must be fresh: a runId some retained
+    * manifest already references fails fast before anything is renamed,
+    * leaving the published files untouched.
     *
     * `replaceBuckets` selects the entry-merge rule: `true` (batch default)
     * replaces a bucket's previous entries — each bucket is written by
@@ -119,76 +119,23 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * [[replaceWhere]] (a bucket left empty after a row-level delete must
     * drop out of the manifest, not keep its stale entry).
     *
-    * @return Some(new snapshot id), or None if `extracted` was empty (no
-    *         data ⇒ no new snapshot; the manifest chain is unchanged —
-    *         unless `forceReplace` demands a delete-only commit). */
-  def commit(spark: SparkSession, extracted: Dataset[ExtractedTurn], runId: String,
+    * @return Some(the snapshot id the commit published), or None if `rows`
+    *         was empty (no data ⇒ no new snapshot; the manifest chain is
+    *         unchanged — unless `forceReplace` demands a delete-only
+    *         commit). */
+  def commit(spark: SparkSession, rows: Dataset[_], runId: String,
       replaceBuckets: Boolean = true, forceReplace: Set[Int] = Set.empty,
-      toBranch: Option[String] = None): Option[Long] = {
-    import spark.implicits._
-    val dataPath = s"$dir/data/run=$runId"
-
-    val acc = new BucketStatsAccumulator
-    spark.sparkContext.register(acc, s"graft.bucketStats.$runId")
-    val nb = numBuckets
-    val observed = extracted.mapPartitions { it =>
-      val pid = TaskContext.getPartitionId()
-      val local = scala.collection.mutable.Map.empty[Int, BStats]
-      var flushed = false
-      new Iterator[ExtractedTurn] {
-        override def hasNext: Boolean = {
-          val h = it.hasNext
-          if (!h && !flushed) { acc.add(pid -> local.toMap); flushed = true }
-          h
-        }
-        override def next(): ExtractedTurn = {
-          val t = it.next()
-          val hash = XxHash64Function.hash(UTF8String.fromString(t.conv_id), StringType, 42L)
-          val b = (((hash % nb) + nb) % nb).toInt
-          val ms = t.ts.getTime
-          val s = BStats(1L, t.blocksKept, t.blocksDropped, t.charsEmitted, ms, ms)
-          local.updateWith(b) { case Some(p) => Some(p.merge(s)); case None => Some(s) }
-          t
-        }
-      }
-    }
-
-    // 1. DATA FIRST: bucketed, order-restored within files; stats observed
-    //    in the same pass. The bucket exchange ships SLIM spans (byte
-    //    lengths instead of the text duplicate) and slices them back above
-    //    the sort — the same shuffle-byte halving as the flagship's order
-    //    restore (see ExtractPipeline.orderRestore / BENCH/TUNING.md).
-    graft.functions.SpanShuffle.register(spark)
-    observed.toDF()
-      .withColumn("spans", graft.functions.SpanShuffle.slim(col("spans")))
-      .withColumn("bucket", bucketOf)
-      .repartition(col("bucket"))
-      .sortWithinPartitions(col("bucket"), col("conv_id"), col("turn_idx"))
-      .withColumn("spans", graft.functions.SpanShuffle.fatten(col("text"), col("spans")))
-      .select((extracted.schema.fieldNames.map(col) :+ col("bucket")): _*)
-      .write.mode("overwrite").partitionBy("bucket").parquet(dataPath)
-
-    // schema tracked per entry (Iceberg schema-evolution analog, minimal
-    // form): the writer's logical schema, minus the physical `bucket`
-    // partition column. A later commit with a DIFFERENT schema fails fast
-    // below instead of silently forking old/new data files.
-    val schemaDdl = extracted.schema.catalogString
-    val newEntries = acc.value.toSeq.sortBy(_._1).map { case (b, s) =>
-      BucketEntry(b, s"$dataPath/bucket=$b", runId,
-        s.turns, s.blocksKept, s.blocksDropped, s.charsEmitted,
-        TsFmt.format(Instant.ofEpochMilli(s.minTs)),
-        TsFmt.format(Instant.ofEpochMilli(s.maxTs)), schemaDdl)
-    }
-    commitEntries(spark, newEntries, replaceBuckets, forceReplace,
-      toBranch = toBranch)
-  }
+      toBranch: Option[String] = None): Option[Long] =
+    SnapshotWriterUtil.write(rows.toDF(), dir, numBuckets, runId,
+      PublishRule(replaceBuckets, forceReplace, toBranch = toBranch))
 
   /** The manifest half of the commit protocol, callable with entries
-    * whose DATA was already written by someone else — the DataSource V2
-    * writer's `BatchWrite.commit` lands here: executors wrote the run's
-    * parquet (data first), the driver merges their per-task stats into
-    * [[BucketEntry]]s and this publishes manifest-then-CURRENT under the
-    * same optimistic-concurrency claim as the library path. */
+    * whose DATA is already written — the writer's driver-side publish
+    * lands here: executors wrote the run's parquet (data first), the
+    * driver merged their per-task stats into [[BucketEntry]]s, and this
+    * publishes manifest-then-CURRENT under an optimistic-concurrency
+    * claim. `restore` and metadata-only deletes call it with entries that
+    * reference existing data. */
   def commitEntries(spark: SparkSession, newEntries: Seq[BucketEntry],
       replaceBuckets: Boolean, forceReplace: Set[Int] = Set.empty,
       replaceExactly: Option[Set[Int]] = None,
@@ -540,7 +487,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
 
   /** Per-bucket table statistics straight from the live manifest — the
     * Iceberg metadata-table analog (`table$partitions`): turns / blocks /
-    * chars and the ts range come from the commit-time accumulators, so the
+    * chars and the ts range come from the writers' commit messages, so the
     * query costs ZERO data-file IO. At 100 TB the difference between a
     * manifest read and a table scan is the whole point of carrying stats
     * in the manifest — "how big is each bucket / how fresh is the data"
@@ -596,17 +543,16 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * (still time-travel-able via older manifests) — [[expireSnapshots]] is
     * the GC pass that reclaims them. Incremental runs append a
     * run-directory per resume — compaction folds them back to one. */
-  def compact(spark: SparkSession, runId: String): Long = {
-    import spark.implicits._
-    val df = read(spark).as[graft.model.ExtractedTurn]
-    // forceReplace every committed bucket: the compacted snapshot holds
-    // EXACTLY the rewrite — stale pairs of a fully-MOR-deleted bucket (all
-    // data matched by delete keys ⇒ no compacted output rows for it) drop
-    // out instead of lingering, and every pending delete file-set folds in
-    commit(spark, df, runId, replaceBuckets = true,
+  def compact(spark: SparkSession, runId: String): Long =
+    // the table's rows as they are (any schema: evolved and column-mapped
+    // tables compact at the physical level). forceReplace every committed
+    // bucket: the compacted snapshot holds EXACTLY the rewrite — stale
+    // pairs of a fully-MOR-deleted bucket (all data matched by delete keys
+    // ⇒ no compacted output rows for it) drop out instead of lingering,
+    // and every pending delete file-set folds in
+    commit(spark, read(spark), runId, replaceBuckets = true,
       forceReplace = committedBuckets(spark))
       .getOrElse(sys.error(s"compact of empty table $dir"))
-  }
 
   /** Row-level maintenance (the Iceberg delete/overwrite-where analog at
     * bucket granularity — "reprocess one conversation after a bad kernel
@@ -676,36 +622,17 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     require(keys.columns.contains("conv_id") && keys.columns.contains("turn_idx"),
       s"deleteRowsMor needs (conv_id, turn_idx) columns; got [${keys.columns.mkString(", ")}]")
     val live = committedBuckets(spark)
-    val dataPath = s"$dir/data/run=$runId"
     val k = keys
       .select(col("conv_id").cast("string").as("conv_id"),
         col("turn_idx").cast("int").as("turn_idx"))
       .distinct()
-      .withColumn("bucket", bucketOf)
-      .filter(col("bucket").isin(live.toSeq: _*)) // keys to nowhere are inert
-      .persist()
-    // Count per bucket BEFORE writing: a zero-match delete must be an
-    // inert no-op, but an empty partitionBy write leaves only _SUCCESS and
-    // the read-back would throw UNABLE_TO_INFER_SCHEMA. `k` is persisted,
-    // so the caller's keys are evaluated once and the counted set is the
-    // written set.
-    import spark.implicits._
-    try {
-      val counts = k.groupBy(col("bucket")).count()
-        .as[(Int, Long)].collect().sortBy(_._1)
-      if (counts.isEmpty) return None
-      // DATA FIRST (same crash posture as every commit: unreferenced until
-      // the manifest lands)
-      k.repartition(col("bucket"))
-        .sortWithinPartitions(col("bucket"), col("conv_id"), col("turn_idx"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(dataPath)
-      val entries = counts.toSeq.map { case (b, n) =>
-        BucketEntry(b, s"$dataPath/bucket=$b", runId, n, 0L, 0L, 0L,
-          "1970-01-01T00:00:00", "1970-01-01T00:00:00", SnapshotTable.DeleteKeyDdl,
-          kind = "delete")
-      }
-      commitEntries(spark, entries, replaceBuckets = false)
-    } finally k.unpersist()
+      .filter(bucketOf.isin(live.toSeq: _*)) // keys to nowhere are inert
+    // through the one writer, as `kind = "delete"` entries: the per-bucket
+    // key counts come from the write's own commit messages, so the
+    // caller's keys are evaluated once and the counted set is the written
+    // set; a zero-match delete writes no file and publishes nothing (None)
+    SnapshotWriterUtil.write(k, dir, numBuckets, runId,
+      PublishRule(kind = "delete"))
   }
 
   /** [[deleteRowsMor]] by predicate: the matching keys are computed from
@@ -732,7 +659,6 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     *         threshold (nothing to do — the healthy steady state). */
   def rewriteDeletes(spark: SparkSession, runId: String,
       minDeleteRatio: Double = 0.1): Option[Long] = {
-    import spark.implicits._
     require(minDeleteRatio >= 0.0, s"negative minDeleteRatio $minDeleteRatio")
     val entries = committedEntries(spark)
     val targets = entries.groupBy(_.bucket).collect {
@@ -746,8 +672,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val tEntries = entries.filter(e => targets(e.bucket))
     // pending deletes applied exactly once, here — the rewritten buckets
     // carry no delete entries afterwards (forceReplace drops them)
-    val survivors = logicalRead(spark, tEntries).as[ExtractedTurn]
-    commit(spark, survivors, runId, replaceBuckets = true,
+    commit(spark, logicalRead(spark, tEntries), runId, replaceBuckets = true,
       forceReplace = targets)
   }
 
@@ -806,11 +731,11 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * ([[SnapshotTable.open]] recovers the live layout from the manifest,
     * so readers never need to know a rebucket happened). */
   def rebucket(spark: SparkSession, newNumBuckets: Int, runId: String): SnapshotTable = {
-    import spark.implicits._
     require(newNumBuckets > 0, s"bucket count must be positive: $newNumBuckets")
+    // the target handle writes, so rows hash with the NEW count
     val target = new SnapshotTable(dir, newNumBuckets)
     val old = committedBuckets(spark)
-    target.commit(spark, read(spark).as[graft.model.ExtractedTurn], runId,
+    target.commit(spark, read(spark), runId,
       replaceBuckets = true, forceReplace = old)
       .getOrElse(sys.error(s"rebucket of empty table $dir"))
     target
@@ -1350,8 +1275,7 @@ object SnapshotTable {
   }
 
   /** The schema of merge-on-read delete key file-sets. */
-  private[table] val DeleteKeyDdl = "struct<conv_id:string,turn_idx:int>"
-  private lazy val DeleteKeySchema = parseSchema(DeleteKeyDdl).get
+  private lazy val DeleteKeySchema = parseSchema("struct<conv_id:string,turn_idx:int>").get
 
   /** Additive-evolution compatibility: true iff the shorter schema's
     * fields are an exact name+type prefix of the longer's (nullability and

@@ -71,6 +71,41 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
     assert(fp == graft.functions.TextFingerprint.compute("abc"))
   }
 
+  test("a second registerAll on one session replaces nothing: no " +
+    "'replaced a previously registered function' WARN, same builders") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    GraftExtensions.registerAll(spark)
+    val registry = spark.sessionState.functionRegistry
+    def builders = GraftExtensions.functions.map { case (name, _) =>
+      registry.lookupFunctionBuilder(FunctionIdentifier(name)).get }
+    val before = builders
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-registry-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    def replacedWarns = logged.asScala.count(_.contains("replaced a previously registered function"))
+    val root = LogManager.getRootLogger.asInstanceOf[CoreLogger]
+    capture.start()
+    root.addAppender(capture)
+    try {
+      // the capture sees the WARN a real replacement logs …
+      val (name, builder) = GraftExtensions.functions.head
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
+      assert(replacedWarns == 1, logged.asScala.mkString("\n"))
+      logged.clear()
+      // … and a repeated registerAll logs none
+      GraftExtensions.registerAll(spark)
+      GraftExtensions.registerAll(spark)
+      assert(replacedWarns == 0, logged.asScala.mkString("\n"))
+    } finally { root.removeAppender(capture); capture.stop() }
+    assert(builders.zip(before).forall { case (a, b) => a eq b })
+  }
+
   test("the kernel step's planner strategy rides in through the same switch") {
     withExtSession { ext =>
       assert(ext.sessionState.planner.strategies.contains(graft.pipe.ExtractKernelStrategy))

@@ -16,7 +16,7 @@ class KnobInventorySpec extends AnyFunSuite {
     "SPARK_GRAFT_WORKER_MEM_MB", "SPARK_GRAFT_GC_THREADS", "SPARK_GRAFT_JVM_OPTS",
     "SPARK_GRAFT_PROBE_ONLY", "SPARK_GRAFT_SCALE_N", "SPARK_GRAFT_BENCH_CONVS",
     "SPARK_GRAFT_BENCH_HOT", "SPARK_GRAFT_BENCH_REPS", "SPARK_GRAFT_BENCH_ONLY",
-    "SPARK_GRAFT_BENCH_WARM_DIR", "SPARK_GRAFT_VERIFY_ONLY", "SPARK_GRAFT_SPJ_CONVS")
+    "SPARK_GRAFT_BENCH_WARM_DIR", "SPARK_GRAFT_VERIFY_ONLY")
 
   test("src/main/scala and build.sbt read exactly the listed SPARK_GRAFT_* knobs") {
     val sources: Seq[Path] =
@@ -24,7 +24,7 @@ class KnobInventorySpec extends AnyFunSuite {
         .filter(Files.isRegularFile(_)).toSeq :+ Paths.get("build.sbt")
     val found = sources.flatMap(f =>
       "SPARK_GRAFT_[A-Z0-9_]+".r.findAllIn(Files.readString(f))).toSet
-    assert(Knobs.size == 18)
+    assert(Knobs.size == 17)
     assert(found == Knobs)
   }
 }

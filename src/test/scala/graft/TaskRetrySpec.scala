@@ -16,11 +16,12 @@ import java.util.concurrent.atomic.AtomicInteger
   * exactly-once claims hold END TO END, not just by API contract:
   *
   *  1. map-side retry through [[SnapshotTable.commit]]: the manifest's
-  *     per-bucket stats come from a write-pass accumulator
-  *     (`BucketStatsAccumulator`); a retried map task must not double-count
-  *     (Spark discards accumulator updates from failed attempts, and the
-  *     observer only flushes at iterator exhaustion — both are load-bearing
-  *     here, so the test pins the COMPOSED behavior against a clean twin).
+  *     per-bucket stats are counted by the writer tasks as they write and
+  *     reach the driver in the commit messages of successful attempts; a
+  *     map task that dies and reruns upstream of the writer's exchange
+  *     must not double-count stats or rows (the failed attempt's shuffle
+  *     output is discarded — the test pins the COMPOSED behavior against a
+  *     clean twin).
   *  2. result-stage (parquet write task) retry: the attempt-0 partial file
   *     must never surface (FileOutputCommitter attempt isolation) — the
   *     read-back row set equals a clean run's, no duplicates, no misses.
