@@ -1,5 +1,6 @@
 package graft.connector
 
+import graft.table.Refs
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -52,7 +53,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     else {
       val s = Files.list(base)
       try s.iterator.asScala
-        .filter(p => Files.exists(p.resolve("CURRENT")))
+        .filter(p => new Refs(p.toString).read(Refs.Main).isDefined)
         .map(p => Identifier.of(namespace, p.getFileName.toString))
         .toArray
       finally s.close()
@@ -64,30 +65,18 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // committed tables carry CURRENT; created-but-never-written tables
     // carry the CREATE TABLE metadata — both are loadable (INSERT INTO a
     // freshly created table must resolve)
-    Files.exists(Paths.get(dir, "CURRENT")) || SnapshotTableMeta.exists(dir)
+    new Refs(dir).read(Refs.Main).isDefined || SnapshotTableMeta.exists(dir)
   }
 
   private def load(ident: Identifier, snapshotId: Option[Long]): Table = {
     val dir = dirOf(ident)
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    val meta = SnapshotTableMeta.read(dir)
-    val metaSchema = meta.map(m =>
-      org.apache.spark.sql.types.DataType.fromDDL(m._1).asInstanceOf[StructType])
-    val cur = Paths.get(dir, "CURRENT")
-    if (!Files.exists(cur) && snapshotId.isEmpty) {
-      // created, never written: empty table from the CREATE metadata
-      return new SnapshotV2Table(dir, -1L, Seq.empty,
-        meta.map(_._2).getOrElse(16), metaSchema)
-    }
-    val snapId = snapshotId.getOrElse(Files.readString(cur).trim.toLong)
-    val entries = SnapshotManifest.read(dir, snapId)
-    // entries may be EMPTY (a delete-only snapshot removed every
-    // conversation) — still a readable, appendable table
-    val nb = entries.headOption.map(_.numBuckets)
-      .orElse(SnapshotManifest.numBucketsAt(dir, snapId)) // tombstone-only
-      .orElse(meta.map(_._2)).getOrElse(16)
-    new SnapshotV2Table(dir, snapId, entries, nb, metaSchema,
-      preferExternalSuperset = snapshotId.isEmpty)
+    // a created, never written table resolves to an empty snapshot -1; a
+    // delete-emptied one to a snapshot with no entries — both readable
+    // and appendable
+    val snap = SnapshotManifest.resolve(dir, snapshotId, fallbackBuckets = 16)
+    new SnapshotV2Table(dir, snap.snapshotId, snap.entries, snap.numBuckets,
+      snap.metaSchema, preferExternalSuperset = snapshotId.isEmpty)
   }
 
   override def loadTable(ident: Identifier): Table = {

@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.table.SnapshotTable
+import graft.table.{Refs, SnapshotTable}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 object SnapshotMetaTables {
 
-  val Kinds: Set[String] = Set("snapshots", "files", "tags", "branches")
+  val Kinds: Set[String] = Set("snapshots", "files", Refs.TagKind, Refs.BranchKind)
 
   def load(dir: String, kind: String): Table = kind match {
     case "snapshots" => new SnapshotMetaTable(s"$dir#snapshots",
@@ -49,12 +49,12 @@ object SnapshotMetaTables {
         .add("min_ts", StringType, nullable = false)
         .add("max_ts", StringType, nullable = false),
       () => fileRows(dir))
-    case "tags" => new SnapshotMetaTable(s"$dir#tags",
+    case Refs.TagKind => new SnapshotMetaTable(s"$dir#tags",
       new StructType()
         .add("name", StringType, nullable = false)
         .add("snapshot_id", LongType, nullable = false),
       () => tagRows(dir))
-    case "branches" => new SnapshotMetaTable(s"$dir#branches",
+    case Refs.BranchKind => new SnapshotMetaTable(s"$dir#branches",
       new StructType()
         .add("name", StringType, nullable = false)
         .add("head_snapshot_id", LongType, nullable = false),

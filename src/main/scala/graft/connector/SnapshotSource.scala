@@ -1,7 +1,7 @@
 package graft.connector
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import graft.table.SnapshotTable
+import graft.table.{Refs, SnapshotTable}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
@@ -69,75 +69,56 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
   private def loadTable(options: CaseInsensitiveStringMap,
       externalSchema: Option[StructType] = None): SnapshotV2Table = {
     val dir = dirOf(options)
-    val cur = Paths.get(dir, "CURRENT")
     // `option("branch", name)` reads the branch head — sugar for time
     // travel to the pointer's snapshot id (explicit snapshotId wins)
     val branchOpt = Option(options.get("branch")).map(_.trim).filter(_.nonEmpty)
-      .map { name =>
-        val bf = Paths.get(dir, "branches", name)
-        if (!Files.exists(bf)) sys.error(s"no branch '$name' in $dir")
-        Files.readString(bf).trim.toLong
-      }
-    val snapOpt = Option(options.get("snapshotId")).map(_.trim.toLong)
-      .orElse(branchOpt)
-      .orElse(if (Files.exists(cur)) Some(Files.readString(cur).trim.toLong) else None)
-    val meta = SnapshotTableMeta.read(dir)
-    snapOpt match {
-      case Some(snapId) =>
-        val full = SnapshotManifest.read(dir, snapId)
-        // INCREMENTAL BATCH READ (the Iceberg incremental-append-scan as a
-        // batch option): `.option("changesFrom", N)` scopes the table to
-        // the file-set delta (N, snapId] — a daily downstream job reads
-        // only what landed since the snapshot it last processed, costing
-        // two manifest reads and zero listing of processed history.
-        // `.option("snapshotId", M)` doubles as the inclusive upper end;
-        // `allowReplaced=true` opts into at-least-once redelivery of
-        // rewritten buckets, mirroring readChanges/the streaming face.
-        val changesFrom = Option(options.get("changesFrom")).map(_.trim.toLong)
-        val entries = changesFrom match {
-          case Some(from) =>
-            val fromPaths =
-              if (from < 0) Set.empty[String]
-              else SnapshotManifest.read(dir, from).map(_.path).toSet
-            val toPaths = full.map(_.path).toSet
-            val rewritten = fromPaths.filterNot(toPaths)
-            if (rewritten.nonEmpty &&
-                !Option(options.get("allowReplaced")).exists(_.trim.toBoolean))
-              throw new IllegalStateException(
-                s"snapshots $from → $snapId are not append-only: " +
-                  s"${rewritten.size} file-set(s) were rewritten in between. " +
-                  "Set .option(\"allowReplaced\", \"true\") for at-least-once " +
-                  "redelivery of rewritten buckets.")
-            full.filterNot(e => fromPaths(e.path))
-          case None => full
-        }
-        // entries can legitimately be EMPTY (a delete-only snapshot removed
-        // the last conversation): still a readable, appendable table
-        val nb = entries.headOption.map(_.numBuckets)
-          .orElse(SnapshotManifest.numBucketsAt(dir, snapId)) // tombstone-only
-          .orElse(meta.map(_._2))
-          .getOrElse(Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16))
-        // a delta read whose delta is EMPTY still needs the table's
-        // schema: fall back to the full snapshot's widest entry schema
-        val deltaSchemaFallback =
-          if (changesFrom.isDefined)
-            SnapshotTable.widestSchema(full.map(_.schema))
-              .map(d => DataType.fromDDL(d).asInstanceOf[StructType])
-          else None
-        new SnapshotV2Table(dir, snapId, entries, nb,
-          externalSchema.orElse(deltaSchemaFallback)
-            .orElse(meta.map(m => DataType.fromDDL(m._1).asInstanceOf[StructType])),
-          preferExternalSuperset =
-            Option(options.get("snapshotId")).isEmpty && branchOpt.isEmpty)
-      case None =>
-        // no committed snapshot: a brand-new table (first commit creates
-        // snapshot 0). Bucket count from CREATE TABLE metadata or the
-        // writer's option; later opens recover it from the manifest.
-        val nb = meta.map(_._2)
-          .getOrElse(Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16))
-        new SnapshotV2Table(dir, -1L, Seq.empty, nb,
-          externalSchema.orElse(meta.map(m => DataType.fromDDL(m._1).asInstanceOf[StructType])))
+      .map(name => new Refs(dir).read(Refs.Branch(name))
+        .getOrElse(sys.error(s"no branch '$name' in $dir")))
+    // a table never committed resolves to snapshot -1 with no entries: a
+    // brand-new table (first commit creates snapshot 0) whose bucket count
+    // comes from CREATE TABLE metadata or the writer's option
+    val snap = SnapshotManifest.resolve(dir,
+      Option(options.get("snapshotId")).map(_.trim.toLong).orElse(branchOpt),
+      Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16))
+    val (snapId, full) = (snap.snapshotId, snap.entries)
+    // INCREMENTAL BATCH READ (the Iceberg incremental-append-scan as a
+    // batch option): `.option("changesFrom", N)` scopes the table to
+    // the file-set delta (N, snapId] — a daily downstream job reads
+    // only what landed since the snapshot it last processed, costing
+    // two manifest reads and zero listing of processed history.
+    // `.option("snapshotId", M)` doubles as the inclusive upper end;
+    // `allowReplaced=true` opts into at-least-once redelivery of
+    // rewritten buckets, mirroring readChanges/the streaming face.
+    val changesFrom = Option(options.get("changesFrom")).map(_.trim.toLong)
+      .filter(_ => snapId >= 0)
+    val entries = changesFrom match {
+      case Some(from) =>
+        val fromPaths =
+          if (from < 0) Set.empty[String]
+          else SnapshotManifest.read(dir, from).map(_.path).toSet
+        val toPaths = full.map(_.path).toSet
+        val rewritten = fromPaths.filterNot(toPaths)
+        if (rewritten.nonEmpty &&
+            !Option(options.get("allowReplaced")).exists(_.trim.toBoolean))
+          throw new IllegalStateException(
+            s"snapshots $from → $snapId are not append-only: " +
+              s"${rewritten.size} file-set(s) were rewritten in between. " +
+              "Set .option(\"allowReplaced\", \"true\") for at-least-once " +
+              "redelivery of rewritten buckets.")
+        full.filterNot(e => fromPaths(e.path))
+      case None => full
     }
+    // a delta read whose delta is EMPTY still needs the table's
+    // schema: fall back to the full snapshot's widest entry schema
+    val deltaSchemaFallback =
+      if (changesFrom.isDefined)
+        SnapshotTable.widestSchema(full.map(_.schema))
+          .map(d => DataType.fromDDL(d).asInstanceOf[StructType])
+      else None
+    new SnapshotV2Table(dir, snapId, entries, snap.numBuckets,
+      externalSchema.orElse(deltaSchemaFallback).orElse(snap.metaSchema),
+      preferExternalSuperset =
+        Option(options.get("snapshotId")).isEmpty && branchOpt.isEmpty)
   }
 
   /** A caller-supplied schema (e.g. the dataframe being written to a
@@ -174,9 +155,10 @@ final case class ColumnMapEntry(id: Int, name: String, phys: String,
 object SnapshotTableMeta {
   private def file(dir: String) = Paths.get(dir, "TABLE_META.json")
 
+  /** Replaces the file atomically ([[Refs.atomicWrite]]): a reader racing
+    * an `ALTER` sees the old or the new metadata, never a torn file. */
   def write(dir: String, schemaDdl: String, numBuckets: Int,
       mapping: Option[Seq[ColumnMapEntry]] = None): Unit = {
-    Files.createDirectories(Paths.get(dir))
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val mapField = mapping match {
       case Some(ms) =>
@@ -185,27 +167,23 @@ object SnapshotTableMeta {
           .mkString(""","mapping":[""", ",", "]")
       case None => ""
     }
-    Files.writeString(file(dir),
+    Refs.atomicWrite(file(dir),
       s"""{"schema":"${esc(schemaDdl)}","numBuckets":$numBuckets$mapField}""")
-    ()
   }
 
-  def read(dir: String): Option[(String, Int)] =
+  /** The one parse of the file; a malformed file fails loudly. */
+  private def json(dir: String) =
     if (!Files.exists(file(dir))) None
-    else {
-      val n = new ObjectMapper().readTree(Files.readString(file(dir)))
-      Some((n.get("schema").asText(), n.get("numBuckets").asInt()))
-    }
+    else Some(new ObjectMapper().readTree(Files.readString(file(dir))))
+
+  def read(dir: String): Option[(String, Int)] =
+    json(dir).map(n => (n.get("schema").asText(), n.get("numBuckets").asInt()))
 
   /** The column mapping, present only once an ALTER created one. */
   def mapping(dir: String): Option[Seq[ColumnMapEntry]] =
-    if (!Files.exists(file(dir))) None
-    else {
-      val n = new ObjectMapper().readTree(Files.readString(file(dir)))
-      Option(n.get("mapping")).map(_.elements().asScala.map(e =>
-        ColumnMapEntry(e.get("id").asInt(), e.get("name").asText(),
-          e.get("phys").asText(), e.get("dropped").asBoolean())).toSeq)
-    }
+    json(dir).flatMap(n => Option(n.get("mapping"))).map(_.elements().asScala.map(e =>
+      ColumnMapEntry(e.get("id").asInt(), e.get("name").asText(),
+        e.get("phys").asText(), e.get("dropped").asBoolean())).toSeq)
 
   /** Rename a LOGICAL-named schema to the PHYSICAL names frozen in data
     * files (identity when the table has no mapping — the common case and
@@ -270,17 +248,35 @@ object SnapshotManifest {
   private def tsMs(s: String): Long =
     LocalDateTime.parse(s, TsFmt).toInstant(ZoneOffset.UTC).toEpochMilli
 
-  /** Bucket count of a snapshot, including tombstone-only (empty)
-    * manifests — the count a delete-everything table keeps resolving with. */
-  def numBucketsAt(dir: String, snapshotId: Long): Option[Int] =
-    if (!Files.exists(Paths.get(dir, "manifests", s"snap-$snapshotId.json"))) None
-    else SnapshotTable.readManifest(dir, snapshotId).numBuckets
+  def read(dir: String, snapshotId: Long): Seq[ManifestEntry] =
+    entries(SnapshotTable.readManifest(dir, snapshotId))
 
-  def read(dir: String, snapshotId: Long): Seq[ManifestEntry] = {
-    val m = SnapshotTable.readManifest(dir, snapshotId)
+  private def entries(m: SnapshotTable.Manifest): Seq[ManifestEntry] = {
     val nb = m.bucketCount.getOrElse(0) // None only when there are no entries
     m.entries.map(e => ManifestEntry(e.bucket, e.path, e.runId, e.turns,
       tsMs(e.minTs), tsMs(e.maxTs) + 1000L, e.schema, nb, e.kind))
+  }
+
+  /** What a table load resolves to: the snapshot (-1 with no entries for
+    * a table never committed), its entries, the bucket count and the
+    * CREATE/ALTER schema of TABLE_META.json. */
+  final case class Resolved(snapshotId: Long, entries: Seq[ManifestEntry],
+      numBuckets: Int, metaSchema: Option[StructType])
+
+  /** Resolve `snapshotId`, or the live snapshot when None, for both load
+    * faces (the path source and the catalog). The bucket count is the
+    * manifest's — also for a delete-emptied, tombstone-only snapshot —
+    * then TABLE_META's, then `fallbackBuckets`. */
+  def resolve(dir: String, snapshotId: Option[Long], fallbackBuckets: Int): Resolved = {
+    val meta = SnapshotTableMeta.read(dir)
+    val metaSchema = meta.map(m => DataType.fromDDL(m._1).asInstanceOf[StructType])
+    def buckets(m: Option[Int]) = m.orElse(meta.map(_._2)).getOrElse(fallbackBuckets)
+    snapshotId.orElse(new Refs(dir).read(Refs.Main)) match {
+      case Some(id) =>
+        val m = SnapshotTable.readManifest(dir, id)
+        Resolved(id, entries(m), buckets(m.bucketCount), metaSchema)
+      case None => Resolved(-1L, Seq.empty, buckets(None), metaSchema)
+    }
   }
 }
 
@@ -881,8 +877,7 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
   import org.apache.spark.sql.connector.read.streaming.Offset
 
   private def spark = SparkSession.active
-  private def currentId: Long =
-    Files.readString(Paths.get(dir, "CURRENT")).trim.toLong
+  private def currentId: Long = new Refs(dir).read(Refs.Main).getOrElse(-1L)
 
   /** First batch covers (initialOffset, latestOffset]: the default -1
     * replays the full table history (snapshot 0's file-sets included);

@@ -2,7 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Incrementally-maintained aggregate over a [[SnapshotTable]] — the
@@ -30,19 +30,17 @@ import scala.jdk.CollectionConverters._
   * alone).
   *
   * State protocol mirrors the table's own (data first, CURRENT last,
-  * atomic rename): `dir/agg-v<snapId>/` parquet + `dir/CURRENT` naming the
+  * [[Refs.atomicWrite]]): `dir/agg-v<snapId>/` parquet + `dir/CURRENT` naming the
   * snapshot the view is consistent with. A crash between the two leaves an
   * orphan agg-v dir that the next refresh simply overwrites — refresh is
   * idempotent.
   */
 final class MaterializedAgg(val table: SnapshotTable, val dir: String) {
 
-  private def currentFile: Path = Paths.get(dir, "CURRENT")
+  private val pointer = new Refs(dir)
 
   /** Snapshot id the materialized state is consistent with, if any. */
-  def refreshedSnapshot: Option[Long] =
-    if (Files.exists(currentFile)) Some(Files.readString(currentFile).trim.toLong)
-    else None
+  def refreshedSnapshot: Option[Long] = pointer.read(Refs.Main)
 
   /** The view definition over extracted turns (mergeable partials only).
     * The HLL registers are 64 conditional-max aggregates in the SAME
@@ -124,11 +122,7 @@ final class MaterializedAgg(val table: SnapshotTable, val dir: String) {
     }
     val out = s"$dir/agg-v$target"
     newAgg.coalesce(1).write.mode("overwrite").parquet(out)
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, s".CURRENT.tmp.$target")
-    Files.writeString(tmp, target.toString)
-    Files.move(tmp, currentFile, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    Refs.atomicWrite(pointer.path(Refs.Main), target.toString)
     // GC superseded versions (safe AFTER the marker move; keep the live one)
     Files.list(Paths.get(dir)).iterator().asScala
       .filter(p => p.getFileName.toString.startsWith("agg-v")

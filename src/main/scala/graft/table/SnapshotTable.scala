@@ -1,13 +1,13 @@
 package graft.table
 
-import graft.connector.{PublishRule, SnapshotWriterUtil}
+import graft.connector.{PublishRule, SnapshotTableMeta, SnapshotWriterUtil}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model.ExtractedTurn
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Iceberg-STYLE snapshot table over plain Parquet (no Iceberg jar in this
@@ -22,11 +22,13 @@ import scala.jdk.CollectionConverters._
   *    extraction metrics (turns, blocksKept, blocksDropped, charsEmitted,
   *    minTs, maxTs). Each snapshot lists the FULL committed set (Iceberg
   *    manifest-list style), so a reader needs exactly one file.
-  *  - `dir/CURRENT` names the live snapshot; updated by atomic rename.
-  *    Data written by a crashed run is invisible (unreferenced) — readers and
-  *    resumers only trust the manifest, which is what makes resume
-  *    exactly-once (SURVEY §7.4 #3: data first, manifest second, CURRENT
-  *    last).
+  *  - `dir/CURRENT` names the live snapshot, `dir/branches/<name>` and
+  *    `dir/tags/<name>` the other refs ([[Refs]]); every ref moves by
+  *    [[Refs.swing]] under the ref lock, a compare-and-swap against the
+  *    snapshot the writer built on. Data written by a crashed run is
+  *    invisible (unreferenced) — readers and resumers only trust the
+  *    manifest, which is what makes resume exactly-once (SURVEY §7.4 #3:
+  *    data first, manifest second, ref last).
   *  - Resume: a restarted run asks [[committedBuckets]] and processes only
   *    the complement (anti-join of input buckets vs committed — SURVEY §2.10).
   *  - Planning happens on the driver, as in Iceberg: the manifest is parsed
@@ -41,9 +43,10 @@ import scala.jdk.CollectionConverters._
   */
 final class SnapshotTable(val dir: String, val numBuckets: Int) {
   import SnapshotTable.BucketEntry
+  import Refs.{Branch, Expect, Main, Tag}
 
   private def manifestsDir: Path = Paths.get(dir, "manifests")
-  private def currentFile: Path = Paths.get(dir, "CURRENT")
+  private[graft] val refs = new Refs(dir)
 
   def bucketOf = pmod(xxhash64(col("conv_id")), lit(numBuckets.toLong)).cast("int")
 
@@ -55,10 +58,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     (((h % numBuckets) + numBuckets) % numBuckets).toInt
   }
 
-  def currentSnapshotId: Option[Long] =
-    if (Files.exists(currentFile))
-      Some(Files.readString(currentFile).trim.toLong)
-    else None
+  def currentSnapshotId: Option[Long] = refs.read(Main)
 
   private def esc(s: String): String =
     s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
@@ -97,7 +97,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * and sorts (bucket, conv_id, turn_idx), so each bucket gets one file
     * per commit, in the stable order; executors stage per-attempt files
     * and count the per-bucket manifest stats as they write, and the
-    * driver publishes data → manifest → CURRENT
+    * driver publishes data → manifest → ref
     * ([[graft.connector.SnapshotWriterUtil.publish]]). The stats come from
     * the commit messages of successful task attempts only, so a retried
     * task never double-counts and the written data is never re-scanned.
@@ -133,9 +133,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * whose DATA is already written — the writer's driver-side publish
     * lands here: executors wrote the run's parquet (data first), the
     * driver merged their per-task stats into [[BucketEntry]]s, and this
-    * publishes manifest-then-CURRENT under an optimistic-concurrency
-    * claim. `restore` and metadata-only deletes call it with entries that
-    * reference existing data. */
+    * publishes the manifest under an optimistic-concurrency claim, then
+    * the ref by `swing` under the ref lock. `restore` and metadata-only
+    * deletes call it with entries that reference existing data. */
   def commitEntries(spark: SparkSession, newEntries: Seq[BucketEntry],
       replaceBuckets: Boolean, forceReplace: Set[Int] = Set.empty,
       replaceExactly: Option[Set[Int]] = None,
@@ -157,16 +157,12 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // pointer for a branch commit (Iceberg branch semantics — branches
     // share one data dir and one snapshot-id space, diverge only in which
     // manifest their pointer names).
-    val parent = toBranch match {
-      case None       => currentSnapshotId.getOrElse(-1L)
-      case Some(name) => branches.getOrElse(name,
-        throw new IllegalArgumentException(
-          s"no branch '$name' in $dir (createBranch first)"))
+    val ref = toBranch.fold[Refs.Ref](Main)(Branch)
+    val parent = refs.read(ref).getOrElse {
+      require(toBranch.isEmpty, s"no branch '${toBranch.get}' in $dir (createBranch first)")
+      -1L
     }
-    val base: Seq[BucketEntry] =
-      if (toBranch.isEmpty) committedEntries(spark)
-      else if (parent < 0) Seq.empty
-      else entriesAt(spark, parent)
+    val base = if (parent < 0) Seq.empty[BucketEntry] else entriesAt(spark, parent)
     val prevAll = replaceExactly match {
       // copy-on-write rule: drop EXACTLY the scanned groups; new entries
       // append (a new entry for an unscanned bucket rides alongside that
@@ -196,11 +192,11 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // widening pairs before the prefix test; genuine renames/reorders/
     // arbitrary type changes are still rejected, and unmapped tables keep
     // the strict name+type prefix rule
-    lazy val mapped = metaMapping.isDefined
-    lazy val droppedP = droppedPhysNames
+    lazy val dropped = SnapshotTableMeta.mapping(dir)
+      .map(_.filter(_.dropped).map(_.phys).toSet)
     def schemaOk(a: String, b: String): Boolean =
       SnapshotTable.prefixCompatible(a, b) ||
-        (mapped && SnapshotTable.prefixCompatibleModulo(a, b, droppedP))
+        dropped.exists(SnapshotTable.prefixCompatibleModulo(a, b, _))
     prev.find(e => e.kind == "data" && schemaDdl.nonEmpty && e.schema.nonEmpty &&
         e.schema != schemaDdl &&
         !schemaOk(e.schema, schemaDdl)).foreach { e =>
@@ -232,38 +228,22 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // both want snap N+1 — exactly one create succeeds; the loser throws a
     // retryable conflict instead of silently clobbering the winner's
     // manifest (the pre-guard behavior: REPLACE_EXISTING + last-wins
-    // CURRENT swing = lost commits). The winner owns the id through the
-    // CURRENT swing below, so no re-check is needed there. A committer
-    // that CRASHES between claim and swing leaves a claimed-but-unpublished
-    // manifest blocking its id — [[removeOrphanManifests]] is the age-gated
-    // reclaim (same posture as removeOrphanFiles for data).
+    // CURRENT swing = lost commits). A committer that CRASHES between
+    // claim and swing leaves a claimed-but-unpublished manifest blocking
+    // its id — [[removeOrphanManifests]] is the age-gated reclaim (same
+    // posture as removeOrphanFiles for data); a zero-length claim older
+    // than the grace window is reclaimed inline ([[Refs.claim]]), which
+    // lets a replayed streaming batch (same parent, same snapId) recover
+    // from its own crashed predecessor.
     val target = manifestsDir.resolve(s"snap-$snapId.json")
-    def claim(retry: Boolean): Unit =
-      try Files.createFile(target)
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // SELF-HEALING conflict path: a ZERO-LENGTH claim older than the
-          // grace window is a committer that died between claiming and
-          // publishing (a live committer publishes within the window; one
-          // that published left a NON-empty file). Reclaim inline and
-          // retry once — this is what lets a replayed streaming batch
-          // (same parent, same snapId) recover from its own crashed
-          // predecessor without a human running removeOrphanManifests.
-          val stale =
-            try retry && Files.size(target) == 0 &&
-              Files.getLastModifiedTime(target).toMillis <
-                System.currentTimeMillis() - SnapshotTable.ClaimGraceMs
-            catch { case _: java.nio.file.NoSuchFileException => retry }
-          if (stale) { Files.deleteIfExists(target); claim(retry = false) }
-          else throw new SnapshotTable.CommitConflictException(
-            s"concurrent commit on $dir: snapshot id $snapId is already " +
-              s"claimed while CURRENT is $parent. Re-read and retry; if a " +
-              "committer crashed between claiming and publishing, reclaim " +
-              "stale claims with removeOrphanManifests(olderThanMs).")
-      }
-    claim(retry = true)
-    // From here the claim is OURS: any failure before the CURRENT swing
-    // must release it, or this committer's own retry/replay (same parent ⇒
+    if (!Refs.claim(target))
+      throw new SnapshotTable.CommitConflictException(
+        s"concurrent commit on $dir: snapshot id $snapId is already " +
+          s"claimed while the ref is at $parent. Re-read and retry; if a " +
+          "committer crashed between claiming and publishing, reclaim " +
+          "stale claims with removeOrphanManifests(olderThanMs).")
+    // From here the claim is OURS: any failure before the ref swing must
+    // release it, or this committer's own retry/replay (same parent ⇒
     // same snapId) would wedge on its own abandoned claim.
     try {
       // a delete-everything commit has ZERO entries: write a tombstone line
@@ -274,10 +254,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       val lines =
         if (entryLines.nonEmpty) entryLines
         else Seq(s"""{"snapshotId":$snapId,"parentId":$parent,"buckets":$numBuckets,"tombstone":true}""")
-      val tmpM = manifestsDir.resolve(s"snap-$snapId.json.tmp")
-      Files.writeString(tmpM, lines.mkString("\n"))
-      Files.move(tmpM, target,
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+      Refs.atomicWrite(target, lines.mkString("\n"))
 
       if (!publish) {
         // WRITE-AUDIT-PUBLISH staging: everything above happened — data
@@ -293,28 +270,13 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         return Some(snapId)
       }
 
-      // 4. REF LAST (atomic pointer swing — the commit point): CURRENT
-      // for the main line, the branch pointer for a branch commit. The
-      // branch swing re-checks the head it built on (CAS): a branch
-      // dropped or force-moved mid-commit must fail the commit, not
-      // silently resurrect or rewind the pointer.
-      toBranch match {
-        case None =>
-          val tmpC = Paths.get(dir, "CURRENT.tmp")
-          Files.writeString(tmpC, snapId.toString)
-          Files.move(tmpC, currentFile,
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        case Some(name) =>
-          if (!branches.get(name).contains(parent))
-            throw new SnapshotTable.CommitConflictException(
-              s"branch '$name' moved (or was dropped) while committing " +
-                s"snapshot $snapId on parent $parent — re-read and retry")
-          val tmpB = branchesDir.resolve(s"$name.tmp")
-          Files.createDirectories(branchesDir)
-          Files.writeString(tmpB, snapId.toString)
-          Files.move(tmpB, branchesDir.resolve(name),
-            StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      }
+      // 4. REF LAST (the commit point): `swing` under the ref lock moves
+      // CURRENT for the main line, the branch pointer for a branch commit,
+      // only if it still names the parent this snapshot was built on. A
+      // fast-forward, WAP publish, or branch drop that moved the ref
+      // since fails the commit (releasing the claim below) instead of
+      // being rewound.
+      refs.swing(ref, Expect.is(Some(parent).filter(_ >= 0)), snapId)
     } catch {
       case e: Throwable =>
         try Files.deleteIfExists(target)
@@ -336,9 +298,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       Files.exists(stagedMarker(id)))
 
   /** Publish a staged snapshot: the deferred CURRENT swing of a
-    * `commitEntries(…, publish = false)`. The staged manifest's parent
-    * must still be the live snapshot — guaranteed in practice because the
-    * staged claim blocks every other committer, but checked anyway. */
+    * `commitEntries(…, publish = false)`. The staged claim blocks every
+    * other committer, but not a fast-forward: the swing is a
+    * compare-and-swap against the staged manifest's parent, and a moved
+    * CURRENT fails the publish with a conflict (discard and re-stage). */
   def publishStaged(snapshotId: Long): Unit = {
     val m = manifestsDir.resolve(s"snap-$snapshotId.json")
     require(Files.exists(m) && Files.size(m) > 0,
@@ -346,14 +309,11 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     require(Files.exists(stagedMarker(snapshotId)),
       s"snapshot $snapshotId is not staged (already published, or a foreign claim)")
     val parent = SnapshotTable.readManifest(dir, snapshotId).parentId
-    val cur = currentSnapshotId.getOrElse(-1L)
-    require(parent == cur,
-      s"staged snapshot $snapshotId has parent $parent but CURRENT is $cur — " +
-        "the chain moved; discard and re-stage")
-    val tmpC = Paths.get(dir, "CURRENT.tmp")
-    Files.writeString(tmpC, snapshotId.toString)
-    Files.move(tmpC, currentFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    // the marker is checked under the ref lock too: a discard that won
+    // the lock first has deleted the manifest CURRENT would name
+    val onParent = Expect.is(Some(parent).filter(_ >= 0))
+    refs.swing(Main, onParent.copy(ok = seen =>
+      onParent.ok(seen) && Files.exists(stagedMarker(snapshotId))), snapshotId)
     Files.deleteIfExists(stagedMarker(snapshotId))
     ()
   }
@@ -361,18 +321,22 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   /** Abandon a staged snapshot after a failed audit: delete its manifest
     * (freeing the claimed id for the next committer) and any data
     * file-sets only it referenced. Manifest-first ordering, same as
-    * [[expireSnapshots]]. @return the deleted data paths. */
+    * [[expireSnapshots]]. The checks and the manifest delete run under
+    * the ref lock, so a racing [[publishStaged]] either lands first (and
+    * the discard is refused) or finds the audit gone (and conflicts).
+    * @return the deleted data paths. */
   def discardStaged(spark: SparkSession, snapshotId: Long): Seq[String] = {
-    val m = manifestsDir.resolve(s"snap-$snapshotId.json")
-    require(Files.exists(stagedMarker(snapshotId)),
-      s"snapshot $snapshotId is not staged — refusing to discard published history")
-    require(currentSnapshotId.forall(_ < snapshotId),
-      s"snapshot $snapshotId is not beyond CURRENT")
     val mine = entriesAt(spark, snapshotId).map(_.path).toSet
     val keptPaths = snapshotIds.filterNot(_ == snapshotId)
       .flatMap(entriesAt(spark, _)).map(_.path).toSet
-    Files.deleteIfExists(m)
-    Files.deleteIfExists(stagedMarker(snapshotId))
+    refs.locked {
+      require(Files.exists(stagedMarker(snapshotId)),
+        s"snapshot $snapshotId is not staged — refusing to discard published history")
+      require(currentSnapshotId.forall(_ < snapshotId),
+        s"snapshot $snapshotId is not beyond CURRENT")
+      Files.deleteIfExists(manifestsDir.resolve(s"snap-$snapshotId.json"))
+      Files.deleteIfExists(stagedMarker(snapshotId))
+    }
     val dead = (mine -- keptPaths).toSeq.sorted
     dead.foreach { p =>
       val path = Paths.get(p)
@@ -401,51 +365,6 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         .parquet(delEntries.map(_.path): _*),
       Seq("conv_id", "turn_idx"), "left_anti")
 
-  /** The catalog's field-id column mapping from TABLE_META.json, parsed
-    * minimally ((logicalName → physName, dropped) triples) — None for
-    * unmapped tables (the common case; driver-side read per use, ALTERs
-    * can land at any time). The library stays at the PHYSICAL level
-    * throughout; the logical rename/drop overlay is the V2 connector's. */
-  private def metaMapping: Option[Seq[(String, String, Boolean)]] = {
-    val f = Paths.get(dir, "TABLE_META.json")
-    if (!Files.exists(f)) None
-    else try {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(Files.readString(f))
-      Option(n.get("mapping")).map { arr =>
-        scala.jdk.CollectionConverters.IteratorHasAsScala(arr.elements()).asScala
-          .map(e => (e.get("name").asText(), e.get("phys").asText(),
-            e.get("dropped").asBoolean())).toSeq
-      }
-    } catch { case _: Exception => None }
-  }
-
-  /** Physical names of columns DROPPED via the mapping. */
-  private def droppedPhysNames: Set[String] =
-    metaMapping.map(_.collect { case (_, p, true) => p }.toSet)
-      .getOrElse(Set.empty)
-
-  /** For EVOLUTION-MANAGED tables (a mapping exists): the current logical
-    * schema re-expressed under PHYSICAL names — the one schema every data
-    * file of the table reads correctly under (dropped columns projected
-    * away by omission; widened columns upcast per file by the parquet
-    * reader, which natively reads INT32 as LONG / FLOAT as DOUBLE when
-    * handed the wider schema). */
-  private def metaPhysicalSchema: Option[org.apache.spark.sql.types.StructType] =
-    metaMapping.flatMap { ms =>
-      val f = Paths.get(dir, "TABLE_META.json")
-      try {
-        val n = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(Files.readString(f))
-        val logical = org.apache.spark.sql.types.DataType
-          .fromDDL(n.get("schema").asText())
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val physOf = ms.collect { case (l, p, false) => l -> p }.toMap
-        Some(org.apache.spark.sql.types.StructType(logical.fields.map(fld =>
-          physOf.get(fld.name).map(p => fld.copy(name = p)).getOrElse(fld))))
-      } catch { case _: Exception => None }
-    }
-
   /** Data rows of an entry set under the schema the manifest recorded —
     * WITHOUT delete application (callers decide). A schema handed to the
     * parquet reader spares the footer-inference job, so the only job of a
@@ -462,9 +381,13 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         SnapshotTable.widestSchema(ddls).flatMap(SnapshotTable.parseSchema)
           // an EVOLUTION-MANAGED table (mapping present) that dropped or
           // widened a column holds a mix no single entry schema covers:
-          // read under the meta-derived PHYSICAL schema — dropped columns
-          // project away by omission, widened columns upcast per file
-          .orElse(metaPhysicalSchema)
+          // read under the current logical schema re-expressed under
+          // PHYSICAL names — dropped columns project away by omission,
+          // widened columns upcast per file (the parquet reader reads
+          // INT32 as LONG / FLOAT as DOUBLE when handed the wider type)
+          .orElse(SnapshotTableMeta.mapping(dir).flatMap(_ => SnapshotTableMeta.read(dir))
+            .map(m => SnapshotTableMeta.toPhysical(dir,
+              DataType.fromDDL(m._1).asInstanceOf[StructType])))
           // otherwise: incompatible mix (pre-guard table) — infer as before
       else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
         SnapshotTable.parseSchema(ddls.head)
@@ -570,28 +493,31 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * At 100 TB this is the point of the conv_id-bucketed layout: the
     * rewrite cost is O(buckets touched), i.e. O(convIds), not O(table). */
   def replaceWhere(spark: SparkSession, convIds: Seq[String],
-      replacement: Dataset[ExtractedTurn], runId: String): Option[Long] = {
-    import spark.implicits._
+      replacement: Dataset[_], runId: String): Option[Long] =
+    rewriteConversations(spark, convIds, Some(replacement.toDF()), runId)
+
+  /** Pure row-level delete: [[replaceWhere]] with no replacement rows. */
+  def deleteConversations(spark: SparkSession, convIds: Seq[String],
+      runId: String): Option[Long] =
+    rewriteConversations(spark, convIds, None, runId)
+
+  /** The owning buckets' rows minus `convIds`, plus `replacement`, in the
+    * table's own schema (untyped: any schema with a string `conv_id`). */
+  private def rewriteConversations(spark: SparkSession, convIds: Seq[String],
+      replacement: Option[DataFrame], runId: String): Option[Long] = {
     require(convIds.nonEmpty, "replaceWhere needs at least one conversation")
     val buckets = convIds.map(bucketOfId).toSet
     val entries = committedEntries(spark).filter(e => buckets(e.bucket))
     require(entries.nonEmpty, s"none of buckets $buckets is committed in $dir")
-    val stray = replacement.toDF().withColumn("_b", bucketOf)
-      .filter(!col("_b").isin(buckets.toSeq: _*)).count()
-    require(stray == 0L,
-      s"$stray replacement row(s) hash outside the rewritten buckets $buckets")
+    replacement.foreach { r =>
+      val stray = r.filter(!bucketOf.isin(buckets.toSeq: _*)).count()
+      require(stray == 0L,
+        s"$stray replacement row(s) hash outside the rewritten buckets $buckets")
+    }
     val survivors = logicalRead(spark, entries) // pending MOR deletes honored
       .where(!col("conv_id").isin(convIds: _*))
-      .as[ExtractedTurn]
-    commit(spark, survivors.unionByName(replacement), runId,
+    commit(spark, replacement.fold(survivors)(survivors.unionByName(_)), runId,
       replaceBuckets = true, forceReplace = buckets)
-  }
-
-  /** Pure row-level delete: [[replaceWhere]] with no replacement rows. */
-  def deleteConversations(spark: SparkSession, convIds: Seq[String],
-      runId: String): Option[Long] = {
-    import spark.implicits._
-    replaceWhere(spark, convIds, spark.emptyDataset[ExtractedTurn], runId)
   }
 
   /** MERGE-ON-READ row-level delete (the Iceberg v2 position/equality
@@ -822,46 +748,31 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
 
   // ---------------------------------------------------------------- tags
 
-  private def tagsDir: Path = Paths.get(dir, "tags")
-
   /** Tag a snapshot (Iceberg tag analog): a named, immutable pin on a
     * snapshot id — "the corpus release we trained v3 on". Tags are the
     * retention contract: [[expireSnapshots]] NEVER collects a tagged
     * snapshot, however old, so a tagged release stays reproducible while
-    * the daily chain around it is GC'd. Atomic single-file write; name is
-    * validated to stay a safe path segment. */
+    * the daily chain around it is GC'd. Re-tagging moves the tag (a
+    * `swing` that accepts any previous value); the name is validated to
+    * stay a safe path segment. */
   def tag(name: String, snapshotId: Long): Unit = {
     require(name.matches("[A-Za-z0-9._-]+"), s"unsafe tag name: $name")
     require(snapshotIds.contains(snapshotId),
       s"cannot tag unknown snapshot $snapshotId (have ${snapshotIds.mkString(",")})")
-    Files.createDirectories(tagsDir)
-    val tmp = tagsDir.resolve(s"$name.tmp")
-    Files.writeString(tmp, snapshotId.toString)
-    Files.move(tmp, tagsDir.resolve(name),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    refs.swing(Tag(name), Expect.AnyValue, snapshotId)
   }
 
   /** All tags: name → snapshot id. */
-  def tags: Map[String, Long] =
-    if (!Files.exists(tagsDir)) Map.empty
-    else listDir(tagsDir)
-      .filterNot(_.getFileName.toString.endsWith(".tmp"))
-      .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
-      .toMap
+  def tags: Map[String, Long] = refs.list(Refs.TagKind)
 
-  def dropTag(name: String): Boolean =
-    Files.deleteIfExists(tagsDir.resolve(name))
+  def dropTag(name: String): Boolean = refs.drop(Tag(name))
 
   /** Time travel by tag. */
-  def readTag(spark: SparkSession, name: String): DataFrame = {
-    val id = tags.getOrElse(name,
-      throw new IllegalArgumentException(s"no tag '$name' in $dir"))
-    readAt(spark, id)
-  }
+  def readTag(spark: SparkSession, name: String): DataFrame =
+    readAt(spark, refs.read(Tag(name)).getOrElse(
+      throw new IllegalArgumentException(s"no tag '$name' in $dir")))
 
   // ------------------------------------------------------------ branches
-
-  private def branchesDir: Path = Paths.get(dir, "branches")
 
   /** Create a branch (Iceberg branch analog): a named MUTABLE pointer
     * starting at `fromSnapshotId` (default: the live snapshot). Commits
@@ -879,56 +790,40 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       throw new IllegalStateException(s"no committed snapshot in $dir to branch from"))
     require(snapshotIds.contains(from),
       s"cannot branch from unknown snapshot $from (have ${snapshotIds.mkString(",")})")
-    Files.createDirectories(branchesDir)
-    try Files.write(branchesDir.resolve(name),
-      from.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE_NEW)
-    catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(s"branch '$name' already exists in $dir")
-    }
+    refs.swing(Branch(name), Expect.Absent, from)
     from
   }
 
   /** All branches: name → head snapshot id. */
-  def branches: Map[String, Long] =
-    if (!Files.exists(branchesDir)) Map.empty
-    else listDir(branchesDir)
-      .filterNot(_.getFileName.toString.endsWith(".tmp"))
-      .map(p => p.getFileName.toString -> Files.readString(p).trim.toLong)
-      .toMap
+  def branches: Map[String, Long] = refs.list(Refs.BranchKind)
 
   /** Drop a branch pointer. Its commits stay time-travel-able by id until
     * [[expireSnapshots]] / [[removeOrphanManifests]] collect them (they
     * lose their GC protection with the pointer — an abandoned experiment
     * ages off with the rest of the history). */
-  def dropBranch(name: String): Boolean =
-    Files.deleteIfExists(branchesDir.resolve(name))
+  def dropBranch(name: String): Boolean = refs.drop(Branch(name))
 
   /** Read a branch's head snapshot. */
-  def readBranch(spark: SparkSession, name: String): DataFrame = {
-    val id = branches.getOrElse(name,
-      throw new IllegalArgumentException(s"no branch '$name' in $dir"))
-    readAt(spark, id)
-  }
+  def readBranch(spark: SparkSession, name: String): DataFrame =
+    readAt(spark, refs.read(Branch(name)).getOrElse(
+      throw new IllegalArgumentException(s"no branch '$name' in $dir")))
 
   /** Parent snapshot id of a manifest (the lineage pointer every entry
     * line carries); None when the manifest is gone or unreadable. */
-  private[table] def parentOf(id: Long): Option[Long] =
+  private[graft] def parentOf(id: Long): Option[Long] =
     scala.util.Try(SnapshotTable.readManifest(dir, id).parentId).toOption
+
+  /** `head` and its ancestors, newest first, by parent pointers. */
+  private def chain(head: Long): Iterator[Long] =
+    Iterator.iterate(Option(head))(_.flatMap(parentOf))
+      .takeWhile(_.exists(_ >= 0)).flatten
 
   /** Every snapshot id reachable by parent pointers from a branch head —
     * the set GC must treat as published branch history, not crashed
-    * claims. Bounded by the number of branch commits (small). */
-  private def branchReachableIds: Set[Long] = {
-    val seen = scala.collection.mutable.Set.empty[Long]
-    branches.values.foreach { head =>
-      var cur = Option(head)
-      while (cur.exists(id => id >= 0 && seen.add(id)))
-        cur = cur.flatMap(parentOf)
-    }
-    seen.toSet
-  }
+    * claims. A walk stops where an earlier branch's walk already went. */
+  private def branchReachableIds: Set[Long] =
+    branches.values.foldLeft(Set.empty[Long])((seen, head) =>
+      seen ++ chain(head).takeWhile(!seen(_)))
 
   /** Fast-forward the main line to a branch head (the Iceberg
     * `fast_forward` procedure): allowed only when the branch head is a
@@ -937,37 +832,19 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * pointer advance, never a rewrite. Non-fast-forward states (main
     * advanced independently since the branch was cut) are refused;
     * reconcile by re-branching from the new main and replaying, as with
-    * git. The branch pointer itself is left in place. */
+    * git. The ancestry walk is the `swing`'s expectation, checked under
+    * the ref lock, so a main-line commit or publish that lands first makes
+    * the fast-forward conflict instead of being rewound. The branch
+    * pointer itself is left in place. */
   def fastForward(name: String): Long = {
-    val head = branches.getOrElse(name,
+    val head = refs.read(Branch(name)).getOrElse(
       throw new IllegalArgumentException(s"no branch '$name' in $dir"))
-    val cur = currentSnapshotId.getOrElse(-1L)
-    if (head == cur) return cur
-    var walk = Option(head)
-    var found = false
-    while (!found && walk.exists(_ > cur))
-      { walk = walk.flatMap(parentOf); found = walk.contains(cur) }
-    if (!(found || cur < 0))
-      throw new IllegalStateException(
-        s"cannot fast-forward $dir to branch '$name' (head $head): CURRENT " +
-          s"$cur is not an ancestor of the branch head. Re-branch from the " +
-          "live snapshot and replay the branch's changes.")
-    val tmpC = Paths.get(dir, "CURRENT.tmp")
-    Files.writeString(tmpC, head.toString)
-    // CAS re-check (same posture as the branch swing in commitEntries): a
-    // main-line commit that landed between the ancestry check above and
-    // this pointer move would be silently rewound off the main line — and
-    // its manifest later deleted by removeOrphanManifests (id > CURRENT,
-    // not branch-reachable). Refuse instead; the caller re-reads and
-    // retries against the new CURRENT.
-    if (currentSnapshotId.getOrElse(-1L) != cur) {
-      Files.deleteIfExists(tmpC)
-      throw new SnapshotTable.CommitConflictException(
-        s"CURRENT moved while fast-forwarding $dir to branch '$name' " +
-          s"(ancestry was checked against $cur) — re-read and retry")
-    }
-    Files.move(tmpC, currentFile,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    def isAncestor(cur: Option[Long]): Boolean =
+      cur.forall(c => chain(head).takeWhile(_ >= c).contains(c))
+    refs.swing(Main, Expect(isAncestor, cur =>
+      s"is ${cur.getOrElse(-1L)}, not an ancestor of branch '$name' (head " +
+        s"$head): cannot fast-forward. Re-branch from the live snapshot and " +
+        "replay the branch's changes."), head)
     head
   }
 
@@ -1218,9 +1095,10 @@ object SnapshotTable {
     * removeOrphanManifests path. */
   val ClaimGraceMs: Long = 10 * 60 * 1000L
 
-  /** A concurrent committer claimed this snapshot id first — re-read the
-    * table and retry (the optimistic-concurrency loser path; never thrown
-    * by replays, which are detected earlier via runId). */
+  /** A concurrent writer claimed this snapshot id, or moved the ref this
+    * write built on, first — re-read the table and retry (the
+    * optimistic-concurrency loser path; never thrown by replays, which are
+    * detected earlier via runId). */
   final class CommitConflictException(msg: String)
     extends IllegalStateException(msg)
   private val SnapName = """snap-(\d+)\.json""".r
@@ -1345,9 +1223,8 @@ object SnapshotTable {
     * constructed with the old count would mis-hash point reads. Pre-field
     * manifests fall back to max(bucket)+1 ([[Manifest.bucketCount]]). */
   def open(dir: String): SnapshotTable = {
-    val cur = Paths.get(dir, "CURRENT")
-    require(Files.exists(cur), s"no committed snapshot in $dir")
-    val snapId = Files.readString(cur).trim.toLong
+    val snapId = new Refs(dir).read(Refs.Main).getOrElse(
+      throw new IllegalArgumentException(s"no committed snapshot in $dir"))
     val n = readManifest(dir, snapId).bucketCount
       .getOrElse(sys.error(s"manifest snap-$snapId.json carries no bucket ids"))
     new SnapshotTable(dir, n)

@@ -1,10 +1,11 @@
 package graft.vector
 
 import graft.functions.{VectorFunctions => VF}
+import graft.table.Refs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** PERSISTED IVF vector index — the FAISS-on-disk analog for this engine:
@@ -172,23 +173,16 @@ object VectorIndex {
     val cents = graft.SparkEntry.ivfTrainCentroids(s, qz)
       .collect().map(r => (r.getInt(0), r.getSeq[Long](1)))
       .sortBy(_._1)
-    Files.createDirectories(Paths.get(dir))
-    val tmp = Paths.get(dir, "CENTROIDS.tmp")
-    Files.writeString(tmp,
+    Refs.atomicWrite(Paths.get(dir, "CENTROIDS"),
       cents.map { case (id, v) => s"$id|${v.mkString(",")}" }.mkString("\n"))
-    Files.move(tmp, Paths.get(dir, "CENTROIDS"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     // PQ codebooks: trained once on the same bounded sample (the FAISS
     // IVF-PQ layout), fixed for the index's lifetime — appends encode
     // against them. 8×16 lines, driver-sized by construction.
     val books = graft.SparkEntry.pqTrainCodebooks(s, qz)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
       .sortBy(b => (b._1, b._2))
-    val tmpB = Paths.get(dir, "CODEBOOKS.tmp")
-    Files.writeString(tmpB,
+    Refs.atomicWrite(Paths.get(dir, "CODEBOOKS"),
       books.map { case (m, c, v) => s"$m|$c|${v.mkString(",")}" }.mkString("\n"))
-    Files.move(tmpB, Paths.get(dir, "CODEBOOKS"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     val idx = new VectorIndex(dir)
     writeLists(s, idx, vectors, runId = "base")
     idx

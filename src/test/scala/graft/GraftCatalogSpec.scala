@@ -138,6 +138,21 @@ class GraftCatalogSpec extends AnyFunSuite with SparkTestBase {
     assert(s.table("graft.t_del").count() == 7L)
   }
 
+  test("SQL DELETE FROM by conv_id on a table whose schema is not ExtractedTurn's") {
+    val s = catalogSession(spj = false)
+    s.sql("CREATE TABLE graft.t_notes (conv_id STRING, ts TIMESTAMP, note STRING) " +
+      "USING `graft-snapshot` TBLPROPERTIES ('numBuckets'='4')")
+    s.sql("INSERT INTO graft.t_notes VALUES " +
+      "('n1', TIMESTAMP'2026-01-01 00:00:00', 'one'), " +
+      "('n2', TIMESTAMP'2026-01-01 00:00:01', 'two'), " +
+      "('n3', TIMESTAMP'2026-01-01 00:00:02', 'three')")
+    s.sql("DELETE FROM graft.t_notes WHERE conv_id = 'n2'")
+    assert(s.sql("SELECT conv_id, note FROM graft.t_notes").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSet == Set(("n1", "one"), ("n3", "three")))
+    assert(s.table("graft.t_notes").schema.fieldNames.toSeq == Seq("conv_id", "ts", "note"))
+    s.sql("DROP TABLE graft.t_notes")
+  }
+
   test("SQL UPDATE / MERGE INTO / non-key DELETE: copy-on-write bucket rewrite") {
     import testImplicits._
     val s = catalogSession(spj = false)

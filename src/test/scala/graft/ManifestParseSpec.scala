@@ -80,12 +80,13 @@ class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
       bucketEntry(0, "r2", "", "data"), bucketEntry(5, "r2", "", "data")))
     assert(SnapshotManifest.read(dir.toString, 2L) == Seq(
       manifestEntry(0, "r2", "", 6, "data"), manifestEntry(5, "r2", "", 6, "data")))
-    assert(SnapshotManifest.numBucketsAt(dir.toString, 2L).isEmpty)
+    assert(SnapshotTable.readManifest(dir.toString, 2L).numBuckets.isEmpty)
+    assert(SnapshotManifest.resolve(dir.toString, Some(2L), 16).numBuckets == 6)
 
     assert(table.entriesAt(spark, 3L).isEmpty)
     assert(SnapshotManifest.read(dir.toString, 3L).isEmpty)
-    assert(SnapshotManifest.numBucketsAt(dir.toString, 3L).contains(4))
-    assert(SnapshotManifest.numBucketsAt(dir.toString, 0L).contains(4))
+    assert(SnapshotManifest.resolve(dir.toString, Some(3L), 16).numBuckets == 4)
+    assert(SnapshotTable.readManifest(dir.toString, 0L).numBuckets.contains(4))
 
     // open() recovers the live bucket count, back-filled or from a tombstone
     Files.writeString(dir.resolve("CURRENT"), "2")
@@ -102,6 +103,6 @@ class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
     assert(e1.getMessage.contains("snapshot 7 does not exist"))
     val e2 = intercept[IllegalArgumentException](SnapshotManifest.read(dir.toString, 7L))
     assert(e2.getMessage.contains("snapshot 7 does not exist"))
-    assert(SnapshotManifest.numBucketsAt(dir.toString, 7L).isEmpty)
+    intercept[IllegalArgumentException](SnapshotManifest.resolve(dir.toString, Some(7L), 16))
   }
 }
