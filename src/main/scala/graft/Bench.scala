@@ -65,9 +65,10 @@ object Bench {
       .master(master)
       .appName(s"graft-bench-$cores")
       // 4× cores shuffle partitions: several task waves (amortizes straggler
-      // tails — the hot conversation's reducer), smaller per-task sorts. At
-      // real scale the wave count is huge anyway; this keeps the small bench
-      // corpus from degenerating to ~1 wave on the wide configuration.
+      // tails — the hot conversation's reducer), smaller per-task sorts. For
+      // the flagship's order-restoring exchange this is the CAP: it sizes
+      // itself in whole waves of ≥ 1 MB tasks (ExtractPipeline), and the
+      // headline-scale corpus (≥ 1 MB per task at 4 waves) keeps the cap.
       .config("spark.sql.shuffle.partitions", (cores * 4).toString)
       // scaling phase: keep the configured wave granularity (AQE would
       // coalesce the small bench corpus back to ~1 wave per stage on the
@@ -386,8 +387,34 @@ object Bench {
     n
   }
 
+  /** The lockfile `tools/cluster_campaign.sh` holds, naming its pid, while
+    * a cluster sample runs. */
+  private val CampaignLock = Paths.get("/tmp/graft_sample_running")
+
+  /** Waits while `lock` names a cluster sample other than the one this
+    * process belongs to, polling every `pollMs`; throws once `timeoutMs`
+    * runs out, so a bench never measures next to a sample. An empty lock
+    * counts as a sample; one naming a dead pid is stale and ignored. */
+  private[graft] def awaitCampaign(lock: Path, timeoutMs: Long, pollMs: Long): Unit = {
+    import scala.jdk.OptionConverters._
+    val own = Iterator.unfold(ProcessHandle.current())(_.parent().toScala.map(p => (p.pid, p))).toSet
+    def foreignSample: Boolean =
+      try new String(Files.readAllBytes(lock)).trim.toLongOption
+        .forall(pid => !own(pid) && ProcessHandle.of(pid).isPresent)
+      catch { case _: java.nio.file.NoSuchFileException => false }
+    val deadline = System.nanoTime() + timeoutMs * 1000000L
+    while (foreignSample) {
+      if (System.nanoTime() >= deadline)
+        throw new IllegalStateException(s"a cluster sample still holds $lock after $timeoutMs ms")
+      Thread.sleep(pollMs)
+    }
+  }
+
   /** The phases of one bench run, in run order. */
   private[graft] trait Phases {
+    /** Returns once no cluster-campaign sample runs; throws if the bounded
+      * wait runs out. */
+    def idle(): Unit
     /** Path of the extraction corpus. */
     def corpus(): String
     /** Best wall seconds of the flagship job at N and at 4N cores. */
@@ -402,7 +429,8 @@ object Bench {
 
   /** Runs the phases, each under its own guard, and returns the one JSON
     * line. A failed phase is named in `failed_phases` and its fields are
-    * absent; a phase whose input phase failed fails with it. */
+    * absent; a phase whose input phase failed fails with it, and every
+    * phase that loads the host fails when the `idle` wait does. */
   private[graft] def report(p: Phases, sf: String, turns: Long, coresN: Int,
       cores4n: Int, shape: Option[String]): String = {
     val failedPhases = Json.createArrayNode()
@@ -413,11 +441,16 @@ object Bench {
         failedPhases.add(name)
         None
       }
-    val corpus = phase("corpus")(p.corpus())
-    val secs = phase("scaling")(p.scaling(
+    val idle = phase("campaign")(p.idle())
+    def loading[A](name: String)(body: => A): Option[A] = phase(name) {
+      if (idle.isEmpty) throw new IllegalStateException("a cluster sample is running")
+      body
+    }
+    val corpus = loading("corpus")(p.corpus())
+    val secs = loading("scaling")(p.scaling(
       corpus.getOrElse(throw new IllegalStateException("no corpus"))))
-    val suite = phase("queries")(p.queries())
-    val ceilings = phase("host_probes")(p.probes())
+    val suite = loading("queries")(p.queries())
+    val ceilings = loading("host_probes")(p.probes())
     val efficiency = secs.map { case (sN, s4) =>
       (turns / s4) / (turns / sN) / (cores4n.toDouble / coresN)
     }
@@ -486,6 +519,8 @@ object Bench {
     // still qualify it either way)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     println(report(new Phases {
+      // a campaign sample runs ~4 min at REPS=1
+      def idle() = awaitCampaign(CampaignLock, timeoutMs = 15 * 60 * 1000L, pollMs = 5000L)
       def corpus() = materializeCorpus(cpus, nConvs, hotBase)
       def scaling(corpus: String) = scalingPair(corpus, smallCpus, bigCpus, reps)
       // operator queries at local[cpus] after the scaling phase: the query

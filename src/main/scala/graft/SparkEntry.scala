@@ -3531,8 +3531,7 @@ object SparkEntry {
       if (again != null && again._1 == dir) again._2
       else {
         SF.register(s)
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_containment").toString
+        val path = fixtureDir("graft_containment")
         val base = fanOut(t(s, dir, "documents"))
           .select(col("doc_id"), col("lang"), col("source"),
             TF.tokens(col("text")).as("w"))
@@ -3549,10 +3548,17 @@ object SparkEntry {
     }
   }
 
+  /** A fixture temp dir, removed with its contents when the JVM exits. */
+  private def fixtureDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d))
+    d.getPath
+  }
+
   private def ensureBucketedFixture(s: SparkSession, dir: String): Unit =
     if (bucketedFixtureDir.get(s) != dir) synchronized {
       if (bucketedFixtureDir.get(s) != dir) {
-        val base = java.nio.file.Files.createTempDirectory("graft_bj").toString
+        val base = fixtureDir("graft_bj")
         val docs = t(s, dir, "documents")
         graft.table.BucketedTable.save(
           docs.select(col("doc_id"), col("lang"), col("text")),

@@ -76,7 +76,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // and appendable
     val snap = SnapshotManifest.resolve(dir, snapshotId, fallbackBuckets = 16)
     new SnapshotV2Table(dir, snap.snapshotId, snap.entries, snap.numBuckets,
-      snap.metaSchema, preferExternalSuperset = snapshotId.isEmpty)
+      snap.metaSchema, preferExternalSuperset = snapshotId.isEmpty, bucketClustered = true)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -125,7 +125,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     val dir = dirOf(ident)
     val nb = Option(properties.get("numBuckets")).map(_.toInt).getOrElse(16)
     SnapshotTableMeta.write(dir, schema.catalogString, nb)
-    new SnapshotV2Table(dir, -1L, Seq.empty, nb, Some(schema))
+    new SnapshotV2Table(dir, -1L, Seq.empty, nb, Some(schema), bucketClustered = true)
   }
 
   /** METADATA-ONLY schema evolution — `ADD COLUMNS`, `RENAME COLUMN`,

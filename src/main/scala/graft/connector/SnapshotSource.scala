@@ -283,7 +283,8 @@ object SnapshotManifest {
 final class SnapshotV2Table(dir: String, snapshotId: Long,
     entries: Seq[ManifestEntry], numBuckets: Int,
     externalSchema: Option[StructType] = None,
-    preferExternalSuperset: Boolean = false)
+    preferExternalSuperset: Boolean = false,
+    bucketClustered: Boolean = false)
   extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -538,7 +539,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {
     morGate("append (a re-inserted key would be re-killed by the pending delete)")
-    new SnapshotWriteBuilder(dir, numBuckets, info)
+    new SnapshotWriteBuilder(dir, numBuckets, info, bucketClustered)
   }
 }
 

@@ -37,6 +37,13 @@ import java.time.{Instant, ZoneOffset}
   * plus SQL INSERT, the COW UPDATE/MERGE rewrite ([[SnapshotRowLevel]])
   * and merge-on-read delete key sets (`SnapshotTable.deleteRowsMor`).
   *
+  * `bucketClustered`: the table was loaded through [[GraftCatalog]], whose
+  * relation carries the `bucket` function, so the write clusters and sorts
+  * by `bucket(numBuckets, conv_id)` and commits at most one file per
+  * bucket. The path face (`format("graft-snapshot")`) has no function
+  * catalog to resolve `bucket` against and clusters by conv_id: a write
+  * there emits up to (write partitions × buckets) files.
+  *
   * EXACTLY-ONCE PROTOCOL (every face). Executors write parquet into a
   * per-attempt `_staging` dir — never where readers look — and ship their
   * per-bucket stats + staged paths as WriterCommitMessages. The DRIVER
@@ -54,7 +61,8 @@ import java.time.{Instant, ZoneOffset}
   * invisible files on disk.
   */
 final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
-    info: LogicalWriteInfo) extends WriteBuilder with SupportsTruncate {
+    info: LogicalWriteInfo, bucketClustered: Boolean = false)
+  extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
 
@@ -87,12 +95,13 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
         forceReplace =
           if (truncateFirst) new SnapshotTable(dir, numBuckets).committedBuckets(SparkSession.active)
           else Set.empty,
-        stageOnly = wap, toBranch = toBranch))
+        stageOnly = wap, toBranch = toBranch), bucketSorted = bucketClustered)
     }, streaming = Some(() =>
       // one snapshot per micro-batch, runId = `<queryId>-<epoch>` —
       // replayed epochs are detected in the retained manifest lineage and
       // publish nothing
-      new SnapshotStreamingWrite(dir, numBuckets, schema, info.queryId())))
+      new SnapshotStreamingWrite(dir, numBuckets, schema, info.queryId())),
+      numBuckets = Option.when(bucketClustered)(numBuckets))
   }
 }
 
@@ -101,7 +110,8 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
   * the rows and sorts (conv_id, turn_idx) within partitions, so every file
   * holds contiguous, order-restored conversations. The clustering key is
   * conv_id, or — given `numBuckets`, for a relation that carries
-  * [[BucketFunctions]] — the bucket itself, which also leads the sort: a
+  * [[BucketFunctions]] (the library face) or [[GraftCatalog]] (the catalog
+  * face) — the bucket itself, which also leads the sort: a
   * bucket's rows meet in one task, a commit writes one file per bucket
   * however many partitions the shuffle has, and a task holds one file
   * open at a time (the batch write's `bucketSorted`). `schema` is the

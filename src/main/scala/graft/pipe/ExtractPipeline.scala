@@ -4,6 +4,7 @@ import graft.kernel.{Extractor, ExtractorContext}
 import graft.model.{ExtractConfig, ExtractedTurn, Turn}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.util.LongAccumulator
 
 /** The flagship extraction job (SURVEY §3.1 "Spark shape"):
@@ -15,16 +16,24 @@ import org.apache.spark.util.LongAccumulator
   * the scan partitions (one pass per partition over `InternalRow`,
   * broadcast config, per-task kernel buffers ≈ per-daemon model load
   * `template.py:73`; it writes rows with slim spans and applies the F2 gate)
-  * → repartition(conv_id) → (conv_id, turn_idx) sort → `spans_fatten` →
+  * → repartition(n, conv_id) → (conv_id, turn_idx) sort → `spans_fatten` →
   * sink.
   *
-  * Exactly ONE exchange: the order-restoring repartition by conv_id. Skew
-  * is handled structurally, not by a salt shuffle: scan splits are
-  * size-bounded (`files.maxPartitionBytes`) and per-turn kernel cost is
-  * bounded (maxTextLen gate), so no conversation can concentrate more than
-  * one split's worth of kernel work in one task — and the raw payloads
-  * never cross the network (BENCH/SKEW.md has the ablation against a salted
-  * pre-kernel exchange: ~1/3 the task time, 2.5× faster at 16 cores).
+  * The one exchange, the order-restoring repartition by conv_id, sizes
+  * itself from its input ([[exchangePartitions]]): whole waves of
+  * `defaultParallelism` tasks, each holding at least AQE's
+  * `coalescePartitions.minPartitionSize` of the analyzed plan's size
+  * estimate, capped at `spark.sql.shuffle.partitions`. A small run writes
+  * one wave of parquet files instead of one per shuffle partition (each
+  * write task pays ~35 ms of task deserialization, BENCH/TUNING.md round
+  * 7); at headline scale the cap holds. The count is explicit, so AQE does
+  * not coalesce this exchange further. Skew is handled structurally, not by
+  * a salt shuffle: scan splits are size-bounded (`files.maxPartitionBytes`)
+  * and per-turn kernel cost is bounded (maxTextLen gate), so no
+  * conversation can concentrate more than one split's worth of kernel work
+  * in one task — and the raw payloads never cross the network
+  * (BENCH/SKEW.md has the ablation against a salted pre-kernel exchange:
+  * ~1/3 the task time, 2.5× faster at 16 cores).
   */
 object ExtractPipeline {
 
@@ -140,8 +149,24 @@ object ExtractPipeline {
     sorted(ds.toDF().withColumn("spans", graft.functions.SpanShuffle.slim(col("spans"))))
   }
 
-  private def sorted(slim: DataFrame): Dataset[ExtractedTurn] =
-    fatten(slim.repartition(col("conv_id")).sortWithinPartitions(col("conv_id"), col("turn_idx")))
+  private def sorted(slim: DataFrame): Dataset[ExtractedTurn] = {
+    val conf = slim.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.conf
+    val n = exchangePartitions(slim.sparkSession.sparkContext.defaultParallelism,
+      conf.numShufflePartitions, slim.queryExecution.analyzed.stats.sizeInBytes,
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+    fatten(slim.repartition(n, col("conv_id")).sortWithinPartitions(col("conv_id"), col("turn_idx")))
+  }
+
+  /** Partition count of the order-restoring exchange:
+    * `min(cap, p × max(1, ⌊inputBytes / (p × minPartitionBytes)⌋))` —
+    * whole waves of `p` tasks, at least one wave, never more than `cap`
+    * (the unsized repartition's count). An unknown estimate
+    * (`Long.MaxValue`) lands on the cap. */
+  def exchangePartitions(p: Int, cap: Int, inputBytes: BigInt, minPartitionBytes: Long): Int = {
+    val waves = (inputBytes / (BigInt(p) * minPartitionBytes.max(1L))).max(1)
+    (BigInt(p) * waves).min(cap).toInt
+  }
 
   /** Every output column is aliased here, so a self-join of the result
     * renews its attributes at this projection (the analyzer cannot renew
@@ -169,7 +194,7 @@ object ExtractPipeline {
       sum(col("blocksDropped")).as("blocksDropped"),
       sum(col("charsEmitted")).as("charsEmitted"))
 
-  /** End-to-end: gates → kernel step → repartition(conv_id) → sort →
+  /** End-to-end: gates → kernel step → repartition(n, conv_id) → sort →
     * `spans_fatten`. */
   def run(
       spark: SparkSession,

@@ -3,11 +3,12 @@ package graft
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Paths
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** graft.Bench's phase runner with stub phases: the one JSON line prints
-  * whatever fails, a failed phase's fields are absent, and the line keeps
+  * whatever fails, a failed phase's fields are absent, a run yields to a
+  * live cluster-campaign sample, and the line keeps
   * every key of the last parsed driver artifact (BENCH_r04.json). */
 class BenchPhasesSpec extends AnyFunSuite {
 
@@ -17,6 +18,7 @@ class BenchPhasesSpec extends AnyFunSuite {
     * history phase was handed. */
   private class Stub extends Bench.Phases {
     var recorded: Option[Option[Bench.Sample]] = None
+    def idle() = ()
     def corpus() = "/corpus"
     def scaling(corpus: String) = (40.0, 12.5)
     def queries() = Seq("q_a" -> Some(1.25), "q_b" -> None, "q_c" -> Some(0.5))
@@ -98,5 +100,55 @@ class BenchPhasesSpec extends AnyFunSuite {
     assert(sample.efficiency == 0.8 && sample.tpsN == 25.0 && sample.tps4n == 80.0)
     assert(sample.hostCeiling == 0.98 && sample.memCeiling == 0.5 && sample.shape.isEmpty)
     assert(line.get("headline").isInstanceOf[ObjectNode])
+  }
+
+  test("a cluster sample outlasting the wait fails the campaign phase and nothing loads the host") {
+    val lock = Files.createTempFile("graft_sample_running", "")
+    val sample = new ProcessBuilder("sleep", "30").start()
+    try {
+      Files.writeString(lock, s"${sample.pid}\n")
+      var loaded = List.empty[String]
+      val stub = new Stub {
+        override def idle() = Bench.awaitCampaign(lock, timeoutMs = 200, pollMs = 20)
+        override def corpus() = { loaded ::= "corpus"; super.corpus() }
+        override def scaling(corpus: String) = { loaded ::= "scaling"; super.scaling(corpus) }
+        override def queries() = { loaded ::= "queries"; super.queries() }
+        override def probes() = { loaded ::= "probes"; super.probes() }
+      }
+      val line = run(stub)
+      assert(names(line.get("failed_phases")) ==
+        Seq("campaign", "corpus", "scaling", "queries", "host_probes"))
+      assert(loaded.isEmpty)
+      assert(!line.get("extract").has("sec_n") && !line.has("queries"))
+      assert(stub.recorded == Some(None))
+    } finally { sample.destroy(); Files.deleteIfExists(lock) }
+  }
+
+  test("the campaign wait ends when the sample does, and ignores stale and own locks") {
+    val lock = Files.createTempFile("graft_sample_running", "")
+    try {
+      // an empty lock (a campaign that wrote no pid) is a sample: the wait
+      // lasts until it is removed
+      val remover = new Thread(() => { Thread.sleep(300); Files.deleteIfExists(lock); () })
+      remover.start()
+      val t0 = System.nanoTime()
+      Bench.awaitCampaign(lock, timeoutMs = 30000, pollMs = 20)
+      assert((System.nanoTime() - t0) / 1e6 >= 250)
+      remover.join()
+      assert(names(run(new Stub {
+        override def idle() = Bench.awaitCampaign(lock, timeoutMs = 200, pollMs = 20)
+      }).get("failed_phases")).isEmpty)
+
+      // a dead campaign's lock is stale
+      val dead = new ProcessBuilder("true").start()
+      dead.waitFor()
+      Files.writeString(lock, dead.pid.toString)
+      Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20)
+      // the campaign that launched this process is not waited on
+      Files.writeString(lock, ProcessHandle.current().parent().get.pid.toString)
+      Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20)
+      Files.writeString(lock, "")
+      intercept[IllegalStateException](Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20))
+    } finally Files.deleteIfExists(lock)
   }
 }

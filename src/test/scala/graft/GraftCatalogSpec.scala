@@ -30,7 +30,7 @@ class GraftCatalogSpec extends AnyFunSuite with SparkTestBase {
   /** Warehouse with two co-bucketed tables (same conv_ids, numBuckets=4). */
   private lazy val warehouse: String = {
     import testImplicits._
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = suiteTempDir("graft_wh")
     val t1 = (0 until 60).map(i => mk(s"c$i", 0, "left"))
     val t2 = (0 until 60).map(i => mk(s"c$i", 0, "right"))
     t1.toDS().toDF().write.format("graft-snapshot").mode("append")
@@ -617,5 +617,34 @@ class GraftCatalogSpec extends AnyFunSuite with SparkTestBase {
     // partitioning for aggregation; results must be exact either way
     val agg = s.table("graft.t1").groupBy("conv_id").count()
     assert(agg.collect().map(_.getLong(1)).forall(_ == 1L))
+  }
+
+  test("catalog INSERT and writeTo cluster by bucket: at most one data file per bucket") {
+    val s = catalogSession(spj = false)
+    s.conf.set("spark.sql.shuffle.partitions", "16")
+    s.sql("CREATE TABLE graft.clustered (conv_id STRING, turn_idx INT, note STRING) " +
+      "USING `graft-snapshot` TBLPROPERTIES ('numBuckets'='16')")
+    def rows(from: Long) = s.range(from, from + 2000, 1, 8).select(
+      concat(lit("c"), (col("id") % 400).cast("string")).as("conv_id"),
+      (col("id") / 400).cast("int").as("turn_idx"), lit("x").as("note"))
+    assert(rows(0).rdd.getNumPartitions >= 4)
+    rows(0).createOrReplaceTempView("clustered_src")
+    s.sql("INSERT INTO graft.clustered SELECT * FROM clustered_src")
+    rows(2000).writeTo("graft.clustered").append()
+
+    val table = graft.table.SnapshotTable.open(s"$warehouse/clustered")
+    val first = table.entriesAt(s, 0L)
+    val second = table.entriesAt(s, 1L).filterNot(e => first.exists(_.path == e.path))
+    Seq(first, second).foreach { written =>
+      assert(written.nonEmpty && written.size <= 16)
+      written.foreach { e =>
+        val files = java.nio.file.Files.list(java.nio.file.Paths.get(e.path)).toArray
+          .count(_.toString.endsWith(".parquet"))
+        assert(files == 1, s"${e.path}: $files files")
+      }
+    }
+    assert(s.table("graft.clustered").count() == 4000L)
+    assert(s.sql("SELECT count(DISTINCT conv_id) FROM graft.clustered").head().getLong(0) == 400L)
+    s.sql("DROP TABLE graft.clustered")
   }
 }

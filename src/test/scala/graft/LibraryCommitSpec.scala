@@ -92,7 +92,7 @@ class LibraryCommitSpec extends AnyFunSuite with SparkTestBase {
 
   /** A catalog session over a fresh warehouse and the table `t` in it. */
   private def catalogTable(ddl: String): (SparkSession, String) = {
-    val wh = Files.createTempDirectory("graft_evo_wh").toString
+    val wh = suiteTempDir("graft_evo_wh")
     val s = spark.newSession()
     s.conf.set("spark.sql.catalog.graft", "graft.connector.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)

@@ -23,7 +23,7 @@ class ObservedMetricsSpec extends AnyFunSuite with SparkTestBase {
       val goldens = TranscriptGen.corpus(42L, nConvs = 20, hotBase = 40).toVector
       val ds = ExtractPipeline.observed(
         ExtractPipeline.run(spark, TranscriptGen.dataset(spark, 42L, 20, 40)))
-      ds.write.mode("overwrite").parquet("/tmp/graft_observe_out")
+      ds.write.mode("overwrite").parquet(suiteTempDir("graft_observe_out"))
       // listener delivery is async; poll briefly
       val deadline = System.nanoTime() + 10e9.toLong
       while (captured.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
@@ -41,7 +41,7 @@ class ObservedMetricsSpec extends AnyFunSuite with SparkTestBase {
     val acc = ExtractPipeline.newMetrics(spark)
     val ds = ExtractPipeline.run(
       spark, TranscriptGen.dataset(spark, 43L, 20, 40), metrics = Some(acc))
-    ds.write.mode("overwrite").parquet("/tmp/graft_acc_out")
+    ds.write.mode("overwrite").parquet(suiteTempDir("graft_acc_out"))
     // generator goldens are all confident-dialect turns (classifyScore 1.0),
     // so nothing is F2-gated and turnsOut must equal the golden count exactly
     assert(acc.turnsOut.value == goldens.size)

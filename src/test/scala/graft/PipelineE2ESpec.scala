@@ -4,6 +4,9 @@ import graft.gen.TranscriptGen
 import graft.model.ExtractConfig
 import graft.pipe.ExtractPipeline
 import org.apache.spark.TaskContext
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end Spark suite (SURVEY §5.2): distributed corpus → gates →
@@ -11,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * multi-threaded shuffles:
   *   - per-turn text equality vs the spec-derived goldens,
   *   - stable (conv_id, turn_idx) ordering: conversations whole within a
-  *     partition, turns contiguous and ascending.
+  *     partition, turns contiguous and ascending,
+  *   - the order-restoring exchange sized from its input: one wave of
+  *     tasks for a small corpus, the shuffle-partition count as its cap.
   */
 class PipelineE2ESpec extends AnyFunSuite with SparkTestBase {
 
@@ -72,5 +77,73 @@ class PipelineE2ESpec extends AnyFunSuite with SparkTestBase {
     val cfg = ExtractConfig.default.copy(maxTextLen = 1000)
     val out = ExtractPipeline.run(spark, rows, cfg).collect()
     assert(out.map(_.turn_idx).toSet == Set(2))
+  }
+
+  /** A session at the flagship's settings: `shuffles` shuffle partitions,
+    * AQE on, partition coalescing as given. */
+  private def flagshipSession(shuffles: Int, coalesce: Boolean): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", shuffles.toString)
+    s.conf.set("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
+    s
+  }
+
+  private lazy val smallCorpus: String = {
+    val path = s"${suiteTempDir("graft_e2e_corpus")}/turns"
+    TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4).write.parquet(path)
+    path
+  }
+
+  test("a small parquet corpus restores order in one wave of tasks, not one per shuffle partition") {
+    val s = flagshipSession(shuffles = 16, coalesce = false)
+    import s.implicits._
+    val turns = s.read.parquet(smallCorpus).as[graft.model.Turn]
+    val ordered = ExtractPipeline.run(s, turns)
+    assert(ordered.rdd.getNumPartitions == s.sparkContext.defaultParallelism)
+    assert(s.sparkContext.defaultParallelism == 4)
+
+    // same rows as the unsized order restore
+    val unsized = ExtractPipeline.extract(s, turns).repartition(col("conv_id"))
+      .sortWithinPartitions(col("conv_id"), col("turn_idx"))
+    assert(ordered.collect().sortBy(e => (e.conv_id, e.turn_idx)).toSeq ==
+      unsized.collect().sortBy(e => (e.conv_id, e.turn_idx)).toSeq)
+
+    val layout = ordered.mapPartitions { it =>
+      Iterator.single(TaskContext.getPartitionId() -> it.map(e => (e.conv_id, e.turn_idx)).toVector)
+    }.collect()
+    layout.foreach { case (pid, rows) =>
+      assert(rows == rows.sortBy(identity), s"partition $pid not sorted")
+    }
+    val owners = layout.flatMap { case (pid, rows) => rows.map(_._1).distinct.map(_ -> pid) }
+    assert(owners.length == nConvs, "a conversation is split across partitions")
+  }
+
+  test("exchange partitions: whole waves of parallelism, capped at the shuffle-partition count") {
+    val mb = 1L << 20
+    def n(p: Int, hi: Int, bytes: BigInt) = ExtractPipeline.exchangePartitions(p, hi, bytes, mb)
+    assert(n(16, 64, 230 * mb) == 64)
+    assert(n(4, 16, 230 * mb) == 16)
+    assert(n(1, 4, BigInt(5913628)) == 4)
+    assert(n(4, 16, BigInt(5913628)) == 4)
+    Seq(BigInt(0), BigInt(5913628), 230 * BigInt(mb), BigInt(Long.MaxValue))
+      .foreach(b => assert(n(4, 1, b) == 1, s"$b"))
+    assert(n(4, 16, BigInt(Long.MaxValue)) == 16)
+    assert(n(16, 64, BigInt(Long.MaxValue)) == 64)
+  }
+
+  test("the sized order restore is the plan's only hash exchange, with coalescing on and off") {
+    Seq(true, false).foreach { coalesce =>
+      val s = flagshipSession(shuffles = 16, coalesce = coalesce)
+      import s.implicits._
+      val ds = ExtractPipeline.run(s, s.read.parquet(smallCorpus).as[graft.model.Turn])
+      ds.collect()
+      val plan = (ds.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.finalPhysicalPlan
+        case p => p
+      }).toString
+      assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, s"coalesce=$coalesce:\n$plan")
+      assert(plan.contains("REPARTITION_BY_NUM"), s"coalesce=$coalesce:\n$plan")
+      assert(!plan.contains("coalesced"), s"coalesce=$coalesce:\n$plan")
+    }
   }
 }

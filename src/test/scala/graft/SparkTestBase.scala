@@ -31,9 +31,19 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
       SparkTestBase.session().asInstanceOf[org.apache.spark.sql.classic.SparkSession]
   }
 
+  private val ownedDirs = scala.collection.mutable.Buffer.empty[java.io.File]
+
+  /** A fresh temp dir, removed with everything in it after the suite. */
+  protected def suiteTempDir(prefix: String): String = ownedDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    ownedDirs += d
+    d.getPath
+  }
+
   override def afterAll(): Unit = {
     // keep the session for other suites in the same JVM (fork := true)
-    super.afterAll()
+    try ownedDirs.synchronized(ownedDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    finally super.afterAll()
   }
 }
 

@@ -12,8 +12,10 @@
 #
 #   sbt -batch package && nohup tools/cluster_campaign.sh &
 #
-# A lockfile (/tmp/graft_sample_running) marks a sample in flight so the
-# operator can hold off compiles/tests that would poison the measurement.
+# A lockfile (/tmp/graft_sample_running, holding this script's pid) marks
+# a sample in flight so the operator can hold off compiles/tests that would
+# poison the measurement; graft.Bench waits on it, except in the sample this
+# script itself launches.
 # Stop with: touch /tmp/graft_campaign_stop
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -39,7 +41,7 @@ while [ ! -f "$STOP" ]; do
   ok=$(python3 -c "print(1 if $MIN_HOST<=$host<=$MAX_HOST and $mem>=$MIN_MEM else 0)")
   if [ "$ok" = "1" ]; then
     echo "[campaign] $(date -u +%H:%M:%S) CLEAN host=$host mem=$mem -> sampling ($SHAPE)" >> "$LOG"
-    touch "$LOCK"
+    echo $$ > "$LOCK"
     SPARK_GRAFT_BENCH_REPS="${REPS:-1}" SPARK_GRAFT_CLUSTER_SHAPE="$SHAPE" \
       tools/run_cluster_bench.sh >> "$LOG" 2>&1
     rm -f "$LOCK"
