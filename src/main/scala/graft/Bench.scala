@@ -65,10 +65,12 @@ object Bench {
       .master(master)
       .appName(s"graft-bench-$cores")
       // 4× cores shuffle partitions: several task waves (amortizes straggler
-      // tails — the hot conversation's reducer), smaller per-task sorts. For
-      // the flagship's order-restoring exchange this is the CAP: it sizes
-      // itself in whole waves of ≥ 1 MB tasks (ExtractPipeline), and the
-      // headline-scale corpus (≥ 1 MB per task at 4 waves) keeps the cap.
+      // tails — the hot conversation's reducer), smaller per-task sorts. With
+      // coalescing off (scaling phase) this is the CAP of the flagship's
+      // order-restoring exchange, which sizes itself in whole waves of
+      // ≥ 1 MB tasks (ExtractPipeline); the headline corpus (8.3M turns,
+      // ~1.6 GB of shuffle, BENCH/TUNING.md round 3) is far past the 64 MB
+      // that keeps the cap at local[16].
       .config("spark.sql.shuffle.partitions", (cores * 4).toString)
       // scaling phase: keep the configured wave granularity (AQE would
       // coalesce the small bench corpus back to ~1 wave per stage on the
@@ -394,13 +396,17 @@ object Bench {
   /** Waits while `lock` names a cluster sample other than the one this
     * process belongs to, polling every `pollMs`; throws once `timeoutMs`
     * runs out, so a bench never measures next to a sample. An empty lock
-    * counts as a sample; one naming a dead pid is stale and ignored. */
+    * counts as a sample; one naming a dead pid, or a live process whose
+    * command line does not name the campaign script (a reused pid), is
+    * stale and ignored. */
   private[graft] def awaitCampaign(lock: Path, timeoutMs: Long, pollMs: Long): Unit = {
     import scala.jdk.OptionConverters._
     val own = Iterator.unfold(ProcessHandle.current())(_.parent().toScala.map(p => (p.pid, p))).toSet
+    def campaign(pid: Long): Boolean = ProcessHandle.of(pid).toScala
+      .exists(_.info().commandLine().toScala.forall(_.contains("cluster_campaign.sh")))
     def foreignSample: Boolean =
       try new String(Files.readAllBytes(lock)).trim.toLongOption
-        .forall(pid => !own(pid) && ProcessHandle.of(pid).isPresent)
+        .forall(pid => !own(pid) && campaign(pid))
       catch { case _: java.nio.file.NoSuchFileException => false }
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     while (foreignSample) {

@@ -16,18 +16,19 @@ import org.apache.spark.util.LongAccumulator
   * the scan partitions (one pass per partition over `InternalRow`,
   * broadcast config, per-task kernel buffers ≈ per-daemon model load
   * `template.py:73`; it writes rows with slim spans and applies the F2 gate)
-  * → repartition(n, conv_id) → (conv_id, turn_idx) sort → `spans_fatten` →
+  * → repartition(conv_id) → (conv_id, turn_idx) sort → `spans_fatten` →
   * sink.
   *
-  * The one exchange, the order-restoring repartition by conv_id, sizes
-  * itself from its input ([[exchangePartitions]]): whole waves of
-  * `defaultParallelism` tasks, each holding at least AQE's
-  * `coalescePartitions.minPartitionSize` of the analyzed plan's size
-  * estimate, capped at `spark.sql.shuffle.partitions`. A small run writes
-  * one wave of parquet files instead of one per shuffle partition (each
-  * write task pays ~35 ms of task deserialization, BENCH/TUNING.md round
-  * 7); at headline scale the cap holds. The count is explicit, so AQE does
-  * not coalesce this exchange further. Skew is handled structurally, not by
+  * The one exchange is the order-restoring repartition by conv_id. With
+  * AQE partition coalescing on, AQE sizes it from the shuffle bytes it
+  * measured. With coalescing off, it sizes itself from its input
+  * ([[exchangePartitions]]): whole waves of `defaultParallelism` tasks,
+  * each holding at least AQE's `coalescePartitions.minPartitionSize` of the
+  * analyzed plan's size estimate, capped at `spark.sql.shuffle.partitions`.
+  * A small run then writes one wave of parquet files instead of one per
+  * shuffle partition (each write task pays ~35 ms of task deserialization,
+  * BENCH/TUNING.md round 7); at headline scale the cap holds. Skew is
+  * handled structurally, not by
   * a salt shuffle: scan splits are size-bounded (`files.maxPartitionBytes`)
   * and per-turn kernel cost is bounded (maxTextLen gate), so no
   * conversation can concentrate more than one split's worth of kernel work
@@ -152,10 +153,15 @@ object ExtractPipeline {
   private def sorted(slim: DataFrame): Dataset[ExtractedTurn] = {
     val conf = slim.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.conf
-    val n = exchangePartitions(slim.sparkSession.sparkContext.defaultParallelism,
-      conf.numShufflePartitions, slim.queryExecution.analyzed.stats.sizeInBytes,
-      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
-    fatten(slim.repartition(n, col("conv_id")).sortWithinPartitions(col("conv_id"), col("turn_idx")))
+    // AQE coalescing sizes the exchange from the bytes it measured; only
+    // without it does the estimate size the exchange up front
+    val exchanged =
+      if (conf.adaptiveExecutionEnabled && conf.coalesceShufflePartitionsEnabled)
+        slim.repartition(col("conv_id"))
+      else slim.repartition(exchangePartitions(slim.sparkSession.sparkContext.defaultParallelism,
+        conf.numShufflePartitions, slim.queryExecution.analyzed.stats.sizeInBytes,
+        conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)), col("conv_id"))
+    fatten(exchanged.sortWithinPartitions(col("conv_id"), col("turn_idx")))
   }
 
   /** Partition count of the order-restoring exchange:
@@ -194,7 +200,7 @@ object ExtractPipeline {
       sum(col("blocksDropped")).as("blocksDropped"),
       sum(col("charsEmitted")).as("charsEmitted"))
 
-  /** End-to-end: gates → kernel step → repartition(n, conv_id) → sort →
+  /** End-to-end: gates → kernel step → repartition(conv_id) → sort →
     * `spans_fatten`. */
   def run(
       spark: SparkSession,

@@ -104,7 +104,8 @@ class BenchPhasesSpec extends AnyFunSuite {
 
   test("a cluster sample outlasting the wait fails the campaign phase and nothing loads the host") {
     val lock = Files.createTempFile("graft_sample_running", "")
-    val sample = new ProcessBuilder("sleep", "30").start()
+    // a live process whose command line names the campaign script
+    val sample = new ProcessBuilder("bash", "-c", "sleep 30; true", "cluster_campaign.sh").start()
     try {
       Files.writeString(lock, s"${sample.pid}\n")
       var loaded = List.empty[String]
@@ -121,10 +122,12 @@ class BenchPhasesSpec extends AnyFunSuite {
       assert(loaded.isEmpty)
       assert(!line.get("extract").has("sec_n") && !line.has("queries"))
       assert(stub.recorded == Some(None))
-    } finally { sample.destroy(); Files.deleteIfExists(lock) }
+    } finally {
+      sample.descendants().forEach(_.destroy()); sample.destroy(); Files.deleteIfExists(lock)
+    }
   }
 
-  test("the campaign wait ends when the sample does, and ignores stale and own locks") {
+  test("the campaign wait ends when the sample does, and ignores stale, reused and own locks") {
     val lock = Files.createTempFile("graft_sample_running", "")
     try {
       // an empty lock (a campaign that wrote no pid) is a sample: the wait
@@ -144,6 +147,12 @@ class BenchPhasesSpec extends AnyFunSuite {
       dead.waitFor()
       Files.writeString(lock, dead.pid.toString)
       Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20)
+      // a dead campaign's pid reused by another live process is stale too
+      val reused = new ProcessBuilder("sleep", "30").start()
+      try {
+        Files.writeString(lock, reused.pid.toString)
+        Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20)
+      } finally reused.destroy()
       // the campaign that launched this process is not waited on
       Files.writeString(lock, ProcessHandle.current().parent().get.pid.toString)
       Bench.awaitCampaign(lock, timeoutMs = 0, pollMs = 20)

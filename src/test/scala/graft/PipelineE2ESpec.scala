@@ -131,7 +131,7 @@ class PipelineE2ESpec extends AnyFunSuite with SparkTestBase {
     assert(n(16, 64, BigInt(Long.MaxValue)) == 64)
   }
 
-  test("the sized order restore is the plan's only hash exchange, with coalescing on and off") {
+  test("the order restore is the plan's only hash exchange: sized with coalescing off, coalesced by AQE with it on") {
     Seq(true, false).foreach { coalesce =>
       val s = flagshipSession(shuffles = 16, coalesce = coalesce)
       import s.implicits._
@@ -142,8 +142,8 @@ class PipelineE2ESpec extends AnyFunSuite with SparkTestBase {
         case p => p
       }).toString
       assert("Exchange hashpartitioning".r.findAllIn(plan).length == 1, s"coalesce=$coalesce:\n$plan")
-      assert(plan.contains("REPARTITION_BY_NUM"), s"coalesce=$coalesce:\n$plan")
-      assert(!plan.contains("coalesced"), s"coalesce=$coalesce:\n$plan")
+      assert(plan.contains("REPARTITION_BY_NUM") == !coalesce, s"coalesce=$coalesce:\n$plan")
+      assert(plan.contains("AQEShuffleRead coalesced") == coalesce, s"coalesce=$coalesce:\n$plan")
     }
   }
 }

@@ -15,7 +15,8 @@
 # A lockfile (/tmp/graft_sample_running, holding this script's pid) marks
 # a sample in flight so the operator can hold off compiles/tests that would
 # poison the measurement; graft.Bench waits on it, except in the sample this
-# script itself launches.
+# script itself launches. The EXIT trap removes it however the script ends;
+# Bench also ignores a lock whose pid is dead or no longer this script.
 # Stop with: touch /tmp/graft_campaign_stop
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -29,6 +30,11 @@ LOCK=/tmp/graft_sample_running
 STOP=/tmp/graft_campaign_stop
 LOG="${LOG:-/tmp/cluster_campaign.log}"
 rm -f "$STOP"
+# the lock must not outlive the script, however it ends
+trap 'rm -f "$LOCK"' EXIT
+trap 'exit 130' INT
+trap 'exit 143' TERM
+trap 'exit 129' HUP
 echo "[campaign] start $(date -u +%H:%M:%S) shape=$SHAPE gates host=[$MIN_HOST,$MAX_HOST] mem>=$MIN_MEM" >> "$LOG"
 while [ ! -f "$STOP" ]; do
   probe=$(SPARK_GRAFT_PROBE_ONLY=1 tools/run_bench.sh "$CLASSES" graft.Bench 2>/dev/null | tail -1)
@@ -51,5 +57,4 @@ while [ ! -f "$STOP" ]; do
   fi
   sleep "$SLEEP"
 done
-rm -f "$LOCK"
 echo "[campaign] stopped $(date -u +%H:%M:%S)" >> "$LOG"
