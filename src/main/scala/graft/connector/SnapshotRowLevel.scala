@@ -96,7 +96,8 @@ final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
     required = requiredSchema
 
   override def build(): Scan = {
-    val scan = new SnapshotCowScan(dir, entries, fullSchema, required, pushed, numBuckets)
+    val scan = new SnapshotCowScan(dir, op.baseSnapshotId, entries, fullSchema,
+      required, pushed, numBuckets)
     op.configuredScan = scan
     scan
   }
@@ -107,7 +108,7 @@ final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
   * RowLevelOperationRuntimeGroupFiltering) narrows the bucket set further
   * at execution for conditions that only resolve at runtime (MERGE
   * sources, subqueries) via the conv_id runtime filter. */
-final class SnapshotCowScan(dir: String, entries: Seq[ManifestEntry],
+final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
     numBuckets: Int)
   extends Scan with Batch with SupportsRuntimeFiltering {
@@ -198,7 +199,8 @@ final class SnapshotCowScan(dir: String, entries: Seq[ManifestEntry],
           "(SnapshotTable.compact / CALL graft.system.compact)")
     val kept = keptEntries
     scannedBuckets = kept.map(_.bucket).toSet
-    SnapshotRead.pack(spark, SnapshotRead.listFiles(spark, kept))
+    SnapshotRead.pack(spark,
+      SnapshotRead.listFiles(spark, dir, snapshotId, kept.map(_.path)).flatten)
   }
 
   /** NO pushed filters reach parquet: row groups of kept buckets must

@@ -2,14 +2,16 @@ package graft.connector
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import graft.table.{Refs, SnapshotTable}
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -30,8 +32,10 @@ import scala.jdk.CollectionConverters._
   *     .option("snapshotId", "3").load(dir)                         // time travel
   * }}}
   *
-  * What the connector adds over `SnapshotTable.read` (a plain parquet read
-  * of the manifest's paths):
+  * Both faces plan from the manifest and list its file-sets through
+  * [[SnapshotRead.listFiles]]; `SnapshotTable.read` hands the listed files
+  * to Spark's own parquet relation ([[SnapshotRead.parquetRelation]]).
+  * What the connector adds over it:
   *
   *  - '''Planning-time pruning from the manifest, driven by pushed
   *    filters.''' `conv_id = x` / `conv_id IN (…)` prunes to the owning
@@ -534,7 +538,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     morGate("scan")
-    new SnapshotScanBuilder(dir, entries, schema(), numBuckets, options)
+    new SnapshotScanBuilder(dir, snapshotId, entries, schema(), numBuckets, options)
   }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {
@@ -543,7 +547,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
   }
 }
 
-final class SnapshotScanBuilder(dir: String, entries: Seq[ManifestEntry],
+final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
     fullSchema: StructType, numBuckets: Int, options: CaseInsensitiveStringMap)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with SupportsPushDownAggregates {
@@ -588,7 +592,8 @@ final class SnapshotScanBuilder(dir: String, entries: Seq[ManifestEntry],
 
   override def build(): Scan =
     if (countStarPushed) new SnapshotCountScan(entries)
-    else new SnapshotScan(dir, entries, fullSchema, required, pushed, numBuckets, options)
+    else new SnapshotScan(dir, snapshotId, entries, fullSchema, required, pushed,
+      numBuckets, options)
 }
 
 /** The completely-pushed `COUNT(*)` scan: one partition, one row, straight
@@ -677,18 +682,53 @@ private[graft] object SnapshotRead {
     entries.filter(e => ownsSome(e) && e.maxTsMs >= lo && e.minTsMs <= hi)
   }
 
-  def listFiles(spark: SparkSession,
-      entries: Seq[ManifestEntry]): Seq[org.apache.hadoop.fs.FileStatus] = {
+  /** The one listing of manifest file-sets, for every read face (the
+    * library's relation, the V2 and COW scans, the micro-batch stream): one
+    * `listStatus` per path on the driver, no Spark job, one result per path
+    * in order. A path the manifest of `snapshotId` lists but the file
+    * system no longer holds fails the read, naming both: skipping it would
+    * return fewer rows with no error. */
+  def listFiles(spark: SparkSession, dir: String, snapshotId: Long,
+      paths: Seq[String]): Seq[Seq[FileStatus]] = {
     val hconf = spark.sessionState.newHadoopConf()
-    entries.flatMap { e =>
-      val p = new HPath(e.path)
-      val fs = p.getFileSystem(hconf)
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq.filter { st =>
+    paths.map { path =>
+      val p = new HPath(path)
+      val listed =
+        try p.getFileSystem(hconf).listStatus(p)
+        catch {
+          case e: java.io.FileNotFoundException =>
+            throw new IllegalStateException(
+              s"snapshot $snapshotId of $dir lists file-set $path, which does " +
+                "not exist: it was deleted outside the table's own maintenance", e)
+        }
+      listed.toSeq.filter { st =>
         val n = st.getPath.getName
         st.isFile && n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
       }
     }
+  }
+
+  /** The library's read of manifest file-sets: Spark's own parquet
+    * relation (vectorized `FileSourceScanExec`, pushed filters, the same
+    * `inputFiles`) over a [[ManifestFileIndex]] of the listed files, so
+    * there is no partition discovery and no listing job however many
+    * file-sets a snapshot holds. `schema` is the manifest's; None (legacy
+    * entries that recorded none) infers it from a footer, as
+    * `spark.read.parquet` does. */
+  def parquetRelation(spark: SparkSession, dir: String, snapshotId: Long,
+      paths: Seq[String], schema: Option[StructType]): DataFrame = {
+    val files = listFiles(spark, dir, snapshotId, paths).flatten
+    val format = new ParquetFileFormat
+    // an inferred schema goes through the manifest's DDL form, which makes
+    // every field nullable as `spark.read.parquet` does
+    val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty, files)
+        .map(s => SnapshotTable.parseSchema(s.catalogString).getOrElse(s)))
+      .getOrElse(throw new IllegalStateException(
+        s"snapshot $snapshotId of $dir: no schema recorded and no parquet " +
+          s"file to infer one from under ${paths.mkString(", ")}"))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestFileIndex(paths.map(new HPath(_)), files), new StructType(),
+      dataSchema, None, format, Map.empty)(spark))
   }
 
   /** Spark's own size-based packing (FilePartition.maxSplitBytes math):
@@ -696,7 +736,7 @@ private[graft] object SnapshotRead {
     * splits bin-pack (descending, openCost padding) — partition count tracks
     * bytes, not file count, exactly like the built-in file source. */
   def pack(spark: SparkSession,
-      fileStatuses: Seq[org.apache.hadoop.fs.FileStatus]): Array[InputPartition] = {
+      fileStatuses: Seq[FileStatus]): Array[InputPartition] = {
     val conf = spark.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
     val totalBytes = fileStatuses.map(_.getLen + openCost).sum
@@ -748,7 +788,7 @@ private[graft] object SnapshotRead {
   }
 }
 
-final class SnapshotScan(dir: String, entries: Seq[ManifestEntry],
+final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
     numBuckets: Int, options: CaseInsensitiveStringMap)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
@@ -767,7 +807,7 @@ final class SnapshotScan(dir: String, entries: Seq[ManifestEntry],
     Array(org.apache.spark.sql.connector.expressions.Expressions.column("conv_id"))
   override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters
-    cachedKept = null; cachedStatuses = null // re-prune under the late filters
+    cachedKept = null; cachedListing = null // re-prune under the late filters
   }
 
   // prune + listing cached per runtime-filter state: description /
@@ -775,7 +815,7 @@ final class SnapshotScan(dir: String, entries: Seq[ManifestEntry],
   // times during planning, and re-listing every kept file-set per call is
   // repeated driver-side FS IO at manifest scale
   @volatile private var cachedKept: Seq[ManifestEntry] = _
-  @volatile private var cachedStatuses: Seq[org.apache.hadoop.fs.FileStatus] = _
+  @volatile private var cachedListing: Seq[Seq[FileStatus]] = _
 
   private[graft] def keptEntries: Seq[ManifestEntry] = {
     if (cachedKept == null)
@@ -783,11 +823,14 @@ final class SnapshotScan(dir: String, entries: Seq[ManifestEntry],
     cachedKept
   }
 
-  private def fileStatuses: Seq[org.apache.hadoop.fs.FileStatus] = {
-    if (cachedStatuses == null)
-      cachedStatuses = SnapshotRead.listFiles(spark, keptEntries)
-    cachedStatuses
+  /** The kept entries' files, one listing per entry, in entry order. */
+  private def listing: Seq[Seq[FileStatus]] = {
+    if (cachedListing == null)
+      cachedListing = SnapshotRead.listFiles(spark, dir, snapshotId, keptEntries.map(_.path))
+    cachedListing
   }
+
+  private def fileStatuses: Seq[FileStatus] = listing.flatten
 
   override def readSchema(): StructType = required
 
@@ -824,14 +867,15 @@ final class SnapshotScan(dir: String, entries: Seq[ManifestEntry],
       spark.conf.getOption("spark.sql.sources.v2.bucketing.enabled").exists(_.toBoolean))
 
   private lazy val bucketPartitions: Array[InputPartition] =
-    keptEntries.groupBy(_.bucket).toSeq.sortBy(_._1).map { case (b, es) =>
-      val files = SnapshotRead.listFiles(spark, es).map { st =>
-        PartitionedFile(InternalRow.empty,
-          SparkPath.fromPathString(st.getPath.toString),
-          0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
-      }
-      SnapshotBucketPartition(b, files.toArray): InputPartition
-    }.toArray
+    keptEntries.map(_.bucket).zip(listing).groupMap(_._1)(_._2).toSeq.sortBy(_._1)
+      .map { case (b, listed) =>
+        val files = listed.flatten.map { st =>
+          PartitionedFile(InternalRow.empty,
+            SparkPath.fromPathString(st.getPath.toString),
+            0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
+        }
+        SnapshotBucketPartition(b, files.toArray): InputPartition
+      }.toArray
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
     if (groupByBucket)
@@ -920,7 +964,8 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
           "stream; a snapshot-delta stream cannot retract emitted rows — " +
           "compact the table and restart the query from a fresh offset")
     val pruned = SnapshotRead.prune(dir, numBuckets, added, pushed)
-    SnapshotRead.pack(spark, SnapshotRead.listFiles(spark, pruned))
+    SnapshotRead.pack(spark,
+      SnapshotRead.listFiles(spark, dir, e, pruned.map(_.path)).flatten)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -928,6 +973,21 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+/** A snapshot's files as Spark's file index: the manifest already chose
+  * them, so listing hands back the [[SnapshotRead.listFiles]] result as
+  * one unpartitioned directory, and refresh has nothing to re-read (a
+  * snapshot never changes). */
+final case class ManifestFileIndex(rootPaths: Seq[HPath], files: Seq[FileStatus])
+  extends FileIndex {
+  override def listFiles(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
+  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
+  override def refresh(): Unit = ()
+  override def sizeInBytes: Long = files.map(_.getLen).sum
+  override def partitionSchema: StructType = new StructType()
 }
 
 final case class SnapshotInputPartition(files: Array[PartitionedFile])

@@ -5,6 +5,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -206,6 +207,9 @@ private[graft] object SnapshotWriterUtil {
     batch.published
   }
 
+  /** The write's task factory. The Hadoop conf (a thousand-odd
+    * properties, ~100 KB serialized) travels as one broadcast per write, so
+    * a write task deserializes a few KB of factory instead of the conf. */
   def writerFactory(spark: SparkSession, schema: StructType,
       dataPath: String, numBuckets: Int,
       bucketSorted: Boolean = false): SnapshotDataWriterFactory = {
@@ -215,8 +219,8 @@ private[graft] object SnapshotWriterUtil {
       spark.sessionState.conf, job, schema,
       new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))
     SnapshotDataWriterFactory(factory,
-      new SerializableConfiguration(job.getConfiguration), dataPath, numBuckets, schema,
-      bucketSorted)
+      spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)),
+      dataPath, numBuckets, schema, bucketSorted)
   }
 
   /** Is `runId` referenced by ANY retained manifest (not just CURRENT)?
@@ -385,11 +389,11 @@ final class SnapshotStreamingWrite(dir: String, numBuckets: Int,
 }
 
 final case class SnapshotDataWriterFactory(factory: OutputWriterFactory,
-    conf: SerializableConfiguration, dataPath: String, numBuckets: Int,
+    conf: Broadcast[SerializableConfiguration], dataPath: String, numBuckets: Int,
     schema: StructType, bucketSorted: Boolean = false) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(factory, conf.value, dataPath, numBuckets, schema,
+    new SnapshotDataWriter(factory, conf.value.value, dataPath, numBuckets, schema,
       partitionId, taskId, bucketSorted)
 }
 
@@ -399,7 +403,7 @@ final case class SnapshotStreamingDataWriterFactory(base: SnapshotDataWriterFact
 
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(base.factory, base.conf.value,
+    new SnapshotDataWriter(base.factory, base.conf.value.value,
       s"$dir/data/run=$queryId-$epochId", base.numBuckets, base.schema,
       partitionId, taskId)
 }

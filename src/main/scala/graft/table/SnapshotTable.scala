@@ -1,6 +1,6 @@
 package graft.table
 
-import graft.connector.{PublishRule, SnapshotTableMeta, SnapshotWriterUtil}
+import graft.connector.{PublishRule, SnapshotRead, SnapshotTableMeta, SnapshotWriterUtil}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
@@ -33,9 +33,11 @@ import scala.jdk.CollectionConverters._
   *    the complement (anti-join of input buckets vs committed — SURVEY §2.10).
   *  - Planning happens on the driver, as in Iceberg: the manifest is parsed
   *    with Jackson ([[SnapshotTable.readManifest]], the one reader of the
-  *    format) and data is read under the schema each entry recorded, so
-  *    choosing the files of a read launches no Spark job and a point lookup
-  *    runs exactly one (the scan).
+  *    format), its file-sets are listed by the one listing every read face
+  *    shares ([[graft.connector.SnapshotRead.listFiles]]), and data is read
+  *    under the schema each entry recorded, so choosing the files of a read
+  *    launches no Spark job however many file-sets it spans, and a point
+  *    lookup runs exactly one (the scan).
   *
   * Reference precedent for at-least-once + idempotent naming: unique upload
   * names `/root/reference/src/controller/webapp.py:19-22`; batch-id matched
@@ -76,9 +78,14 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * the driver: one Jackson parse of the manifest, no Spark job. `spark`
     * is not needed for that and is kept for the callers' signature. */
   def committedEntries(spark: SparkSession): Seq[BucketEntry] =
+    liveEntries(spark)._2
+
+  /** The live snapshot's id (-1 if none) and its entries, from one read of
+    * CURRENT — a read names the snapshot it planned from in its errors. */
+  private def liveEntries(spark: SparkSession): (Long, Seq[BucketEntry]) =
     currentSnapshotId match {
-      case None     => Seq.empty
-      case Some(id) => entriesAt(spark, id)
+      case None     => (-1L, Seq.empty)
+      case Some(id) => (id, entriesAt(spark, id))
     }
 
   /** Bucket entries of a SPECIFIC snapshot — time travel: older manifests
@@ -349,28 +356,29 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     dead
   }
 
-  /** Read the live snapshot (only manifest-listed paths — orphan data from
-    * crashed runs is invisible). */
   /** Pending merge-on-read delete keys of an entry set, applied as a
     * `(conv_id, turn_idx)` anti-join — the read-time half of
     * [[deleteRowsMor]]. Both sides are conv_id-bucketed on disk, so on
     * the co-located read path this is a per-bucket merge, and the delete
     * side is bounded by deletes-since-last-compact (transient by design —
     * [[compact]] folds them back to zero). */
-  private def applyDeletes(spark: SparkSession, df: DataFrame,
+  private def applyDeletes(spark: SparkSession, snap: Long, df: DataFrame,
       delEntries: Seq[BucketEntry]): DataFrame =
     if (delEntries.isEmpty) df
     else df.join(
-      spark.read.schema(SnapshotTable.DeleteKeySchema)
-        .parquet(delEntries.map(_.path): _*),
+      SnapshotRead.parquetRelation(spark, dir, snap, delEntries.map(_.path),
+        Some(SnapshotTable.DeleteKeySchema)),
       Seq("conv_id", "turn_idx"), "left_anti")
 
-  /** Data rows of an entry set under the schema the manifest recorded —
-    * WITHOUT delete application (callers decide). A schema handed to the
-    * parquet reader spares the footer-inference job, so the only job of a
-    * read is its scan; inference is left to legacy entries that recorded
-    * no schema. */
-  private def dataRead(spark: SparkSession, dataEntries: Seq[BucketEntry]): DataFrame = {
+  /** Data rows of an entry set of snapshot `snap` under the schema the
+    * manifest recorded — WITHOUT delete application (callers decide). The
+    * files come from the manifest's own listing and go to Spark's parquet
+    * relation directly ([[SnapshotRead.parquetRelation]]): no partition
+    * discovery, no listing job, and the recorded schema spares the
+    * footer-inference job, so the only job of a read is its scan;
+    * inference is left to legacy entries that recorded no schema. */
+  private def dataRead(spark: SparkSession, snap: Long,
+      dataEntries: Seq[BucketEntry]): DataFrame = {
     val ddls = dataEntries.map(_.schema).filter(_.nonEmpty).distinct
     val schema =
       if (ddls.size > 1)
@@ -392,20 +400,23 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
         SnapshotTable.parseSchema(ddls.head)
       else None
-    schema.fold(spark.read)(s => spark.read.schema(s))
-      .parquet(dataEntries.map(_.path): _*)
+    SnapshotRead.parquetRelation(spark, dir, snap, dataEntries.map(_.path), schema)
   }
 
-  /** Logical rows of an entry set: data minus pending MOR deletes. */
-  private def logicalRead(spark: SparkSession, entries: Seq[BucketEntry]): DataFrame = {
+  /** Logical rows of an entry set of snapshot `snap`: data minus pending
+    * MOR deletes. */
+  private def logicalRead(spark: SparkSession, snap: Long,
+      entries: Seq[BucketEntry]): DataFrame = {
     val (del, data) = entries.partition(_.kind == "delete")
-    applyDeletes(spark, dataRead(spark, data), del)
+    applyDeletes(spark, snap, dataRead(spark, snap, data), del)
   }
 
+  /** Read the live snapshot (only manifest-listed paths — orphan data from
+    * crashed runs is invisible). */
   def read(spark: SparkSession): DataFrame = {
-    val entries = committedEntries(spark)
+    val (snap, entries) = liveEntries(spark)
     require(entries.nonEmpty, s"no committed snapshot in $dir")
-    logicalRead(spark, entries)
+    logicalRead(spark, snap, entries)
   }
 
   /** Per-bucket table statistics straight from the live manifest — the
@@ -443,7 +454,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   def readAt(spark: SparkSession, snapshotId: Long): DataFrame = {
     val entries = entriesAt(spark, snapshotId)
     require(entries.nonEmpty, s"snapshot $snapshotId is empty")
-    logicalRead(spark, entries)
+    logicalRead(spark, snapshotId, entries)
   }
 
   /** Bucket-pruned single-conversation read: computes the conversation's
@@ -453,9 +464,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     */
   def readConversation(spark: SparkSession, convId: String): DataFrame = {
     val b = bucketOfId(convId) // driver-side hash: a point lookup costs no job
-    val entries = committedEntries(spark).filter(_.bucket == b)
+    val (snap, live) = liveEntries(spark)
+    val entries = live.filter(_.bucket == b)
     require(entries.nonEmpty, s"bucket $b not committed in $dir")
-    logicalRead(spark, entries)
+    logicalRead(spark, snap, entries)
       .where(col("conv_id") === convId)
   }
 
@@ -507,14 +519,15 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       replacement: Option[DataFrame], runId: String): Option[Long] = {
     require(convIds.nonEmpty, "replaceWhere needs at least one conversation")
     val buckets = convIds.map(bucketOfId).toSet
-    val entries = committedEntries(spark).filter(e => buckets(e.bucket))
+    val (snap, live) = liveEntries(spark)
+    val entries = live.filter(e => buckets(e.bucket))
     require(entries.nonEmpty, s"none of buckets $buckets is committed in $dir")
     replacement.foreach { r =>
       val stray = r.filter(!bucketOf.isin(buckets.toSeq: _*)).count()
       require(stray == 0L,
         s"$stray replacement row(s) hash outside the rewritten buckets $buckets")
     }
-    val survivors = logicalRead(spark, entries) // pending MOR deletes honored
+    val survivors = logicalRead(spark, snap, entries) // pending MOR deletes honored
       .where(!col("conv_id").isin(convIds: _*))
     commit(spark, replacement.fold(survivors)(survivors.unionByName(_)), runId,
       replaceBuckets = true, forceReplace = buckets)
@@ -586,7 +599,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   def rewriteDeletes(spark: SparkSession, runId: String,
       minDeleteRatio: Double = 0.1): Option[Long] = {
     require(minDeleteRatio >= 0.0, s"negative minDeleteRatio $minDeleteRatio")
-    val entries = committedEntries(spark)
+    val (snap, entries) = liveEntries(spark)
     val targets = entries.groupBy(_.bucket).collect {
       case (b, es) if {
         val delKeys = es.filter(_.kind == "delete").map(_.turns).sum
@@ -598,7 +611,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val tEntries = entries.filter(e => targets(e.bucket))
     // pending deletes applied exactly once, here — the rewritten buckets
     // carry no delete entries afterwards (forceReplace drops them)
-    commit(spark, logicalRead(spark, tEntries), runId, replaceBuckets = true,
+    commit(spark, logicalRead(spark, snap, tEntries), runId, replaceBuckets = true,
       forceReplace = targets)
   }
 
@@ -628,11 +641,12 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val buckets = updates.toDF().select(bucketOf.as("b")).distinct()
       .as[Int].collect().toSet
     require(buckets.nonEmpty, "merge with an empty update set")
-    val entries = committedEntries(spark).filter(e => buckets(e.bucket))
+    val (snap, live) = liveEntries(spark)
+    val entries = live.filter(e => buckets(e.bucket))
     val keys = updates.select(col("conv_id"), col("turn_idx")).distinct()
     val survivors =
       (if (entries.isEmpty) spark.emptyDataset[ExtractedTurn].toDF()
-       else logicalRead(spark, entries)) // pending MOR deletes honored
+       else logicalRead(spark, snap, entries)) // pending MOR deletes honored
         .join(keys, Seq("conv_id", "turn_idx"), "left_anti")
         .as[ExtractedTurn]
     commit(spark, survivors.unionByName(updates), runId,
@@ -1016,10 +1030,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         rest.exists(_.bucket == e.bucket))
     val parts = Seq(
       if (morBuckets.nonEmpty)
-        Some(logicalRead(spark, toEntries.filter(e => morBuckets(e.bucket))))
+        Some(logicalRead(spark, toSnapshotId, toEntries.filter(e => morBuckets(e.bucket))))
       else None,
       if (rest.nonEmpty)
-        Some(applyDeletes(spark, dataRead(spark, rest), oldDel))
+        Some(applyDeletes(spark, toSnapshotId, dataRead(spark, toSnapshotId, rest), oldDel))
       else None).flatten
     if (parts.isEmpty) readAt(spark, toSnapshotId).limit(0) // empty, full schema
     else parts.reduce(_ unionByName _)
@@ -1051,12 +1065,12 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // each side is its snapshot's LOGICAL content of the changed buckets
     // (data minus that snapshot's pending MOR deletes) — a delete-only
     // commit therefore diffs as pure `op = delete` rows
-    def side(es: Seq[BucketEntry]): DataFrame = {
+    def side(snap: Long, es: Seq[BucketEntry]): DataFrame = {
       val sel = es.filter(e => changed.contains(e.bucket))
-      if (sel.forall(_.kind != "data")) schema else logicalRead(spark, sel)
+      if (sel.forall(_.kind != "data")) schema else logicalRead(spark, snap, sel)
     }
-    val oldRows = side(fromEntries)
-    val newRows = side(toEntries)
+    val oldRows = side(fromSnapshotId, fromEntries)
+    val newRows = side(toSnapshotId, toEntries)
     newRows.exceptAll(oldRows).withColumn("op", lit("insert"))
       .unionByName(oldRows.exceptAll(newRows).withColumn("op", lit("delete")))
   }
@@ -1068,7 +1082,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * are ISO-8601 seconds UTC (the manifest's own format — the fixed-width
     * form makes lexicographic comparison correct). */
   def readRange(spark: SparkSession, minTs: String, maxTs: String): DataFrame = {
-    val all = committedEntries(spark)
+    val (snap, all) = liveEntries(spark)
     // ts pruning applies to DATA file-sets only — delete key-sets carry no
     // ts range and must always apply, or a range read would resurrect
     // MOR-deleted rows whose delete entry sits "outside" the range
@@ -1078,7 +1092,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       return read(spark).limit(0) // empty frame, full schema
     val dels = all.filter(e => e.kind == "delete" &&
       data.exists(_.bucket == e.bucket))
-    applyDeletes(spark, dataRead(spark, data), dels)
+    applyDeletes(spark, snap, dataRead(spark, snap, data), dels)
       .where(col("ts") >= to_timestamp(lit(minTs)) &&
         col("ts") <= to_timestamp(lit(maxTs)))
   }

@@ -41,6 +41,17 @@ object PlanDump {
     sb.append(flag.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)).append("```\n")
 
+    // a library read of the snapshot table: Spark's parquet scan over the
+    // manifest's files (ManifestFileIndex), planned without a listing job
+    sb.append("\n## snapshot table library read (files from the manifest)\n\n```\n")
+    val tableDir = Files.createTempDirectory("plandump-snapshot")
+    val table = new graft.table.SnapshotTable(tableDir.toString, numBuckets = 4)
+    table.commit(spark, graft.gen.TranscriptGen.dataset(spark, 42L, nConvs = 20,
+      hotBase = 40).toDF(), "plandump")
+    sb.append(table.read(spark).where("turn_idx = 0").queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)).append("```\n")
+    org.apache.commons.io.FileUtils.deleteQuietly(tableDir.toFile)
+
     names.foreach { n =>
       sb.append(s"\n## $n\n\n```\n")
       val df = graft.SparkEntry.queries(n)(spark, sf)

@@ -5,17 +5,18 @@ import graft.streaming.StreamingExtract
 import graft.table.SnapshotTable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, count, length, lit, sum}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
-/** Driver-side read planning: the manifest is parsed on the driver and data
-  * is read under the schema each entry recorded. Two things make that safe
-  * and worth it, and both are pinned here: every writer path records the
-  * schema its files actually carry (an explicit parquet schema would
-  * silently null-fill a misnamed column), and planning a read launches no
-  * Spark job.
+/** Driver-side read planning: the manifest is parsed on the driver, its
+  * file-sets are listed there, and data is read under the schema each entry
+  * recorded. Two things make that safe and worth it, and both are pinned
+  * here: every writer path records the schema its files actually carry (an
+  * explicit parquet schema would silently null-fill a misnamed column), and
+  * planning a read launches no Spark job, however many file-sets it spans.
   */
 class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
 
@@ -136,5 +137,61 @@ class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
     val (found, lookupJobs) = jobsOf(table.readConversation(spark, conv).collect())
     assert(found.map(_.getAs[Int]("turn_idx")).sorted.toSeq == Seq(0, 1))
     assert(lookupJobs == 1, s"readConversation(...).collect() launched $lookupJobs Spark jobs")
+  }
+
+  test("a library read of 48 file-sets (16 buckets x 3 appends) launches no " +
+    "job to plan, counts what was committed and reads exactly the entries' files") {
+    import testImplicits._
+    val dir = suiteTempDir("plan-wide")
+    val table = new SnapshotTable(dir, numBuckets = 16)
+    val batches = (0 until 3).map(b => (0 until 256).map(i => mk(s"w$b-$i", i % 2, s"t$b")))
+    batches.zipWithIndex.foreach { case (rs, b) =>
+      StreamingExtract.commitBatch(table, rs.toDS(), b.toLong)
+    }
+    val entries = table.committedEntries(spark)
+    assert(entries.size == 48 && entries.map(_.bucket).distinct.size == 16)
+    val (df, planJobs) = jobsOf(table.read(spark))
+    assert(planJobs == 0, s"table.read launched $planJobs Spark job(s) to plan 48 file-sets")
+    val agg = df.agg(count(lit(1)), sum(length(col("text")))).head()
+    assert(agg.getLong(0) == entries.map(_.turns).sum && agg.getLong(0) == 3L * 256)
+    assert(agg.getLong(1) == batches.flatten.map(_.text.length.toLong).sum)
+    val onDisk = entries.flatMap { e =>
+      val ls = Files.list(Paths.get(e.path))
+      try ls.iterator.asScala.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+      finally ls.close()
+    }
+    assert(onDisk.size >= 48)
+    // the same strings Spark's own listing of those paths names them by
+    val listed = spark.read.parquet(entries.map(_.path): _*).inputFiles.sorted.toSeq
+    assert(df.inputFiles.sorted.toSeq == listed)
+    assert(listed.map(new org.apache.hadoop.fs.Path(_).toUri.getPath) == onDisk.sorted)
+  }
+
+  test("legacy entries that recorded no schema are read by footer inference") {
+    import testImplicits._
+    val dir = suiteTempDir("plan-legacy")
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    table.commit(spark, (0 until 12).map(i => mk(s"l$i", i % 3, "legacy")).toDS(), "base")
+    val recorded = table.read(spark)
+    val expected = rows(recorded)
+    val manifest = Paths.get(dir, "manifests", "snap-0.json")
+    Files.writeString(manifest,
+      Files.readString(manifest).replaceAll(""","schema":"(?:[^"\\]|\\.)*"""", ""))
+    assert(table.committedEntries(spark).forall(_.schema.isEmpty))
+    val legacy = table.read(spark)
+    assert(legacy.schema == recorded.schema)
+    assert(rows(legacy) == expected)
+  }
+
+  test("a file-set the manifest lists but the file system lost fails the " +
+    "library read, naming the snapshot and the path") {
+    import testImplicits._
+    val dir = suiteTempDir("plan-lost")
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    table.commit(spark, (0 until 12).map(i => mk(s"g$i", 0, "gone")).toDS(), "base")
+    val lost = table.committedEntries(spark).head.path
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(lost))
+    val e = intercept[IllegalStateException](table.read(spark).collect())
+    assert(e.getMessage.contains("snapshot 0") && e.getMessage.contains(lost), e.getMessage)
   }
 }

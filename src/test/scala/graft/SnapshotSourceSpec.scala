@@ -168,4 +168,17 @@ class SnapshotSourceSpec extends AnyFunSuite with SparkTestBase {
     // the pruned estimate counts the kept bucket's file-sets only
     assert(pruned.numRows().getAsLong < 41L)
   }
+
+  test("a file-set the manifest lists but the file system lost fails the " +
+    "V2 read, naming the snapshot and the path") {
+    import testImplicits._
+    val dir = suiteTempDir("snapsource-lost")
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    table.commit(spark, (0 until 12).map(i => mk(s"g$i", 0, baseA)).toDS(), "base")
+    val lost = table.committedEntries(spark).head.path
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(lost))
+    val e = intercept[IllegalStateException](
+      spark.read.format("graft-snapshot").load(dir).collect())
+    assert(e.getMessage.contains("snapshot 0") && e.getMessage.contains(lost), e.getMessage)
+  }
 }

@@ -272,4 +272,18 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
       .get.asInstanceOf[graft.connector.SnapshotScan]
     assert(scan.keptEntries.forall(_.path.contains("run=w2")), scan.keptEntries.toString)
   }
+
+  test("a write task's factory carries the Hadoop conf by broadcast: batch " +
+    "and streaming factories serialize to under 16 KB") {
+    import graft.connector.{SnapshotStreamingDataWriterFactory, SnapshotWriterUtil}
+    val dir = suiteTempDir("v2write_factory")
+    val schema = org.apache.spark.sql.Encoders.product[ExtractedTurn].schema
+    val batch = SnapshotWriterUtil.writerFactory(spark, schema, s"$dir/data/run=f", 16)
+    val stream = SnapshotStreamingDataWriterFactory(batch, dir, "q")
+    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+    Seq(batch, stream).foreach { f =>
+      val bytes = ser.serialize(f).limit()
+      assert(bytes < 16 * 1024, s"${f.getClass.getSimpleName} serializes to $bytes bytes")
+    }
+  }
 }
