@@ -1,6 +1,7 @@
 package graft.connector
 
-import graft.table.Refs
+import graft.table.{Refs, TableFormat}
+import graft.table.TableFormat.{ColumnMapEntry, TableMeta}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchFunctionException, NoSuchTableException}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
@@ -65,7 +66,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // committed tables carry CURRENT; created-but-never-written tables
     // carry the CREATE TABLE metadata — both are loadable (INSERT INTO a
     // freshly created table must resolve)
-    new Refs(dir).read(Refs.Main).isDefined || SnapshotTableMeta.exists(dir)
+    new Refs(dir).read(Refs.Main).isDefined || TableFormat.metaExists(dir)
   }
 
   private def load(ident: Identifier, snapshotId: Option[Long]): Table = {
@@ -74,9 +75,10 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // a created, never written table resolves to an empty snapshot -1; a
     // delete-emptied one to a snapshot with no entries — both readable
     // and appendable
-    val snap = SnapshotManifest.resolve(dir, snapshotId, fallbackBuckets = 16)
-    new SnapshotV2Table(dir, snap.snapshotId, snap.entries, snap.numBuckets,
-      snap.metaSchema, preferExternalSuperset = snapshotId.isEmpty, bucketClustered = true)
+    val snap = TableFormat.resolve(dir, snapshotId)
+    new SnapshotV2Table(dir, snap.snapshotId, snap.entries, snap.numBuckets.getOrElse(16),
+      snap.meta.map(_.structType), preferExternalSuperset = snapshotId.isEmpty,
+      bucketClustered = true)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -116,7 +118,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     load(ident, Some(version.toLong))
 
   /** New-table DDL (`CREATE TABLE graft.t …` / `df.writeTo(…).create()`):
-    * persists the declared schema + bucket count as TABLE_META.json so the
+    * persists the declared schema + bucket count as the table metadata so the
     * created table RESOLVES before its first commit (INSERT INTO right
     * after CREATE TABLE); snapshot 0 arrives with the first write, and
     * manifests supersede the metadata from then on. */
@@ -124,7 +126,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
       partitions: Array[Transform], properties: java.util.Map[String, String]): Table = {
     val dir = dirOf(ident)
     val nb = Option(properties.get("numBuckets")).map(_.toInt).getOrElse(16)
-    SnapshotTableMeta.write(dir, schema.catalogString, nb)
+    TableFormat.writeMeta(dir, TableMeta(TableFormat.schemaDdl(schema), nb))
     new SnapshotV2Table(dir, -1L, Seq.empty, nb, Some(schema), bucketClustered = true)
   }
 
@@ -141,7 +143,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     * No data file is touched by any of them — at 10^12 turns that is the
     * only acceptable cost. Old snapshots keep reading correctly: the scan
     * resolves parquet columns by physical name
-    * ([[SnapshotTableMeta.toPhysical]]) and, rows being positional,
+    * ([[TableFormat.toPhysical]]) and, rows being positional,
     * surfaces them under the table schema's logical names.
     * Type changes are still rejected (a widening read is engine-specific;
     * migrate by rewrite). The table key (`conv_id`, `turn_idx`) and the
@@ -155,7 +157,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // existing mapping, or the identity mapping synthesized from the
     // current logical schema (first ALTER on a pre-mapping table)
     var mapping: Vector[ColumnMapEntry] =
-      SnapshotTableMeta.mapping(dir).map(_.toVector).getOrElse(
+      TableFormat.mapping(dir).map(_.toVector).getOrElse(
         fields.zipWithIndex.map { case (f, i) =>
           ColumnMapEntry(i + 1, f.name, f.name) }.toVector)
     var widened = false
@@ -190,7 +192,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
         require(i >= 0, s"no such column $from")
         fields(i) = fields(i).copy(name = to)
         val mi = mapping.indexWhere(m => !m.dropped && m.name.equalsIgnoreCase(from))
-        require(mi >= 0, s"column $from missing from the mapping (corrupt TABLE_META?)")
+        require(mi >= 0, s"column $from missing from the mapping (corrupt table metadata?)")
         mapping = mapping.updated(mi, mapping(mi).copy(name = to))
       case del: TableChange.DeleteColumn =>
         require(del.fieldNames().length == 1,
@@ -236,8 +238,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
           "Migrate by compacting after a rewrite.")
     }
     require(fields.nonEmpty, "cannot drop every column")
-    val nb = SnapshotTableMeta.read(dir).map(_._2)
-      .getOrElse(graft.table.SnapshotTable.open(dir).numBuckets)
+    val nb = TableFormat.resolve(dir, None).numBuckets.getOrElse(
+      sys.error(s"$dir records no bucket count"))
     // Persist the mapping only once the table is evolution-managed (a
     // rename, drop, de-collided phys name, or WIDENING exists — widening
     // needs the mapping marker so readers treat the meta schema as
@@ -245,11 +247,11 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // behavior BIT-IDENTICAL — including time travel surfacing each
     // snapshot's own (pre-evolution) schema; mapped tables deliberately
     // surface the current logical schema everywhere instead.
-    val mappingOpt = SnapshotTableMeta.mapping(dir).map(_ => mapping)
+    val mappingOpt = TableFormat.mapping(dir).map(_ => mapping)
       .orElse(if (widened || mapping.exists(m => m.dropped || m.name != m.phys))
         Some(mapping) else None)
-    SnapshotTableMeta.write(dir, StructType(fields.toSeq).catalogString, nb,
-      mappingOpt)
+    TableFormat.writeMeta(dir, TableMeta(TableFormat.schemaDdl(StructType(fields.toSeq)), nb,
+      mappingOpt))
     loadTable(ident)
   }
 

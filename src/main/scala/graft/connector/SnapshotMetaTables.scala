@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.table.{Refs, SnapshotTable}
+import graft.table.{Refs, SnapshotTable, TableFormat}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
@@ -68,26 +68,28 @@ object SnapshotMetaTables {
     val cur = table.currentSnapshotId.getOrElse(-1L)
     val staged = table.stagedIds.toSet
     table.snapshotIds.map { id =>
-      val m = SnapshotTable.readManifest(dir, id)
+      val m = TableFormat.readManifest(dir, id)
       // MOR delete key-sets are counted as file-sets but their key counts
       // are not turns
       new GenericInternalRow(Array[Any](
-        id, m.parentId, m.bucketCount.getOrElse(-1), m.entries.size,
+        id, m.parentId, m.numBuckets.getOrElse(-1), m.entries.size,
         m.entries.filter(_.kind == "data").map(_.turns).sum,
         id == cur, staged(id)))
     }
   }
 
+  /** The live data file-sets; `min_ts`/`max_ts` are the instants the
+    * manifest recorded (not the widened pruning bounds). */
   private def fileRows(dir: String): Seq[InternalRow] = {
+    def instant(ts: String) =
+      UTF8String.fromString(java.time.Instant.ofEpochMilli(TableFormat.tsMs(ts)).toString)
     val table = SnapshotTable.open(dir)
-    table.currentSnapshotId.map(SnapshotManifest.read(dir, _)).getOrElse(Seq.empty)
+    table.currentSnapshotId.map(TableFormat.readManifest(dir, _).entries).getOrElse(Seq.empty)
       .filter(_.kind == "data") // MOR delete key-sets are not data files
       .sortBy(e => (e.bucket, e.path))
       .map(e => new GenericInternalRow(Array[Any](
         e.bucket, UTF8String.fromString(e.path), UTF8String.fromString(e.runId),
-        e.turns,
-        UTF8String.fromString(java.time.Instant.ofEpochMilli(e.minTsMs).toString),
-        UTF8String.fromString(java.time.Instant.ofEpochMilli(e.maxTsMs).toString))))
+        e.turns, instant(e.minTs), instant(e.maxTs))))
   }
 
   private def tagRows(dir: String): Seq[InternalRow] =

@@ -1,6 +1,7 @@
 package graft.connector
 
-import graft.table.SnapshotTable
+import graft.table.{SnapshotTable, TableFormat}
+import graft.table.SnapshotTable.BucketEntry
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -44,7 +45,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * individual work items); here that flow is one SQL `UPDATE … WHERE
   * conv_id = …` rewriting one bucket crash-safely.
   */
-final class SnapshotRowLevelOperation(dir: String, entries: Seq[ManifestEntry],
+final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
     numBuckets: Int, tableSchema: StructType, cmd: RowLevelOperation.Command,
     private[connector] val baseSnapshotId: Long)
   extends RowLevelOperation {
@@ -71,7 +72,7 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[ManifestEntry],
     new WriteBuilder {
       override def build(): Write = new SnapshotWrite(info.schema(), () =>
         new SnapshotCowBatchWrite(SnapshotRowLevelOperation.this, dir, numBuckets,
-          SnapshotTableMeta.toPhysical(dir, info.schema()),
+          TableFormat.toPhysical(dir, info.schema()),
           s"cow-${cmd.toString.toLowerCase}-${info.queryId()}"))
     }
 }
@@ -80,7 +81,7 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[ManifestEntry],
   * but everything stays residual AND row-invisible: filters only feed the
   * bucket-granular prune in the scan. */
 final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
-    entries: Seq[ManifestEntry], fullSchema: StructType, numBuckets: Int)
+    entries: Seq[BucketEntry], fullSchema: StructType, numBuckets: Int)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = fullSchema
@@ -108,7 +109,7 @@ final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
   * RowLevelOperationRuntimeGroupFiltering) narrows the bucket set further
   * at execution for conditions that only resolve at runtime (MERGE
   * sources, subqueries) via the conv_id runtime filter. */
-final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
+final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
     numBuckets: Int)
   extends Scan with Batch with SupportsRuntimeFiltering {
@@ -119,53 +120,20 @@ final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[Manifest
 
   /** Bucket ids that MIGHT own a row matching the condition under the
     * current (static + runtime) filters — the groups this operation reads
-    * and the write replaces. `None`-style "no conv filter" keeps all. */
-  private def candidateBucketIds(filters: Array[Filter]): Set[Int] = {
-    val convSets = filters.toSeq.collect {
-      case EqualTo(a, v: String) if a.equalsIgnoreCase("conv_id")       => Set(v)
-      case EqualNullSafe(a, v: String) if a.equalsIgnoreCase("conv_id") => Set(v)
-      case In(a, vs) if a.equalsIgnoreCase("conv_id") &&
-          vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        vs.map(_.asInstanceOf[String]).toSet
-    }
-    val keepConvs = convSets.reduceOption(_ intersect _)
-
-    def ms(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp => Some(t.getTime)
-      case i: java.time.Instant  => Some(i.toEpochMilli)
-      case _                     => None
-    }
-    var lo = Long.MinValue
-    var hi = Long.MaxValue
-    filters.foreach {
-      case GreaterThan(a, v) if a.equalsIgnoreCase("ts")        => ms(v).foreach(m => lo = math.max(lo, m))
-      case GreaterThanOrEqual(a, v) if a.equalsIgnoreCase("ts") => ms(v).foreach(m => lo = math.max(lo, m))
-      case LessThan(a, v) if a.equalsIgnoreCase("ts")           => ms(v).foreach(m => hi = math.min(hi, m))
-      case LessThanOrEqual(a, v) if a.equalsIgnoreCase("ts")    => ms(v).foreach(m => hi = math.min(hi, m))
-      case _                                                    => ()
-    }
-
-    val twins = scala.collection.mutable.Map.empty[Int, SnapshotTable]
-    def bucketOf(c: String, nb: Int): Int =
-      twins.getOrElseUpdate(nb, new SnapshotTable(dir, nb)).bucketOfId(c)
-    // a bucket id survives iff SOME of its entries could own a candidate
-    // conversation (hashed under the entry's OWN layout) AND SOME of its
-    // entries overlap the ts range — exclusion is only safe when it holds
-    // for the whole bucket, because replacement is bucket-granular
-    entries.groupBy(_.bucket).collect { case (b, es)
-      if es.exists { e =>
-        val nb = if (e.numBuckets > 0) e.numBuckets else numBuckets
-        keepConvs.forall(_.exists(c => bucketOf(c, nb) == b))
-      } && es.exists(e => e.maxTsMs >= lo && e.minTsMs <= hi) => b
-    }.toSet
-  }
+    * and the write replaces: the buckets of the entries the manifest
+    * pruning keeps ([[SnapshotRead.prune]]). It keeps an entry iff its
+    * bucket could own a candidate conversation AND the entry overlaps the
+    * ts range, so a bucket is excluded only when that holds for the whole
+    * bucket, as bucket-granular replacement needs. */
+  private def candidateBucketIds(filters: Array[Filter]): Set[Int] =
+    SnapshotRead.prune(dir, numBuckets, entries, filters).map(_.bucket).toSet
 
   /** Final bucket set at execution time: recorded when Spark plans the
     * input partitions (after runtime group filtering has landed), read by
     * the write's commit. */
   @volatile private[connector] var scannedBuckets: Set[Int] = _
 
-  private def keptEntries: Seq[ManifestEntry] = {
+  private def keptEntries: Seq[BucketEntry] = {
     val ids = candidateBucketIds(pushed ++ runtimeFilters)
     entries.filter(e => ids(e.bucket))
   }

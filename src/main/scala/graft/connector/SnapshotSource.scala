@@ -1,7 +1,7 @@
 package graft.connector
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import graft.table.{Refs, SnapshotTable}
+import graft.table.{Refs, SnapshotTable, TableFormat}
+import graft.table.SnapshotTable.BucketEntry
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -16,9 +16,6 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import java.nio.file.{Files, Paths}
-import java.time.{LocalDateTime, ZoneOffset}
-import java.time.format.DateTimeFormatter
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
@@ -32,10 +29,11 @@ import scala.jdk.CollectionConverters._
   *     .option("snapshotId", "3").load(dir)                         // time travel
   * }}}
   *
-  * Both faces plan from the manifest and list its file-sets through
-  * [[SnapshotRead.listFiles]]; `SnapshotTable.read` hands the listed files
-  * to Spark's own parquet relation ([[SnapshotRead.parquetRelation]]).
-  * What the connector adds over it:
+  * Both faces plan from the manifest, which they resolve and parse through
+  * [[TableFormat]] (the bucket count by its one rule), and list its
+  * file-sets through [[SnapshotRead.listFiles]]; `SnapshotTable.read`
+  * hands the listed files to Spark's own parquet relation
+  * ([[SnapshotRead.parquetRelation]]). What the connector adds over it:
   *
   *  - '''Planning-time pruning from the manifest, driven by pushed
   *    filters.''' `conv_id = x` / `conv_id IN (…)` prunes to the owning
@@ -81,9 +79,8 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     // a table never committed resolves to snapshot -1 with no entries: a
     // brand-new table (first commit creates snapshot 0) whose bucket count
     // comes from CREATE TABLE metadata or the writer's option
-    val snap = SnapshotManifest.resolve(dir,
-      Option(options.get("snapshotId")).map(_.trim.toLong).orElse(branchOpt),
-      Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16))
+    val snap = TableFormat.resolve(dir,
+      Option(options.get("snapshotId")).map(_.trim.toLong).orElse(branchOpt))
     val (snapId, full) = (snap.snapshotId, snap.entries)
     // INCREMENTAL BATCH READ (the Iceberg incremental-append-scan as a
     // batch option): `.option("changesFrom", N)` scopes the table to
@@ -95,32 +92,17 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     // rewritten buckets, mirroring readChanges/the streaming face.
     val changesFrom = Option(options.get("changesFrom")).map(_.trim.toLong)
       .filter(_ => snapId >= 0)
-    val entries = changesFrom match {
-      case Some(from) =>
-        val fromPaths =
-          if (from < 0) Set.empty[String]
-          else SnapshotManifest.read(dir, from).map(_.path).toSet
-        val toPaths = full.map(_.path).toSet
-        val rewritten = fromPaths.filterNot(toPaths)
-        if (rewritten.nonEmpty &&
-            !Option(options.get("allowReplaced")).exists(_.trim.toBoolean))
-          throw new IllegalStateException(
-            s"snapshots $from → $snapId are not append-only: " +
-              s"${rewritten.size} file-set(s) were rewritten in between. " +
-              "Set .option(\"allowReplaced\", \"true\") for at-least-once " +
-              "redelivery of rewritten buckets.")
-        full.filterNot(e => fromPaths(e.path))
-      case None => full
-    }
+    val entries = changesFrom.fold(full)(SnapshotRead.delta(dir, _, snapId, full,
+      Option(options.get("allowReplaced")).exists(_.trim.toBoolean)))
     // a delta read whose delta is EMPTY still needs the table's
     // schema: fall back to the full snapshot's widest entry schema
     val deltaSchemaFallback =
       if (changesFrom.isDefined)
-        SnapshotTable.widestSchema(full.map(_.schema))
-          .map(d => DataType.fromDDL(d).asInstanceOf[StructType])
+        SnapshotTable.widestSchema(full.map(_.schema)).flatMap(SnapshotTable.parseSchema)
       else None
-    new SnapshotV2Table(dir, snapId, entries, snap.numBuckets,
-      externalSchema.orElse(deltaSchemaFallback).orElse(snap.metaSchema),
+    new SnapshotV2Table(dir, snapId, entries, snap.numBuckets.getOrElse(
+        Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16)),
+      externalSchema.orElse(deltaSchemaFallback).orElse(snap.meta.map(_.structType)),
       preferExternalSuperset =
         Option(options.get("snapshotId")).isEmpty && branchOpt.isEmpty)
   }
@@ -139,153 +121,8 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
       Option(schema).filter(_.fields.nonEmpty))
 }
 
-/** One column of the table's FIELD-ID mapping (the Iceberg field-id /
-  * Delta column-mapping analog): `id` is assigned once at column creation
-  * and never changes; `phys` is the column name frozen into data files at
-  * creation time; `name` is the current LOGICAL name SQL users see.
-  * RENAME edits only `name`; DROP only flips `dropped` (the phys name
-  * stays reserved so a later ADD of the same logical name cannot collide
-  * with bytes still sitting in old files). Data files are never touched by
-  * either — rename/drop are pure metadata operations, which is the only
-  * form that survives 100 TB. */
-final case class ColumnMapEntry(id: Int, name: String, phys: String,
-    dropped: Boolean = false)
-
-/** `CREATE TABLE`-time metadata for tables that have no commit yet (and
-  * the bucket-count/schema fallback for delete-emptied snapshots): one
-  * tiny JSON file, superseded by manifests as soon as snapshot 0 lands —
-  * EXCEPT the optional column `mapping`, which stays authoritative for the
-  * table's logical↔physical name overlay for as long as the table lives. */
-object SnapshotTableMeta {
-  private def file(dir: String) = Paths.get(dir, "TABLE_META.json")
-
-  /** Replaces the file atomically ([[Refs.atomicWrite]]): a reader racing
-    * an `ALTER` sees the old or the new metadata, never a torn file. */
-  def write(dir: String, schemaDdl: String, numBuckets: Int,
-      mapping: Option[Seq[ColumnMapEntry]] = None): Unit = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val mapField = mapping match {
-      case Some(ms) =>
-        ms.map(m => s"""{"id":${m.id},"name":"${esc(m.name)}",""" +
-          s""""phys":"${esc(m.phys)}","dropped":${m.dropped}}""")
-          .mkString(""","mapping":[""", ",", "]")
-      case None => ""
-    }
-    Refs.atomicWrite(file(dir),
-      s"""{"schema":"${esc(schemaDdl)}","numBuckets":$numBuckets$mapField}""")
-  }
-
-  /** The one parse of the file; a malformed file fails loudly. */
-  private def json(dir: String) =
-    if (!Files.exists(file(dir))) None
-    else Some(new ObjectMapper().readTree(Files.readString(file(dir))))
-
-  def read(dir: String): Option[(String, Int)] =
-    json(dir).map(n => (n.get("schema").asText(), n.get("numBuckets").asInt()))
-
-  /** The column mapping, present only once an ALTER created one. */
-  def mapping(dir: String): Option[Seq[ColumnMapEntry]] =
-    json(dir).flatMap(n => Option(n.get("mapping"))).map(_.elements().asScala.map(e =>
-      ColumnMapEntry(e.get("id").asInt(), e.get("name").asText(),
-        e.get("phys").asText(), e.get("dropped").asBoolean())).toSeq)
-
-  /** Rename a LOGICAL-named schema to the PHYSICAL names frozen in data
-    * files (identity when the table has no mapping — the common case and
-    * every pre-mapping table). Positions and types are untouched: V2 rows
-    * are positional, so this only redirects parquet column resolution. */
-  def toPhysical(dir: String, schema: StructType): StructType =
-    mapping(dir) match {
-      case None => schema
-      case Some(ms) =>
-        val byName = ms.filterNot(_.dropped).map(m => m.name -> m.phys).toMap
-        StructType(schema.fields.map(f =>
-          byName.get(f.name).map(p => f.copy(name = p)).getOrElse(f)))
-    }
-
-  /** Rewrite filter attribute names logical→physical so pushed filters
-    * keep driving parquet row-group skipping after a rename. Filters
-    * naming un-mapped columns pass through; filter shapes outside the
-    * rewritable subset are DROPPED — safe because every pushed filter is
-    * also kept residual (Spark re-evaluates rows). */
-  def filtersToPhysical(dir: String, filters: Array[Filter]): Array[Filter] =
-    mapping(dir) match {
-      case None => filters
-      case Some(ms) =>
-        val byName = ms.filterNot(_.dropped).map(m => m.name -> m.phys).toMap
-        def ren(a: String): String = byName.getOrElse(a, a)
-        def go(f: Filter): Option[Filter] = f match {
-          case EqualTo(a, v)            => Some(EqualTo(ren(a), v))
-          case EqualNullSafe(a, v)      => Some(EqualNullSafe(ren(a), v))
-          case GreaterThan(a, v)        => Some(GreaterThan(ren(a), v))
-          case GreaterThanOrEqual(a, v) => Some(GreaterThanOrEqual(ren(a), v))
-          case LessThan(a, v)           => Some(LessThan(ren(a), v))
-          case LessThanOrEqual(a, v)    => Some(LessThanOrEqual(ren(a), v))
-          case In(a, vs)                => Some(In(ren(a), vs))
-          case IsNull(a)                => Some(IsNull(ren(a)))
-          case IsNotNull(a)             => Some(IsNotNull(ren(a)))
-          case StringStartsWith(a, v)   => Some(StringStartsWith(ren(a), v))
-          case StringEndsWith(a, v)     => Some(StringEndsWith(ren(a), v))
-          case StringContains(a, v)     => Some(StringContains(ren(a), v))
-          case And(l, r) => for { a <- go(l); b <- go(r) } yield And(a, b)
-          case Or(l, r)  => for { a <- go(l); b <- go(r) } yield Or(a, b)
-          case Not(c)    => go(c).map(Not)
-          case _         => None
-        }
-        filters.flatMap(go)
-    }
-
-  def exists(dir: String): Boolean = Files.exists(file(dir))
-}
-
-/** The connector's view of one manifest line
-  * ([[graft.table.SnapshotTable.readManifest]] parses it). `maxTsMs` is
-  * widened by +1 s: the manifest formats ts at second granularity, so the
-  * recorded max FLOORS the true max — an overlap test against the raw value
-  * could prune a file-set whose last rows sit inside the truncated second.
-  * `minTsMs` floors too, which only widens the range (safe). */
-final case class ManifestEntry(bucket: Int, path: String, runId: String,
-    turns: Long, minTsMs: Long, maxTsMs: Long, schema: String, numBuckets: Int,
-    kind: String = "data")
-
-object SnapshotManifest {
-  private val TsFmt = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss")
-  private def tsMs(s: String): Long =
-    LocalDateTime.parse(s, TsFmt).toInstant(ZoneOffset.UTC).toEpochMilli
-
-  def read(dir: String, snapshotId: Long): Seq[ManifestEntry] =
-    entries(SnapshotTable.readManifest(dir, snapshotId))
-
-  private def entries(m: SnapshotTable.Manifest): Seq[ManifestEntry] = {
-    val nb = m.bucketCount.getOrElse(0) // None only when there are no entries
-    m.entries.map(e => ManifestEntry(e.bucket, e.path, e.runId, e.turns,
-      tsMs(e.minTs), tsMs(e.maxTs) + 1000L, e.schema, nb, e.kind))
-  }
-
-  /** What a table load resolves to: the snapshot (-1 with no entries for
-    * a table never committed), its entries, the bucket count and the
-    * CREATE/ALTER schema of TABLE_META.json. */
-  final case class Resolved(snapshotId: Long, entries: Seq[ManifestEntry],
-      numBuckets: Int, metaSchema: Option[StructType])
-
-  /** Resolve `snapshotId`, or the live snapshot when None, for both load
-    * faces (the path source and the catalog). The bucket count is the
-    * manifest's — also for a delete-emptied, tombstone-only snapshot —
-    * then TABLE_META's, then `fallbackBuckets`. */
-  def resolve(dir: String, snapshotId: Option[Long], fallbackBuckets: Int): Resolved = {
-    val meta = SnapshotTableMeta.read(dir)
-    val metaSchema = meta.map(m => DataType.fromDDL(m._1).asInstanceOf[StructType])
-    def buckets(m: Option[Int]) = m.orElse(meta.map(_._2)).getOrElse(fallbackBuckets)
-    snapshotId.orElse(new Refs(dir).read(Refs.Main)) match {
-      case Some(id) =>
-        val m = SnapshotTable.readManifest(dir, id)
-        Resolved(id, entries(m), buckets(m.bucketCount), metaSchema)
-      case None => Resolved(-1L, Seq.empty, buckets(None), metaSchema)
-    }
-  }
-}
-
 final class SnapshotV2Table(dir: String, snapshotId: Long,
-    entries: Seq[ManifestEntry], numBuckets: Int,
+    entries: Seq[BucketEntry], numBuckets: Int,
     externalSchema: Option[StructType] = None,
     preferExternalSuperset: Boolean = false,
     bucketClustered: Boolean = false)
@@ -398,26 +235,14 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
       morDeleteColumn(filters).isDefined
 
   private def convDeleteSets(filters: Array[Filter]): Option[Seq[Set[String]]] = {
-    val sets = filters.toSeq.map {
-      case EqualTo(a, v: String) if a.equalsIgnoreCase("conv_id")       => Some(Set(v))
-      case EqualNullSafe(a, v: String) if a.equalsIgnoreCase("conv_id") => Some(Set(v))
-      case In(a, vs) if a.equalsIgnoreCase("conv_id") &&
-        vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        Some(vs.map(_.asInstanceOf[String]).toSet)
-      case _                                                            => None
-    }
+    val sets = filters.toSeq.map(SnapshotRead.convSet)
     if (filters.nonEmpty && sets.forall(_.isDefined)) Some(sets.flatten) else None
   }
 
   /** The delete range as conservative [lo, hi] ms bounds, and the live
     * entries it fully covers — `None` when any conjunct is not a ts
     * comparison, or any live file-set straddles the range boundary. */
-  private def tsDeleteCoverage(filters: Array[Filter]): Option[Seq[ManifestEntry]] = {
-    def ms(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp => Some(t.getTime)
-      case i: java.time.Instant  => Some(i.toEpochMilli)
-      case _                     => None
-    }
+  private def tsDeleteCoverage(filters: Array[Filter]): Option[Seq[BucketEntry]] = {
     // conservative range: lo is the largest lower bound we must EXCEED
     // (strictly, so GreaterThanOrEqual maps to lo = X - 1ms… avoided by
     // tracking bounds as "delete iff minTs >= loMin and maxTs <= hiMax"
@@ -430,28 +255,28 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
     var ok = filters.nonEmpty
     filters.foreach {
       case LessThan(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v) match { case Some(m) => bounded = true; hiMax = math.min(hiMax, m); hiOut = math.min(hiOut, m); case None => ok = false }
+        SnapshotRead.filterMs(v) match { case Some(m) => bounded = true; hiMax = math.min(hiMax, m); hiOut = math.min(hiOut, m); case None => ok = false }
       case LessThanOrEqual(a, v) if a.equalsIgnoreCase("ts") =>
         // inclusive upper: widened maxTs (floor+1s) <= X still proves
         // trueMax < X <= X, so the same conservative test applies
-        ms(v) match { case Some(m) => bounded = true; hiMax = math.min(hiMax, m); hiOut = math.min(hiOut, m); case None => ok = false }
+        SnapshotRead.filterMs(v) match { case Some(m) => bounded = true; hiMax = math.min(hiMax, m); hiOut = math.min(hiOut, m); case None => ok = false }
       case GreaterThan(a, v) if a.equalsIgnoreCase("ts") =>
         // exclusive lower: recorded minTs (floor <= trueMin) must be > X
-        ms(v) match { case Some(m) => bounded = true; loMin = math.max(loMin, m + 1); loOut = math.max(loOut, m); case None => ok = false }
+        SnapshotRead.filterMs(v) match { case Some(m) => bounded = true; loMin = math.max(loMin, m + 1); loOut = math.max(loOut, m); case None => ok = false }
       case GreaterThanOrEqual(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v) match { case Some(m) => bounded = true; loMin = math.max(loMin, m); loOut = math.max(loOut, m); case None => ok = false }
+        SnapshotRead.filterMs(v) match { case Some(m) => bounded = true; loMin = math.max(loMin, m); loOut = math.max(loOut, m); case None => ok = false }
       case IsNotNull(a) if a.equalsIgnoreCase("ts") => () // no-op conjunct
       case _ => ok = false
     }
     if (!ok || !bounded) return None
     val curOpt = new SnapshotTable(dir, numBuckets).currentSnapshotId
     if (curOpt.isEmpty) return None
-    val live = SnapshotManifest.read(dir, curOpt.get)
+    val live = TableFormat.readManifest(dir, curOpt.get).entries
     // entry stats: minTsMs = floor(trueMin) <= trueMin;
-    //             maxTsMs = floor(trueMax)+1s > trueMax (widened by read)
-    def fullyIn(e: ManifestEntry): Boolean =
+    //             maxTsMs = floor(trueMax)+1s > trueMax (widened)
+    def fullyIn(e: BucketEntry): Boolean =
       e.minTsMs > 0 && e.minTsMs >= loMin && e.maxTsMs <= hiMax
-    def fullyOut(e: ManifestEntry): Boolean =
+    def fullyOut(e: BucketEntry): Boolean =
       e.maxTsMs <= loOut || e.minTsMs > hiOut
     if (live.forall(e => fullyIn(e) || fullyOut(e)))
       Some(live.filter(fullyIn))
@@ -498,15 +323,13 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
 
   override def schema(): StructType = {
     // COLUMN-MAPPED table (a rename/drop happened at some point): the
-    // CURRENT logical schema in TABLE_META is authoritative for every
-    // read, time travel included — entries carry PHYSICAL names and may,
-    // post-drop, be only union-compatible; the reader resolves parquet
+    // CURRENT logical schema of the table metadata is authoritative for
+    // every read, time travel included — entries carry PHYSICAL names and
+    // may, post-drop, be only union-compatible; the reader resolves parquet
     // columns by physical name per file (missing → null), so an old
     // snapshot surfaces exactly its own data under today's names.
-    if (SnapshotTableMeta.mapping(dir).isDefined)
-      SnapshotTableMeta.read(dir)
-        .map(m => DataType.fromDDL(m._1).asInstanceOf[StructType])
-        .foreach(s => return s)
+    TableFormat.readMeta(dir).filter(_.mapping.isDefined)
+      .foreach(m => return m.structType)
     // additive evolution: a snapshot can mix old and appended-column
     // file-sets — resolve the WIDEST (old files read null-filled)
     val fromEntries = SnapshotTable.widestSchema(entries.map(_.schema))
@@ -520,7 +343,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
     externalSchema match {
       case Some(ext) if preferExternalSuperset && fromEntries.isDefined &&
           ext.length > resolved.length &&
-          SnapshotTable.prefixCompatible(resolved.catalogString, ext.catalogString) => ext
+          SnapshotTable.prefixCompatible(TableFormat.schemaDdl(resolved), TableFormat.schemaDdl(ext)) => ext
       case _ => resolved
     }
   }
@@ -547,7 +370,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
   }
 }
 
-final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
+final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     fullSchema: StructType, numBuckets: Int, options: CaseInsensitiveStringMap)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with SupportsPushDownAggregates {
@@ -598,7 +421,7 @@ final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[Mani
 
 /** The completely-pushed `COUNT(*)` scan: one partition, one row, straight
   * from the manifest's commit-time counts — no data file is opened. */
-final class SnapshotCountScan(entries: Seq[ManifestEntry])
+final class SnapshotCountScan(entries: Seq[BucketEntry])
   extends Scan with Batch {
 
   private val total: Long = entries.map(_.turns).sum
@@ -638,48 +461,71 @@ private[graft] object SnapshotRead {
 
   /** Manifest-level pruning: intersect the conv_id value sets demanded by
     * equality/IN filters and keep a file-set iff it could own one of those
-    * conversations — hashed with THE ENTRY'S OWN bucket count, so entries
-    * written before a rebucket (reachable via time travel or an
-    * allowReplaced stream crossing the rewrite) prune correctly under
-    * their original layout. ts predicates drop file-sets whose
-    * [minTs, maxTs] cannot overlap. Unknown/other filters prune nothing
-    * (they still reach parquet + Spark's residual evaluation). */
-  def prune(dir: String, numBuckets: Int, entries: Seq[ManifestEntry],
-      pushed: Array[Filter]): Seq[ManifestEntry] = {
-    val twins = scala.collection.mutable.Map.empty[Int, SnapshotTable]
-    def bucketOf(c: String, nb: Int): Int =
-      twins.getOrElseUpdate(nb, new SnapshotTable(dir, nb)).bucketOfId(c)
-    val convSets = pushed.toSeq.collect {
-      case EqualTo(a, v: String) if a.equalsIgnoreCase("conv_id")       => Set(v)
-      case EqualNullSafe(a, v: String) if a.equalsIgnoreCase("conv_id") => Set(v)
-      case In(a, vs) if a.equalsIgnoreCase("conv_id") &&
-          vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-        vs.map(_.asInstanceOf[String]).toSet
-    }
-    val keepConvs = convSets.reduceOption(_ intersect _)
-    def ownsSome(e: ManifestEntry): Boolean = keepConvs.forall { convs =>
-      val nb = if (e.numBuckets > 0) e.numBuckets else numBuckets
-      convs.exists(c => bucketOf(c, nb) == e.bucket)
-    }
-    def ms(v: Any): Option[Long] = v match {
-      case t: java.sql.Timestamp => Some(t.getTime)
-      case i: java.time.Instant  => Some(i.toEpochMilli)
-      case _                     => None
-    }
+    * conversations — hashed with `numBuckets`, the count of THE MANIFEST
+    * THE ENTRIES CAME FROM, so entries of a snapshot before a rebucket
+    * (reachable via time travel or an allowReplaced stream crossing the
+    * rewrite) prune correctly under their own layout. ts predicates drop
+    * file-sets whose interval cannot overlap ([[BucketEntry.overlaps]]).
+    * Unknown/other filters prune nothing (they still reach parquet +
+    * Spark's residual evaluation). */
+  def prune(dir: String, numBuckets: Int, entries: Seq[BucketEntry],
+      pushed: Array[Filter]): Seq[BucketEntry] = {
+    val layout = new SnapshotTable(dir, numBuckets)
+    val keepConvs = pushed.toSeq.flatMap(convSet).reduceOption(_ intersect _)
+    def ownsSome(e: BucketEntry): Boolean =
+      keepConvs.forall(_.exists(c => layout.bucketOfId(c) == e.bucket))
     var lo = Long.MinValue
     var hi = Long.MaxValue
     pushed.foreach {
       case GreaterThan(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v).foreach(m => lo = math.max(lo, m))
+        filterMs(v).foreach(m => lo = math.max(lo, m))
       case GreaterThanOrEqual(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v).foreach(m => lo = math.max(lo, m))
+        filterMs(v).foreach(m => lo = math.max(lo, m))
       case LessThan(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v).foreach(m => hi = math.min(hi, m))
+        filterMs(v).foreach(m => hi = math.min(hi, m))
       case LessThanOrEqual(a, v) if a.equalsIgnoreCase("ts") =>
-        ms(v).foreach(m => hi = math.min(hi, m))
+        filterMs(v).foreach(m => hi = math.min(hi, m))
       case _ => ()
     }
-    entries.filter(e => ownsSome(e) && e.maxTsMs >= lo && e.minTsMs <= hi)
+    entries.filter(e => ownsSome(e) && e.overlaps(lo, hi))
+  }
+
+  /** The conversations an equality/IN filter on conv_id admits. */
+  def convSet(f: Filter): Option[Set[String]] = f match {
+    case EqualTo(a, v: String) if a.equalsIgnoreCase("conv_id")       => Some(Set(v))
+    case EqualNullSafe(a, v: String) if a.equalsIgnoreCase("conv_id") => Some(Set(v))
+    case In(a, vs) if a.equalsIgnoreCase("conv_id") &&
+        vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
+      Some(vs.map(_.asInstanceOf[String]).toSet)
+    case _ => None
+  }
+
+  /** Epoch ms of a pushed filter's timestamp literal. */
+  def filterMs(v: Any): Option[Long] = v match {
+    case t: java.sql.Timestamp => Some(t.getTime)
+    case i: java.time.Instant  => Some(i.toEpochMilli)
+    case _                     => None
+  }
+
+  /** The file-sets of snapshot `to` that snapshot `from` (-1: none) does
+    * not list — the delta of an incremental read or a micro-batch. Only
+    * the two endpoint manifests are consulted. A file-set of `from` that
+    * `to` no longer lists was rewritten in between (compact/replaceWhere/
+    * delete), which fails the read unless the caller opted into
+    * at-least-once redelivery of the rewritten buckets. */
+  def delta(dir: String, from: Long, to: Long, toEntries: Seq[BucketEntry],
+      allowReplaced: Boolean): Seq[BucketEntry] = {
+    val fromPaths =
+      if (from < 0) Set.empty[String]
+      else TableFormat.readManifest(dir, from).entries.map(_.path).toSet
+    val rewritten = fromPaths -- toEntries.map(_.path)
+    if (rewritten.nonEmpty && !allowReplaced)
+      throw new IllegalStateException(
+        s"snapshots $from → $to are not append-only: ${rewritten.size} file-set(s) " +
+          "were rewritten (compact/replaceWhere/delete) in between. Set " +
+          ".option(\"allowReplaced\", \"true\") to accept at-least-once " +
+          "redelivery of rewritten buckets.")
+    toEntries.filterNot(e => fromPaths(e.path))
   }
 
   /** The one listing of manifest file-sets, for every read face (the
@@ -722,7 +568,7 @@ private[graft] object SnapshotRead {
     // an inferred schema goes through the manifest's DDL form, which makes
     // every field nullable as `spark.read.parquet` does
     val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty, files)
-        .map(s => SnapshotTable.parseSchema(s.catalogString).getOrElse(s)))
+        .map(s => SnapshotTable.parseSchema(TableFormat.schemaDdl(s)).getOrElse(s)))
       .getOrElse(throw new IllegalStateException(
         s"snapshot $snapshotId of $dir: no schema recorded and no parquet " +
           s"file to infer one from under ${paths.mkString(", ")}"))
@@ -780,15 +626,15 @@ private[graft] object SnapshotRead {
     val fmt = new ParquetFileFormat
     val hconf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     val readFunc = fmt.buildReaderWithPartitionValues(
-      spark, SnapshotTableMeta.toPhysical(dir, dataSchema), new StructType(),
-      SnapshotTableMeta.toPhysical(dir, required),
-      SnapshotTableMeta.filtersToPhysical(dir, pushed).toSeq,
+      spark, TableFormat.toPhysical(dir, dataSchema), new StructType(),
+      TableFormat.toPhysical(dir, required),
+      TableFormat.filtersToPhysical(dir, pushed).toSeq,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hconf)
     SnapshotReaderFactory(readFunc)
   }
 }
 
-final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[ManifestEntry],
+final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
     numBuckets: Int, options: CaseInsensitiveStringMap)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
@@ -814,10 +660,10 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[ManifestEnt
   // estimateStatistics / planInputPartitions may each be called several
   // times during planning, and re-listing every kept file-set per call is
   // repeated driver-side FS IO at manifest scale
-  @volatile private var cachedKept: Seq[ManifestEntry] = _
+  @volatile private var cachedKept: Seq[BucketEntry] = _
   @volatile private var cachedListing: Seq[Seq[FileStatus]] = _
 
-  private[graft] def keptEntries: Seq[ManifestEntry] = {
+  private[graft] def keptEntries: Seq[BucketEntry] = {
     if (cachedKept == null)
       cachedKept = SnapshotRead.prune(dir, numBuckets, entries, pushed ++ runtimeFilters)
     cachedKept
@@ -903,7 +749,7 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[ManifestEnt
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     val startId = Option(options.get("startSnapshotId")).map(_.trim.toLong).getOrElse(-1L)
     val allowReplaced = Option(options.get("allowReplaced")).exists(_.trim.toBoolean)
-    new SnapshotMicroBatchStream(dir, numBuckets, dataSchema, required,
+    new SnapshotMicroBatchStream(dir, dataSchema, required,
       pushed, startId, allowReplaced)
   }
 }
@@ -914,7 +760,7 @@ final case class SnapshotOffset(snapshotId: Long)
   override def json(): String = s"""{"snapshotId":$snapshotId}"""
 }
 
-final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
+final class SnapshotMicroBatchStream(dir: String,
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
     startId: Long, allowReplaced: Boolean)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
@@ -930,7 +776,10 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
   override def initialOffset(): Offset = SnapshotOffset(startId)
   override def latestOffset(): Offset = SnapshotOffset(currentId)
   override def deserializeOffset(json: String): Offset =
-    SnapshotOffset(new ObjectMapper().readTree(json).get("snapshotId").asLong())
+    SnapshotOffset((org.json4s.jackson.JsonMethods.parse(json) \ "snapshotId") match {
+      case org.json4s.JInt(id) => id.toLong
+      case _ => sys.error(s"graft-snapshot: not a snapshot offset: $json")
+    })
 
   /** The delta (from, to]: to's file-sets minus from's, exactly
     * `SnapshotTable.readChanges` — append-only unless the caller opted
@@ -942,19 +791,8 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
     val s = start.asInstanceOf[SnapshotOffset].snapshotId
     val e = end.asInstanceOf[SnapshotOffset].snapshotId
     if (e <= s) return Array.empty
-    val fromPaths =
-      if (s < 0) Set.empty[String]
-      else SnapshotManifest.read(dir, s).map(_.path).toSet
-    val toEntries = SnapshotManifest.read(dir, e)
-    val toPaths = toEntries.map(_.path).toSet
-    val rewritten = fromPaths.filterNot(toPaths)
-    if (rewritten.nonEmpty && !allowReplaced)
-      throw new IllegalStateException(
-        s"snapshots $s → $e are not append-only: ${rewritten.size} file-set(s) " +
-          "were rewritten (compact/replaceWhere/delete) under the stream. Set " +
-          ".option(\"allowReplaced\", \"true\") to accept at-least-once " +
-          "redelivery of rewritten buckets.")
-    val added = toEntries.filterNot(en => fromPaths(en.path))
+    val to = TableFormat.readManifest(dir, e)
+    val added = SnapshotRead.delta(dir, s, e, to.entries, allowReplaced)
     // a new MOR delete key-set is not an append — the stream cannot
     // retract rows it already emitted; stop loudly (same posture as a
     // rewrite without allowReplaced)
@@ -963,7 +801,8 @@ final class SnapshotMicroBatchStream(dir: String, numBuckets: Int,
         s"snapshots $s → $e introduce merge-on-read deletes under the " +
           "stream; a snapshot-delta stream cannot retract emitted rows — " +
           "compact the table and restart the query from a fresh offset")
-    val pruned = SnapshotRead.prune(dir, numBuckets, added, pushed)
+    // hashed under `e`'s own count: the stream may cross a rebucket
+    val pruned = to.numBuckets.fold(added)(SnapshotRead.prune(dir, _, added, pushed))
     SnapshotRead.pack(spark,
       SnapshotRead.listFiles(spark, dir, e, pruned.map(_.path)).flatten)
   }

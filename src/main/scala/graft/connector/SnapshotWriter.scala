@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.table.SnapshotTable
+import graft.table.{SnapshotTable, TableFormat}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
@@ -20,8 +20,6 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, Parqu
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType, TimestampType}
 import org.apache.spark.util.SerializableConfiguration
-import java.time.format.DateTimeFormatter
-import java.time.{Instant, ZoneOffset}
 
 /** THE write path of the snapshot table — every face writes data files
   * through it:
@@ -77,7 +75,7 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
     // column mapping: data files carry PHYSICAL names (frozen at column
     // creation) — translate the logical write schema before anything is
     // written or recorded in the manifest entry DDL
-    val schema = SnapshotTableMeta.toPhysical(dir, info.schema())
+    val schema = TableFormat.toPhysical(dir, info.schema())
     new SnapshotWrite(info.schema(), () => {
       val runId = Option(info.options().get("runId")).getOrElse(info.queryId())
       val wap = Option(info.options().get("wap")).exists(_.trim.toBoolean)
@@ -170,9 +168,6 @@ private[graft] final case class PublishRule(replaceBuckets: Boolean = false,
 /** The shared driver-side commit machinery for every face. */
 private[graft] object SnapshotWriterUtil {
 
-  private val TsFmt =
-    DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss").withZone(ZoneOffset.UTC)
-
   /** The library face ([[SnapshotTable.commit]], `deleteRowsMor`): plans
     * `df` as a V2 append into a write-only table whose builder returns
     * [[SnapshotWrite]] directly, runs it, and returns the snapshot id the
@@ -232,7 +227,7 @@ private[graft] object SnapshotWriterUtil {
     * window. */
   def runIdCommitted(dir: String, numBuckets: Int, runId: String): Boolean =
     new SnapshotTable(dir, numBuckets).snapshotIds.exists(id =>
-      SnapshotManifest.read(dir, id).exists(_.runId == runId))
+      TableFormat.readManifest(dir, id).entries.exists(_.runId == runId))
 
   def dropStaging(conf: Configuration, dataPath: String): Unit = {
     val p = new HPath(s"$dataPath/_staging")
@@ -283,12 +278,11 @@ private[graft] object SnapshotWriterUtil {
           a.updated(b, a.get(b).map(_.merge(s)).getOrElse(s))
         }
       }
-    val schemaDdl = schema.catalogString
+    val schemaDdl = TableFormat.schemaDdl(schema)
     val entries = merged.toSeq.sortBy(_._1).map { case (b, s) =>
       SnapshotTable.BucketEntry(b, s"$dataPath/bucket=$b", runId,
         s.turns, s.blocksKept, s.blocksDropped, s.charsEmitted,
-        TsFmt.format(Instant.ofEpochMilli(s.minTsUs / 1000L)),
-        TsFmt.format(Instant.ofEpochMilli(s.maxTsUs / 1000L)), schemaDdl, rule.kind)
+        TableFormat.tsText(s.minTsUs), TableFormat.tsText(s.maxTsUs), schemaDdl, rule.kind)
     }
     new SnapshotTable(dir, numBuckets).commitEntries(spark, entries,
       rule.replaceBuckets, rule.forceReplace, rule.replaceExactly,

@@ -1,10 +1,11 @@
 package graft.table
 
-import graft.connector.{PublishRule, SnapshotRead, SnapshotTableMeta, SnapshotWriterUtil}
+import graft.connector.{PublishRule, SnapshotRead, SnapshotWriterUtil}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.unsafe.types.UTF8String
 import graft.model.ExtractedTurn
 import java.nio.file.{Files, Path, Paths}
@@ -17,11 +18,13 @@ import scala.jdk.CollectionConverters._
   *  - Data layout: `dir/data/run=<runId>/bucket=<b>/…parquet`, bucketed by
   *    `pmod(xxhash64(conv_id), numBuckets)` (the conv_id-bucketed layout of
   *    the north rule; bucket pruning = partition pruning on the bucket dir).
-  *  - Snapshots: `dir/manifests/snap-<id>.json` — JSON Lines, one line per
+  *  - Snapshots: one manifest per snapshot, JSON Lines, one line per
   *    committed bucket with lineage (runId, parentId) and per-partition
   *    extraction metrics (turns, blocksKept, blocksDropped, charsEmitted,
   *    minTs, maxTs). Each snapshot lists the FULL committed set (Iceberg
-  *    manifest-list style), so a reader needs exactly one file.
+  *    manifest-list style), so a reader needs exactly one file. What the
+  *    metadata files are called and what they mean is [[TableFormat]]'s
+  *    alone: every face parses and writes them there.
   *  - `dir/CURRENT` names the live snapshot, `dir/branches/<name>` and
   *    `dir/tags/<name>` the other refs ([[Refs]]); every ref moves by
   *    [[Refs.swing]] under the ref lock, a compare-and-swap against the
@@ -32,9 +35,9 @@ import scala.jdk.CollectionConverters._
   *  - Resume: a restarted run asks [[committedBuckets]] and processes only
   *    the complement (anti-join of input buckets vs committed — SURVEY §2.10).
   *  - Planning happens on the driver, as in Iceberg: the manifest is parsed
-  *    with Jackson ([[SnapshotTable.readManifest]], the one reader of the
-  *    format), its file-sets are listed by the one listing every read face
-  *    shares ([[graft.connector.SnapshotRead.listFiles]]), and data is read
+  *    with Jackson ([[TableFormat.readManifest]]), its file-sets are
+  *    listed by the one listing every read face shares
+  *    ([[graft.connector.SnapshotRead.listFiles]]), and data is read
   *    under the schema each entry recorded, so choosing the files of a read
   *    launches no Spark job however many file-sets it spans, and a point
   *    lookup runs exactly one (the scan).
@@ -47,7 +50,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   import SnapshotTable.BucketEntry
   import Refs.{Branch, Expect, Main, Tag}
 
-  private def manifestsDir: Path = Paths.get(dir, "manifests")
+  private def manifestsDir: Path = TableFormat.manifestsDir(dir)
   private[graft] val refs = new Refs(dir)
 
   def bucketOf = pmod(xxhash64(col("conv_id")), lit(numBuckets.toLong)).cast("int")
@@ -61,18 +64,6 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   }
 
   def currentSnapshotId: Option[Long] = refs.read(Main)
-
-  private def esc(s: String): String =
-    s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString }
-
-  private def entryJson(snapId: Long, parentId: Long, e: BucketEntry): String =
-    s"""{"snapshotId":$snapId,"parentId":$parentId,"buckets":$numBuckets,""" +
-      s""""bucket":${e.bucket},""" +
-      s""""path":"${esc(e.path)}","runId":"${esc(e.runId)}","turns":${e.turns},""" +
-      s""""blocksKept":${e.blocksKept},"blocksDropped":${e.blocksDropped},""" +
-      s""""charsEmitted":${e.charsEmitted},"minTs":"${esc(e.minTs)}","maxTs":"${esc(e.maxTs)}",""" +
-      s""""schema":"${esc(e.schema)}"""" +
-      (if (e.kind == "data") "}" else s""","kind":"${esc(e.kind)}"}""")
 
   /** All bucket entries of the live snapshot (empty if none), planned on
     * the driver: one Jackson parse of the manifest, no Spark job. `spark`
@@ -92,7 +83,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * stay on disk (until [[expireSnapshots]]), so any historical snapshot
     * remains readable. */
   def entriesAt(spark: SparkSession, snapshotId: Long): Seq[BucketEntry] =
-    SnapshotTable.readManifest(dir, snapshotId).entries
+    TableFormat.readManifest(dir, snapshotId).entries
 
   def committedBuckets(spark: SparkSession): Set[Int] =
     committedEntries(spark).map(_.bucket).toSet
@@ -199,11 +190,15 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // widening pairs before the prefix test; genuine renames/reorders/
     // arbitrary type changes are still rejected, and unmapped tables keep
     // the strict name+type prefix rule
-    lazy val dropped = SnapshotTableMeta.mapping(dir)
+    lazy val dropped = TableFormat.mapping(dir)
       .map(_.filter(_.dropped).map(_.phys).toSet)
+    // an entry recorded before TableFormat.schemaDdl quoted names holds
+    // Spark's unquoted catalogString, which does not parse back for a name
+    // that is not a plain identifier: the same schema, rendered the old way
     def schemaOk(a: String, b: String): Boolean =
       SnapshotTable.prefixCompatible(a, b) ||
-        dropped.exists(SnapshotTable.prefixCompatibleModulo(a, b, _))
+        dropped.exists(SnapshotTable.prefixCompatibleModulo(a, b, _)) ||
+        SnapshotTable.parseSchema(b).exists(_.catalogString == a)
     prev.find(e => e.kind == "data" && schemaDdl.nonEmpty && e.schema.nonEmpty &&
         e.schema != schemaDdl &&
         !schemaOk(e.schema, schemaDdl)).foreach { e =>
@@ -242,7 +237,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // than the grace window is reclaimed inline ([[Refs.claim]]), which
     // lets a replayed streaming batch (same parent, same snapId) recover
     // from its own crashed predecessor.
-    val target = manifestsDir.resolve(s"snap-$snapId.json")
+    val target = TableFormat.manifestFile(dir, snapId)
     if (!Refs.claim(target))
       throw new SnapshotTable.CommitConflictException(
         s"concurrent commit on $dir: snapshot id $snapId is already " +
@@ -253,15 +248,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // release it, or this committer's own retry/replay (same parent ⇒
     // same snapId) would wedge on its own abandoned claim.
     try {
-      // a delete-everything commit has ZERO entries: write a tombstone line
-      // instead of a zero-length file — zero length means "unpublished
-      // claim" to snapshotIds/GC, and readers need the bucket count to
-      // keep resolving the (empty) table
-      val entryLines = (prev ++ newEntries).sortBy(_.bucket).map(entryJson(snapId, parent, _))
-      val lines =
-        if (entryLines.nonEmpty) entryLines
-        else Seq(s"""{"snapshotId":$snapId,"parentId":$parent,"buckets":$numBuckets,"tombstone":true}""")
-      Refs.atomicWrite(target, lines.mkString("\n"))
+      // a delete-everything commit has ZERO entries: the format writes a
+      // tombstone line instead
+      TableFormat.writeManifest(dir, snapId, parent, numBuckets,
+        (prev ++ newEntries).sortBy(_.bucket))
 
       if (!publish) {
         // WRITE-AUDIT-PUBLISH staging: everything above happened — data
@@ -295,8 +285,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
 
   // --------------------------------------------- write-audit-publish (WAP)
 
-  private def stagedMarker(snapshotId: Long): Path =
-    manifestsDir.resolve(s"snap-$snapshotId.staged")
+  private def stagedMarker(snapshotId: Long): Path = TableFormat.stagedMarker(dir, snapshotId)
 
   /** Snapshot ids currently staged (committed-but-unpublished WAP
     * audits): non-empty manifest + marker, id beyond CURRENT. */
@@ -310,12 +299,12 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * compare-and-swap against the staged manifest's parent, and a moved
     * CURRENT fails the publish with a conflict (discard and re-stage). */
   def publishStaged(snapshotId: Long): Unit = {
-    val m = manifestsDir.resolve(s"snap-$snapshotId.json")
+    val m = TableFormat.manifestFile(dir, snapshotId)
     require(Files.exists(m) && Files.size(m) > 0,
       s"staged snapshot $snapshotId does not exist in $dir")
     require(Files.exists(stagedMarker(snapshotId)),
       s"snapshot $snapshotId is not staged (already published, or a foreign claim)")
-    val parent = SnapshotTable.readManifest(dir, snapshotId).parentId
+    val parent = TableFormat.readManifest(dir, snapshotId).parentId
     // the marker is checked under the ref lock too: a discard that won
     // the lock first has deleted the manifest CURRENT would name
     val onParent = Expect.is(Some(parent).filter(_ >= 0))
@@ -341,18 +330,11 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         s"snapshot $snapshotId is not staged — refusing to discard published history")
       require(currentSnapshotId.forall(_ < snapshotId),
         s"snapshot $snapshotId is not beyond CURRENT")
-      Files.deleteIfExists(manifestsDir.resolve(s"snap-$snapshotId.json"))
+      Files.deleteIfExists(TableFormat.manifestFile(dir, snapshotId))
       Files.deleteIfExists(stagedMarker(snapshotId))
     }
     val dead = (mine -- keptPaths).toSeq.sorted
-    dead.foreach { p =>
-      val path = Paths.get(p)
-      if (Files.exists(path)) {
-        val w = Files.walk(path)
-        try w.iterator.asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
-        finally w.close()
-      }
-    }
+    dead.foreach(p => deleteTree(Paths.get(p)))
     dead
   }
 
@@ -393,9 +375,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
           // PHYSICAL names — dropped columns project away by omission,
           // widened columns upcast per file (the parquet reader reads
           // INT32 as LONG / FLOAT as DOUBLE when handed the wider type)
-          .orElse(SnapshotTableMeta.mapping(dir).flatMap(_ => SnapshotTableMeta.read(dir))
-            .map(m => SnapshotTableMeta.toPhysical(dir,
-              DataType.fromDDL(m._1).asInstanceOf[StructType])))
+          .orElse(TableFormat.readMeta(dir).filter(_.mapping.isDefined)
+            .map(m => TableFormat.toPhysical(dir, m.structType)))
           // otherwise: incompatible mix (pre-guard table) — infer as before
       else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
         SnapshotTable.parseSchema(ddls.head)
@@ -686,6 +667,13 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     try s.iterator.asScala.toSeq finally s.close()
   }
 
+  /** Delete `p` and everything under it, if it exists. */
+  private def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    val w = Files.walk(p)
+    try w.iterator.asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
+    finally w.close()
+  }
+
   /** All snapshot ids present on disk (ascending). */
   def snapshotIds: Seq[Long] =
     if (!Files.exists(manifestsDir)) Seq.empty
@@ -700,8 +688,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         try Files.size(p) > 0
         catch { case _: java.nio.file.NoSuchFileException => false }
       }
-      .map(_.getFileName.toString)
-      .collect { case SnapshotTable.SnapName(id) => id.toLong }
+      .flatMap(TableFormat.snapshotIdOf(_, staged = false))
       .sorted
 
   /** Snapshot GC (Iceberg `expireSnapshots` analog): keep the newest
@@ -736,15 +723,11 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val deadPaths = expired.flatMap(entriesAt(spark, _)).map(_.path)
       .distinct.filterNot(keptPaths)
     // 1. manifests first (see ordering note above)
-    expired.foreach(id => Files.deleteIfExists(manifestsDir.resolve(s"snap-$id.json")))
+    expired.foreach(id => Files.deleteIfExists(TableFormat.manifestFile(dir, id)))
     // 2. then the newly-unreachable data file-sets
     deadPaths.foreach { p =>
       val path = Paths.get(p)
-      if (Files.exists(path)) {
-        val w = Files.walk(path)
-        try w.iterator.asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
-        finally w.close()
-      }
+      deleteTree(path)
       // drop the parent run=<id> dir too once its last bucket is gone —
       // writer-side markers (_SUCCESS, .crc) don't count as live content
       val run = path.getParent
@@ -825,7 +808,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   /** Parent snapshot id of a manifest (the lineage pointer every entry
     * line carries); None when the manifest is gone or unreadable. */
   private[graft] def parentOf(id: Long): Option[Long] =
-    scala.util.Try(SnapshotTable.readManifest(dir, id).parentId).toOption
+    scala.util.Try(TableFormat.readManifest(dir, id).parentId).toOption
 
   /** `head` and its ancestors, newest first, by parent pointers. */
   private def chain(head: Long): Iterator[Long] =
@@ -897,17 +880,13 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // a WAP marker whose manifest is gone (discard crashed between the
     // two deletes) is inert residue — sweep it
     listDir(manifestsDir).foreach { p =>
-      p.getFileName.toString match {
-        case SnapshotTable.StagedName(id)
-          if !Files.exists(manifestsDir.resolve(s"snap-$id.json")) =>
-          Files.deleteIfExists(p); ()
-        case _ => ()
-      }
+      TableFormat.snapshotIdOf(p, staged = true)
+        .filterNot(id => Files.exists(TableFormat.manifestFile(dir, id)))
+        .foreach(_ => Files.deleteIfExists(p))
     }
     listDir(manifestsDir).flatMap { p =>
-      p.getFileName.toString match {
-        case SnapshotTable.SnapName(id)
-          if id.toLong > cur && !branchLive(id.toLong) =>
+      TableFormat.snapshotIdOf(p, staged = false) match {
+        case Some(id) if id > cur && !branchLive(id) =>
           // tolerate the concurrent-reclaim race (another GC or a
           // committer's publish/delete between our listing and the stat)
           // — same posture as snapshotIds
@@ -917,10 +896,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
             // reclaimed, however old; publishStaged/discardStaged are its
             // only exits. A zero-length claim is reclaimable even when
             // marked (the stager died before its manifest landed).
-            val staged = Files.exists(stagedMarker(id.toLong)) && Files.size(p) > 0
+            val staged = Files.exists(stagedMarker(id)) && Files.size(p) > 0
             if (!staged && Files.getLastModifiedTime(p).toMillis < horizon &&
                 Files.deleteIfExists(p)) {
-              Files.deleteIfExists(stagedMarker(id.toLong))
+              Files.deleteIfExists(stagedMarker(id))
               Some(p.toString)
             } else None
           } catch { case _: java.nio.file.NoSuchFileException => None }
@@ -946,9 +925,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         bucket.getFileName.toString.startsWith("bucket=") &&
         !live(bucket.toString) && newestMtime(bucket) < horizon
     } yield {
-      val w = Files.walk(bucket)
-      try w.iterator.asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
-      finally w.close()
+      deleteTree(bucket)
       bucket.toString
     }
     // drop run dirs reduced to writer-side markers (_SUCCESS, .crc) or a
@@ -962,11 +939,7 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       if (residue.forall(f => { val n = f.getFileName.toString
         n.startsWith("_") || n.startsWith(".") }) &&
           (residue.isEmpty || newestMtime(run) < horizon)) {
-        residue.foreach { f =>
-          val w = Files.walk(f)
-          try w.iterator.asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
-          finally w.close()
-        }
+        residue.foreach(deleteTree)
         Files.deleteIfExists(run)
       }
     }
@@ -1075,26 +1048,31 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       .unionByName(oldRows.exceptAll(newRows).withColumn("op", lit("delete")))
   }
 
-  /** Manifest-pruned time-range read: selects only bucket file-sets whose
-    * manifest `[minTs, maxTs]` interval overlaps the requested range, THEN
-    * applies the exact per-row predicate. A "last week's turns" query scans
-    * the buckets that contain last week — not the full table. Timestamps
-    * are ISO-8601 seconds UTC (the manifest's own format — the fixed-width
-    * form makes lexicographic comparison correct). */
+  /** Manifest-pruned time-range read: selects only data file-sets whose
+    * manifest ts interval overlaps [minTs, maxTs] ([[BucketEntry.overlaps]],
+    * the rule the V2 scan prunes by), THEN applies the exact per-row
+    * predicate. A "last week's turns" query scans the buckets that contain
+    * last week — not the full table. The bounds are parsed once, as a
+    * string-to-timestamp cast parses them in the session time zone (`T` or
+    * space separated, fractional seconds allowed); a bound that does not
+    * parse fails the read, naming it. */
   def readRange(spark: SparkSession, minTs: String, maxTs: String): DataFrame = {
+    val zone = java.time.ZoneId.of(spark.conf.get("spark.sql.session.timeZone"))
+    def bound(s: String): java.time.Instant = DateTimeUtils
+      .stringToTimestamp(UTF8String.fromString(s), zone).map(DateTimeUtils.microsToInstant)
+      .getOrElse(throw new IllegalArgumentException(s"readRange: '$s' is not a timestamp"))
+    val (lo, hi) = (bound(minTs), bound(maxTs))
     val (snap, all) = liveEntries(spark)
     // ts pruning applies to DATA file-sets only — delete key-sets carry no
     // ts range and must always apply, or a range read would resurrect
     // MOR-deleted rows whose delete entry sits "outside" the range
-    val data = all.filter(e => e.kind == "data" &&
-      e.maxTs >= minTs && e.minTs <= maxTs)
+    val data = all.filter(e => e.kind == "data" && e.overlaps(lo.toEpochMilli, hi.toEpochMilli))
     if (data.isEmpty)
       return read(spark).limit(0) // empty frame, full schema
     val dels = all.filter(e => e.kind == "delete" &&
       data.exists(_.bucket == e.bucket))
     applyDeletes(spark, snap, dataRead(spark, snap, data), dels)
-      .where(col("ts") >= to_timestamp(lit(minTs)) &&
-        col("ts") <= to_timestamp(lit(maxTs)))
+      .where(col("ts") >= lit(lo) && col("ts") <= lit(hi))
   }
 }
 
@@ -1115,55 +1093,27 @@ object SnapshotTable {
     * detected earlier via runId). */
   final class CommitConflictException(msg: String)
     extends IllegalStateException(msg)
-  private val SnapName = """snap-(\d+)\.json""".r
-  private val StagedName = """snap-(\d+)\.staged""".r
 
   /** One committed file-set of a snapshot: a manifest line with lineage
-    * stripped. `schema` is the DDL the file-set was written under ("" for
-    * entries older than schema tracking). */
+    * stripped ([[TableFormat]] parses and writes it). `schema` is the DDL
+    * the file-set was written under ("" for entries older than schema
+    * tracking); `minTs`/`maxTs` are the recorded bounds in the manifest's
+    * timestamp form ([[TableFormat.tsText]]). */
   final case class BucketEntry(
       bucket: Int, path: String, runId: String,
       turns: Long, blocksKept: Long, blocksDropped: Long, charsEmitted: Long,
       minTs: String, maxTs: String, schema: String,
-      kind: String = "data") // "data" | "delete" (merge-on-read key file-set)
+      kind: String = "data") { // "data" | "delete" (merge-on-read key file-set)
 
-  /** A parsed `snap-<id>.json`: the lineage header and the entries.
-    * `numBuckets` is None for manifests older than bucket-count tracking. */
-  final case class Manifest(parentId: Long, numBuckets: Option[Int],
-      entries: Seq[BucketEntry]) {
-    /** The bucket count, back-filled as max(bucket)+1 for pre-field
-      * manifests — exact for them because their writers always filled the
-      * id range densely enough for tests; new manifests carry the field. */
-    def bucketCount: Option[Int] =
-      numBuckets.orElse(entries.map(_.bucket).maxOption.map(_ + 1))
-  }
+    /** The pruning bounds in epoch ms. The manifest floors both to the
+      * second: the floored min only widens the interval, but the floored
+      * max could sit below rows inside its second, so `maxTsMs` is the
+      * recorded max + 1 s. */
+    def minTsMs: Long = TableFormat.tsMs(minTs)
+    def maxTsMs: Long = TableFormat.tsMs(maxTs) + 1000L
 
-  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
-
-  /** The one reader of the manifest format, on the driver (Jackson, no
-    * Spark job — Iceberg likewise plans from manifests on the driver).
-    * Every face reads manifests through it: the library's reads and
-    * commits, the V2 connector, the metadata tables. Older writers are
-    * read as they always were: a tombstone-only manifest (a
-    * delete-everything snapshot) has no entries; a missing `schema` reads
-    * as ""; a missing `kind` as "data". */
-  def readManifest(dir: String, snapshotId: Long): Manifest = {
-    val f = Paths.get(dir, "manifests", s"snap-$snapshotId.json")
-    require(Files.exists(f), s"snapshot $snapshotId does not exist in $dir")
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty).map(Json.readTree)
-    def text(n: com.fasterxml.jackson.databind.JsonNode, field: String,
-        absent: String): String =
-      Option(n.get(field)).filterNot(_.isNull).map(_.asText()).getOrElse(absent)
-    Manifest(
-      lines.collectFirst { case n if n.has("parentId") => n.get("parentId").asLong() }
-        .getOrElse(-1L),
-      lines.collectFirst { case n if n.has("buckets") => n.get("buckets").asInt() },
-      lines.filterNot(_.has("tombstone")).map(n => BucketEntry(
-        n.get("bucket").asInt(), n.get("path").asText(), n.get("runId").asText(),
-        n.get("turns").asLong(), n.get("blocksKept").asLong(),
-        n.get("blocksDropped").asLong(), n.get("charsEmitted").asLong(),
-        n.get("minTs").asText(), n.get("maxTs").asText(),
-        text(n, "schema", ""), text(n, "kind", "data"))))
+    /** Could this file-set hold a row with ts in [loMs, hiMs]? */
+    def overlaps(loMs: Long, hiMs: Long): Boolean = maxTsMs >= loMs && minTsMs <= hiMs
   }
 
   /** The schema of merge-on-read delete key file-sets. */
@@ -1231,16 +1181,16 @@ object SnapshotTable {
     else None
   }
 
-  /** Open an existing table, recovering the LIVE bucket count from the
-    * current manifest — the reason the count is a manifest field and not
-    * caller configuration: after a [[SnapshotTable.rebucket]] every reader
-    * constructed with the old count would mis-hash point reads. Pre-field
-    * manifests fall back to max(bucket)+1 ([[Manifest.bucketCount]]). */
+  /** Open an existing table, recovering the LIVE bucket count by the one
+    * rule ([[TableFormat.Resolved.numBuckets]]) — the reason the count is
+    * a manifest field and not caller configuration: after a
+    * [[SnapshotTable.rebucket]] every reader constructed with the old count
+    * would mis-hash point reads. */
   def open(dir: String): SnapshotTable = {
-    val snapId = new Refs(dir).read(Refs.Main).getOrElse(
-      throw new IllegalArgumentException(s"no committed snapshot in $dir"))
-    val n = readManifest(dir, snapId).bucketCount
-      .getOrElse(sys.error(s"manifest snap-$snapId.json carries no bucket ids"))
-    new SnapshotTable(dir, n)
+    val live = TableFormat.resolve(dir, None)
+    if (live.snapshotId < 0)
+      throw new IllegalArgumentException(s"no committed snapshot in $dir")
+    new SnapshotTable(dir, live.numBuckets.getOrElse(
+      sys.error(s"snapshot ${live.snapshotId} of $dir records no bucket count")))
   }
 }

@@ -327,6 +327,13 @@ class GraftCatalogSpec extends AnyFunSuite with SparkTestBase {
       .collect().head.getLong(0) > 0L)
     assert(s.sql("SELECT sum(turns) FROM graft.`t_proc$files`")
       .collect().head.getLong(0) == 10L)
+    // min_ts/max_ts are the instants the manifest recorded
+    def instant(ts: String) =
+      java.time.LocalDateTime.parse(ts).toInstant(java.time.ZoneOffset.UTC).toString
+    val recorded = table.committedEntries(spark).filter(_.kind == "data")
+      .sortBy(e => (e.bucket, e.path)).map(e => (instant(e.minTs), instant(e.maxTs)))
+    assert(s.sql("SELECT min_ts, max_ts FROM graft.`t_proc$files` ORDER BY bucket, path")
+      .collect().map(r => (r.getString(0), r.getString(1))).toSeq == recorded)
     assert(s.sql("SELECT name, snapshot_id FROM graft.`t_proc$tags`").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq == Seq(("rel", 2L)))
   }

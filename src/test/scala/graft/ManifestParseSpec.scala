@@ -1,7 +1,6 @@
 package graft
 
-import graft.connector.{ManifestEntry, SnapshotManifest}
-import graft.table.SnapshotTable
+import graft.table.{SnapshotTable, TableFormat}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path}
 import java.time.{LocalDateTime, ZoneOffset}
@@ -9,8 +8,8 @@ import java.time.{LocalDateTime, ZoneOffset}
 /** Manifest lines written by older writers — no `schema`, no `kind`, no
   * `buckets`, tombstone-only — must keep parsing to the same entries. The
   * expected values were recorded from the Spark-JSON manifest reader the
-  * driver-side parser replaced, so both faces (the library's bucket
-  * entries and the connector's manifest entries) are pinned field by field.
+  * driver-side parser replaced, so the one entry type is pinned field by
+  * field, with its widened pruning bounds and the manifest's bucket count.
   */
 class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
 
@@ -58,35 +57,33 @@ class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
       List(b, s"/t/data/run=$run/bucket=$b", run, 10L + b, 20L + b, b.toLong,
         1000L + b, s"2024-01-0${b + 1}T00:00:00", s"2024-02-0${b + 1}T12:34:56",
         schema, kind)
-    def manifestEntry(b: Int, run: String, schema: String, nb: Int,
-        kind: String): ManifestEntry =
-      ManifestEntry(b, s"/t/data/run=$run/bucket=$b", run, 10L + b,
-        ms(s"2024-01-0${b + 1}T00:00:00"), ms(s"2024-02-0${b + 1}T12:34:56") + 1000L,
-        schema, nb, kind)
+    // the pruning bounds: recorded min, recorded max widened by 1 s
+    def bounds(id: Long): Seq[(Long, Long)] =
+      TableFormat.readManifest(dir.toString, id).entries.map(e => (e.minTsMs, e.maxTsMs))
+    def widened(b: Int): (Long, Long) =
+      (ms(s"2024-01-0${b + 1}T00:00:00"), ms(s"2024-02-0${b + 1}T12:34:56") + 1000L)
+    def buckets(id: Long): Option[Int] = TableFormat.readManifest(dir.toString, id).numBuckets
 
     assert(table.entriesAt(spark, 0L).map(fields) == Seq(
       bucketEntry(1, "r0", "", "data"), bucketEntry(3, "r0", "", "data")))
-    assert(SnapshotManifest.read(dir.toString, 0L) == Seq(
-      manifestEntry(1, "r0", "", 4, "data"), manifestEntry(3, "r0", "", 4, "data")))
+    assert(bounds(0L) == Seq(widened(1), widened(3)))
+    assert(buckets(0L).contains(4))
 
     assert(table.entriesAt(spark, 1L).map(fields) == Seq(
       bucketEntry(1, "r1", KeyDdl, "data"), bucketEntry(2, "d1", KeyDdl, "delete")))
-    assert(SnapshotManifest.read(dir.toString, 1L) == Seq(
-      manifestEntry(1, "r1", KeyDdl, 4, "data"),
-      manifestEntry(2, "d1", KeyDdl, 4, "delete")))
+    assert(bounds(1L) == Seq(widened(1), widened(2)))
+    assert(buckets(1L).contains(4))
 
     // the bucket count back-fills from max(bucket) + 1
     assert(table.entriesAt(spark, 2L).map(fields) == Seq(
       bucketEntry(0, "r2", "", "data"), bucketEntry(5, "r2", "", "data")))
-    assert(SnapshotManifest.read(dir.toString, 2L) == Seq(
-      manifestEntry(0, "r2", "", 6, "data"), manifestEntry(5, "r2", "", 6, "data")))
-    assert(SnapshotTable.readManifest(dir.toString, 2L).numBuckets.isEmpty)
-    assert(SnapshotManifest.resolve(dir.toString, Some(2L), 16).numBuckets == 6)
+    assert(bounds(2L) == Seq(widened(0), widened(5)))
+    assert(buckets(2L).contains(6))
+    assert(TableFormat.resolve(dir.toString, Some(2L)).numBuckets.contains(6))
 
     assert(table.entriesAt(spark, 3L).isEmpty)
-    assert(SnapshotManifest.read(dir.toString, 3L).isEmpty)
-    assert(SnapshotManifest.resolve(dir.toString, Some(3L), 16).numBuckets == 4)
-    assert(SnapshotTable.readManifest(dir.toString, 0L).numBuckets.contains(4))
+    assert(TableFormat.readManifest(dir.toString, 3L).entries.isEmpty)
+    assert(TableFormat.resolve(dir.toString, Some(3L)).numBuckets.contains(4))
 
     // open() recovers the live bucket count, back-filled or from a tombstone
     Files.writeString(dir.resolve("CURRENT"), "2")
@@ -101,8 +98,8 @@ class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
     val table = new SnapshotTable(dir.toString, 4)
     val e1 = intercept[IllegalArgumentException](table.entriesAt(spark, 7L))
     assert(e1.getMessage.contains("snapshot 7 does not exist"))
-    val e2 = intercept[IllegalArgumentException](SnapshotManifest.read(dir.toString, 7L))
+    val e2 = intercept[IllegalArgumentException](TableFormat.readManifest(dir.toString, 7L))
     assert(e2.getMessage.contains("snapshot 7 does not exist"))
-    intercept[IllegalArgumentException](SnapshotManifest.resolve(dir.toString, Some(7L), 16))
+    intercept[IllegalArgumentException](TableFormat.resolve(dir.toString, Some(7L)))
   }
 }

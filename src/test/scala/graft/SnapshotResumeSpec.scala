@@ -2,10 +2,12 @@ package graft
 
 import graft.gen.TranscriptGen
 import graft.pipe.{ExtractJob, ExtractPipeline}
+import graft.model.{ExtractedTurn, Span}
 import graft.table.SnapshotTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
+import java.sql.Timestamp
 
 /** Checkpoint/resume suite (SURVEY §5.2, FIXTURES.md §5): a run killed after
   * a partial commit must resume processing exactly the uncommitted buckets
@@ -227,6 +229,30 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(got.nonEmpty && got.sameElements(expected))
     // and a range BETWEEN the two windows scans nothing, returns empty
     assert(table.readRange(spark, "2090-01-01T00:00:00", "2091-01-01T00:00:00").count() == 0)
+  }
+
+  test("readRange keeps rows whose bounds are sub-second or space-separated") {
+    import testImplicits._
+    def turn(conv: String, ts: String): ExtractedTurn =
+      ExtractedTurn(conv, 0, "user", "html", Timestamp.valueOf(ts), conv,
+        Seq(Span(0, 0, conv.length, "p", conv)), 1, 0, conv.length, 1.0)
+    val table = new SnapshotTable(Files.createTempDirectory("snap").toString, numBuckets = 4)
+    // the manifest floors both runs' ts to the second: runA records
+    // 10:00:00 for a row at 10:00:00.700
+    table.commit(spark, Seq(turn("a", "2024-01-01 10:00:00.700")).toDS(), "runA")
+    table.commit(spark, Seq(turn("b", "2024-01-01 12:00:00")).toDS(), "runB",
+      replaceBuckets = false)
+    def convs(lo: String, hi: String) = {
+      val df = table.readRange(spark, lo, hi)
+      assert(df.inputFiles.forall(_.contains("run=runA")), df.inputFiles.mkString(","))
+      df.select("conv_id").as[String].collect().toSeq
+    }
+    assert(convs("2024-01-01T10:00:00.500", "2024-01-01T11:00:00") == Seq("a"))
+    assert(convs("2024-01-01 09:00:00", "2024-01-01 11:00:00") == Seq("a"))
+    assert(convs("2024-01-01 10:00:00.701", "2024-01-01 11:00:00").isEmpty)
+    val bad = intercept[IllegalArgumentException](
+      table.readRange(spark, "yesterday", "2024-01-01 11:00:00"))
+    assert(bad.getMessage.contains("'yesterday'"))
   }
 
   test("commit refuses a schema change against kept entries; manifest records schema") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.connector.{SnapshotMicroBatchStream, SnapshotOffset}
+import graft.connector.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset}
 import graft.model.{ExtractedTurn, Span}
 import graft.table.SnapshotTable
 import org.apache.spark.sql.Encoders
@@ -86,7 +86,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
     table.compact(spark, "runC") // rewrites every bucket: 0→2 is NOT append-only
 
     val schema = Encoders.product[ExtractedTurn].schema
-    val strict = new SnapshotMicroBatchStream(dir, 4, schema, schema,
+    val strict = new SnapshotMicroBatchStream(dir, schema, schema,
       Array.empty, startId = 0L, allowReplaced = false)
     val ex = intercept[IllegalStateException] {
       strict.planInputPartitions(SnapshotOffset(0L), SnapshotOffset(2L))
@@ -94,7 +94,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(ex.getMessage.contains("not append-only"))
 
     // opted-in: the delta is the full rewritten content (at-least-once)
-    val tolerant = new SnapshotMicroBatchStream(dir, 4, schema, schema,
+    val tolerant = new SnapshotMicroBatchStream(dir, schema, schema,
       Array.empty, startId = 0L, allowReplaced = true)
     val parts = tolerant.planInputPartitions(SnapshotOffset(0L), SnapshotOffset(2L))
     assert(parts.nonEmpty)
@@ -102,9 +102,28 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
     assert(strict.planInputPartitions(SnapshotOffset(0L), SnapshotOffset(1L)).nonEmpty)
   }
 
+  test("a delta that crosses a rebucket prunes by the bucket count of the manifest it read") {
+    import testImplicits._
+    val dir = Files.createTempDirectory("snapstream4").toString
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    table.commit(spark, (0 until 12).map(i => mk(s"c$i", 0)).toDS(), "runA")
+    table.rebucket(spark, 8, "runB") // snapshot 1 rewrites every row under 8 buckets
+    val (four, eight) = (new SnapshotTable(dir, 4), new SnapshotTable(dir, 8))
+    val conv = (0 until 12).map(i => s"c$i").find(c => four.bucketOfId(c) != eight.bucketOfId(c)).get
+
+    val schema = Encoders.product[ExtractedTurn].schema
+    val stream = new SnapshotMicroBatchStream(dir, schema, schema,
+      Array(org.apache.spark.sql.sources.EqualTo("conv_id", conv)), startId = 0L,
+      allowReplaced = true)
+    val files = stream.planInputPartitions(SnapshotOffset(0L), SnapshotOffset(1L)).toSeq
+      .flatMap { case SnapshotInputPartition(fs) => fs.map(_.filePath.toString) }
+    assert(files.nonEmpty && files.forall(_.contains(s"run=runB/bucket=${eight.bucketOfId(conv)}/")),
+      files.mkString(", "))
+  }
+
   test("offset round-trip: json ↔ SnapshotOffset") {
     val schema = Encoders.product[ExtractedTurn].schema
-    val s = new SnapshotMicroBatchStream("/nonexistent", 4, schema, schema,
+    val s = new SnapshotMicroBatchStream("/nonexistent", schema, schema,
       Array.empty, -1L, allowReplaced = false)
     assert(s.deserializeOffset(SnapshotOffset(17L).json()) == SnapshotOffset(17L))
     assert(s.initialOffset() == SnapshotOffset(-1L))
