@@ -61,62 +61,56 @@ object Bench {
       else if (localCluster)
         s"local-cluster[${math.max(1, cores / 4)},4,$workerMemMb]"
       else s"local[$cores]"
-    val b0 = SparkSession.builder()
-      .master(master)
-      .appName(s"graft-bench-$cores")
-      // 4× cores shuffle partitions: several task waves (amortizes straggler
-      // tails — the hot conversation's reducer), smaller per-task sorts. With
-      // coalescing off (scaling phase) this is the CAP of the flagship's
-      // order-restoring exchange, which sizes itself in whole waves of
-      // ≥ 1 MB tasks (ExtractPipeline); the headline corpus (8.3M turns,
-      // ~1.6 GB of shuffle, BENCH/TUNING.md round 3) is far past the 64 MB
-      // that keeps the cap at local[16].
-      .config("spark.sql.shuffle.partitions", (cores * 4).toString)
-      // scaling phase: keep the configured wave granularity (AQE would
-      // coalesce the small bench corpus back to ~1 wave per stage on the
-      // wide configuration). Query phase: DO coalesce — the operator
-      // queries are many small shuffles, and 128 fixed tasks per stage is
-      // pure scheduling overhead there (measured 2-3× on the dedup family)
-      .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
-      // smaller parquet row groups: N concurrent writers × 128MB buffered
-      // row-group state made young-GC cost explode at high thread counts
-      // (50s GC in the write stage at 8 threads vs 3s at 2)
-      .config("spark.hadoop.parquet.block.size", (32 * 1024 * 1024).toString)
-      // scan splits stay at Spark's stock 128MB: with the fixed 16g young gen
-      // (build.sbt) it won at BOTH parallelism levels (re-A/B'd 32/64/128MB)
-      // 1 MB shuffle write buffers (stock 32 KB): each map task streams into
-      // 64 reducer segments through an LZ4 block stream, and 32 KB buffers
-      // mean tiny compression blocks + flush churn — measured 54 s → 1.9 s
-      // of summed shuffle-write time at 16 threads (BENCH/TUNING.md)
-      .config("spark.shuffle.file.buffer", "1m")
-      .config("spark.shuffle.localDisk.file.output.buffer", "1m")
-      // shuffle codec: lz4 (zstd halves the bytes but pays it back in
-      // reduce-side decompress CPU while the shuffle stays in page cache)
-      .config("spark.io.compression.codec", "lz4")
-      // lz4 block size: 32k (512k blew up summed shuffle-write time 5-13×
-      // for an ~11% byte saving at this record shape)
-      .config("spark.io.compression.lz4.blockSize", "32k")
-      .config("spark.reducer.maxSizeInFlight", "48m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-    val b =
-      if (!localCluster) b0
-      else b0
-        .config("spark.executor.memory", execMem)
-        // mirror the driver-mode GC tuning inside each executor JVM: fixed
-        // young gen at half the heap, GC threads = the executor's 4 cores
-        .config("spark.executor.extraJavaOptions",
-          "-XX:+UseParallelGC -XX:ParallelGCThreads=4 -Xmn6g")
-        // co-located executor JVMs on one box: "locality" is loopback
-        // either way, so a non-zero locality wait only stalls task waves
-        // at stage boundaries (up to 3 s/wave stock) without buying any
-        // data movement — a real multi-node cluster should NOT inherit
-        // this (rack/node locality is genuine there)
-        .config("spark.locality.wait", "0")
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+    // 4× cores shuffle partitions: several task waves (amortizes straggler
+    // tails — the hot conversation's reducer), smaller per-task sorts. With
+    // coalescing off (scaling phase) this is the CAP of the flagship's
+    // order-restoring exchange, which sizes itself in whole waves of
+    // ≥ 1 MB tasks (ExtractPipeline); the headline corpus (8.3M turns,
+    // ~1.6 GB of shuffle, BENCH/TUNING.md round 3) is far past the 64 MB
+    // that keeps the cap at local[16].
+    Sessions.create(master, cores * 4) { b =>
+      val b0 = b
+        .appName(s"graft-bench-$cores")
+        // scaling phase: keep the configured wave granularity (AQE would
+        // coalesce the small bench corpus back to ~1 wave per stage on the
+        // wide configuration). Query phase: DO coalesce — the operator
+        // queries are many small shuffles, and 128 fixed tasks per stage is
+        // pure scheduling overhead there (measured 2-3× on the dedup family)
+        .config("spark.sql.adaptive.coalescePartitions.enabled", coalesce.toString)
+        // smaller parquet row groups: N concurrent writers × 128MB buffered
+        // row-group state made young-GC cost explode at high thread counts
+        // (50s GC in the write stage at 8 threads vs 3s at 2)
+        .config("spark.hadoop.parquet.block.size", (32 * 1024 * 1024).toString)
+        // scan splits stay at Spark's stock 128MB: with the fixed 16g young gen
+        // (build.sbt) it won at BOTH parallelism levels (re-A/B'd 32/64/128MB)
+        // 1 MB shuffle write buffers (stock 32 KB): each map task streams into
+        // 64 reducer segments through an LZ4 block stream, and 32 KB buffers
+        // mean tiny compression blocks + flush churn — measured 54 s → 1.9 s
+        // of summed shuffle-write time at 16 threads (BENCH/TUNING.md)
+        .config("spark.shuffle.file.buffer", "1m")
+        .config("spark.shuffle.localDisk.file.output.buffer", "1m")
+        // shuffle codec: lz4 (zstd halves the bytes but pays it back in
+        // reduce-side decompress CPU while the shuffle stays in page cache)
+        .config("spark.io.compression.codec", "lz4")
+        // lz4 block size: 32k (512k blew up summed shuffle-write time 5-13×
+        // for an ~11% byte saving at this record shape)
+        .config("spark.io.compression.lz4.blockSize", "32k")
+        .config("spark.reducer.maxSizeInFlight", "48m")
+        .config("spark.sql.adaptive.enabled", "true")
+        if (!localCluster) b0
+        else b0
+          .config("spark.executor.memory", execMem)
+          // mirror the driver-mode GC tuning inside each executor JVM: fixed
+          // young gen at half the heap, GC threads = the executor's 4 cores
+          .config("spark.executor.extraJavaOptions",
+            "-XX:+UseParallelGC -XX:ParallelGCThreads=4 -Xmn6g")
+          // co-located executor JVMs on one box: "locality" is loopback
+          // either way, so a non-zero locality wait only stalls task waves
+          // at stage boundaries (up to 3 s/wave stock) without buying any
+          // data movement — a real multi-node cluster should NOT inherit
+          // this (rack/node locality is genuine there)
+          .config("spark.locality.wait", "0")
+    }
   }
 
   /** Host calibration: per-core throughput retention at `cores` concurrent

@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
   FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
@@ -93,7 +93,7 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     val changesFrom = Option(options.get("changesFrom")).map(_.trim.toLong)
       .filter(_ => snapId >= 0)
     val entries = changesFrom.fold(full)(SnapshotRead.delta(dir, _, snapId, full,
-      Option(options.get("allowReplaced")).exists(_.trim.toBoolean)))
+      Option(options.get("allowReplaced")).exists(_.trim.toBoolean)).added)
     // a delta read whose delta is EMPTY still needs the table's
     // schema: fall back to the full snapshot's widest entry schema
     val deltaSchemaFallback =
@@ -332,9 +332,16 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
       .foreach(m => return m.structType)
     // additive evolution: a snapshot can mix old and appended-column
     // file-sets — resolve the WIDEST (old files read null-filled)
+    // a DDL that does not parse (a name an older writer left unquoted) is
+    // read from the footers, as the library face reads it
     val fromEntries = SnapshotTable.widestSchema(entries.map(_.schema))
       .orElse(entries.find(_.schema.nonEmpty).map(_.schema)) // legacy mix
-      .map(d => DataType.fromDDL(d).asInstanceOf[StructType])
+      .map(d => SnapshotTable.parseSchema(d).getOrElse {
+        val paths = entries.filter(_.kind == "data").map(_.path)
+        val spark = SparkSession.active
+        SnapshotRead.footerSchema(spark, dir, snapshotId, paths,
+          SnapshotRead.listFiles(spark, dir, snapshotId, paths).flatten)
+      })
     val resolved = fromEntries.orElse(externalSchema)
       .getOrElse(org.apache.spark.sql.Encoders.product[graft.model.ExtractedTurn].schema)
     // a LIVE table whose CREATE/ALTER metadata extends the data's schema
@@ -507,25 +514,38 @@ private[graft] object SnapshotRead {
     case _                     => None
   }
 
-  /** The file-sets of snapshot `to` that snapshot `from` (-1: none) does
-    * not list — the delta of an incremental read or a micro-batch. Only
-    * the two endpoint manifests are consulted. A file-set of `from` that
-    * `to` no longer lists was rewritten in between (compact/replaceWhere/
-    * delete), which fails the read unless the caller opted into
-    * at-least-once redelivery of the rewritten buckets. */
+  /** The file-set delta (from, to] of an incremental read, a micro-batch
+    * and `SnapshotTable.readChanges`: `added` = the file-sets `to` lists
+    * that `from` (-1: none) does not, `rewritten` = those `from` lists that
+    * `to` no longer does (compact/replaceWhere/delete). */
+  final case class Delta(added: Seq[BucketEntry], rewritten: Seq[BucketEntry]) {
+    /** New merge-on-read delete key-sets: they shrink their bucket's
+      * content without removing a path. */
+    def morDeleted: Seq[BucketEntry] = added.filter(_.kind == "delete")
+  }
+
+  /** The one append-only delta rule. Only the two endpoint manifests are
+    * consulted (intermediate snapshots may already be expired). A delta
+    * with rewritten or MOR-deleted buckets is not an append and fails the
+    * read, naming the buckets, unless the caller opted into at-least-once
+    * redelivery of them. */
   def delta(dir: String, from: Long, to: Long, toEntries: Seq[BucketEntry],
-      allowReplaced: Boolean): Seq[BucketEntry] = {
-    val fromPaths =
-      if (from < 0) Set.empty[String]
-      else TableFormat.readManifest(dir, from).entries.map(_.path).toSet
-    val rewritten = fromPaths -- toEntries.map(_.path)
-    if (rewritten.nonEmpty && !allowReplaced)
+      allowReplaced: Boolean): Delta = {
+    val fromEntries =
+      if (from < 0) Seq.empty[BucketEntry] else TableFormat.readManifest(dir, from).entries
+    val fromPaths = fromEntries.map(_.path).toSet
+    val toPaths = toEntries.map(_.path).toSet
+    val d = Delta(toEntries.filterNot(e => fromPaths(e.path)),
+      fromEntries.filterNot(e => toPaths(e.path)))
+    val broken = d.rewritten ++ d.morDeleted
+    if (broken.nonEmpty && !allowReplaced)
       throw new IllegalStateException(
-        s"snapshots $from → $to are not append-only: ${rewritten.size} file-set(s) " +
-          "were rewritten (compact/replaceWhere/delete) in between. Set " +
-          ".option(\"allowReplaced\", \"true\") to accept at-least-once " +
-          "redelivery of rewritten buckets.")
-    toEntries.filterNot(e => fromPaths(e.path))
+        s"snapshots $from → $to are not append-only: " +
+          s"bucket(s) ${broken.map(_.bucket).distinct.sorted.mkString(",")} " +
+          "were rewritten or MOR-deleted (compact/replaceWhere/delete) in " +
+          "between. Pass allowReplaced=true (the allowReplaced option on the " +
+          "connector) to accept at-least-once redelivery of those buckets.")
+    d
   }
 
   /** The one listing of manifest file-sets, for every read face (the
@@ -564,18 +584,23 @@ private[graft] object SnapshotRead {
   def parquetRelation(spark: SparkSession, dir: String, snapshotId: Long,
       paths: Seq[String], schema: Option[StructType]): DataFrame = {
     val files = listFiles(spark, dir, snapshotId, paths).flatten
-    val format = new ParquetFileFormat
-    // an inferred schema goes through the manifest's DDL form, which makes
-    // every field nullable as `spark.read.parquet` does
-    val dataSchema = schema.orElse(format.inferSchema(spark, Map.empty, files)
-        .map(s => SnapshotTable.parseSchema(TableFormat.schemaDdl(s)).getOrElse(s)))
+    val dataSchema = schema.getOrElse(footerSchema(spark, dir, snapshotId, paths, files))
+    spark.baseRelationToDataFrame(HadoopFsRelation(
+      ManifestFileIndex(paths.map(new HPath(_)), files), new StructType(),
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The schema of file-sets whose manifest schema is missing or does not
+    * parse, inferred from a parquet footer and put through the manifest's
+    * DDL form, which makes every field nullable as `spark.read.parquet`
+    * does. */
+  def footerSchema(spark: SparkSession, dir: String, snapshotId: Long,
+      paths: Seq[String], files: Seq[FileStatus]): StructType =
+    new ParquetFileFormat().inferSchema(spark, Map.empty, files)
+      .map(s => SnapshotTable.parseSchema(TableFormat.schemaDdl(s)).getOrElse(s))
       .getOrElse(throw new IllegalStateException(
         s"snapshot $snapshotId of $dir: no schema recorded and no parquet " +
           s"file to infer one from under ${paths.mkString(", ")}"))
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      ManifestFileIndex(paths.map(new HPath(_)), files), new StructType(),
-      dataSchema, None, format, Map.empty)(spark))
-  }
 
   /** Spark's own size-based packing (FilePartition.maxSplitBytes math):
     * parquet is splittable, so files first split at maxSplitBytes, then the
@@ -792,11 +817,11 @@ final class SnapshotMicroBatchStream(dir: String,
     val e = end.asInstanceOf[SnapshotOffset].snapshotId
     if (e <= s) return Array.empty
     val to = TableFormat.readManifest(dir, e)
-    val added = SnapshotRead.delta(dir, s, e, to.entries, allowReplaced)
-    // a new MOR delete key-set is not an append — the stream cannot
-    // retract rows it already emitted; stop loudly (same posture as a
-    // rewrite without allowReplaced)
-    if (added.exists(_.kind == "delete"))
+    val delta = SnapshotRead.delta(dir, s, e, to.entries, allowReplaced)
+    val added = delta.added
+    // even with allowReplaced, a new MOR delete key-set stops the stream:
+    // it cannot retract rows it already emitted
+    if (delta.morDeleted.nonEmpty)
       throw new IllegalStateException(
         s"snapshots $s → $e introduce merge-on-read deletes under the " +
           "stream; a snapshot-delta stream cannot retract emitted rows — " +

@@ -954,13 +954,15 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * re-scanning the table per run; at 100 TB the difference is the whole
     * job. Driver cost: two manifest reads — no data-file listing.
     *
-    * Semantics are APPEND-ONLY, like Iceberg's: if any file-set referenced
-    * by `from` is gone from `to`, some bucket was REWRITTEN in between
-    * (compact / replaceWhere / delete), "rows added since" is no longer
-    * well-defined from manifests alone, and this method throws. Passing
-    * `allowReplaced = true` opts into the overwrite-tolerant reading: the
-    * delta then includes the FULL new content of each rewritten bucket
-    * (a superset of the true row-delta — callers who opt in must be
+    * Semantics are APPEND-ONLY, like Iceberg's (the rule is
+    * [[SnapshotRead.delta]], shared with the incremental V2 read and the
+    * stream): if any file-set referenced by `from` is gone from `to`, or
+    * `to` adds a merge-on-read delete key-set, some bucket was REWRITTEN or
+    * MOR-deleted in between (compact / replaceWhere / delete), "rows added
+    * since" is no longer well-defined from manifests alone, and this method
+    * throws. Passing `allowReplaced = true` opts into the overwrite-tolerant
+    * reading: the delta then includes the FULL new content of each affected
+    * bucket (a superset of the true row-delta — callers who opt in must be
     * idempotent on re-delivered rows, the same contract as the streaming
     * sink's at-least-once replay).
     *
@@ -972,22 +974,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       allowReplaced: Boolean = false): DataFrame = {
     require(fromSnapshotId <= toSnapshotId,
       s"fromSnapshotId $fromSnapshotId must be ≤ toSnapshotId $toSnapshotId")
-    val fromEntries = entriesAt(spark, fromSnapshotId)
     val toEntries = entriesAt(spark, toSnapshotId)
-    val fromPaths = fromEntries.map(_.path).toSet
-    val toPaths = toEntries.map(_.path).toSet
-    val rewritten = fromEntries.filterNot(e => toPaths(e.path))
-    val added = toEntries.filterNot(e => fromPaths(e.path))
-    val (addedDel, addedData) = added.partition(_.kind == "delete")
-    // a NEW merge-on-read delete entry shrinks its bucket's logical
-    // content — not an append, even though no path was removed
-    if ((rewritten.nonEmpty || addedDel.nonEmpty) && !allowReplaced)
-      throw new IllegalStateException(
-        s"snapshots $fromSnapshotId → $toSnapshotId are not append-only: " +
-          s"bucket(s) ${(rewritten ++ addedDel).map(_.bucket).distinct.sorted.mkString(",")} " +
-          "were rewritten or MOR-deleted (compact/replaceWhere/delete) in " +
-          "between. Pass allowReplaced=true to read the full new content " +
-          "of affected buckets (at-least-once delta) instead.")
+    val delta = SnapshotRead.delta(dir, fromSnapshotId, toSnapshotId, toEntries, allowReplaced)
     // buckets that gained delete keys must be redelivered as their FULL
     // new logical content (data minus deletes at `to`); everything else
     // is the plain added-data delta — with one more wrinkle: with no
@@ -996,8 +984,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // of the bucket), so added data landing in a bucket with OLDER pending
     // deletes must have those keys anti-joined out, or the delta
     // over-delivers rows that are logically deleted at `to`.
-    val morBuckets = addedDel.map(_.bucket).toSet
-    val rest = addedData.filterNot(e => morBuckets(e.bucket))
+    val morBuckets = delta.morDeleted.map(_.bucket).toSet
+    val rest = delta.added.filter(e => e.kind == "data" && !morBuckets(e.bucket))
     val oldDel = toEntries.filter(e =>
       e.kind == "delete" && !morBuckets(e.bucket) &&
         rest.exists(_.bucket == e.bucket))

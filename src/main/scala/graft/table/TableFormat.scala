@@ -53,7 +53,8 @@ object TableFormat {
     DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss").withZone(ZoneOffset.UTC)
 
   /** A manifest timestamp: UTC, `T`-separated, floored to the second. */
-  def tsText(epochUs: Long): String = TsFmt.format(Instant.ofEpochMilli(epochUs / 1000L))
+  def tsText(epochUs: Long): String =
+    TsFmt.format(Instant.ofEpochMilli(Math.floorDiv(epochUs, 1000L)))
 
   /** Epoch ms of a manifest timestamp. */
   def tsMs(text: String): Long =

@@ -150,14 +150,7 @@ object GoldenDump {
 
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("src/test/resources/golden")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-golden-dump")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.create("local[4]", 4)(_.appName("graft-golden-dump"))
     goldenFrames(spark).foreach { case (name, df) =>
       writeSingleFile(df, s"$outDir/$name.parquet")
       println(s"[golden] wrote $outDir/$name.parquet")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` of the flagship pipeline and the
@@ -8,28 +7,26 @@ import java.nio.file.{Files, Paths}
   * (pushdown, pruning, broadcast, exchange count, codegen spans) in
   * reviewable form. PlanSpec asserts these shapes; this file shows them. */
 object PlanDump {
+  /** The registry queries whose plans the dump shows. */
+  val Names: Seq[String] = Seq("q_gate_filter", "q_charset_proj", "q_broadcast_join",
+    "q_dedup_jaccard", "q_dedup_minhash_pairs", "q_dedup_embed_lsh",
+    "q_simhash_pairs", "q_knn_ivf", "q_hll_distinct", "q_cms_heavyhitters",
+    "q_asof_join", "q_moving_agg", "q_split_assign",
+    "q_ratio_match", "q_unigram_lm", "q_pii_scrub", "q_dedup_incremental",
+    "q_semantic_dedup", "q_dedup_survivor", "q_knn_pq", "q_skew_join",
+    "q_topk_agg", "q_bm25", "q_dsir_weight", "q_bigram_lm",
+    "q_kmv_intersect", "q_priority_sample", "q_pmi_pairs", "q_funnel",
+    "q_curate_e2e", "q_bpe_train", "q_bpe_apply", "q_hard_negatives",
+    "q_c4_rules", "q_domain_rank", "q_embed_meanpool", "q_sft_pairs",
+    "q_dpo_pairs", "q_anomaly_mad", "q_conv_budget", "q_rank_fusion",
+    "q_ndcg_eval", "q_containment", "q_cluster_purity",
+    "q_conv_valid", "q_tool_loops")
+
   def main(args: Array[String]): Unit = {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.create("local[8]", 32, logLevel = "ERROR")(
+      _.config("spark.sql.adaptive.enabled", "true"))
 
-    val names = Seq("q_gate_filter", "q_charset_proj", "q_broadcast_join",
-      "q_dedup_jaccard", "q_dedup_minhash_pairs", "q_dedup_embed_lsh",
-      "q_simhash_pairs", "q_knn_ivf", "q_hll_distinct", "q_cms_heavyhitters",
-      "q_asof_join", "q_moving_agg", "q_split_assign",
-      "q_ratio_match", "q_unigram_lm", "q_pii_scrub", "q_dedup_incremental",
-      "q_semantic_dedup", "q_dedup_survivor", "q_knn_pq", "q_skew_join",
-      "q_topk_agg", "q_bm25", "q_dsir_weight", "q_bigram_lm",
-      "q_kmv_intersect", "q_priority_sample", "q_pmi_pairs", "q_funnel",
-      "q_curate_e2e", "q_bpe_train", "q_bpe_apply", "q_hard_negatives",
-      "q_c4_rules", "q_domain_rank", "q_embed_meanpool", "q_sft_pairs",
-      "q_dpo_pairs", "q_anomaly_mad", "q_conv_budget", "q_rank_fusion",
-      "q_ndcg_eval", "q_containment", "q_cluster_purity",
-      "q_conv_valid", "q_tool_loops")
     val sb = new StringBuilder
     sb.append("# BENCH/PLANS — formatted physical plans (auto-written by graft.tools.PlanDump)\n\n")
     sb.append("Source of truth for these shapes is `PlanSpec` (asserted in CI);\n")
@@ -52,7 +49,7 @@ object PlanDump {
       org.apache.spark.sql.execution.FormattedMode)).append("```\n")
     org.apache.commons.io.FileUtils.deleteQuietly(tableDir.toFile)
 
-    names.foreach { n =>
+    Names.foreach { n =>
       sb.append(s"\n## $n\n\n```\n")
       val df = graft.SparkEntry.queries(n)(spark, sf)
       sb.append(df.queryExecution.explainString(

@@ -1,6 +1,7 @@
 package graft.vector
 
 import graft.functions.{VectorFunctions => VF}
+import graft.queries.SimilaritySearch
 import graft.table.Refs
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -16,8 +17,8 @@ import scala.jdk.CollectionConverters._
   *
   * Layout (all under `dir`):
   *  - `CENTROIDS` — text, one line per centroid: `id|v1,v2,…` in the
-  *    scaled-integer space of [[graft.SparkEntry.ivfQuantized]] (written
-  *    atomically; k = [[graft.SparkEntry.IvfK]] lines — driver-sized by
+  *    scaled-integer space of [[SimilaritySearch.ivfQuantized]] (written
+  *    atomically; k = [[SimilaritySearch.IvfK]] lines — driver-sized by
   *    construction).
   *  - `CODEBOOKS` — text, one line per PQ codebook word: `m|code|v1,…,v8`
   *    (8 subspaces × ≤16 words; trained once at build on the same bounded
@@ -83,7 +84,7 @@ final class VectorIndex private (val dir: String) {
     val q = queries
       .select(col("query_id"), col("qe"), VF.l2NormF(col("qe")).as("qnrm"),
         transform(col("qe"),
-          x => floor(x.cast("double") * graft.SparkEntry.IvfScale + lit(0.5))).as("qv"))
+          x => floor(x.cast("double") * SimilaritySearch.IvfScale + lit(0.5))).as("qv"))
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("_d2"), col("cent_id"))
     val probes = q.crossJoin(broadcast(centsDf(s)))
       .withColumn("_d2", VF.sqDistL(col("qv"), col("cv")))
@@ -108,7 +109,7 @@ final class VectorIndex private (val dir: String) {
     * by asymmetric distance over their PERSISTED 4-bit codes (an equi-join
     * against the query's broadcast 8×16 distance table — the scan side is
     * the code table, not the embeddings), then re-rank the ADC
-    * top-[[graft.SparkEntry.PqShortlist]] by exact cosine fetched from the
+    * top-[[SimilaritySearch.PqShortlist]] by exact cosine fetched from the
     * same pruned lists. Built on the same training sample, this reproduces
     * the in-memory q_knn_pq result bit-for-bit (VectorIndexSpec). */
   def searchAdc(s: SparkSession, queries: DataFrame, k: Int, nprobe: Int): DataFrame = {
@@ -116,7 +117,7 @@ final class VectorIndex private (val dir: String) {
     val q = queries
       .select(col("query_id"), col("qe"), VF.l2NormF(col("qe")).as("qnrm"),
         transform(col("qe"),
-          x => floor(x.cast("double") * graft.SparkEntry.IvfScale + lit(0.5))).as("qv"))
+          x => floor(x.cast("double") * SimilaritySearch.IvfScale + lit(0.5))).as("qv"))
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("_d2"), col("cent_id"))
     val probes = q.crossJoin(broadcast(centsDf(s)))
       .withColumn("_d2", VF.sqDistL(col("qv"), col("cv")))
@@ -124,7 +125,7 @@ final class VectorIndex private (val dir: String) {
       .select(col("query_id"), col("cent_id"))
     val cids = probes.select("cent_id").distinct().collect().map(_.getInt(0)).sorted
     val lst = lists(s).filter(col("cent_id").isin(cids.map(Integer.valueOf): _*))
-    val dtable = graft.SparkEntry.pqSubvectors(q.select(col("query_id"), col("qv")), "query_id")
+    val dtable = SimilaritySearch.pqSubvectors(q.select(col("query_id"), col("qv")), "query_id")
       .join(broadcast(booksDf(s)), "m")
       .select(col("query_id"), col("m"), col("code"),
         VF.sqDistL(col("sv"), col("cv")).as("d2"))
@@ -137,7 +138,7 @@ final class VectorIndex private (val dir: String) {
       .groupBy(col("query_id"), col("vec_id"))
       .agg(sum(col("d2")).as("adist"))
       .withColumn("ark", row_number().over(wAdc))
-      .filter(col("ark") <= graft.SparkEntry.PqShortlist)
+      .filter(col("ark") <= SimilaritySearch.PqShortlist)
       .select(col("query_id"), col("vec_id"))
     val wTop = Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("vec_id"))
     shortlist.join(lst.select(col("vec_id"), col("embedding"), col("nrm")), "vec_id")
@@ -169,8 +170,8 @@ object VectorIndex {
     VF.register(s)
     val e = vectors.select(col("vec_id"), col("embedding"),
       VF.l2NormF(col("embedding")).as("nrm"))
-    val qz = graft.SparkEntry.ivfQuantized(e)
-    val cents = graft.SparkEntry.ivfTrainCentroids(s, qz)
+    val qz = SimilaritySearch.ivfQuantized(e)
+    val cents = SimilaritySearch.ivfTrainCentroids(s, qz)
       .collect().map(r => (r.getInt(0), r.getSeq[Long](1)))
       .sortBy(_._1)
     Refs.atomicWrite(Paths.get(dir, "CENTROIDS"),
@@ -178,7 +179,7 @@ object VectorIndex {
     // PQ codebooks: trained once on the same bounded sample (the FAISS
     // IVF-PQ layout), fixed for the index's lifetime — appends encode
     // against them. 8×16 lines, driver-sized by construction.
-    val books = graft.SparkEntry.pqTrainCodebooks(s, qz)
+    val books = SimilaritySearch.pqTrainCodebooks(s, qz)
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2)))
       .sortBy(b => (b._1, b._2))
     Refs.atomicWrite(Paths.get(dir, "CODEBOOKS"),
@@ -204,10 +205,10 @@ object VectorIndex {
     import s.implicits._
     val e = vectors.select(col("vec_id"), col("embedding"),
       VF.l2NormF(col("embedding")).as("nrm"))
-    val qz = graft.SparkEntry.ivfQuantized(e)
+    val qz = SimilaritySearch.ivfQuantized(e)
     val cents = idx.centroids.toDF("cent_id", "cv")
-    val codes = graft.SparkEntry.pqCodes(
-        graft.SparkEntry.pqSubvectors(qz.select(col("vec_id"), col("qv")), "vec_id"),
+    val codes = SimilaritySearch.pqCodes(
+        SimilaritySearch.pqSubvectors(qz.select(col("vec_id"), col("qv")), "vec_id"),
         idx.booksDf(s), "vec_id")
       .groupBy(col("vec_id"))
       .agg(collect_list(struct(col("m"), col("code"))).as("mc"))

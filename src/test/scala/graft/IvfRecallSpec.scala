@@ -62,7 +62,7 @@ class IvfRecallSpec extends AnyFunSuite with SparkTestBase {
     // high-recall. Measured curve recorded in BENCH/TUNING.md.
     val exactPairs = exact.map { case (qid, _, nid) => (qid, nid) }
     val curve = Seq(1, 2, 4, 8, 16).map { nprobe =>
-      val got = SparkEntry.knnIvf(spark, sf, nprobe)
+      val got = graft.queries.SimilaritySearch.knnIvf(spark, sf, nprobe)
         .select(col("query_id"), col("rk"), col("neighbor_id")).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       if (nprobe == 16)

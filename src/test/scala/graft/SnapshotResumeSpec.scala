@@ -255,6 +255,21 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(bad.getMessage.contains("'yesterday'"))
   }
 
+  test("a pre-1970 row is floored to its second in the manifest and kept by readRange") {
+    import testImplicits._
+    val at = Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.999500Z"))
+    val row = ExtractedTurn("old", 0, "user", "html", at, "old",
+      Seq(Span(0, 0, 3, "p", "old")), 1, 0, 3, 1.0)
+    val table = new SnapshotTable(Files.createTempDirectory("snap").toString, numBuckets = 4)
+    table.commit(spark, Seq(row).toDS(), "runOld")
+    val entry = table.committedEntries(spark).filter(_.kind == "data")
+    assert(entry.map(e => (e.minTs, e.maxTs)) == Seq(("1969-12-31T23:59:59", "1969-12-31T23:59:59")))
+    val (lo, hi) = ("1969-12-31 23:59:59", "1969-12-31 23:59:59.9999")
+    assert(table.read(spark).where(col("ts").between(lit(lo).cast("timestamp"),
+      lit(hi).cast("timestamp"))).count() == 1)
+    assert(table.readRange(spark, lo, hi).count() == 1)
+  }
+
   test("commit refuses a schema change against kept entries; manifest records schema") {
     import testImplicits._
     val dir = Files.createTempDirectory("snap").toString

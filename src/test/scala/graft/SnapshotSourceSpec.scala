@@ -2,7 +2,7 @@ package graft
 
 import graft.connector.SnapshotScan
 import graft.model.{ExtractedTurn, Span}
-import graft.table.SnapshotTable
+import graft.table.{SnapshotTable, TableFormat}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -180,5 +180,22 @@ class SnapshotSourceSpec extends AnyFunSuite with SparkTestBase {
     val e = intercept[IllegalStateException](
       spark.read.format("graft-snapshot").load(dir).collect())
     assert(e.getMessage.contains("snapshot 0") && e.getMessage.contains(lost), e.getMessage)
+  }
+
+  test("a manifest that recorded a non-identifier column name unquoted reads " +
+    "on the V2 face as on the library face") {
+    import testImplicits._
+    val dir = suiteTempDir("snapsource-legacy-ddl")
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    table.commit(spark, Seq(("c1", "one")).toDF("conv_id", "my-col"), "r0")
+    // the manifest as a writer before name quoting left it
+    val legacy = TableFormat.readManifest(dir, 0L).entries
+      .map(_.copy(schema = "struct<conv_id:string,my-col:string>"))
+    table.commitEntries(spark, legacy, replaceBuckets = true)
+    def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getString(1))).toSeq
+    val v2 = spark.read.format("graft-snapshot").load(dir)
+    assert(v2.columns.toSeq == Seq("conv_id", "my-col"))
+    assert(rows(v2) == Seq(("c1", "one")))
+    assert(rows(table.read(spark)) == Seq(("c1", "one")))
   }
 }

@@ -14,9 +14,19 @@ class SparkEntrySmokeSpec extends AnyFunSuite with SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("oracle keys ⊆ query keys and column sets stay aligned") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracleSql without query: $missing")
+  test("registry names are unique, every query has a non-empty oracle, and every name " +
+    "tools/PlanDump and perfbench's QuerySample.Families ask for is registered and timed") {
+    val names = SparkEntry.registry.map(_.name)
+    assert(names.distinct.size == names.size, s"declared twice: ${names.diff(names.distinct)}")
+    assert(SparkEntry.registry.forall(_.oracleSql.trim.nonEmpty))
+    // perfbench is its own build: read its sample's names from the source
+    val sample = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("perfbench/src/main/scala/perfbench/QuerySample.scala"))
+    val families = "\"\\w+\" -> \"(\\w+)\"".r.findAllMatchIn(sample).map(_.group(1)).toSeq
+    assert(families.nonEmpty)
+    val timed = SparkEntry.registry.filter(_.timed).map(_.name).toSet
+    val missing = (graft.tools.PlanDump.Names ++ families).filterNot(timed)
+    assert(missing.isEmpty, s"asked for but not a timed registry query: $missing")
   }
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
