@@ -77,8 +77,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     // and appendable
     val snap = TableFormat.resolve(dir, snapshotId)
     new SnapshotV2Table(dir, snap.snapshotId, snap.entries, snap.numBuckets.getOrElse(16),
-      snap.meta.map(_.structType), preferExternalSuperset = snapshotId.isEmpty,
-      bucketClustered = true)
+      snap.meta.map(_.structType), preferExternalSuperset = snapshotId.isEmpty)
   }
 
   override def loadTable(ident: Identifier): Table = {
@@ -127,7 +126,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     val dir = dirOf(ident)
     val nb = Option(properties.get("numBuckets")).map(_.toInt).getOrElse(16)
     TableFormat.writeMeta(dir, TableMeta(TableFormat.schemaDdl(schema), nb))
-    new SnapshotV2Table(dir, -1L, Seq.empty, nb, Some(schema), bucketClustered = true)
+    new SnapshotV2Table(dir, -1L, Seq.empty, nb, Some(schema))
   }
 
   /** METADATA-ONLY schema evolution — `ADD COLUMNS`, `RENAME COLUMN`,
@@ -293,7 +292,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
 }
 
 /** The function catalog of the layout hash alone: the catalog's
-  * function face, and what a library write's relation carries so that
+  * function face, and what the library writer's relation carries so that
   * [[SnapshotWrite]] can require clustering by `bucket(n, conv_id)`. */
 private[connector] object BucketFunctions extends FunctionCatalog {
   override def name(): String = "graft-snapshot"

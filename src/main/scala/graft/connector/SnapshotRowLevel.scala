@@ -63,14 +63,35 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new SnapshotCowScanBuilder(this, dir, entries, tableSchema, numBuckets)
 
+  /** The publish rule of the rewrite, checked at the driver commit before
+    * anything is renamed. SERIALIZABLE-conflict guard (the Iceberg
+    * validate-no-conflicting-commits analog): the rewrite was computed
+    * against the snapshot this statement loaded; if anyone committed since,
+    * replacing the scanned buckets would silently clobber their changes,
+    * so the commit fails retryably instead. */
+  private[connector] def replaceRule(dir: String, numBuckets: Int): PublishRule = {
+    val scan = configuredScan
+    if (scan == null || scan.scannedBuckets == null)
+      throw new IllegalStateException(
+        "graft-snapshot COW commit without a planned operation scan — the " +
+          "row-level rewrite must read through the operation's own scan")
+    val live = new SnapshotTable(dir, numBuckets).currentSnapshotId.getOrElse(-1L)
+    if (live != baseSnapshotId)
+      throw new SnapshotTable.CommitConflictException(
+        s"concurrent commit on $dir: the row-level operation read snapshot " +
+          s"$baseSnapshotId but CURRENT is now $live — re-run the statement")
+    PublishRule(replaceExactly = Some(scan.scannedBuckets))
+  }
+
   /** The replacement write: the shared [[SnapshotWrite]] shape
-    * (clustered by conv_id, sorted (conv_id, turn_idx)), committing a
+    * (clustered by bucket, sorted (bucket, conv_id, turn_idx) — the
+    * catalog relation carries the `bucket` function), committing a
     * snapshot that swaps out exactly the scanned buckets. COW rewrites land
     * under the PHYSICAL column names too, or a rewritten bucket would fork
     * the file-level naming. */
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
-      override def build(): Write = new SnapshotWrite(info.schema(), () =>
+      override def build(): Write = new SnapshotWrite(info.schema(), numBuckets,
         new SnapshotCowBatchWrite(SnapshotRowLevelOperation.this, dir, numBuckets,
           TableFormat.toPhysical(dir, info.schema()),
           s"cow-${cmd.toString.toLowerCase}-${info.queryId()}"))
@@ -177,44 +198,16 @@ final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEn
     SnapshotRead.readerFactory(spark, dir, dataSchema, required, Array.empty)
 }
 
+/** The COW write: the shared batch write, publishing under the
+  * copy-on-write rule (replace exactly the scanned buckets) once
+  * [[SnapshotRowLevelOperation.replaceRule]] has checked the table did not
+  * move under the statement. */
 final class SnapshotCowBatchWrite(op: SnapshotRowLevelOperation, dir: String,
-    numBuckets: Int, schema: StructType, runId: String) extends BatchWrite {
-
-  private val dataPath = s"$dir/data/run=$runId"
+    numBuckets: Int, schema: StructType, runId: String)
+  extends SnapshotBatchWrite(dir, numBuckets, schema, runId, op.replaceRule(dir, numBuckets)) {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    SnapshotCowWriterFactory(
-      SnapshotWriterUtil.writerFactory(SparkSession.active, schema, dataPath, numBuckets),
-      schema)
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val scan = op.configuredScan
-    if (scan == null || scan.scannedBuckets == null)
-      throw new IllegalStateException(
-        "graft-snapshot COW commit without a planned operation scan — the " +
-          "row-level rewrite must read through the operation's own scan")
-    // SERIALIZABLE-conflict guard (the Iceberg validate-no-conflicting-
-    // commits analog): the rewrite was computed against the snapshot this
-    // statement loaded; if anyone committed since, replacing the scanned
-    // buckets would silently clobber their changes. Fail retryably
-    // instead — nothing has been renamed or published yet.
-    val live = new SnapshotTable(dir, numBuckets).currentSnapshotId.getOrElse(-1L)
-    if (live != op.baseSnapshotId)
-      throw new SnapshotTable.CommitConflictException(
-        s"concurrent commit on $dir: the row-level operation read snapshot " +
-          s"${op.baseSnapshotId} but CURRENT is now $live — re-run the statement")
-    if (SnapshotWriterUtil.runIdCommitted(dir, numBuckets, runId))
-      throw new IllegalStateException(
-        s"runId $runId is already committed in $dir — a row-level operation " +
-          "must not be replayed against the same table state")
-    SnapshotWriterUtil.publish(spark, dir, numBuckets, dataPath, runId, schema,
-      messages, PublishRule(replaceExactly = Some(scan.scannedBuckets)))
-    ()
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    SnapshotWriterUtil.guardedAbort(SparkSession.active, dir, numBuckets, dataPath, runId)
+    SnapshotCowWriterFactory(super.createBatchWriterFactory(info), schema)
 }
 
 /** Spark 4.1 quirk guard (verified against ReplaceDataExec bytecode): for
@@ -229,7 +222,7 @@ final class SnapshotCowBatchWrite(op: SnapshotRowLevelOperation, dir: String,
   * [[ProjectingInternalRow]], keyed off the row width so a future Spark
   * that projects for us degrades to a pass-through rather than a silent
   * column shift. Any other width is corruption — fail loudly. */
-final case class SnapshotCowWriterFactory(base: SnapshotDataWriterFactory,
+final case class SnapshotCowWriterFactory(base: DataWriterFactory,
     schema: StructType) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {

@@ -4,16 +4,20 @@ import graft.table.{Refs, SnapshotTable, TableFormat}
 import graft.table.SnapshotTable.BucketEntry
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
   FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.Sink
 import org.apache.spark.sql.sources._
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import java.util.OptionalLong
@@ -58,7 +62,8 @@ import scala.jdk.CollectionConverters._
   * that face is Spark's own source API, which is what makes the table
   * usable from SQL (`CREATE TABLE … USING graft-snapshot`), not just Scala.
   */
-final class SnapshotSource extends TableProvider with DataSourceRegister {
+final class SnapshotSource extends TableProvider with DataSourceRegister
+  with StreamSinkProvider {
 
   override def shortName(): String = "graft-snapshot"
 
@@ -92,20 +97,30 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
     // rewritten buckets, mirroring readChanges/the streaming face.
     val changesFrom = Option(options.get("changesFrom")).map(_.trim.toLong)
       .filter(_ => snapId >= 0)
-    val entries = changesFrom.fold(full)(SnapshotRead.delta(dir, _, snapId, full,
-      Option(options.get("allowReplaced")).exists(_.trim.toBoolean)).added)
+    // the delta's buckets keep their pending deletes (a key-set committed
+    // before N still kills re-added rows): the scan refuses, as a full read
+    val entries = changesFrom.fold(full) { from =>
+      val added = SnapshotRead.delta(dir, from, snapId, full,
+        Option(options.get("allowReplaced")).exists(_.trim.toBoolean)).added
+      val buckets = added.map(_.bucket).toSet
+      added ++ full.filter(e => e.kind == "delete" && buckets(e.bucket) && !added.contains(e))
+    }
     // a delta read whose delta is EMPTY still needs the table's
     // schema: fall back to the full snapshot's widest entry schema
     val deltaSchemaFallback =
       if (changesFrom.isDefined)
         SnapshotTable.widestSchema(full.map(_.schema)).flatMap(SnapshotTable.parseSchema)
       else None
-    new SnapshotV2Table(dir, snapId, entries, snap.numBuckets.getOrElse(
-        Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16)),
+    new SnapshotV2Table(dir, snapId, entries, numBuckets(snap, options),
       externalSchema.orElse(deltaSchemaFallback).orElse(snap.meta.map(_.structType)),
       preferExternalSuperset =
         Option(options.get("snapshotId")).isEmpty && branchOpt.isEmpty)
   }
+
+  /** THE bucket-count rule, then the `numBuckets` option of a table that
+    * records none, then 16. */
+  private def numBuckets(snap: TableFormat.Resolved, options: CaseInsensitiveStringMap): Int =
+    snap.numBuckets.getOrElse(Option(options.get("numBuckets")).map(_.trim.toInt).getOrElse(16))
 
   /** A caller-supplied schema (e.g. the dataframe being written to a
     * brand-new path) is accepted — the format tracks schema per commit,
@@ -119,13 +134,35 @@ final class SnapshotSource extends TableProvider with DataSourceRegister {
       properties: java.util.Map[String, String]): Table =
     loadTable(new CaseInsensitiveStringMap(properties),
       Option(schema).filter(_.fields.nonEmpty))
+
+  /** `writeStream.format("graft-snapshot").start(dir)`: the table declares
+    * no STREAMING_WRITE, so Spark asks for this V1 sink. Each micro-batch,
+    * as a static frame over its rows, is appended once through the library
+    * writer ([[SnapshotWriterUtil.appendBatch]]) behind the batch append's
+    * merge-on-read gate. */
+  override def createSink(sqlContext: SQLContext, parameters: Map[String, String],
+      partitionColumns: Seq[String], outputMode: OutputMode): Sink = {
+    val options = new CaseInsensitiveStringMap(parameters.asJava)
+    val dir = dirOf(options)
+    (batchId: Long, data: DataFrame) => {
+      val snap = TableFormat.resolve(dir, None)
+      SnapshotRead.morGate(dir, snap.snapshotId, snap.entries,
+        "append (a re-inserted key would be re-killed by the pending delete)")
+      val spark = data.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      val qe = data.queryExecution
+      val rows = new org.apache.spark.sql.classic.Dataset[Row](spark,
+        LogicalRDD(qe.analyzed.output, qe.toRdd)(spark), ExpressionEncoder(data.schema))
+      SnapshotWriterUtil.appendBatch(SnapshotWriterUtil.physical(rows, dir), dir,
+        numBuckets(snap, options), batchId)
+      ()
+    }
+  }
 }
 
 final class SnapshotV2Table(dir: String, snapshotId: Long,
     entries: Seq[BucketEntry], numBuckets: Int,
     externalSchema: Option[StructType] = None,
-    preferExternalSuperset: Boolean = false,
-    bucketClustered: Boolean = false)
+    preferExternalSuperset: Boolean = false)
   extends Table with SupportsRead
   with org.apache.spark.sql.connector.catalog.SupportsWrite
   with org.apache.spark.sql.connector.catalog.SupportsDelete
@@ -144,12 +181,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
   // (SupportsDelete.deleteWhere never scans), CALL procedures,
   // metadata tables.
   private def morGate(surface: String): Unit =
-    if (entries.exists(_.kind == "delete"))
-      throw new IllegalStateException(
-        s"snapshot $snapshotId of $dir has pending merge-on-read deletes — " +
-          s"cannot $surface; fold them first (SnapshotTable.compact / " +
-          "CALL graft.system.compact) or go through the library API " +
-          "(SnapshotTable.read applies them)")
+    SnapshotRead.morGate(dir, snapshotId, entries, surface)
 
   /** SQL `UPDATE` / `MERGE INTO` / non-key `DELETE`: group-based
     * copy-on-write over buckets ([[SnapshotRowLevelOperation]]).
@@ -357,7 +389,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
 
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
-      TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
+      TableCapability.BATCH_WRITE, TableCapability.V1_BATCH_WRITE,
       TableCapability.TRUNCATE)
 
   /** The physical layout as V2 metadata: resolved against the catalog's
@@ -373,7 +405,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {
     morGate("append (a re-inserted key would be re-killed by the pending delete)")
-    new SnapshotWriteBuilder(dir, numBuckets, info, bucketClustered)
+    new SnapshotWriteBuilder(dir, numBuckets, info)
   }
 }
 
@@ -465,6 +497,17 @@ case object SnapshotCountReaderFactory extends PartitionReaderFactory {
   * stream (the stream just swaps WHICH manifest entries feed it: a
   * snapshot-delta instead of one snapshot's full set). */
 private[graft] object SnapshotRead {
+
+  /** The merge-on-read gate of the V2 faces: they cannot apply pending
+    * delete key-sets, so a snapshot that holds any refuses `surface`. */
+  def morGate(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
+      surface: String): Unit =
+    if (entries.exists(_.kind == "delete"))
+      throw new IllegalStateException(
+        s"snapshot $snapshotId of $dir has pending merge-on-read deletes — " +
+          s"cannot $surface; fold them first (SnapshotTable.compact / " +
+          "CALL graft.system.compact) or go through the library API " +
+          "(SnapshotTable.read applies them)")
 
   /** Manifest-level pruning: intersect the conv_id value sets demanded by
     * equality/IN filters and keep a file-set iff it could own one of those

@@ -14,53 +14,53 @@ import org.apache.spark.sql.connector.catalog.{Column, SupportsWrite, Table, Tab
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.connector.write.streaming.StreamingWrite
-import org.apache.spark.sql.execution.datasources.OutputWriterFactory
+import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
+import org.apache.spark.sql.sources.InsertableRelation
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType, TimestampType}
 import org.apache.spark.util.SerializableConfiguration
 
 /** THE write path of the snapshot table — every face writes data files
-  * through it:
+  * through [[SnapshotWriterUtil.write]]:
   *
   * {{{
   *   df.write.format("graft-snapshot").mode("append")
   *     .option("numBuckets", "16")        // first commit only; manifest after
   *     .option("runId", "runX")           // default: the query id
   *     .save(dir)
-  *   df.writeStream.format("graft-snapshot").start(dir)   // snapshot/epoch
+  *   df.writeStream.format("graft-snapshot").start(dir)   // snapshot/batch
   *   table.commit(spark, rows, runId)     // the library face
   * }}}
   *
   * plus SQL INSERT, the COW UPDATE/MERGE rewrite ([[SnapshotRowLevel]])
   * and merge-on-read delete key sets (`SnapshotTable.deleteRowsMor`).
   *
-  * `bucketClustered`: the table was loaded through [[GraftCatalog]], whose
-  * relation carries the `bucket` function, so the write clusters and sorts
-  * by `bucket(numBuckets, conv_id)` and commits at most one file per
-  * bucket. The path face (`format("graft-snapshot")`) has no function
-  * catalog to resolve `bucket` against and clusters by conv_id: a write
-  * there emits up to (write partitions × buckets) files.
+  * Every write clusters and sorts by `bucket(numBuckets, conv_id)` and
+  * commits at most one file per bucket. Spark gives a path write's
+  * relation no function catalog to resolve `bucket` against, so the batch
+  * faces reach the library writer through a [[V1Write]] (this builder)
+  * and the streaming face through a V1 sink ([[SnapshotSource.createSink]]);
+  * the library writer's own relation carries [[BucketFunctions]].
   *
   * EXACTLY-ONCE PROTOCOL (every face). Executors write parquet into a
   * per-attempt `_staging` dir — never where readers look — and ship their
   * per-bucket stats + staged paths as WriterCommitMessages. The DRIVER
   * commit then: (1) checks lineage across every retained manifest — a
-  * replayed streaming epoch is a no-op, a batch runId collision fails
-  * fast, and neither has touched published files because no rename has
-  * happened yet; (2) clears stale bucket dirs left by a crashed prior
-  * attempt of this same run (the manifest doesn't reference the run yet,
-  * so they are invisible garbage — and a crashed attempt may have used a
-  * DIFFERENT partition count, so overwrite-in-place is not enough);
-  * (3) renames staged files to their deterministic final names
+  * replayed micro-batch is skipped before it writes, a batch runId
+  * collision fails fast, and neither has touched published files because
+  * no rename has happened yet; (2) clears stale bucket dirs left by a
+  * crashed prior attempt of this same run (the manifest doesn't reference
+  * the run yet, so they are invisible garbage — and a crashed attempt may
+  * have used a DIFFERENT partition count, so overwrite-in-place is not
+  * enough); (3) renames staged files to their deterministic final names
   * (`part-<partitionId>`); (4) publishes manifest-then-CURRENT through
   * [[SnapshotTable.commitEntries]] under its optimistic-concurrency
   * claim. A crash at ANY point leaves the previous snapshot live and only
   * invisible files on disk.
   */
-final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
-    info: LogicalWriteInfo, bucketClustered: Boolean = false)
+final class SnapshotWriteBuilder(dir: String, numBuckets: Int, info: LogicalWriteInfo)
   extends WriteBuilder with SupportsTruncate {
 
   private var truncateFirst = false
@@ -71,12 +71,8 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
     * deleted in place. */
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
-  override def build(): Write = {
-    // column mapping: data files carry PHYSICAL names (frozen at column
-    // creation) — translate the logical write schema before anything is
-    // written or recorded in the manifest entry DDL
-    val schema = TableFormat.toPhysical(dir, info.schema())
-    new SnapshotWrite(info.schema(), () => {
+  override def build(): Write = new V1Write {
+    override def toInsertableRelation: InsertableRelation = (df, _) => {
       val runId = Option(info.options().get("runId")).getOrElse(info.queryId())
       val wap = Option(info.options().get("wap")).exists(_.trim.toBoolean)
       // `option("branch", name)`: the append lands on the branch head and
@@ -89,55 +85,45 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int,
       // entries APPEND (the streaming-sink merge rule; compaction folds
       // them back); an overwrite force-replaces every committed bucket
       // (files remain for time travel until expireSnapshots)
-      new SnapshotBatchWrite(dir, numBuckets, schema, runId, PublishRule(
-        replaceBuckets = truncateFirst,
-        forceReplace =
-          if (truncateFirst) new SnapshotTable(dir, numBuckets).committedBuckets(SparkSession.active)
-          else Set.empty,
-        stageOnly = wap, toBranch = toBranch), bucketSorted = bucketClustered)
-    }, streaming = Some(() =>
-      // one snapshot per micro-batch, runId = `<queryId>-<epoch>` —
-      // replayed epochs are detected in the retained manifest lineage and
-      // publish nothing
-      new SnapshotStreamingWrite(dir, numBuckets, schema, info.queryId())),
-      numBuckets = Option.when(bucketClustered)(numBuckets))
+      SnapshotWriterUtil.write(SnapshotWriterUtil.physical(df, dir), dir, numBuckets, runId,
+        PublishRule(
+          replaceBuckets = truncateFirst,
+          forceReplace =
+            if (truncateFirst) new SnapshotTable(dir, numBuckets).committedBuckets(df.sparkSession)
+            else Set.empty,
+          stageOnly = wap, toBranch = toBranch))
+      ()
+    }
   }
 }
 
 /** The one write shape every face shares. [[RequiresDistributionAndOrdering]]
   * declares the shuffle/sort instead of hand-planning it: Spark clusters
-  * the rows and sorts (conv_id, turn_idx) within partitions, so every file
-  * holds contiguous, order-restored conversations. The clustering key is
-  * conv_id, or — given `numBuckets`, for a relation that carries
-  * [[BucketFunctions]] (the library face) or [[GraftCatalog]] (the catalog
-  * face) — the bucket itself, which also leads the sort: a
-  * bucket's rows meet in one task, a commit writes one file per bucket
-  * however many partitions the shuffle has, and a task holds one file
-  * open at a time (the batch write's `bucketSorted`). `schema` is the
-  * rows' schema as the query produces them; what happens at the driver
-  * commit is the `batch` write's business. */
-final class SnapshotWrite(schema: StructType, batch: () => BatchWrite,
-    streaming: Option[() => StreamingWrite] = None, numBuckets: Option[Int] = None)
+  * the rows by `bucket(numBuckets, conv_id)` — resolved against the
+  * [[BucketFunctions]] or [[GraftCatalog]] the relation carries — and sorts
+  * (bucket, conv_id, turn_idx) within partitions. A bucket's rows meet in
+  * one task, so a commit writes one file per bucket however many
+  * partitions the shuffle has, every file holds contiguous, order-restored
+  * conversations, and a task holds one file open at a time. `schema` is
+  * the rows' schema as the query produces them; what happens at the
+  * driver commit is the `batch` write's business. */
+final class SnapshotWrite(schema: StructType, numBuckets: Int, batch: BatchWrite)
   extends Write with RequiresDistributionAndOrdering {
 
   require(schema.fieldNames.contains("conv_id"),
     s"graft-snapshot writes need a conv_id column; got [${schema.fieldNames.mkString(", ")}]")
 
-  private val bucket = numBuckets.map(n => Expressions.bucket(n, "conv_id"))
+  private val bucket = Expressions.bucket(numBuckets, "conv_id")
 
-  override def requiredDistribution(): Distribution =
-    Distributions.clustered(Array(bucket.getOrElse(Expressions.column("conv_id"))))
+  override def requiredDistribution(): Distribution = Distributions.clustered(Array(bucket))
 
   override def requiredOrdering(): Array[SortOrder] = {
-    val keys = bucket.toSeq ++ Seq(Expressions.column("conv_id")) ++
+    val keys = Seq(bucket, Expressions.column("conv_id")) ++
       (if (schema.fieldNames.contains("turn_idx")) Seq(Expressions.column("turn_idx")) else Nil)
     keys.map(Expressions.sort(_, SortDirection.ASCENDING)).toArray
   }
 
-  override def toBatch: BatchWrite = batch()
-
-  override def toStreaming: StreamingWrite = streaming.getOrElse(
-    throw new UnsupportedOperationException("graft-snapshot: no streaming face for this write"))()
+  override def toBatch: BatchWrite = batch
 }
 
 /** Per-bucket stats + staged file one task observed/wrote. */
@@ -168,20 +154,19 @@ private[graft] final case class PublishRule(replaceBuckets: Boolean = false,
 /** The shared driver-side commit machinery for every face. */
 private[graft] object SnapshotWriterUtil {
 
-  /** The library face ([[SnapshotTable.commit]], `deleteRowsMor`): plans
-    * `df` as a V2 append into a write-only table whose builder returns
-    * [[SnapshotWrite]] directly, runs it, and returns the snapshot id the
-    * commit published (None: no rows and nothing force-replaced). It does
-    * not go through [[SnapshotV2Table]]: that table's merge-on-read gate
-    * belongs to the SQL/DataFrame face, while the library applies pending
-    * deletes itself. The relation carries [[BucketFunctions]], so the
-    * write clusters by bucket: a compaction writes one file per bucket, as
-    * the bucket-partitioned writer it replaced did. Columns are written
-    * under `df`'s own names — the library works at the physical level. */
+  /** The one writer: plans `df` as a V2 append into a write-only table
+    * whose builder returns [[SnapshotWrite]], runs it, and returns the
+    * snapshot id the commit published (None: no rows and nothing
+    * force-replaced). The relation carries [[BucketFunctions]], so the
+    * write clusters by bucket and a commit writes one file per bucket.
+    * Columns are written under `df`'s own names: the library works at the
+    * physical level, and the path, catalog and streaming faces rename
+    * first ([[physical]]). It does not go through [[SnapshotV2Table]]:
+    * that table's merge-on-read gate belongs to the SQL/DataFrame face,
+    * while the library applies pending deletes itself. */
   def write(df: DataFrame, dir: String, numBuckets: Int, runId: String,
       rule: PublishRule): Option[Long] = {
-    val batch = new SnapshotBatchWrite(dir, numBuckets, df.schema, runId, rule,
-      bucketSorted = true)
+    val batch = new SnapshotBatchWrite(dir, numBuckets, df.schema, runId, rule)
     val target = new Table with SupportsWrite {
       override def name(): String = s"graft-snapshot $dir run=$runId"
       override def columns(): Array[Column] =
@@ -190,8 +175,7 @@ private[graft] object SnapshotWriterUtil {
         java.util.EnumSet.of(TableCapability.BATCH_WRITE)
       override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
         new WriteBuilder {
-          override def build(): Write =
-            new SnapshotWrite(df.schema, () => batch, numBuckets = Some(numBuckets))
+          override def build(): Write = new SnapshotWrite(df.schema, numBuckets, batch)
         }
     }
     df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -202,12 +186,34 @@ private[graft] object SnapshotWriterUtil {
     batch.published
   }
 
+  /** Column mapping: data files carry PHYSICAL names (frozen at column
+    * creation), so a write of LOGICAL-named rows renames them before
+    * anything is written or recorded in the manifest entry DDL. */
+  def physical(df: DataFrame, dir: String): DataFrame =
+    df.toDF(TableFormat.toPhysical(dir, df.schema).fieldNames.toIndexedSeq: _*)
+
+  /** Micro-batch `batchId`'s append, at most once, for the streaming sink
+    * and `StreamingExtract.commitBatch`. The runId is `<query>-<batchId>`:
+    * the query id Spark sets on a streaming query's thread (it survives
+    * restarts from the same checkpoint), or `stream` outside a query. A
+    * runId some retained manifest already references is a replayed batch
+    * and writes nothing — lineage is read from every retained manifest, so
+    * a compaction in between keeps the evidence. */
+  def appendBatch(df: DataFrame, dir: String, numBuckets: Int, batchId: Long): Option[Long] = {
+    val runId = s"${streamScope(df.sparkSession)}-$batchId"
+    if (runIdCommitted(dir, numBuckets, runId)) None
+    else write(df, dir, numBuckets, runId, PublishRule())
+  }
+
+  /** The streaming query running on this thread, or `stream` outside one. */
+  def streamScope(spark: SparkSession): String =
+    Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)).getOrElse("stream")
+
   /** The write's task factory. The Hadoop conf (a thousand-odd
     * properties, ~100 KB serialized) travels as one broadcast per write, so
     * a write task deserializes a few KB of factory instead of the conf. */
   def writerFactory(spark: SparkSession, schema: StructType,
-      dataPath: String, numBuckets: Int,
-      bucketSorted: Boolean = false): SnapshotDataWriterFactory = {
+      dataPath: String, numBuckets: Int): SnapshotDataWriterFactory = {
     val hconf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
     val job = Job.getInstance(hconf)
     val factory = ParquetUtils.prepareWrite(
@@ -215,14 +221,14 @@ private[graft] object SnapshotWriterUtil {
       new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))
     SnapshotDataWriterFactory(factory,
       spark.sparkContext.broadcast(new SerializableConfiguration(job.getConfiguration)),
-      dataPath, numBuckets, schema, bucketSorted)
+      dataPath, numBuckets, schema)
   }
 
   /** Is `runId` referenced by ANY retained manifest (not just CURRENT)?
     * Compaction rewrites CURRENT's entries under its own runId, so lineage
     * must be answered from history — Jackson, driver-side, no Spark job.
     * The honest caveat (same as Iceberg): `expireSnapshots` that drops the
-    * manifest containing a replayable epoch also drops the evidence, so
+    * manifest containing a replayable batch also drops the evidence, so
     * snapshot retention must cover the streaming checkpoint's replay
     * window. */
   def runIdCommitted(dir: String, numBuckets: Int, runId: String): Boolean =
@@ -311,10 +317,10 @@ private[graft] object SnapshotWriterUtil {
 /** `option("wap", "true")` stages the commit for write-audit-publish:
   * data + manifest land, CURRENT stays — audit via
   * `option("snapshotId", <staged>)`, then `SnapshotTable.publishStaged`
-  * or `discardStaged`. While staged, the id blocks other committers. */
-final class SnapshotBatchWrite(dir: String, numBuckets: Int,
-    schema: StructType, runId: String, rule: PublishRule,
-    bucketSorted: Boolean = false)
+  * or `discardStaged`. While staged, the id blocks other committers.
+  * `rule` is evaluated at the driver commit, before the runId check. */
+class SnapshotBatchWrite(dir: String, numBuckets: Int,
+    schema: StructType, runId: String, rule: => PublishRule)
   extends BatchWrite {
 
   private val dataPath = s"$dir/data/run=$runId"
@@ -324,11 +330,11 @@ final class SnapshotBatchWrite(dir: String, numBuckets: Int,
   @volatile private[connector] var published: Option[Long] = None
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    SnapshotWriterUtil.writerFactory(SparkSession.active, schema, dataPath,
-      numBuckets, bucketSorted)
+    SnapshotWriterUtil.writerFactory(SparkSession.active, schema, dataPath, numBuckets)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val spark = SparkSession.active
+    val publishRule = rule
     // batch jobs don't replay themselves: a runId collision is a caller
     // re-using an identity — appending the same paths again would make
     // readers double-count, and rewriting the dir would corrupt time
@@ -337,86 +343,37 @@ final class SnapshotBatchWrite(dir: String, numBuckets: Int,
     if (SnapshotWriterUtil.runIdCommitted(dir, numBuckets, runId))
       throw new IllegalStateException(
         s"runId $runId is already committed in $dir — pick a fresh runId " +
-          "(batch writes are not replayable; the streaming face handles epoch replays)")
+          "(batch writes are not replayable; the streaming face skips replayed batches)")
     published = SnapshotWriterUtil.publish(spark, dir, numBuckets, dataPath,
-      runId, schema, messages, rule)
+      runId, schema, messages, publishRule)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     SnapshotWriterUtil.guardedAbort(SparkSession.active, dir, numBuckets, dataPath, runId)
 }
 
-final class SnapshotStreamingWrite(dir: String, numBuckets: Int,
-    schema: StructType, queryId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-
-  private def runId(epochId: Long) = s"$queryId-$epochId"
-  private def dataPath(epochId: Long) = s"$dir/data/run=${runId(epochId)}"
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory =
-    SnapshotStreamingDataWriterFactory(
-      SnapshotWriterUtil.writerFactory(SparkSession.active, schema,
-        dataPath = "", numBuckets = numBuckets), // per-epoch path set in createWriter
-      dir, queryId)
-
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val spark = SparkSession.active
-    val rid = runId(epochId)
-    // replay detection (lineage across ALL retained manifests — compaction
-    // renames CURRENT's entries but history keeps the evidence): nothing
-    // has been renamed yet, so a replayed epoch leaves published files
-    // byte-untouched and only drops its own staging
-    if (SnapshotWriterUtil.runIdCommitted(dir, numBuckets, rid)) {
-      SnapshotWriterUtil.dropStaging(
-        spark.sessionState.newHadoopConf(), dataPath(epochId))
-      return
-    }
-    SnapshotWriterUtil.publish(spark, dir, numBuckets, dataPath(epochId), rid,
-      schema, messages)
-    ()
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    SnapshotWriterUtil.guardedAbort(SparkSession.active, dir, numBuckets,
-      dataPath(epochId), runId(epochId))
-}
-
 final case class SnapshotDataWriterFactory(factory: OutputWriterFactory,
     conf: Broadcast[SerializableConfiguration], dataPath: String, numBuckets: Int,
-    schema: StructType, bucketSorted: Boolean = false) extends DataWriterFactory {
+    schema: StructType) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new SnapshotDataWriter(factory, conf.value.value, dataPath, numBuckets, schema,
-      partitionId, taskId, bucketSorted)
-}
-
-final case class SnapshotStreamingDataWriterFactory(base: SnapshotDataWriterFactory,
-    dir: String, queryId: String)
-  extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-
-  override def createWriter(partitionId: Int, taskId: Long,
-      epochId: Long): DataWriter[InternalRow] =
-    new SnapshotDataWriter(base.factory, base.conf.value.value,
-      s"$dir/data/run=$queryId-$epochId", base.numBuckets, base.schema,
       partitionId, taskId)
 }
 
-/** One parquet OutputWriter per BUCKET this task's rows hash into, all in
+/** One parquet OutputWriter per bucket this task's rows hash into, all in
   * the task's private `_staging/attempt-…` dir — the manifest-referenced
   * bucket dirs are only ever touched by the driver's publish step. Rows
-  * arrive clustered and sorted (conv_id, turn_idx), so each staged file
-  * holds its conversations contiguous and ordered; rows that also arrive
-  * sorted by bucket (`bucketSorted`) finish a bucket's file before the
-  * next one opens, so the task holds one open file, not one per bucket
-  * (parquet buffers a row group per open file). The
-  * per-bucket manifest stats are tracked inline as the rows are written
-  * (one pass, no re-scan of the written data) and shipped with the staged
-  * paths as the commit message; only successful attempts' messages reach
-  * the driver, which is what makes the stats exactly-once. */
+  * arrive sorted (bucket, conv_id, turn_idx) ([[SnapshotWrite]]), so a
+  * bucket's file is finished before the next one opens: the task holds one
+  * open file, and each staged file holds its conversations contiguous and
+  * ordered. The per-bucket manifest stats are tracked inline as the rows
+  * are written (one pass, no re-scan of the written data) and shipped with
+  * the staged paths as the commit message; only successful attempts'
+  * messages reach the driver, which is what makes the stats exactly-once. */
 final class SnapshotDataWriter(factory: OutputWriterFactory, conf: Configuration,
     dataPath: String, numBuckets: Int, schema: StructType,
-    partitionId: Int, taskId: Long, bucketSorted: Boolean = false)
+    partitionId: Int, taskId: Long)
   extends DataWriter[InternalRow] {
 
   private val ctx = new TaskAttemptContextImpl(conf,
@@ -441,7 +398,8 @@ final class SnapshotDataWriter(factory: OutputWriterFactory, conf: Configuration
   private val dropIdx = typedIdx("blocksDropped", IntegerType)
   private val charsIdx = typedIdx("charsEmitted", IntegerType)
 
-  private val writers = scala.collection.mutable.Map.empty[Int, org.apache.spark.sql.execution.datasources.OutputWriter]
+  private var writer: OutputWriter = _
+  private var writerBucket = -1
   private val staged = scala.collection.mutable.Map.empty[Int, String]
   private val stats = scala.collection.mutable.Map.empty[Int, BucketWriteStats]
 
@@ -452,7 +410,8 @@ final class SnapshotDataWriter(factory: OutputWriterFactory, conf: Configuration
     val conv = row.getUTF8String(convIdx)
     val h = XxHash64Function.hash(conv, StringType, 42L)
     val b = (((h % numBuckets) + numBuckets) % numBuckets).toInt
-    writers.getOrElse(b, open(b)).write(row)
+    if (b != writerBucket) open(b)
+    writer.write(row)
     val tsUs = if (tsIdx >= 0 && !row.isNullAt(tsIdx)) row.getLong(tsIdx) else 0L
     val s = BucketWriteStats(1L,
       if (keptIdx >= 0 && !row.isNullAt(keptIdx)) row.getInt(keptIdx).toLong else 0L,
@@ -462,35 +421,32 @@ final class SnapshotDataWriter(factory: OutputWriterFactory, conf: Configuration
     stats.updateWith(b) { case Some(p) => Some(p.merge(s)); case None => Some(s) }
   }
 
-  private def open(b: Int): org.apache.spark.sql.execution.datasources.OutputWriter = {
+  private def open(b: Int): Unit = {
     // a closed file is never reopened: its path would be overwritten
     if (staged.contains(b))
       throw new IllegalStateException(
         s"graft-snapshot: rows of bucket $b arrived after its file was closed")
-    if (bucketSorted) { writers.values.foreach(_.close()); writers.clear() }
+    closeWriter()
     val p = s"$stagingDir/b$b$ext"
     staged(b) = p
-    val w = factory.newInstance(p, schema, ctx)
-    writers(b) = w
-    w
+    writer = factory.newInstance(p, schema, ctx)
+    writerBucket = b
   }
 
+  private def closeWriter(): Unit = { if (writer != null) writer.close(); writer = null }
+
   override def commit(): WriterCommitMessage = {
-    writers.values.foreach(_.close())
-    writers.clear()
+    closeWriter()
     SnapshotCommitMessage(partitionId, stats.toMap, staged.toMap)
   }
 
   override def abort(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Throwable => () })
-    writers.clear()
+    close()
     try fs.delete(new HPath(stagingDir), true)
     catch { case _: Throwable => () }
     ()
   }
 
-  override def close(): Unit = {
-    writers.values.foreach(w => try w.close() catch { case _: Throwable => () })
-    writers.clear()
-  }
+  override def close(): Unit =
+    try closeWriter() catch { case _: Throwable => () }
 }

@@ -84,37 +84,34 @@ object StreamingExtract {
       .dropDuplicatesWithinWatermark("fp")
 
   /** Commit one micro-batch into a [[graft.table.SnapshotTable]] with
-    * replay-safe (exactly-once) semantics: the batchId IS the runId, and a
-    * re-delivered batch (after a failure, foreachBatch may replay the last
-    * uncommitted batch) is detected via the runId lineage of every
-    * retained manifest (a compaction in between keeps the evidence) and
-    * skipped — the same idempotence protocol as the batch engine's
-    * anti-join-vs-manifest resume, keyed by batch instead of bucket.
+    * replay-safe (exactly-once) semantics: the `graft-snapshot` sink's
+    * append ([[graft.connector.SnapshotWriterUtil.appendBatch]]), which
+    * skips a re-delivered batch — the same idempotence protocol as the
+    * batch engine's anti-join-vs-manifest resume, keyed by batch instead
+    * of bucket.
     * @return Some(snapshot id) if a new snapshot was cut. */
   def commitBatch(table: graft.table.SnapshotTable,
-      batch: Dataset[ExtractedTurn], batchId: Long): Option[Long] = {
-    val spark = batch.sparkSession
-    val runId = s"stream-$batchId"
-    if (graft.connector.SnapshotWriterUtil.runIdCommitted(table.dir, table.numBuckets, runId)) None
-    else table.commit(spark, batch, runId, replaceBuckets = false)
-  }
+      batch: Dataset[ExtractedTurn], batchId: Long): Option[Long] =
+    graft.connector.SnapshotWriterUtil.appendBatch(batch.toDF(), table.dir,
+      table.numBuckets, batchId)
 
-  /** foreachBatch sink: streaming extraction lands in the SAME snapshot
-    * table (manifest lineage, per-bucket metrics, time travel) the batch
-    * engine writes — one storage layer for both faces. */
+  /** The `graft-snapshot` streaming sink into `table`: streaming extraction
+    * lands in the SAME snapshot table (manifest lineage, per-bucket
+    * metrics, time travel) the batch engine writes — one storage layer for
+    * both faces, one snapshot per micro-batch, one file per bucket. */
   def snapshotSink(extracted: Dataset[ExtractedTurn],
       table: graft.table.SnapshotTable,
       checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[ExtractedTurn] =
-    extracted.writeStream
+    extracted.writeStream.format("graft-snapshot")
       .option("checkpointLocation", checkpoint)
+      .option("path", table.dir)
+      .option("numBuckets", table.numBuckets.toString)
       .outputMode("append")
-      .foreachBatch { (batch: Dataset[ExtractedTurn], batchId: Long) =>
-        commitBatch(table, batch, batchId); ()
-      }
 
   /** Commit one micro-batch as a keyed UPSERT ([[graft.table.SnapshotTable.merge]])
-    * with the same replay-safe protocol as [[commitBatch]]: the batchId IS
-    * the runId; a re-delivered batch is detected via the manifest's runId
+    * with the same replay-safe protocol as [[commitBatch]]: the runId is
+    * `<queryId>-merge-<batchId>` (`stream-merge-<batchId>` outside a
+    * query); a re-delivered batch is detected via the manifest's runId
     * lineage and skipped. Idempotence holds even though merge REWRITES
     * buckets — the commit point is the atomic CURRENT swing, so a crash
     * mid-merge leaves the previous snapshot live and the replay merges
@@ -122,7 +119,7 @@ object StreamingExtract {
   def mergeBatch(table: graft.table.SnapshotTable,
       batch: Dataset[ExtractedTurn], batchId: Long): Option[Long] = {
     val spark = batch.sparkSession
-    val runId = s"stream-merge-$batchId"
+    val runId = s"${graft.connector.SnapshotWriterUtil.streamScope(spark)}-merge-$batchId"
     if (graft.connector.SnapshotWriterUtil.runIdCommitted(table.dir, table.numBuckets, runId)) None
     else if (batch.isEmpty) None
     else table.merge(spark, batch, runId)

@@ -654,4 +654,46 @@ class GraftCatalogSpec extends AnyFunSuite with SparkTestBase {
     assert(s.sql("SELECT count(DISTINCT conv_id) FROM graft.clustered").head().getLong(0) == 400L)
     s.sql("DROP TABLE graft.clustered")
   }
+
+  test("path writes, streaming micro-batches and COW UPDATEs cluster by " +
+    "bucket: at most one data file per touched bucket") {
+    import testImplicits._
+    val s = catalogSession(spj = false) // AQE off
+    s.conf.set("spark.sql.shuffle.partitions", "8")
+    val dir = s"$warehouse/layout"
+    def rows(from: Long) = s.range(from, from + 400, 1, 8).select(
+      concat(lit("c"), (col("id") % 100).cast("string")).as("conv_id"),
+      (col("id") / 100).cast("int").as("turn_idx"), lit("x").as("note"))
+    rows(0).write.format("graft-snapshot").mode("append")
+      .option("numBuckets", "4").option("runId", "path").save(dir)
+
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
+    val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
+    val q = mem.toDF().select(
+      concat(lit("c"), (col("value") % 100).cast("string")).as("conv_id"),
+      (col("value") / 100).cast("int").as("turn_idx"), lit("x").as("note"))
+      .writeStream.format("graft-snapshot")
+      .option("checkpointLocation", suiteTempDir("layout_ckpt")).start(dir)
+    try { mem.addData(400L until 800L); q.processAllAvailable() } finally q.stop()
+
+    s.sql("UPDATE graft.layout SET note = 'y' WHERE turn_idx = 0")
+
+    val table = graft.table.SnapshotTable.open(dir)
+    assert(table.numBuckets == 4)
+    val written = table.snapshotIds.flatMap(table.entriesAt(s, _)).distinctBy(_.path)
+    val runs = written.groupBy(_.runId)
+    assert(runs.keySet.exists(_.startsWith("cow-update")) &&
+      runs.keySet.contains(s"${q.id}-0") && runs.keySet.contains("path"), runs.keySet)
+    runs.foreach { case (runId, entries) =>
+      assert(entries.map(_.bucket).distinct.size == entries.size, runId)
+      entries.foreach { e =>
+        val files = java.nio.file.Files.list(java.nio.file.Paths.get(e.path)).toArray
+          .count(_.toString.endsWith(".parquet"))
+        assert(files == 1, s"$runId ${e.path}: $files files")
+      }
+    }
+    assert(s.table("graft.layout").count() == 800L)
+    assert(s.table("graft.layout").where(col("note") === "y").count() == 100L)
+    s.sql("DROP TABLE graft.layout")
+  }
 }

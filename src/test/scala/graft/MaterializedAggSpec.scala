@@ -166,7 +166,7 @@ class MaterializedAggSpec extends AnyFunSuite with SparkTestBase {
     q.stop()
     // hide batch 0's data files before the second refresh: a full
     // recompute would crash, the delta path never touches them
-    val run0 = Paths.get(s"$dir/table/data/run=stream-0")
+    val run0 = Paths.get(s"$dir/table/data/run=${q.id}-0")
     val hidden = Paths.get(s"$dir/table/data/hidden-stream-0")
     Files.move(run0, hidden)
     val snap1 = ma.refresh(spark)

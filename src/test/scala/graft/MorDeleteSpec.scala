@@ -135,6 +135,25 @@ class MorDeleteSpec extends AnyFunSuite with SparkTestBase {
       all.count() - all.where(col("conv_id") === victim).count())
   }
 
+  test("V2 incremental read (changesFrom) refuses a delta whose bucket " +
+    "holds an older pending MOR delete") {
+    import testImplicits._
+    val dir = suiteTempDir("mor_changes_from")
+    val table = new SnapshotTable(dir, numBuckets = 4)
+    def rows(keys: String*) = keys.map(c => (c, 0, s"note $c")).toDF("conv_id", "turn_idx", "note")
+    table.commit(spark, rows("x", "y"), "base")                                  // snapshot 0
+    table.deleteRowsMor(spark, rows("x").select("conv_id", "turn_idx"), "del-x") // 1
+    table.commit(spark, rows("x"), "re-add", replaceBuckets = false)             // 2
+    // the older delete key still kills the re-added x#0 on every library read
+    assert(table.read(spark).count() == 1L)
+    assert(table.readChanges(spark, 1L, 2L).count() == 0L)
+    // the V2 delta read cannot apply it, so it refuses as the full read does
+    val err = intercept[Exception] {
+      spark.read.format("graft-snapshot").option("changesFrom", "1").load(dir).count()
+    }
+    assert(err.getMessage.contains("merge-on-read"), err.getMessage)
+  }
+
   test("SQL DELETE routes merge-on-read under spark.graft.delete.mode; " +
     "default mode still rewrites (COW); key/ts lanes unaffected") {
     import testImplicits._

@@ -31,6 +31,13 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
       .option("numBuckets", "4").option("runId", runId).save(dir)
   }
 
+  /** Micro-batch `batchId` of streaming query `queryId` handed to the
+    * `graft-snapshot` sink again, as a restarted query replays it. */
+  private def replayBatch(dir: String, queryId: String, batchId: Long, df: DataFrame): Unit =
+    inQuery(queryId)(new graft.connector.SnapshotSource().createSink(spark.sqlContext,
+      Map("path" -> dir), Nil, org.apache.spark.sql.streaming.OutputMode.Append())
+      .addBatch(batchId, df))
+
   private def key(df: DataFrame): Set[(String, Int, String)] = {
     import testImplicits._
     df.select(col("conv_id"), col("turn_idx"), col("text"))
@@ -132,17 +139,15 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
       assert(key(table.readChanges(spark, 0L, 1L)) == Set(("s_late", 1, "written s_late#1")))
     } finally q.stop()
 
-    // replay idempotence: re-committing an ALREADY-PUBLISHED epoch's
-    // messages must be a manifest no-op (crash between sink commit and
-    // checkpoint write ⇒ the restarted query re-runs the epoch)
+    // replay idempotence: handing the sink an ALREADY-PUBLISHED batch
+    // again must be a manifest no-op (crash between sink commit and
+    // checkpoint write ⇒ the restarted query re-runs the batch)
     val table = SnapshotTable.open(dir)
+    assert(table.committedEntries(spark).map(_.runId).toSet == Set(s"${q.id}-0", s"${q.id}-1"))
     val before = table.currentSnapshotId
-    val write = new graft.connector.SnapshotStreamingWrite(dir, 4,
-      org.apache.spark.sql.Encoders.product[ExtractedTurn].schema,
-      queryId = table.committedEntries(spark).head.runId.stripSuffix("-0"))
-    write.commit(0L, Array(graft.connector.SnapshotCommitMessage(0,
-      Map(0 -> graft.connector.BucketWriteStats(99L, 0L, 0L, 0L, 0L, 0L)), Map.empty)))
-    assert(table.currentSnapshotId == before, "replayed epoch must not advance the snapshot")
+    replayBatch(dir, q.id.toString, 0L, (0 until 6).map(i => mk(s"s$i", 0)).toDS().toDF())
+    assert(table.currentSnapshotId == before, "replayed batch must not advance the snapshot")
+    assert(table.read(spark).count() == 7L)
   }
 
   test("attempt durability: staged writes, deterministic names, runId-collision fail-fast") {
@@ -214,12 +219,9 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
     table.compact(spark, "compactRun") // CURRENT's entries now carry compactRun
     val before = table.currentSnapshotId
 
-    val write0 = new graft.connector.SnapshotStreamingWrite(dir, 4,
-      org.apache.spark.sql.Encoders.product[ExtractedTurn].schema, queryId = "qidX")
-    write0.commit(0L, Array(graft.connector.SnapshotCommitMessage(0,
-      Map(0 -> graft.connector.BucketWriteStats(99L, 0L, 0L, 0L, 0L, 0L)), Map.empty)))
+    replayBatch(dir, "qidX", 0L, (0 until 8).map(i => mk(s"c$i", 0)).toDS().toDF())
     assert(table.currentSnapshotId == before,
-      "epoch replay after compaction must find its lineage in the retained manifests")
+      "batch replay after compaction must find its lineage in the retained manifests")
     assert(table.read(spark).count() == 8L)
   }
 
@@ -273,17 +275,14 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
     assert(scan.keptEntries.forall(_.path.contains("run=w2")), scan.keptEntries.toString)
   }
 
-  test("a write task's factory carries the Hadoop conf by broadcast: batch " +
-    "and streaming factories serialize to under 16 KB") {
-    import graft.connector.{SnapshotStreamingDataWriterFactory, SnapshotWriterUtil}
+  test("a write task's factory carries the Hadoop conf by broadcast: the " +
+    "factory serializes to under 16 KB") {
     val dir = suiteTempDir("v2write_factory")
     val schema = org.apache.spark.sql.Encoders.product[ExtractedTurn].schema
-    val batch = SnapshotWriterUtil.writerFactory(spark, schema, s"$dir/data/run=f", 16)
-    val stream = SnapshotStreamingDataWriterFactory(batch, dir, "q")
-    val ser = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
-    Seq(batch, stream).foreach { f =>
-      val bytes = ser.serialize(f).limit()
-      assert(bytes < 16 * 1024, s"${f.getClass.getSimpleName} serializes to $bytes bytes")
-    }
+    val factory = graft.connector.SnapshotWriterUtil.writerFactory(spark, schema,
+      s"$dir/data/run=f", 16)
+    val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
+      .serialize(factory).limit()
+    assert(bytes < 16 * 1024, s"the write factory serializes to $bytes bytes")
   }
 }

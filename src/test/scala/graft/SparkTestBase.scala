@@ -40,6 +40,14 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     d.getPath
   }
 
+  /** `body` on this thread as if streaming query `queryId` ran it: the
+    * micro-batch runIds the snapshot sinks derive are scoped by that id. */
+  protected def inQuery[T](queryId: String)(body: => T): T = {
+    val key = org.apache.spark.sql.execution.streaming.runtime.StreamExecution.QUERY_ID_KEY
+    spark.sparkContext.setLocalProperty(key, queryId)
+    try body finally spark.sparkContext.setLocalProperty(key, null)
+  }
+
   override def afterAll(): Unit = {
     // keep the session for other suites in the same JVM (fork := true)
     try ownedDirs.synchronized(ownedDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))

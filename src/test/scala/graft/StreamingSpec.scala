@@ -186,8 +186,28 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // replay safety: re-committing an already-committed batchId is a no-op
     val before = table.currentSnapshotId
     val replay = StreamingExtract.extract(spark, a.toDS().as[graft.model.Turn])
-    assert(StreamingExtract.commitBatch(table, replay, batchId = 0L).isEmpty)
+    assert(inQuery(q.id.toString)(
+      StreamingExtract.commitBatch(table, replay, batchId = 0L)).isEmpty)
     assert(table.currentSnapshotId == before)
+  }
+
+  test("snapshot sink: a second query into the same table keeps its batches") {
+    import testImplicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = suiteTempDir("stream_snap_two")
+    val table = new graft.table.SnapshotTable(s"$dir/table", numBuckets = 4)
+    val turns = TranscriptGen.corpus(11L, nConvs = 12, hotBase = 30).toVector.map(_.turn)
+    val (a, b) = turns.splitAt(turns.size / 2)
+    Seq(a -> "ckpt_a", b -> "ckpt_b").foreach { case (rows, ckpt) =>
+      val stream = MemoryStream[graft.model.Turn]
+      val q = StreamingExtract.snapshotSink(
+        StreamingExtract.extract(spark, stream.toDS()), table, s"$dir/$ckpt")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try { stream.addData(rows); q.processAllAvailable() } finally q.stop()
+    }
+    // both queries' batch 0 committed: neither is a replay of the other
+    assert(table.snapshotIds.size == 2)
+    assert(table.read(spark).count() == turns.size.toLong)
   }
 
   test("upsert sink: a late correction REPLACES the previously-landed turn " +
@@ -221,9 +241,28 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
 
     // replay safety: re-merging an already-merged batchId is a no-op
     val before = table.currentSnapshotId
-    assert(StreamingExtract.mergeBatch(table,
-      Seq(victim.copy(text = "CORRECTED")).toDS(), batchId = 1L).isEmpty)
+    assert(inQuery(q.id.toString)(StreamingExtract.mergeBatch(table,
+      Seq(victim.copy(text = "CORRECTED")).toDS(), batchId = 1L)).isEmpty)
     assert(table.currentSnapshotId == before)
+  }
+
+  test("upsert sink: a second query into the same table keeps its batches") {
+    import testImplicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = suiteTempDir("stream_upsert_two")
+    val table = new graft.table.SnapshotTable(s"$dir/table", numBuckets = 4)
+    val turns = TranscriptGen.corpus(11L, nConvs = 10, hotBase = 20).toVector.map(_.turn)
+    val rows = graft.pipe.ExtractPipeline.extract(spark, turns.toDS()).collect().toSeq
+    val (a, b) = rows.partition(_.conv_id < rows.map(_.conv_id).distinct.sorted.apply(5))
+    assert(a.nonEmpty && b.nonEmpty)
+    Seq(a -> "ckpt_a", b -> "ckpt_b").foreach { case (batch, ckpt) =>
+      val stream = MemoryStream[graft.model.ExtractedTurn]
+      val q = StreamingExtract.upsertSink(stream.toDS(), table, s"$dir/$ckpt")
+        .trigger(Trigger.ProcessingTime(0)).start()
+      try { stream.addData(batch); q.processAllAvailable() } finally q.stop()
+    }
+    // the second query's batch 0 merged its own keys beside the first's
+    assert(table.read(spark).count() == rows.size.toLong)
   }
 
   test("stateful sessionizer (flatMapGroupsWithState) flushes on size, conserves metrics") {
