@@ -4,7 +4,7 @@ import graft.table.{SnapshotTable, TableFormat}
 import graft.table.SnapshotTable.BucketEntry
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
+import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources._
@@ -46,8 +46,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * conv_id = …` rewriting one bucket crash-safely.
   */
 final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
-    numBuckets: Int, tableSchema: StructType, cmd: RowLevelOperation.Command,
-    private[connector] val baseSnapshotId: Long)
+    numBuckets: Int, tableSchema: StructType, physical: Map[String, String],
+    cmd: RowLevelOperation.Command, private[connector] val baseSnapshotId: Long)
   extends RowLevelOperation {
 
   /** The scan instance Spark planned for this operation. Scan and write
@@ -61,7 +61,7 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
   override def description(): String = s"graft-snapshot COW $cmd on $dir"
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SnapshotCowScanBuilder(this, dir, entries, tableSchema, numBuckets)
+    new SnapshotCowScanBuilder(this, dir, entries, tableSchema, numBuckets, physical)
 
   /** The publish rule of the rewrite, checked at the driver commit before
     * anything is renamed. SERIALIZABLE-conflict guard (the Iceberg
@@ -93,7 +93,7 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
     new WriteBuilder {
       override def build(): Write = new SnapshotWrite(info.schema(), numBuckets,
         new SnapshotCowBatchWrite(SnapshotRowLevelOperation.this, dir, numBuckets,
-          TableFormat.toPhysical(dir, info.schema()),
+          TableFormat.toPhysical(physical, info.schema()),
           s"cow-${cmd.toString.toLowerCase}-${info.queryId()}"))
     }
 }
@@ -102,7 +102,8 @@ final class SnapshotRowLevelOperation(dir: String, entries: Seq[BucketEntry],
   * but everything stays residual AND row-invisible: filters only feed the
   * bucket-granular prune in the scan. */
 final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
-    entries: Seq[BucketEntry], fullSchema: StructType, numBuckets: Int)
+    entries: Seq[BucketEntry], fullSchema: StructType, numBuckets: Int,
+    physical: Map[String, String])
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
 
   private var required: StructType = fullSchema
@@ -119,7 +120,7 @@ final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
 
   override def build(): Scan = {
     val scan = new SnapshotCowScan(dir, op.baseSnapshotId, entries, fullSchema,
-      required, pushed, numBuckets)
+      required, pushed, numBuckets, physical)
     op.configuredScan = scan
     scan
   }
@@ -132,7 +133,7 @@ final class SnapshotCowScanBuilder(op: SnapshotRowLevelOperation, dir: String,
   * sources, subqueries) via the conv_id runtime filter. */
 final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
-    numBuckets: Int)
+    numBuckets: Int, physical: Map[String, String])
   extends Scan with Batch with SupportsRuntimeFiltering {
 
   private def spark = SparkSession.active
@@ -160,7 +161,7 @@ final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEn
   }
 
   override def filterAttributes(): Array[NamedReference] =
-    Array(Expressions.column("conv_id"))
+    SnapshotRead.runtimeFilterAttributes(required)
 
   override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters
@@ -188,14 +189,16 @@ final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEn
           "(SnapshotTable.compact / CALL graft.system.compact)")
     val kept = keptEntries
     scannedBuckets = kept.map(_.bucket).toSet
-    SnapshotRead.pack(spark,
+    SnapshotRead.filePartitions(spark,
       SnapshotRead.listFiles(spark, dir, snapshotId, kept.map(_.path)).flatten)
   }
 
   /** NO pushed filters reach parquet: row groups of kept buckets must
-    * surface every row (see class doc invariant). */
-  override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotRead.readerFactory(spark, dir, dataSchema, required, Array.empty)
+    * surface every row (see class doc invariant). Built once per scan. */
+  private lazy val readerFactory: PartitionReaderFactory =
+    SnapshotRead.readerFactory(spark, physical, dataSchema, required, Array.empty)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 }
 
 /** The COW write: the shared batch write, publishing under the

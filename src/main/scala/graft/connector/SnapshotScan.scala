@@ -3,21 +3,50 @@ package graft.connector
 import graft.table.{SnapshotTable, TableFormat}
 import graft.table.SnapshotTable.BucketEntry
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
-  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition,
+  FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation,
+  FilePartitionReaderFactory, PartitionReaderFromIterator}
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import java.util.OptionalLong
+import scala.jdk.CollectionConverters._
+
+/** One snapshot's entries as a read-only table: the read every face plans
+  * ([[SnapshotScan]]). `tableSchema` names the columns as the scan reports
+  * them, and `physical` maps those names to the ones frozen in the data
+  * files (empty: the same names). `numBuckets` is the count of the manifest
+  * the entries came from: pushed conv_id filters hash with it. The library
+  * reads its physical names through it directly
+  * ([[SnapshotRead.frame]]); [[SnapshotV2Table]] builds one after its
+  * merge-on-read gate, under its logical schema and the table's column
+  * mapping. */
+final class SnapshotReadTable(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
+    tableSchema: StructType, numBuckets: Int, physical: Map[String, String] = Map.empty)
+  extends Table with SupportsRead {
+
+  override def name(): String = dir
+  override def schema(): StructType = tableSchema
+  override def capabilities(): java.util.Set[TableCapability] =
+    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new SnapshotScanBuilder(dir, snapshotId, entries, tableSchema, numBuckets, physical, options)
+}
 
 final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
-    fullSchema: StructType, numBuckets: Int, options: CaseInsensitiveStringMap)
+    fullSchema: StructType, numBuckets: Int, physical: Map[String, String],
+    options: CaseInsensitiveStringMap)
   extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
   with SupportsPushDownAggregates {
 
@@ -62,7 +91,7 @@ final class SnapshotScanBuilder(dir: String, snapshotId: Long, entries: Seq[Buck
   override def build(): Scan =
     if (countStarPushed) new SnapshotCountScan(entries)
     else new SnapshotScan(dir, snapshotId, entries, fullSchema, required, pushed,
-      numBuckets, options)
+      numBuckets, physical, options)
 }
 
 /** The completely-pushed `COUNT(*)` scan: one partition, one row, straight
@@ -99,10 +128,11 @@ case object SnapshotCountReaderFactory extends PartitionReaderFactory {
 }
 
 /** The shared read machinery: manifest pruning from pushed filters, file
-  * listing, FilePartition-style split packing, and the parquet reader
-  * factory — used identically by the batch scan and the micro-batch
-  * stream (the stream just swaps WHICH manifest entries feed it: a
-  * snapshot-delta instead of one snapshot's full set). */
+  * listing, Spark's split packing, and the parquet reader factory — used
+  * identically by the batch scan, the COW scan and the micro-batch stream
+  * (the stream just swaps WHICH manifest entries feed it: a snapshot-delta
+  * instead of one snapshot's full set), and by the library through
+  * [[frame]]. */
 private[graft] object SnapshotRead {
 
   /** The merge-on-read gate of the V2 faces: they cannot apply pending
@@ -224,20 +254,19 @@ private[graft] object SnapshotRead {
     }
   }
 
-  /** The library's read of manifest file-sets: Spark's own parquet
-    * relation (vectorized `FileSourceScanExec`, pushed filters, the same
-    * `inputFiles`) over a [[ManifestFileIndex]] of the listed files, so
-    * there is no partition discovery and no listing job however many
-    * file-sets a snapshot holds. `schema` is the manifest's; None (legacy
-    * entries that recorded none) infers it from a footer, as
-    * `spark.read.parquet` does. */
-  def parquetRelation(spark: SparkSession, dir: String, snapshotId: Long,
-      paths: Seq[String], schema: Option[StructType]): DataFrame = {
-    val files = listFiles(spark, dir, snapshotId, paths).flatten
-    val dataSchema = schema.getOrElse(footerSchema(spark, dir, snapshotId, paths, files))
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      ManifestFileIndex(paths.map(new HPath(_)), files), new StructType(),
-      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  /** A library read: [[SnapshotScan]] over `entries` of `snapshotId`, read
+    * under `schema` with the names in the files. Planned ungrouped — a
+    * library frame offers no storage-partitioned join, and a bucket per task
+    * would cap a read's parallelism at its bucket count. No merge-on-read
+    * gate: the library applies pending deletes itself. */
+  def frame(spark: SparkSession, dir: String, snapshotId: Long, numBuckets: Int,
+      entries: Seq[BucketEntry], schema: StructType): DataFrame = {
+    new org.apache.spark.sql.classic.Dataset[Row](
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      DataSourceV2Relation.create(
+        new SnapshotReadTable(dir, snapshotId, entries, schema, numBuckets), None, None,
+        new CaseInsensitiveStringMap(Map("groupByBucket" -> "false").asJava)),
+      ExpressionEncoder(schema))
   }
 
   /** The schema of file-sets whose manifest schema is missing or does not
@@ -252,66 +281,52 @@ private[graft] object SnapshotRead {
         s"snapshot $snapshotId of $dir: no schema recorded and no parquet " +
           s"file to infer one from under ${paths.mkString(", ")}"))
 
-  /** Spark's own size-based packing (FilePartition.maxSplitBytes math):
-    * parquet is splittable, so files first split at maxSplitBytes, then the
-    * splits bin-pack (descending, openCost padding) — partition count tracks
-    * bytes, not file count, exactly like the built-in file source. */
-  def pack(spark: SparkSession,
-      fileStatuses: Seq[FileStatus]): Array[InputPartition] = {
-    val conf = spark.sessionState.conf
-    val openCost = conf.filesOpenCostInBytes
-    val totalBytes = fileStatuses.map(_.getLen + openCost).sum
-    val bytesPerCore = totalBytes / math.max(1, spark.sparkContext.defaultParallelism)
-    val maxSplit = math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore))
-
-    val splits = fileStatuses.flatMap { st =>
-      (0L until st.getLen by maxSplit).map { off =>
-        PartitionedFile(InternalRow.empty,
-          SparkPath.fromPathString(st.getPath.toString),
-          off, math.min(maxSplit, st.getLen - off),
-          Array.empty[String], st.getModificationTime, st.getLen)
-      }
-    }.sortBy(-_.length)
-
-    val parts = scala.collection.mutable.ArrayBuffer.empty[Array[PartitionedFile]]
-    val cur = scala.collection.mutable.ArrayBuffer.empty[PartitionedFile]
-    var curBytes = 0L
-    def flush(): Unit = if (cur.nonEmpty) { parts += cur.toArray; cur.clear(); curBytes = 0L }
-    splits.foreach { f =>
-      if (curBytes + f.length + openCost > maxSplit) flush()
-      cur += f; curBytes += f.length + openCost
-    }
-    flush()
-    parts.map(SnapshotInputPartition(_): InputPartition).toArray
+  /** Files packed as Spark's file source packs them: split at
+    * `FilePartition.maxSplitBytes` (parquet is splittable), largest first,
+    * into [[FilePartition]]s — the partition count tracks bytes, not file
+    * count. */
+  def filePartitions(spark: SparkSession, files: Seq[FileStatus]): Array[InputPartition] = {
+    val listed = files.map(FileStatusWithMetadata(_))
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      Seq(PartitionDirectory(InternalRow.empty, listed)))
+    val splits = listed.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+      isSplitable = true, maxSplit, InternalRow.empty)).sortBy(-_.length)
+    FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
   }
 
-  /** The parquet read path IS Spark's: buildReaderWithPartitionValues wires
-    * the pruned schema + pushed filters into the (vectorized) parquet
-    * reader and returns a serializable per-file closure — identical
-    * row-group skipping and column decoding to the built-in source, but
-    * over OUR manifest-selected file set. */
-  /** Single reader-construction point for every scan face (batch, COW,
-    * micro-batch). Column-mapping translation happens HERE: the caller
-    * passes LOGICAL-named schemas/filters (what Spark planned against);
-    * parquet resolves columns by the PHYSICAL names frozen in the files.
-    * V2 rows are positional, so renaming schema fields redirects parquet
-    * column resolution without touching row layout. */
-  def readerFactory(spark: SparkSession, dir: String, dataSchema: StructType,
-      required: StructType, pushed: Array[Filter]): PartitionReaderFactory = {
+  /** The runtime-filter attribute of a scan that reads `schema`: conv_id,
+    * only when the scan outputs it — Spark resolves the attribute against
+    * the pruned output, and a join on another column must not fail to
+    * plan. */
+  def runtimeFilterAttributes(schema: StructType): Array[NamedReference] =
+    schema.fieldNames.filter(_.equalsIgnoreCase("conv_id")).map(Expressions.column)
+
+  /** The one reader construction of every scan face (batch, COW,
+    * micro-batch): Spark's parquet reader over the pruned schema and pushed
+    * filters, returning columnar batches whenever Spark's vectorized reader
+    * can (as Spark's own V2 parquet scan does). The schemas and filters name
+    * the scan's columns; `physical` renames them to the names frozen in the
+    * files, so a column-mapped table resolves parquet columns by physical
+    * name — rows and batches are positional, so the scan still reports its
+    * own names. A scan builds its factory once: each build broadcasts the
+    * Hadoop conf. */
+  def readerFactory(spark: SparkSession, physical: Map[String, String],
+      dataSchema: StructType, required: StructType,
+      pushed: Array[Filter]): PartitionReaderFactory = {
     val fmt = new ParquetFileFormat
-    val hconf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    val readFunc = fmt.buildReaderWithPartitionValues(
-      spark, TableFormat.toPhysical(dir, dataSchema), new StructType(),
-      TableFormat.toPhysical(dir, required),
-      TableFormat.filtersToPhysical(dir, pushed).toSeq,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), hconf)
-    SnapshotReaderFactory(readFunc)
+    val read = TableFormat.toPhysical(physical, required)
+    val columnar = fmt.supportBatch(spark, read)
+    SnapshotReaderFactory(fmt.buildReaderWithPartitionValues(spark,
+      TableFormat.toPhysical(physical, dataSchema), new StructType(), read,
+      TableFormat.filtersToPhysical(physical, pushed).toSeq,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
+      spark.sessionState.newHadoopConfWithOptions(Map.empty)), columnar)
   }
 }
 
 final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
-    numBuckets: Int, options: CaseInsensitiveStringMap)
+    numBuckets: Int, physical: Map[String, String], options: CaseInsensitiveStringMap)
   extends Scan with Batch with SupportsReportStatistics with SupportsRuntimeFiltering
   with SupportsReportPartitioning {
 
@@ -324,19 +339,21 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
     * planInputPartitions runs. Pruning stays set-granular and the filters
     * stay residual, so this only SHRINKS IO, never changes results. */
   private var runtimeFilters: Array[Filter] = Array.empty
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column("conv_id"))
+  override def filterAttributes(): Array[NamedReference] =
+    SnapshotRead.runtimeFilterAttributes(required)
   override def filter(filters: Array[Filter]): Unit = {
     runtimeFilters = filters
-    cachedKept = null; cachedListing = null // re-prune under the late filters
+    // re-prune under the late filters
+    cachedKept = null; cachedListing = null; cachedPartitions = null
   }
 
-  // prune + listing cached per runtime-filter state: description /
-  // estimateStatistics / planInputPartitions may each be called several
+  // prune, listing and packing cached per runtime-filter state: description
+  // / estimateStatistics / planInputPartitions may each be called several
   // times during planning, and re-listing every kept file-set per call is
   // repeated driver-side FS IO at manifest scale
   @volatile private var cachedKept: Seq[BucketEntry] = _
   @volatile private var cachedListing: Seq[Seq[FileStatus]] = _
+  @volatile private var cachedPartitions: Array[InputPartition] = _
 
   private[graft] def keptEntries: Seq[BucketEntry] = {
     if (cachedKept == null)
@@ -352,6 +369,10 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
   }
 
   private def fileStatuses: Seq[FileStatus] = listing.flatten
+
+  /** The files this scan reads, as URI strings (what `Dataset.inputFiles`
+    * reports for a file relation; a V2 scan reports none there). */
+  private[graft] def inputFiles: Seq[String] = fileStatuses.map(_.getPath.toUri.toString)
 
   override def readSchema(): StructType = required
 
@@ -376,11 +397,13 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
 
   /** Bucket-grouped planning (storage-partitioned-join mode): one
     * InputPartition per bucket, keyed by the bucket id, matching the
-    * reported `KeyGroupedPartitioning(bucket(n, conv_id))`. On by default
-    * exactly when `spark.sql.sources.v2.bucketing.enabled` is — a session
-    * that asked for SPJ trades split-level parallelism (a bucket is one
-    * task) for shuffle-free conv_id joins; override per read with
-    * option("groupByBucket", …). Captured lazily so the partition layout
+    * reported `KeyGroupedPartitioning(bucket(n, conv_id))`. The default is
+    * `spark.sql.sources.v2.bucketing.enabled`, which Spark 4.1 turns ON
+    * unless a session sets it off — so a V2-face read trades split-level
+    * parallelism (a bucket is one task) for shuffle-free conv_id joins in
+    * every default session. Override per read with
+    * option("groupByBucket", …); the library's reads pass false
+    * ([[SnapshotRead.frame]]). Captured lazily so the partition layout
     * reported at planning cannot drift afterwards (runtime filters keep
     * shrinking IO in ungrouped mode only). */
   private lazy val groupByBucket: Boolean =
@@ -391,11 +414,10 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
     keptEntries.map(_.bucket).zip(listing).groupMap(_._1)(_._2).toSeq.sortBy(_._1)
       .map { case (b, listed) =>
         val files = listed.flatten.map { st =>
-          PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(st.getPath.toString),
-            0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen)
+          PartitionedFileUtil.getPartitionedFile(FileStatusWithMetadata(st), st.getPath,
+            InternalRow.empty, 0L, st.getLen)
         }
-        SnapshotBucketPartition(b, files.toArray): InputPartition
+        new SnapshotBucketPartition(b, files.toArray): InputPartition
       }.toArray
 
   override def outputPartitioning(): org.apache.spark.sql.connector.read.partitioning.Partitioning =
@@ -407,10 +429,17 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
 
   override def planInputPartitions(): Array[InputPartition] =
     if (groupByBucket) bucketPartitions
-    else SnapshotRead.pack(spark, fileStatuses)
+    else {
+      if (cachedPartitions == null)
+        cachedPartitions = SnapshotRead.filePartitions(spark, fileStatuses)
+      cachedPartitions
+    }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotRead.readerFactory(spark, dir, dataSchema, required, pushed)
+  // built once per scan: Spark asks for the factory more than once per read
+  private lazy val readerFactory: PartitionReaderFactory =
+    SnapshotRead.readerFactory(spark, physical, dataSchema, required, pushed)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   /** Structured-streaming face (the Iceberg incremental-append-scan analog
     * as a real `readStream` source): each micro-batch is the file-set DELTA
@@ -425,54 +454,28 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
     val startId = Option(options.get("startSnapshotId")).map(_.trim.toLong).getOrElse(-1L)
     val allowReplaced = Option(options.get("allowReplaced")).exists(_.trim.toBoolean)
     new SnapshotMicroBatchStream(dir, dataSchema, required,
-      pushed, startId, allowReplaced)
+      pushed, startId, allowReplaced, physical)
   }
 }
-
-/** A snapshot's files as Spark's file index: the manifest already chose
-  * them, so listing hands back the [[SnapshotRead.listFiles]] result as
-  * one unpartitioned directory, and refresh has nothing to re-read (a
-  * snapshot never changes). */
-final case class ManifestFileIndex(rootPaths: Seq[HPath], files: Seq[FileStatus])
-  extends FileIndex {
-  override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-    Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
-  override def inputFiles: Array[String] = files.map(_.getPath.toUri.toString).toArray
-  override def refresh(): Unit = ()
-  override def sizeInBytes: Long = files.map(_.getLen).sum
-  override def partitionSchema: StructType = new StructType()
-}
-
-final case class SnapshotInputPartition(files: Array[PartitionedFile])
-  extends InputPartition
 
 /** One whole bucket as one partition, keyed by its bucket id — the shape
   * `KeyGroupedPartitioning` requires for storage-partitioned joins. */
-final case class SnapshotBucketPartition(bucket: Int, files: Array[PartitionedFile])
-  extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
-  override def partitionKey(): InternalRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](bucket))
+final class SnapshotBucketPartition(bucket: Int, files: Array[PartitionedFile])
+  extends FilePartition(bucket, files) with HasPartitionKey {
+  override def partitionKey(): InternalRow = InternalRow(index)
 }
 
+/** Reads a [[FilePartition]] file by file through the parquet reader
+  * function; the batches of a columnar read come out of it as rows
+  * do, as in Spark's own file scan. */
 final case class SnapshotReaderFactory(
-    readFunc: PartitionedFile => Iterator[InternalRow])
-  extends PartitionReaderFactory {
+    readFunc: PartitionedFile => Iterator[InternalRow], columnar: Boolean)
+  extends FilePartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val files = partition match {
-      case SnapshotInputPartition(fs)     => fs
-      case SnapshotBucketPartition(_, fs) => fs
-      case p => sys.error(s"unexpected partition ${p.getClass}")
-    }
-    new PartitionReader[InternalRow] {
-      private val it = files.iterator.flatMap(readFunc)
-      private var cur: InternalRow = _
-      override def next(): Boolean =
-        if (it.hasNext) { cur = it.next(); true } else false
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
+  override def options: FileSourceOptions = new FileSourceOptions(CaseInsensitiveMap(Map.empty))
+  override def supportColumnarReads(partition: InputPartition): Boolean = columnar
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] =
+    new PartitionReaderFromIterator(readFunc(file))
+  override def buildColumnarReader(file: PartitionedFile): PartitionReader[ColumnarBatch] =
+    new PartitionReaderFromIterator(readFunc(file).asInstanceOf[Iterator[ColumnarBatch]])
 }

@@ -26,10 +26,12 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Both faces plan from the manifest, which they resolve and parse through
-  * [[TableFormat]] (the bucket count by its one rule), and list its
-  * file-sets through [[SnapshotRead.listFiles]]; `SnapshotTable.read`
-  * hands the listed files to Spark's own parquet relation
-  * ([[SnapshotRead.parquetRelation]]). What the connector adds over it:
+  * [[TableFormat]] (the bucket count by its one rule), and both read
+  * through one scan, [[SnapshotScan]] over a [[SnapshotReadTable]]: this
+  * face after its merge-on-read gate and under the table's logical names,
+  * `SnapshotTable.read` and its kin under the physical names and with
+  * their own delete anti-join ([[SnapshotRead.frame]]). What the scan
+  * does:
   *
   *  - '''Planning-time pruning from the manifest, driven by pushed
   *    filters.''' `conv_id = x` / `conv_id IN (…)` prunes to the owning
@@ -187,7 +189,7 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
   // (SnapshotCowScan.planInputPartitions)
   override def newRowLevelOperationBuilder(
       info: org.apache.spark.sql.connector.write.RowLevelOperationInfo): org.apache.spark.sql.connector.write.RowLevelOperationBuilder =
-    () => new SnapshotRowLevelOperation(dir, entries, numBuckets, schema(),
+    () => new SnapshotRowLevelOperation(dir, entries, numBuckets, schema(), physical,
       info.command(), baseSnapshotId = snapshotId)
 
   // plain name only: Spark's AttributeNameParser parses table names in
@@ -390,9 +392,14 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
   override def partitioning(): Array[Transform] =
     Array(org.apache.spark.sql.connector.expressions.Expressions.bucket(numBuckets, "conv_id"))
 
+  /** The table's column mapping, LOGICAL → PHYSICAL: the scans read the
+    * files under it. */
+  private lazy val physical: Map[String, String] = TableFormat.physicalNames(dir)
+
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
     morGate("scan")
-    new SnapshotScanBuilder(dir, snapshotId, entries, schema(), numBuckets, options)
+    new SnapshotReadTable(dir, snapshotId, entries, schema(), numBuckets, physical)
+      .newScanBuilder(options)
   }
 
   override def newWriteBuilder(info: org.apache.spark.sql.connector.write.LogicalWriteInfo): org.apache.spark.sql.connector.write.WriteBuilder = {

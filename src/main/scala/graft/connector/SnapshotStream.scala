@@ -14,7 +14,7 @@ final case class SnapshotOffset(snapshotId: Long)
 
 final class SnapshotMicroBatchStream(dir: String,
     dataSchema: StructType, required: StructType, pushed: Array[Filter],
-    startId: Long, allowReplaced: Boolean)
+    startId: Long, allowReplaced: Boolean, physical: Map[String, String] = Map.empty)
   extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
 
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -55,12 +55,15 @@ final class SnapshotMicroBatchStream(dir: String,
           "compact the table and restart the query from a fresh offset")
     // hashed under `e`'s own count: the stream may cross a rebucket
     val pruned = to.numBuckets.fold(added)(SnapshotRead.prune(dir, _, added, pushed))
-    SnapshotRead.pack(spark,
+    SnapshotRead.filePartitions(spark,
       SnapshotRead.listFiles(spark, dir, e, pruned.map(_.path)).flatten)
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    SnapshotRead.readerFactory(spark, dir, dataSchema, required, pushed)
+  // built once for the stream's life: Spark asks for it every micro-batch
+  private lazy val readerFactory: PartitionReaderFactory =
+    SnapshotRead.readerFactory(spark, physical, dataSchema, required, pushed)
+
+  override def createReaderFactory(): PartitionReaderFactory = readerFactory
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

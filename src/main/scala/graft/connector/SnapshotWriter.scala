@@ -190,7 +190,8 @@ private[graft] object SnapshotWriterUtil {
     * creation), so a write of LOGICAL-named rows renames them before
     * anything is written or recorded in the manifest entry DDL. */
   def physical(df: DataFrame, dir: String): DataFrame =
-    df.toDF(TableFormat.toPhysical(dir, df.schema).fieldNames.toIndexedSeq: _*)
+    df.toDF(TableFormat.toPhysical(TableFormat.physicalNames(dir), df.schema)
+      .fieldNames.toIndexedSeq: _*)
 
   /** Micro-batch `batchId`'s append, at most once, for the streaming sink
     * and `StreamingExtract.commitBatch`. The runId is `<query>-<batchId>`:

@@ -35,19 +35,20 @@ import scala.jdk.CollectionConverters._
   *  - Resume: a restarted run asks [[committedBuckets]] and processes only
   *    the complement (anti-join of input buckets vs committed — SURVEY §2.10).
   *  - Planning happens on the driver, as in Iceberg: the manifest is parsed
-  *    with Jackson ([[TableFormat.readManifest]]), its file-sets are
-  *    listed by the one listing every read face shares
-  *    ([[graft.connector.SnapshotRead.listFiles]]), and data is read
-  *    under the schema each entry recorded, so choosing the files of a read
-  *    launches no Spark job however many file-sets it spans, and a point
-  *    lookup runs exactly one (the scan).
+  *    with Jackson ([[TableFormat.readManifest]]), and every read is the
+  *    connector's one scan ([[graft.connector.SnapshotScan]], through
+  *    [[graft.connector.SnapshotRead.frame]]) over the entries it chose,
+  *    under the schema each entry recorded and the bucket count of their
+  *    manifest. Choosing the files of a read launches no Spark job however
+  *    many file-sets it spans, and a point lookup runs exactly one (the
+  *    scan).
   *
   * Reference precedent for at-least-once + idempotent naming: unique upload
   * names `/root/reference/src/controller/webapp.py:19-22`; batch-id matched
   * scatter/gather `src/extras/weinman/interface/linepredictor.py:32-51`.
   */
 final class SnapshotTable(val dir: String, val numBuckets: Int) {
-  import SnapshotTable.BucketEntry
+  import SnapshotTable.{BucketEntry, Snap}
   import Refs.{Branch, Expect, Main, Tag}
 
   private def manifestsDir: Path = TableFormat.manifestsDir(dir)
@@ -68,16 +69,16 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   /** All bucket entries of the live snapshot (empty if none), planned on
     * the driver: one Jackson parse of the manifest, no Spark job. `spark`
     * is not needed for that and is kept for the callers' signature. */
-  def committedEntries(spark: SparkSession): Seq[BucketEntry] =
-    liveEntries(spark)._2
+  def committedEntries(spark: SparkSession): Seq[BucketEntry] = live.entries
 
-  /** The live snapshot's id (-1 if none) and its entries, from one read of
-    * CURRENT — a read names the snapshot it planned from in its errors. */
-  private def liveEntries(spark: SparkSession): (Long, Seq[BucketEntry]) =
-    currentSnapshotId match {
-      case None     => (-1L, Seq.empty)
-      case Some(id) => (id, entriesAt(spark, id))
-    }
+  private def snapAt(id: Long): Snap = {
+    val m = TableFormat.readManifest(dir, id)
+    Snap(id, m.numBuckets.getOrElse(numBuckets), m.entries)
+  }
+
+  /** The live snapshot, from one read of CURRENT (-1 and no entries if
+    * none). */
+  private def live: Snap = currentSnapshotId.fold(Snap(-1L, numBuckets, Seq.empty))(snapAt)
 
   /** Bucket entries of a SPECIFIC snapshot — time travel: older manifests
     * stay on disk (until [[expireSnapshots]]), so any historical snapshot
@@ -340,26 +341,27 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
 
   /** Pending merge-on-read delete keys of an entry set, applied as a
     * `(conv_id, turn_idx)` anti-join — the read-time half of
-    * [[deleteRowsMor]]. Both sides are conv_id-bucketed on disk, so on
-    * the co-located read path this is a per-bucket merge, and the delete
-    * side is bounded by deletes-since-last-compact (transient by design —
-    * [[compact]] folds them back to zero). */
-  private def applyDeletes(spark: SparkSession, snap: Long, df: DataFrame,
+    * [[deleteRowsMor]]. The key-sets are read by the same scan as the data
+    * ([[SnapshotRead.frame]]), under their fixed key schema. Both sides
+    * are conv_id-bucketed on disk, and the delete side is bounded by
+    * deletes-since-last-compact (transient by design — [[compact]] folds
+    * them back to zero). */
+  private def applyDeletes(spark: SparkSession, snap: Snap, df: DataFrame,
       delEntries: Seq[BucketEntry]): DataFrame =
     if (delEntries.isEmpty) df
     else df.join(
-      SnapshotRead.parquetRelation(spark, dir, snap, delEntries.map(_.path),
-        Some(SnapshotTable.DeleteKeySchema)),
+      SnapshotRead.frame(spark, dir, snap.id, snap.buckets, delEntries,
+        SnapshotTable.DeleteKeySchema),
       Seq("conv_id", "turn_idx"), "left_anti")
 
   /** Data rows of an entry set of snapshot `snap` under the schema the
     * manifest recorded — WITHOUT delete application (callers decide). The
-    * files come from the manifest's own listing and go to Spark's parquet
-    * relation directly ([[SnapshotRead.parquetRelation]]): no partition
+    * read is the connector's scan over these entries
+    * ([[SnapshotRead.frame]]), under PHYSICAL column names: no partition
     * discovery, no listing job, and the recorded schema spares the
     * footer-inference job, so the only job of a read is its scan;
     * inference is left to legacy entries that recorded no schema. */
-  private def dataRead(spark: SparkSession, snap: Long,
+  private def dataRead(spark: SparkSession, snap: Snap,
       dataEntries: Seq[BucketEntry]): DataFrame = {
     val ddls = dataEntries.map(_.schema).filter(_.nonEmpty).distinct
     val schema =
@@ -376,17 +378,20 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
           // widened columns upcast per file (the parquet reader reads
           // INT32 as LONG / FLOAT as DOUBLE when handed the wider type)
           .orElse(TableFormat.readMeta(dir).filter(_.mapping.isDefined)
-            .map(m => TableFormat.toPhysical(dir, m.structType)))
+            .map(m => TableFormat.toPhysical(TableFormat.physicalNames(dir), m.structType)))
           // otherwise: incompatible mix (pre-guard table) — infer as before
       else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
         SnapshotTable.parseSchema(ddls.head)
       else None
-    SnapshotRead.parquetRelation(spark, dir, snap, dataEntries.map(_.path), schema)
+    val paths = dataEntries.map(_.path)
+    SnapshotRead.frame(spark, dir, snap.id, snap.buckets, dataEntries,
+      schema.getOrElse(SnapshotRead.footerSchema(spark, dir, snap.id, paths,
+        SnapshotRead.listFiles(spark, dir, snap.id, paths).flatten)))
   }
 
   /** Logical rows of an entry set of snapshot `snap`: data minus pending
     * MOR deletes. */
-  private def logicalRead(spark: SparkSession, snap: Long,
+  private def logicalRead(spark: SparkSession, snap: Snap,
       entries: Seq[BucketEntry]): DataFrame = {
     val (del, data) = entries.partition(_.kind == "delete")
     applyDeletes(spark, snap, dataRead(spark, snap, data), del)
@@ -395,9 +400,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   /** Read the live snapshot (only manifest-listed paths — orphan data from
     * crashed runs is invisible). */
   def read(spark: SparkSession): DataFrame = {
-    val (snap, entries) = liveEntries(spark)
-    require(entries.nonEmpty, s"no committed snapshot in $dir")
-    logicalRead(spark, snap, entries)
+    val snap = live
+    require(snap.entries.nonEmpty, s"no committed snapshot in $dir")
+    logicalRead(spark, snap, snap.entries)
   }
 
   /** Per-bucket table statistics straight from the live manifest — the
@@ -433,9 +438,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * `VERSION AS OF` analog — compaction and later commits do not delete
     * the files older manifests reference). */
   def readAt(spark: SparkSession, snapshotId: Long): DataFrame = {
-    val entries = entriesAt(spark, snapshotId)
-    require(entries.nonEmpty, s"snapshot $snapshotId is empty")
-    logicalRead(spark, snapshotId, entries)
+    val snap = snapAt(snapshotId)
+    require(snap.entries.nonEmpty, s"snapshot $snapshotId is empty")
+    logicalRead(spark, snap, snap.entries)
   }
 
   /** Bucket-pruned single-conversation read: computes the conversation's
@@ -445,8 +450,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     */
   def readConversation(spark: SparkSession, convId: String): DataFrame = {
     val b = bucketOfId(convId) // driver-side hash: a point lookup costs no job
-    val (snap, live) = liveEntries(spark)
-    val entries = live.filter(_.bucket == b)
+    val snap = live
+    val entries = snap.entries.filter(_.bucket == b)
     require(entries.nonEmpty, s"bucket $b not committed in $dir")
     logicalRead(spark, snap, entries)
       .where(col("conv_id") === convId)
@@ -500,8 +505,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       replacement: Option[DataFrame], runId: String): Option[Long] = {
     require(convIds.nonEmpty, "replaceWhere needs at least one conversation")
     val buckets = convIds.map(bucketOfId).toSet
-    val (snap, live) = liveEntries(spark)
-    val entries = live.filter(e => buckets(e.bucket))
+    val snap = live
+    val entries = snap.entries.filter(e => buckets(e.bucket))
     require(entries.nonEmpty, s"none of buckets $buckets is committed in $dir")
     replacement.foreach { r =>
       val stray = r.filter(!bucketOf.isin(buckets.toSeq: _*)).count()
@@ -580,7 +585,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
   def rewriteDeletes(spark: SparkSession, runId: String,
       minDeleteRatio: Double = 0.1): Option[Long] = {
     require(minDeleteRatio >= 0.0, s"negative minDeleteRatio $minDeleteRatio")
-    val (snap, entries) = liveEntries(spark)
+    val snap = live
+    val entries = snap.entries
     val targets = entries.groupBy(_.bucket).collect {
       case (b, es) if {
         val delKeys = es.filter(_.kind == "delete").map(_.turns).sum
@@ -622,8 +628,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     val buckets = updates.toDF().select(bucketOf.as("b")).distinct()
       .as[Int].collect().toSet
     require(buckets.nonEmpty, "merge with an empty update set")
-    val (snap, live) = liveEntries(spark)
-    val entries = live.filter(e => buckets(e.bucket))
+    val snap = live
+    val entries = snap.entries.filter(e => buckets(e.bucket))
     val keys = updates.select(col("conv_id"), col("turn_idx")).distinct()
     val survivors =
       (if (entries.isEmpty) spark.emptyDataset[ExtractedTurn].toDF()
@@ -974,7 +980,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       allowReplaced: Boolean = false): DataFrame = {
     require(fromSnapshotId <= toSnapshotId,
       s"fromSnapshotId $fromSnapshotId must be ≤ toSnapshotId $toSnapshotId")
-    val toEntries = entriesAt(spark, toSnapshotId)
+    val to = snapAt(toSnapshotId)
+    val toEntries = to.entries
     val delta = SnapshotRead.delta(dir, fromSnapshotId, toSnapshotId, toEntries, allowReplaced)
     // buckets that gained delete keys must be redelivered as their FULL
     // new logical content (data minus deletes at `to`); everything else
@@ -991,10 +998,10 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
         rest.exists(_.bucket == e.bucket))
     val parts = Seq(
       if (morBuckets.nonEmpty)
-        Some(logicalRead(spark, toSnapshotId, toEntries.filter(e => morBuckets(e.bucket))))
+        Some(logicalRead(spark, to, toEntries.filter(e => morBuckets(e.bucket))))
       else None,
       if (rest.nonEmpty)
-        Some(applyDeletes(spark, toSnapshotId, dataRead(spark, toSnapshotId, rest), oldDel))
+        Some(applyDeletes(spark, to, dataRead(spark, to, rest), oldDel))
       else None).flatten
     if (parts.isEmpty) readAt(spark, toSnapshotId).limit(0) // empty, full schema
     else parts.reduce(_ unionByName _)
@@ -1013,8 +1020,9 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     * buckets' old and new file-sets are read and EXCEPT ALL'd both ways —
     * O(changed buckets), not O(table). */
   def diff(spark: SparkSession, fromSnapshotId: Long, toSnapshotId: Long): DataFrame = {
-    val fromEntries = entriesAt(spark, fromSnapshotId)
-    val toEntries = entriesAt(spark, toSnapshotId)
+    val from = snapAt(fromSnapshotId)
+    val to = snapAt(toSnapshotId)
+    val (fromEntries, toEntries) = (from.entries, to.entries)
     def byBucket(es: Seq[BucketEntry]) = es.groupBy(_.bucket)
       .view.mapValues(_.map(_.path).sorted).toMap
     val fromB = byBucket(fromEntries)
@@ -1026,12 +1034,12 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
     // each side is its snapshot's LOGICAL content of the changed buckets
     // (data minus that snapshot's pending MOR deletes) — a delete-only
     // commit therefore diffs as pure `op = delete` rows
-    def side(snap: Long, es: Seq[BucketEntry]): DataFrame = {
-      val sel = es.filter(e => changed.contains(e.bucket))
+    def side(snap: Snap): DataFrame = {
+      val sel = snap.entries.filter(e => changed.contains(e.bucket))
       if (sel.forall(_.kind != "data")) schema else logicalRead(spark, snap, sel)
     }
-    val oldRows = side(fromSnapshotId, fromEntries)
-    val newRows = side(toSnapshotId, toEntries)
+    val oldRows = side(from)
+    val newRows = side(to)
     newRows.exceptAll(oldRows).withColumn("op", lit("insert"))
       .unionByName(oldRows.exceptAll(newRows).withColumn("op", lit("delete")))
   }
@@ -1050,7 +1058,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       .stringToTimestamp(UTF8String.fromString(s), zone).map(DateTimeUtils.microsToInstant)
       .getOrElse(throw new IllegalArgumentException(s"readRange: '$s' is not a timestamp"))
     val (lo, hi) = (bound(minTs), bound(maxTs))
-    val (snap, all) = liveEntries(spark)
+    val snap = live
+    val all = snap.entries
     // ts pruning applies to DATA file-sets only — delete key-sets carry no
     // ts range and must always apply, or a range read would resurrect
     // MOR-deleted rows whose delete entry sits "outside" the range
@@ -1103,6 +1112,12 @@ object SnapshotTable {
     /** Could this file-set hold a row with ts in [loMs, hiMs]? */
     def overlaps(loMs: Long, hiMs: Long): Boolean = maxTsMs >= loMs && minTsMs <= hiMs
   }
+
+  /** A snapshot as a read plans it: its id (named in the read's errors),
+    * the bucket count its manifest records (pushed conv_id filters hash
+    * with it, so a snapshot from before a [[SnapshotTable.rebucket]] prunes under its own
+    * layout) and its entries. */
+  private final case class Snap(id: Long, buckets: Int, entries: Seq[BucketEntry])
 
   /** The schema of merge-on-read delete key file-sets. */
   private lazy val DeleteKeySchema = parseSchema("struct<conv_id:string,turn_idx:int>").get

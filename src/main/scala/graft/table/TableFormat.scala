@@ -171,24 +171,25 @@ object TableFormat {
   /** The column mapping, present only once an ALTER created one. */
   def mapping(dir: String): Option[Seq[ColumnMapEntry]] = readMeta(dir).flatMap(_.mapping)
 
-  private def physNames(dir: String): Option[Map[String, String]] =
-    mapping(dir).map(_.filterNot(_.dropped).map(m => m.name -> m.phys).toMap)
+  /** LOGICAL → PHYSICAL names of the table's live columns; empty when the
+    * table has no mapping (the common case and every pre-mapping table),
+    * where every name is its own. */
+  def physicalNames(dir: String): Map[String, String] =
+    mapping(dir).fold(Map.empty[String, String])(_.filterNot(_.dropped).map(m => m.name -> m.phys).toMap)
 
   /** Rename a LOGICAL-named schema to the PHYSICAL names frozen in data
-    * files (identity when the table has no mapping — the common case and
-    * every pre-mapping table). Positions and types are untouched: V2 rows
+    * files ([[physicalNames]]). Positions and types are untouched: V2 rows
     * are positional, so this only redirects parquet column resolution. */
-  def toPhysical(dir: String, schema: StructType): StructType =
-    physNames(dir).fold(schema)(byName =>
-      StructType(schema.fields.map(f => byName.get(f.name).fold(f)(p => f.copy(name = p)))))
+  def toPhysical(byName: Map[String, String], schema: StructType): StructType =
+    StructType(schema.fields.map(f => byName.get(f.name).fold(f)(p => f.copy(name = p))))
 
   /** Rewrite filter attribute names logical→physical so pushed filters
     * keep driving parquet row-group skipping after a rename. Filters
     * naming un-mapped columns pass through; filter shapes outside the
     * rewritable subset are DROPPED — safe because every pushed filter is
     * also kept residual (Spark re-evaluates rows). */
-  def filtersToPhysical(dir: String, filters: Array[Filter]): Array[Filter] =
-    physNames(dir).fold(filters) { byName =>
+  def filtersToPhysical(byName: Map[String, String], filters: Array[Filter]): Array[Filter] =
+    if (byName.isEmpty) filters else {
       def ren(a: String): String = byName.getOrElse(a, a)
       def go(f: Filter): Option[Filter] = f match {
         case EqualTo(a, v)            => Some(EqualTo(ren(a), v))

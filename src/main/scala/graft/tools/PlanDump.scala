@@ -38,8 +38,8 @@ object PlanDump {
     sb.append(flag.queryExecution.explainString(
       org.apache.spark.sql.execution.FormattedMode)).append("```\n")
 
-    // a library read of the snapshot table: Spark's parquet scan over the
-    // manifest's files (ManifestFileIndex), planned without a listing job
+    // a library read of the snapshot table: the connector's columnar scan
+    // over the manifest's files, planned without a listing job
     sb.append("\n## snapshot table library read (files from the manifest)\n\n```\n")
     val tableDir = Files.createTempDirectory("plandump-snapshot")
     val table = new graft.table.SnapshotTable(tableDir.toString, numBuckets = 4)

@@ -31,14 +31,14 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
   test("branch commits diverge from main; main's files stay byte-untouched; " +
     "fast-forward publishes the branch head onto CURRENT") {
-    val dir = Files.createTempDirectory("branch").toString
+    val dir = suiteTempDir("branch")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val all = mkTurns(16)
 
     // main line: first half of the convs
     val snapMain = table.commit(spark,
       ExtractPipeline.extract(spark, half(all, lo = true)), "run-main").get
-    val mainFiles = table.read(spark).inputFiles.toSet
+    val mainFiles = scannedFiles(table.read(spark)).toSet
     val mainRows = table.read(spark).count()
 
     // cut a branch and land the second half there over TWO commits
@@ -56,7 +56,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
     // main is untouched: same snapshot, same file set, byte-identical files
     assert(table.currentSnapshotId.contains(snapMain))
-    assert(table.read(spark).inputFiles.toSet == mainFiles)
+    assert(scannedFiles(table.read(spark)).toSet == mainFiles)
     assert(table.read(spark).count() == mainRows)
 
     // the branch sees main's history PLUS both branch commits
@@ -74,7 +74,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
   test("non-fast-forward is refused after main advances independently; " +
     "main and branch commits allocate distinct snapshot ids") {
-    val dir = Files.createTempDirectory("branch").toString
+    val dir = suiteTempDir("branch")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val all = mkTurns(16)
 
@@ -95,7 +95,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
   test("GC: expireSnapshots pins the branch head; removeOrphanManifests " +
     "never reclaims branch-reachable manifests until the branch is dropped") {
-    val dir = Files.createTempDirectory("branch").toString
+    val dir = suiteTempDir("branch")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val all = mkTurns(16)
 
@@ -130,7 +130,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
   test("expireSnapshots keeps branch-reachable intermediates: a " +
     "multi-commit branch still fast-forwards after keepLast=1") {
-    val dir = Files.createTempDirectory("branch").toString
+    val dir = suiteTempDir("branch")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val all = mkTurns(16)
     table.commit(spark,
@@ -154,7 +154,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
   test("SQL/connector faces: CALL create_branch, V2 append with " +
     "option(branch), read by branch, t$branches metadata, CALL fast_forward") {
     import testImplicits._
-    val wh = Files.createTempDirectory("branch_wh").toString
+    val wh = suiteTempDir("branch_wh")
     val dir = s"$wh/bt"
     Seq(("c1", 0, "main-row")).toDF("conv_id", "turn_idx", "text")
       .write.format("graft-snapshot").mode("append")
@@ -199,7 +199,7 @@ class BranchSpec extends AnyFunSuite with SparkTestBase {
 
   test("guards: duplicate branch name refused; WAP staging cannot target " +
     "a branch; branching from an unknown snapshot refused") {
-    val dir = Files.createTempDirectory("branch").toString
+    val dir = suiteTempDir("branch")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val all = mkTurns(8)
     table.commit(spark,

@@ -5,7 +5,7 @@ import graft.pipe.ExtractPipeline
 import graft.table.SnapshotTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** Merge-on-read delete suite (Iceberg v2 equality-delete-file analog):
   * deleting rows writes only their keys; reads apply them as a co-bucketed
@@ -16,7 +16,7 @@ import java.nio.file.{Files, Paths}
 class MorDeleteSpec extends AnyFunSuite with SparkTestBase {
 
   private def freshTable(nConvs: Int = 12): (String, SnapshotTable) = {
-    val dir = Files.createTempDirectory("mor").toString
+    val dir = suiteTempDir("mor")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, 11L, nConvs, hotBase = 30, partitions = 2)
     table.commit(spark, ExtractPipeline.extract(spark, turns), "base").get
@@ -30,7 +30,7 @@ class MorDeleteSpec extends AnyFunSuite with SparkTestBase {
     val before = table.read(spark)
     val total = before.count()
     val preSnap = table.currentSnapshotId.get
-    val dataFiles = before.inputFiles.toSet
+    val dataFiles = scannedFiles(before).toSet
 
     // delete one full conversation + one single turn of another
     val victimConv = before.select("conv_id").as[String].head()
@@ -51,8 +51,8 @@ class MorDeleteSpec extends AnyFunSuite with SparkTestBase {
     // the surviving turn of the partially-deleted conversation is intact
     assert(table.readConversation(spark, otherTurn._1).count() > 0)
     // data files untouched: the new snapshot still references every one
-    assert(dataFiles.subsetOf(after.inputFiles.toSet ++
-      table.read(spark).inputFiles.toSet)) // anti-join side adds delete files
+    assert(dataFiles.subsetOf(scannedFiles(after).toSet ++
+      scannedFiles(table.read(spark)).toSet)) // anti-join side adds delete files
     assert(table.readAt(spark, preSnap).count() == total) // time travel
     // stats still describe the data file-sets (deletes not netted)
     import org.apache.spark.sql.functions.{sum => fsum}

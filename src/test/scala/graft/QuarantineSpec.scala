@@ -8,7 +8,6 @@ import graft.table.SnapshotTable
 import org.apache.spark.SparkException
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** Poison-row quarantine (ExtractConfig.failFast): at 10^12-turn scale one
   * pathological payload must not kill a multi-hour job, so a kernel
@@ -81,7 +80,7 @@ class QuarantineSpec extends AnyFunSuite with SparkTestBase {
   test("operator story: quarantine -> triage via dead-letter sample -> " +
     "replaceWhere reprocess, other buckets untouched") {
     import testImplicits._
-    val dir = Files.createTempDirectory("quar").toString
+    val dir = suiteTempDir("quar")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val acc = ExtractPipeline.newMetrics(spark)
     val turns = corpusWithPoison()
@@ -98,7 +97,7 @@ class QuarantineSpec extends AnyFunSuite with SparkTestBase {
     val convs = acc.failedSamples.sample.map(_.conv_id).distinct
     assert(convs == Vector("poison"))
 
-    val before = table.read(spark).inputFiles.toSet
+    val before = scannedFiles(table.read(spark)).toSet
     val poisonBucket = table.bucketOfId("poison")
 
     // Kernel fixed: re-extract ONLY the quarantined conversations and swap
@@ -120,7 +119,7 @@ class QuarantineSpec extends AnyFunSuite with SparkTestBase {
     // the poison conversation's bucket (all other buckets' files identical)
     assert(healed.count() ==
       TranscriptGen.totalTurns(10, 20) + 2)
-    val after = healed.inputFiles.toSet
+    val after = scannedFiles(healed).toSet
     def bucketOfFile(f: String): Int =
       "bucket=(\\d+)".r.findFirstMatchIn(f).get.group(1).toInt
     assert(before.filter(bucketOfFile(_) != poisonBucket) ==

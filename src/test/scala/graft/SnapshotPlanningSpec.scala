@@ -49,7 +49,7 @@ class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
   test("manifest/footer schema parity on every library writer path: commit, " +
     "streaming append, MOR key sets, compact") {
     import testImplicits._
-    val dir = Files.createTempDirectory("parity-lib").toString
+    val dir = suiteTempDir("parity-lib")
     val table = new SnapshotTable(dir, numBuckets = 4)
     table.commit(spark, (0 until 12).map(i => mk(s"c$i", 0, "base")).toDS(), "base")
     (0 until 2).foreach { b =>
@@ -66,7 +66,7 @@ class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
 
   test("manifest/footer schema parity on every V2 writer path: INSERT, COW " +
     "UPDATE/DELETE, ADD COLUMNS, RENAME/DROP under a column mapping, compact") {
-    val wh = Files.createTempDirectory("parity-wh").toString
+    val wh = suiteTempDir("parity-wh")
     val s: SparkSession = spark.newSession()
     s.conf.set("spark.sql.catalog.graft", "graft.connector.GraftCatalog")
     s.conf.set("spark.sql.catalog.graft.warehouse", wh)
@@ -122,7 +122,7 @@ class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
   test("planning a read runs no Spark job; a point lookup over a bucket with " +
     "3 appended file sets runs exactly one") {
     import testImplicits._
-    val dir = Files.createTempDirectory("plan-jobs").toString
+    val dir = suiteTempDir("plan-jobs")
     val table = new SnapshotTable(dir, numBuckets = 2)
     (0 until 3).foreach { b =>
       StreamingExtract.commitBatch(table,
@@ -163,7 +163,7 @@ class SnapshotPlanningSpec extends AnyFunSuite with SparkTestBase {
     assert(onDisk.size >= 48)
     // the same strings Spark's own listing of those paths names them by
     val listed = spark.read.parquet(entries.map(_.path): _*).inputFiles.sorted.toSeq
-    assert(df.inputFiles.sorted.toSeq == listed)
+    assert(scannedFiles(df).sorted == listed)
     assert(listed.map(new org.apache.hadoop.fs.Path(_).toUri.getPath) == onDisk.sorted)
   }
 

@@ -22,7 +22,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("kill-resume: partial commit + orphan files → exactly-once final output") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
 
@@ -61,7 +61,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("stats: per-bucket metadata-only aggregates match the data, cost no data-file IO") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapstats").toString
+    val dir = suiteTempDir("snapstats")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
     // two commits so at least one bucket has >1 file set to aggregate over
@@ -94,7 +94,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("bucket-pruned conversation read touches only one bucket's files") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, 40, 80, partitions = 3)
     ExtractJob.runIncremental(spark, table, turns, runId = "runP")
@@ -104,7 +104,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.nonEmpty && rows.forall(_._1 == "conv000007"))
     assert(rows.map(_._2).sorted.sameElements(0 until TranscriptGen.turnCount(7, 80)))
     // pruning: every scanned file lives under exactly one bucket dir
-    val buckets = df.inputFiles.map(f => "bucket=(\\d+)".r.findFirstMatchIn(f).get.group(1)).distinct
+    val buckets = scannedFiles(df).map(f => "bucket=(\\d+)".r.findFirstMatchIn(f).get.group(1)).distinct
     assert(buckets.length == 1, buckets.mkString(","))
   }
 
@@ -119,7 +119,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("compaction folds multi-run buckets into one run, preserving data") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 30, 60, partitions = 2)
     // two incremental runs → two run dirs referenced
@@ -153,7 +153,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("expireSnapshots: old files gone, kept snapshots still time-travel, live reads unaffected") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 30, 60, partitions = 2)
     // snap 0: partial, snap 1: full, snap 2: compaction rewrite
@@ -199,7 +199,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("readRange prunes file-sets by manifest ts stats before scanning") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 30, 60, partitions = 2)
     // two appended runs with DISJOINT ts windows (generator gives each
@@ -219,8 +219,9 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     // a query over the early window must scan ZERO runLate files
     val df = table.readRange(spark,
       entries.filter(_.runId == "runEarly").map(_.minTs).min, earlyMax)
-    assert(df.inputFiles.nonEmpty && df.inputFiles.forall(_.contains("run=runEarly")),
-      df.inputFiles.mkString(","))
+    val scanned = scannedFiles(df)
+    assert(scanned.nonEmpty && scanned.forall(_.contains("run=runEarly")),
+      scanned.mkString(","))
     // row predicate still exact: equals a full-scan filter
     val expected = table.read(spark)
       .where(col("ts") <= to_timestamp(lit(earlyMax)))
@@ -236,7 +237,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     def turn(conv: String, ts: String): ExtractedTurn =
       ExtractedTurn(conv, 0, "user", "html", Timestamp.valueOf(ts), conv,
         Seq(Span(0, 0, conv.length, "p", conv)), 1, 0, conv.length, 1.0)
-    val table = new SnapshotTable(Files.createTempDirectory("snap").toString, numBuckets = 4)
+    val table = new SnapshotTable(suiteTempDir("snap"), numBuckets = 4)
     // the manifest floors both runs' ts to the second: runA records
     // 10:00:00 for a row at 10:00:00.700
     table.commit(spark, Seq(turn("a", "2024-01-01 10:00:00.700")).toDS(), "runA")
@@ -244,7 +245,8 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
       replaceBuckets = false)
     def convs(lo: String, hi: String) = {
       val df = table.readRange(spark, lo, hi)
-      assert(df.inputFiles.forall(_.contains("run=runA")), df.inputFiles.mkString(","))
+      val scanned = scannedFiles(df)
+      assert(scanned.nonEmpty && scanned.forall(_.contains("run=runA")), scanned.mkString(","))
       df.select("conv_id").as[String].collect().toSeq
     }
     assert(convs("2024-01-01T10:00:00.500", "2024-01-01T11:00:00") == Seq("a"))
@@ -260,7 +262,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     val at = Timestamp.from(java.time.Instant.parse("1969-12-31T23:59:59.999500Z"))
     val row = ExtractedTurn("old", 0, "user", "html", at, "old",
       Seq(Span(0, 0, 3, "p", "old")), 1, 0, 3, 1.0)
-    val table = new SnapshotTable(Files.createTempDirectory("snap").toString, numBuckets = 4)
+    val table = new SnapshotTable(suiteTempDir("snap"), numBuckets = 4)
     table.commit(spark, Seq(row).toDS(), "runOld")
     val entry = table.committedEntries(spark).filter(_.kind == "data")
     assert(entry.map(e => (e.minTs, e.maxTs)) == Seq(("1969-12-31T23:59:59", "1969-12-31T23:59:59")))
@@ -272,7 +274,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("commit refuses a schema change against kept entries; manifest records schema") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 20, 40, partitions = 2)
     ExtractJob.runIncremental(spark, table, turns, runId = "runS")
@@ -301,7 +303,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("replaceWhere rewrites only the target conversation's bucket; " +
     "other buckets' files untouched, time travel intact") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, 40, 80, partitions = 3)
     ExtractJob.runIncremental(spark, table, turns, runId = "runFull")
@@ -355,7 +357,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("merge: keyed upsert updates matched rows and inserts new ones, " +
     "rewrites only owning buckets, refuses duplicate update keys") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, 40, 80, partitions = 3)
     ExtractJob.runIncremental(spark, table, turns, runId = "runFull")
@@ -406,7 +408,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("diff: row-level changelog between snapshots — a merged correction " +
     "emits its delete+insert pair; unchanged buckets' files never read") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val turns = TranscriptGen.dataset(spark, seed, 40, 80, partitions = 3)
     ExtractJob.runIncremental(spark, table, turns, runId = "runFull")
@@ -423,8 +425,9 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     // manifest compare prunes to the ONE changed bucket — no other
     // bucket's files appear in the scan
     val b = table.bucketOfId(convId)
-    assert(d.inputFiles.nonEmpty && d.inputFiles.forall(_.contains(s"bucket=$b")),
-      d.inputFiles.mkString(","))
+    val scanned = scannedFiles(d)
+    assert(scanned.nonEmpty && scanned.forall(_.contains(s"bucket=$b")),
+      scanned.mkString(","))
     val rows = d.select("op", "conv_id", "turn_idx", "text")
       .as[(String, String, Int, String)].collect().toSet
     assert(rows == Set(
@@ -436,7 +439,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("deleteConversations drops an emptied bucket from the manifest") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val nc = 40
     val turns = TranscriptGen.dataset(spark, seed, nc, 80, partitions = 3)
@@ -461,7 +464,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
 
   test("manifest carries lineage and per-bucket extraction metrics") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 30, 60, partitions = 2)
     ExtractJob.runIncremental(spark, table, turns, runId = "run1")
@@ -487,7 +490,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("readChanges: append-only delta between snapshots; rewrite detected; " +
     "allowReplaced re-delivers the rewritten bucket") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snap").toString
+    val dir = suiteTempDir("snap")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, 30, 60, partitions = 2)
     val key = (df: org.apache.spark.sql.DataFrame) =>
@@ -526,7 +529,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("rebucket: layout evolution preserves data and time travel; open() " +
     "recovers the live bucket count; shrink leaves no stale old-layout entries") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snaprebucket").toString
+    val dir = suiteTempDir("snaprebucket")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
     ExtractJob.runIncremental(spark, table, turns, runId = "runA")
@@ -568,7 +571,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     "time-travels, expireSnapshots never collects a tagged snapshot, " +
     "dropTag releases the pin") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snaptag").toString
+    val dir = suiteTempDir("snaptag")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
     val half = turns.withColumn("bucket", table.bucketOf)
@@ -607,7 +610,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     "the age horizon, young (possibly in-flight) data and every " +
     "manifest-referenced file survive, time travel intact") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snaporphan").toString
+    val dir = suiteTempDir("snaporphan")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
     ExtractJob.runIncremental(spark, table, turns, runId = "runA")
@@ -615,7 +618,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
       .select("conv_id", "turn_idx", "text")
       .as[(String, Int, String)].collect().sorted.toSeq
     val before = rows(table.read(spark))
-    val liveFiles = table.read(spark).inputFiles.sorted.toSeq
+    val liveFiles = scannedFiles(table.read(spark)).sorted
 
     // a crashed writer's residue: data written, manifest never committed
     val sample = turns.limit(5)
@@ -641,7 +644,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
     assert(Files.exists(java.nio.file.Paths.get(s"$dir/data/run=inflight/bucket=2")),
       "young data inside the horizon must survive (may be a commit in flight)")
     // referenced data byte-untouched, live read + time travel unchanged
-    assert(table.read(spark).inputFiles.sorted.toSeq == liveFiles)
+    assert(scannedFiles(table.read(spark)).sorted == liveFiles)
     assert(rows(table.read(spark)) == before)
     assert(rows(table.readAt(spark, 0L)) == before)
 
@@ -657,7 +660,7 @@ class SnapshotResumeSpec extends AnyFunSuite with SparkTestBase {
   test("optimistic concurrency: a racing claim on the next snapshot id makes " +
     "the loser THROW (no silent clobber); a crashed claim is invisible to " +
     "readers and reclaimed age-gated by removeOrphanManifests") {
-    val dir = Files.createTempDirectory("snap_occ").toString
+    val dir = suiteTempDir("snap_occ")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, seed, nConvs = 20, hotBase = 40)
     assert(ExtractJob.runIncremental(spark, table, turns, runId = "occA").contains(0L))

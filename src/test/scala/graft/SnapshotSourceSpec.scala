@@ -7,7 +7,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** DataSource V2 connector suite (`spark.read.format("graft-snapshot")`):
@@ -36,7 +35,7 @@ class SnapshotSourceSpec extends AnyFunSuite with SparkTestBase {
     * +500 ms inside a second to pin the manifest's second-granularity
     * widening. */
   private lazy val fixture: (String, SnapshotTable) = {
-    val dir = Files.createTempDirectory("snapsource").toString
+    val dir = suiteTempDir("snapsource")
     val table = new SnapshotTable(dir, numBuckets = 4)
     import testImplicits._
     val a = (0 until 20).map(i => mk(s"conv$i", 0, baseA + i * 60000L))
@@ -158,6 +157,44 @@ class SnapshotSourceSpec extends AnyFunSuite with SparkTestBase {
     val kept = scan2.keptEntries
     assert(kept.size == 1 && kept.head.path.contains("run=runB"), kept.toString)
     assert(scan2.filterAttributes().map(_.describe()).toSeq == Seq("conv_id"))
+  }
+
+  test("a join on a column other than conv_id plans: the runtime-filter " +
+    "attribute is offered only when the scan reads conv_id") {
+    import testImplicits._
+    val small = Seq(0, 1).toDF("k")
+    assert(load().join(small, col("turn_idx") === col("k")).count() == 41L)
+    assert(load().join(small.where(col("k") === 1), col("turn_idx") === col("k"))
+      .count() == 20L)
+    assert(scanOf(load().select("turn_idx")).filterAttributes().isEmpty)
+  }
+
+  test("the library and the V2 face plan one columnar scan, whose reader " +
+    "factory is built once") {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    val (_, table) = fixture
+    Seq(load(), table.read(spark)).foreach { df =>
+      val scans = df.queryExecution.executedPlan.collect { case c: ColumnarToRowExec => c }
+        .flatMap(_.collect { case b: BatchScanExec => b.scan })
+      assert(scans.size == 1 && scans.head.isInstanceOf[SnapshotScan],
+        df.queryExecution.executedPlan.toString)
+    }
+    val scan = scanOf(load())
+    assert(scan.createReaderFactory() eq scan.createReaderFactory())
+  }
+
+  test("a pushed conv_id filter on a snapshot from before a rebucket prunes " +
+    "by that snapshot's bucket count, on both faces") {
+    import testImplicits._
+    val dir = suiteTempDir("snapsource-rebucket")
+    val four = new SnapshotTable(dir, numBuckets = 4)
+    four.commit(spark, (0 until 12).map(i => mk(s"r$i", 0, baseA)).toDS(), "runA")
+    val eight = four.rebucket(spark, 8, "runB")
+    val conv = (0 until 12).map(i => s"r$i").find(c => four.bucketOfId(c) != eight.bucketOfId(c)).get
+    val want = Set((conv, 0, s"body of $conv#0"))
+    assert(key(SnapshotTable.open(dir).readAt(spark, 0L).where(col("conv_id") === conv)) == want)
+    assert(key(spark.read.format("graft-snapshot").option("snapshotId", "0").load(dir)
+      .where(col("conv_id") === conv)) == want)
   }
 
   test("manifest statistics: post-pruning row count with zero data-file IO") {

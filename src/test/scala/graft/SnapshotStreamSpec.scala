@@ -1,11 +1,11 @@
 package graft
 
-import graft.connector.{SnapshotInputPartition, SnapshotMicroBatchStream, SnapshotOffset}
+import graft.connector.{SnapshotMicroBatchStream, SnapshotOffset}
 import graft.model.{ExtractedTurn, Span}
 import graft.table.SnapshotTable
 import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 
 /** Streaming face of the graft-snapshot connector: offsets are snapshot
@@ -27,7 +27,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("micro-batches follow commits: full-history batch 0, then per-commit deltas") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapstream").toString
+    val dir = suiteTempDir("snapstream")
     val table = new SnapshotTable(dir, numBuckets = 4)
     table.commit(spark, (0 until 10).map(i => mk(s"c$i", 0)).toDS(), "runA")
 
@@ -55,7 +55,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("startSnapshotId skips history: only commits after start are delivered") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapstream2").toString
+    val dir = suiteTempDir("snapstream2")
     val table = new SnapshotTable(dir, numBuckets = 4)
     table.commit(spark, (0 until 10).map(i => mk(s"c$i", 0)).toDS(), "runA")
     val cur = table.currentSnapshotId.get
@@ -78,7 +78,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("append-only guard: a compaction under the stream throws unless allowReplaced") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapstream3").toString
+    val dir = suiteTempDir("snapstream3")
     val table = new SnapshotTable(dir, numBuckets = 4)
     table.commit(spark, (0 until 6).map(i => mk(s"c$i", 0)).toDS(), "runA")
     table.commit(spark, (0 until 6).map(i => mk(s"c$i", 1)).toDS(), "runB",
@@ -104,7 +104,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
 
   test("a delta that crosses a rebucket prunes by the bucket count of the manifest it read") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapstream4").toString
+    val dir = suiteTempDir("snapstream4")
     val table = new SnapshotTable(dir, numBuckets = 4)
     table.commit(spark, (0 until 12).map(i => mk(s"c$i", 0)).toDS(), "runA")
     table.rebucket(spark, 8, "runB") // snapshot 1 rewrites every row under 8 buckets
@@ -116,7 +116,7 @@ class SnapshotStreamSpec extends AnyFunSuite with SparkTestBase {
       Array(org.apache.spark.sql.sources.EqualTo("conv_id", conv)), startId = 0L,
       allowReplaced = true)
     val files = stream.planInputPartitions(SnapshotOffset(0L), SnapshotOffset(1L)).toSeq
-      .flatMap { case SnapshotInputPartition(fs) => fs.map(_.filePath.toString) }
+      .flatMap { case FilePartition(_, fs) => fs.map(_.filePath.toString) }
     assert(files.nonEmpty && files.forall(_.contains(s"run=runB/bucket=${eight.bucketOfId(conv)}/")),
       files.mkString(", "))
   }

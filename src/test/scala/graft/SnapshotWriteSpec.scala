@@ -45,7 +45,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("first V2 write creates snapshot 0; library open reads it back exactly") {
-    val dir = Files.createTempDirectory("v2write").toString
+    val dir = suiteTempDir("v2write")
     val rows = (0 until 30).flatMap(i => Seq(mk(s"c$i", 0), mk(s"c$i", 1)))
     write(dir, rows, "w1")
 
@@ -62,7 +62,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
 
   test("every written file is internally ordered by (conv_id, turn_idx)") {
     import testImplicits._
-    val dir = Files.createTempDirectory("v2write_ord").toString
+    val dir = suiteTempDir("v2write_ord")
     // deliberately unsorted, multi-partition input
     val rows = scala.util.Random.shuffle(
       (0 until 40).flatMap(i => (0 until 3).map(j => mk(s"c$i", j))).toList)
@@ -70,7 +70,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
       .mode("append").option("numBuckets", "4").option("runId", "w1").save(dir)
 
     val table = SnapshotTable.open(dir)
-    val files = table.read(spark).inputFiles
+    val files = scannedFiles(table.read(spark))
     assert(files.nonEmpty)
     files.foreach { f =>
       val inFile = spark.read.parquet(f).select("conv_id", "turn_idx")
@@ -82,7 +82,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("appends chain snapshots; readChanges sees exactly the delta; count(*) pushdown tracks") {
-    val dir = Files.createTempDirectory("v2write_app").toString
+    val dir = suiteTempDir("v2write_app")
     val a = (0 until 10).map(i => mk(s"c$i", 0))
     val b = (0 until 4).map(i => mk(s"late$i", 0))
     write(dir, a, "w1")
@@ -99,7 +99,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
 
   test("interop: library commit + V2 append + compact stay one consistent table") {
     import testImplicits._
-    val dir = Files.createTempDirectory("v2write_mix").toString
+    val dir = suiteTempDir("v2write_mix")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val a = (0 until 8).map(i => mk(s"lib$i", 0))
     table.commit(spark, a.toDS(), "libRun")
@@ -120,11 +120,11 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
     import testImplicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("v2write_stream").toString
+    val dir = suiteTempDir("v2write_stream")
     val mem = MemoryStream[ExtractedTurn]
     val q = mem.toDS().toDF().writeStream.format("graft-snapshot")
       .option("numBuckets", "4")
-      .option("checkpointLocation", Files.createTempDirectory("v2chk").toString)
+      .option("checkpointLocation", suiteTempDir("v2chk"))
       .outputMode("append").start(dir)
     try {
       mem.addData((0 until 6).map(i => mk(s"s$i", 0)): _*)
@@ -151,11 +151,11 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("attempt durability: staged writes, deterministic names, runId-collision fail-fast") {
-    val dir = Files.createTempDirectory("v2write_idem").toString
+    val dir = suiteTempDir("v2write_idem")
     val rows = (0 until 12).map(i => mk(s"c$i", 0))
     write(dir, rows, "w1")
     val table = SnapshotTable.open(dir)
-    val before = table.read(spark).inputFiles.sorted.toSeq
+    val before = scannedFiles(table.read(spark)).sorted
     assert(before.nonEmpty && before.forall(!_.contains("_staging")))
     // names are partition-deterministic (no task-attempt suffix): a
     // replayed/speculative twin RENAMING the same target overwrites
@@ -173,13 +173,13 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
     assert(msgs(ex).exists(_.contains("already committed")), msgs(ex).toString)
     val after = SnapshotTable.open(dir)
     assert(after.currentSnapshotId.contains(0L))
-    assert(after.read(spark).inputFiles.sorted.toSeq == before)
+    assert(scannedFiles(after.read(spark)).sorted == before)
     assert(after.read(spark).count() == 12L)
   }
 
   test("generic schema: a non-ExtractedTurn dataframe writes to a fresh table and reads back") {
     import testImplicits._
-    val dir = Files.createTempDirectory("v2write_gen").toString
+    val dir = suiteTempDir("v2write_gen")
     val df = Seq(("convA", new Timestamp(base), "payload-1"),
       ("convB", new Timestamp(base + 1000L), "payload-2"))
       .toDF("conv_id", "ts", "payload")
@@ -195,7 +195,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("a crashed prior attempt's stale bucket files are cleared by the driver publish") {
-    val dir = Files.createTempDirectory("v2write_stale").toString
+    val dir = suiteTempDir("v2write_stale")
     // fabricate a crashed attempt of run w1: a renamed file from a WIDER
     // partition layout sits in a bucket dir, unreferenced by any manifest
     val staleDir = java.nio.file.Paths.get(dir, "data", "run=w1", "bucket=2")
@@ -213,7 +213,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
 
   test("replay lineage survives compaction: a replayed epoch after compact is still a no-op") {
     import testImplicits._
-    val dir = Files.createTempDirectory("v2write_compact").toString
+    val dir = suiteTempDir("v2write_compact")
     write(dir, (0 until 8).map(i => mk(s"c$i", 0)), "qidX-0") // "epoch 0"
     val table = SnapshotTable.open(dir)
     table.compact(spark, "compactRun") // CURRENT's entries now carry compactRun
@@ -227,7 +227,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
 
   test("snapshot GC interop: expireSnapshots reclaims V2-written file-sets that only expired manifests reference") {
     import testImplicits._
-    val dir = Files.createTempDirectory("v2write_gc").toString
+    val dir = suiteTempDir("v2write_gc")
     write(dir, (0 until 6).map(i => mk(s"g$i", 0)), "w1") // snap 0
     // overwrite: snap 1 references ONLY w2's files; w1's survive for time travel
     (0 until 2).map(i => mk(s"h$i", 0)).toDS().toDF()
@@ -245,7 +245,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("removeOrphanFiles collects a crashed V2 writer's run dir including its _staging tree") {
-    val dir = Files.createTempDirectory("v2write_orphan").toString
+    val dir = suiteTempDir("v2write_orphan")
     write(dir, (0 until 4).map(i => mk(s"k$i", 0)), "w1")
     // a crashed attempt: unreferenced run dir with bucket data AND a
     // non-empty staging subtree (this used to make the residue sweep throw)
@@ -263,7 +263,7 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest ts stats from the write match the data (ts-range pruning works on V2-written sets)") {
-    val dir = Files.createTempDirectory("v2write_ts").toString
+    val dir = suiteTempDir("v2write_ts")
     write(dir, Seq(mk("early", 0)), "w1") // ts = base
     write(dir, Seq(mk("late", 3600)), "w2") // ts = base + 1h
     val df = spark.read.format("graft-snapshot").load(dir)

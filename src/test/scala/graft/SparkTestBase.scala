@@ -40,6 +40,14 @@ trait SparkTestBase extends BeforeAndAfterAll { self: Suite =>
     d.getPath
   }
 
+  /** The files the planned snapshot scans of `df` read. Every snapshot
+    * read is a V2 scan, which `Dataset.inputFiles` does not see (it reports
+    * file relations only). */
+  protected def scannedFiles(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }.collect { case s: graft.connector.SnapshotScan => s.inputFiles }.flatten.distinct
+
   /** `body` on this thread as if streaming query `queryId` ran it: the
     * micro-batch runIds the snapshot sinks derive are scoped by that id. */
   protected def inQuery[T](queryId: String)(body: => T): T = {
