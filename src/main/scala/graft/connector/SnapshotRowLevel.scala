@@ -182,11 +182,7 @@ final class SnapshotCowScan(dir: String, snapshotId: Long, entries: Seq[BucketEn
     // every DELETE, even ones the metadata/MOR deleteWhere lane takes):
     // a COW rewrite over buckets with pending merge-on-read deletes
     // would re-materialize the deleted rows
-    if (entries.exists(_.kind == "delete"))
-      throw new IllegalStateException(
-        s"$dir has pending merge-on-read deletes — cannot run a " +
-          "copy-on-write row-level operation over them; fold them first " +
-          "(SnapshotTable.compact / CALL graft.system.compact)")
+    SnapshotRead.morGate(dir, snapshotId, entries, "run a copy-on-write row-level operation")
     val kept = keptEntries
     scannedBuckets = kept.map(_.bucket).toSet
     SnapshotRead.filePartitions(spark,

@@ -23,15 +23,10 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
 import java.util.OptionalLong
 import scala.jdk.CollectionConverters._
 
-/** One snapshot's entries as a read-only table: the read every face plans
-  * ([[SnapshotScan]]). `tableSchema` names the columns as the scan reports
-  * them, and `physical` maps those names to the ones frozen in the data
-  * files (empty: the same names). `numBuckets` is the count of the manifest
-  * the entries came from: pushed conv_id filters hash with it. The library
-  * reads its physical names through it directly
-  * ([[SnapshotRead.frame]]); [[SnapshotV2Table]] builds one after its
-  * merge-on-read gate, under its logical schema and the table's column
-  * mapping. */
+/** One snapshot's entries as a read-only table, planned as [[SnapshotScan]]
+  * by every face. `physical` maps the schema's names to those frozen in the
+  * files (empty: the same names); `numBuckets` is the count of the entries'
+  * manifest, which pushed conv_id filters hash with. */
 final class SnapshotReadTable(dir: String, snapshotId: Long, entries: Seq[BucketEntry],
     tableSchema: StructType, numBuckets: Int, physical: Map[String, String] = Map.empty)
   extends Table with SupportsRead {
@@ -114,17 +109,9 @@ final class SnapshotCountScan(entries: Seq[BucketEntry])
 final case class SnapshotCountPartition(total: Long) extends InputPartition
 
 case object SnapshotCountReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val total = partition.asInstanceOf[SnapshotCountPartition].total
-    new PartitionReader[InternalRow] {
-      private var emitted = false
-      override def next(): Boolean = if (emitted) false else { emitted = true; true }
-      override def get(): InternalRow =
-        new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](total))
-      override def close(): Unit = ()
-    }
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new PartitionReaderFromIterator(Iterator.single(
+      InternalRow(partition.asInstanceOf[SnapshotCountPartition].total)))
 }
 
 /** The shared read machinery: manifest pruning from pushed filters, file
@@ -229,7 +216,7 @@ private[graft] object SnapshotRead {
   }
 
   /** The one listing of manifest file-sets, for every read face (the
-    * library's relation, the V2 and COW scans, the micro-batch stream): one
+    * scan, the COW scan, the micro-batch stream): one
     * `listStatus` per path on the driver, no Spark job, one result per path
     * in order. A path the manifest of `snapshotId` lists but the file
     * system no longer holds fails the read, naming both: skipping it would
@@ -254,37 +241,34 @@ private[graft] object SnapshotRead {
     }
   }
 
-  /** A library read: [[SnapshotScan]] over `entries` of `snapshotId`, read
-    * under `schema` with the names in the files. Planned ungrouped — a
-    * library frame offers no storage-partitioned join, and a bucket per task
-    * would cap a read's parallelism at its bucket count. No merge-on-read
-    * gate: the library applies pending deletes itself. */
+  /** A library read: the scan over `entries`, under `schema` as the files
+    * name it, with no merge-on-read gate (the library applies deletes
+    * itself), planned ungrouped — a library frame offers no
+    * storage-partitioned join to pay a bucket per task for. */
   def frame(spark: SparkSession, dir: String, snapshotId: Long, numBuckets: Int,
-      entries: Seq[BucketEntry], schema: StructType): DataFrame = {
+      entries: Seq[BucketEntry], schema: StructType): DataFrame =
     new org.apache.spark.sql.classic.Dataset[Row](
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
       DataSourceV2Relation.create(
         new SnapshotReadTable(dir, snapshotId, entries, schema, numBuckets), None, None,
         new CaseInsensitiveStringMap(Map("groupByBucket" -> "false").asJava)),
       ExpressionEncoder(schema))
-  }
 
   /** The schema of file-sets whose manifest schema is missing or does not
     * parse, inferred from a parquet footer and put through the manifest's
     * DDL form, which makes every field nullable as `spark.read.parquet`
     * does. */
   def footerSchema(spark: SparkSession, dir: String, snapshotId: Long,
-      paths: Seq[String], files: Seq[FileStatus]): StructType =
-    new ParquetFileFormat().inferSchema(spark, Map.empty, files)
+      paths: Seq[String]): StructType =
+    new ParquetFileFormat().inferSchema(spark, Map.empty,
+      listFiles(spark, dir, snapshotId, paths).flatten)
       .map(s => SnapshotTable.parseSchema(TableFormat.schemaDdl(s)).getOrElse(s))
       .getOrElse(throw new IllegalStateException(
         s"snapshot $snapshotId of $dir: no schema recorded and no parquet " +
           s"file to infer one from under ${paths.mkString(", ")}"))
 
   /** Files packed as Spark's file source packs them: split at
-    * `FilePartition.maxSplitBytes` (parquet is splittable), largest first,
-    * into [[FilePartition]]s — the partition count tracks bytes, not file
-    * count. */
+    * `FilePartition.maxSplitBytes`, largest first, into [[FilePartition]]s. */
   def filePartitions(spark: SparkSession, files: Seq[FileStatus]): Array[InputPartition] = {
     val listed = files.map(FileStatusWithMetadata(_))
     val maxSplit = FilePartition.maxSplitBytes(spark,
@@ -294,22 +278,17 @@ private[graft] object SnapshotRead {
     FilePartition.getFilePartitions(spark, splits, maxSplit).toArray
   }
 
-  /** The runtime-filter attribute of a scan that reads `schema`: conv_id,
-    * only when the scan outputs it — Spark resolves the attribute against
-    * the pruned output, and a join on another column must not fail to
-    * plan. */
+  /** A scan's runtime-filter attribute: conv_id, only if the scan reads it
+    * (Spark resolves it against the pruned output). */
   def runtimeFilterAttributes(schema: StructType): Array[NamedReference] =
     schema.fieldNames.filter(_.equalsIgnoreCase("conv_id")).map(Expressions.column)
 
   /** The one reader construction of every scan face (batch, COW,
     * micro-batch): Spark's parquet reader over the pruned schema and pushed
-    * filters, returning columnar batches whenever Spark's vectorized reader
-    * can (as Spark's own V2 parquet scan does). The schemas and filters name
-    * the scan's columns; `physical` renames them to the names frozen in the
-    * files, so a column-mapped table resolves parquet columns by physical
-    * name — rows and batches are positional, so the scan still reports its
-    * own names. A scan builds its factory once: each build broadcasts the
-    * Hadoop conf. */
+    * filters, returning columnar batches whenever its vectorized reader can.
+    * `physical` renames the scan's columns to those frozen in the files;
+    * rows and batches are positional, so the scan keeps its own names. Each
+    * call broadcasts the Hadoop conf: a scan builds its factory once. */
   def readerFactory(spark: SparkSession, physical: Map[String, String],
       dataSchema: StructType, required: StructType,
       pushed: Array[Filter]): PartitionReaderFactory = {
@@ -318,7 +297,8 @@ private[graft] object SnapshotRead {
     val columnar = fmt.supportBatch(spark, read)
     SnapshotReaderFactory(fmt.buildReaderWithPartitionValues(spark,
       TableFormat.toPhysical(physical, dataSchema), new StructType(), read,
-      TableFormat.filtersToPhysical(physical, pushed).toSeq,
+      // filters name the scan's columns: after a rename they stay residual
+      if (physical.forall { case (l, p) => l == p }) pushed.toSeq else Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> columnar.toString),
       spark.sessionState.newHadoopConfWithOptions(Map.empty)), columnar)
   }
@@ -370,8 +350,7 @@ final class SnapshotScan(dir: String, snapshotId: Long, entries: Seq[BucketEntry
 
   private def fileStatuses: Seq[FileStatus] = listing.flatten
 
-  /** The files this scan reads, as URI strings (what `Dataset.inputFiles`
-    * reports for a file relation; a V2 scan reports none there). */
+  /** The files this scan reads, as `Dataset.inputFiles` names them. */
   private[graft] def inputFiles: Seq[String] = fileStatuses.map(_.getPath.toUri.toString)
 
   override def readSchema(): StructType = required

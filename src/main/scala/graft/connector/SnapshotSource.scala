@@ -61,11 +61,9 @@ final class SnapshotSource extends TableProvider with DataSourceRegister
 
   override def shortName(): String = "graft-snapshot"
 
-  private def dirOf(options: CaseInsensitiveStringMap): String = {
-    val d = Option(options.get("path")).getOrElse(
+  private def dirOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).getOrElse(
       sys.error("graft-snapshot needs a path: spark.read.format(\"graft-snapshot\").load(dir)"))
-    d
-  }
 
   private def loadTable(options: CaseInsensitiveStringMap,
       externalSchema: Option[StructType] = None): SnapshotV2Table = {
@@ -362,12 +360,8 @@ final class SnapshotV2Table(dir: String, snapshotId: Long,
     // read from the footers, as the library face reads it
     val fromEntries = SnapshotTable.widestSchema(entries.map(_.schema))
       .orElse(entries.find(_.schema.nonEmpty).map(_.schema)) // legacy mix
-      .map(d => SnapshotTable.parseSchema(d).getOrElse {
-        val paths = entries.filter(_.kind == "data").map(_.path)
-        val spark = SparkSession.active
-        SnapshotRead.footerSchema(spark, dir, snapshotId, paths,
-          SnapshotRead.listFiles(spark, dir, snapshotId, paths).flatten)
-      })
+      .map(d => SnapshotTable.parseSchema(d).getOrElse(SnapshotRead.footerSchema(
+        SparkSession.active, dir, snapshotId, entries.filter(_.kind == "data").map(_.path))))
     val resolved = fromEntries.orElse(externalSchema)
       .getOrElse(org.apache.spark.sql.Encoders.product[graft.model.ExtractedTurn].schema)
     // a LIVE table whose CREATE/ALTER metadata extends the data's schema

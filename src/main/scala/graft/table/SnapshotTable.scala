@@ -383,10 +383,8 @@ final class SnapshotTable(val dir: String, val numBuckets: Int) {
       else if (ddls.size == 1 && dataEntries.forall(_.schema.nonEmpty))
         SnapshotTable.parseSchema(ddls.head)
       else None
-    val paths = dataEntries.map(_.path)
-    SnapshotRead.frame(spark, dir, snap.id, snap.buckets, dataEntries,
-      schema.getOrElse(SnapshotRead.footerSchema(spark, dir, snap.id, paths,
-        SnapshotRead.listFiles(spark, dir, snap.id, paths).flatten)))
+    SnapshotRead.frame(spark, dir, snap.id, snap.buckets, dataEntries, schema.getOrElse(
+      SnapshotRead.footerSchema(spark, dir, snap.id, dataEntries.map(_.path))))
   }
 
   /** Logical rows of an entry set of snapshot `snap`: data minus pending

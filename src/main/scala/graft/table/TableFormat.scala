@@ -3,7 +3,6 @@ package graft.table
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.table.SnapshotTable.BucketEntry
 import org.apache.spark.sql.catalyst.util.QuotingUtils
-import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 import java.nio.file.{Files, Path, Paths}
 import java.time.{Instant, LocalDateTime, ZoneOffset}
@@ -182,35 +181,6 @@ object TableFormat {
     * are positional, so this only redirects parquet column resolution. */
   def toPhysical(byName: Map[String, String], schema: StructType): StructType =
     StructType(schema.fields.map(f => byName.get(f.name).fold(f)(p => f.copy(name = p))))
-
-  /** Rewrite filter attribute names logical→physical so pushed filters
-    * keep driving parquet row-group skipping after a rename. Filters
-    * naming un-mapped columns pass through; filter shapes outside the
-    * rewritable subset are DROPPED — safe because every pushed filter is
-    * also kept residual (Spark re-evaluates rows). */
-  def filtersToPhysical(byName: Map[String, String], filters: Array[Filter]): Array[Filter] =
-    if (byName.isEmpty) filters else {
-      def ren(a: String): String = byName.getOrElse(a, a)
-      def go(f: Filter): Option[Filter] = f match {
-        case EqualTo(a, v)            => Some(EqualTo(ren(a), v))
-        case EqualNullSafe(a, v)      => Some(EqualNullSafe(ren(a), v))
-        case GreaterThan(a, v)        => Some(GreaterThan(ren(a), v))
-        case GreaterThanOrEqual(a, v) => Some(GreaterThanOrEqual(ren(a), v))
-        case LessThan(a, v)           => Some(LessThan(ren(a), v))
-        case LessThanOrEqual(a, v)    => Some(LessThanOrEqual(ren(a), v))
-        case In(a, vs)                => Some(In(ren(a), vs))
-        case IsNull(a)                => Some(IsNull(ren(a)))
-        case IsNotNull(a)             => Some(IsNotNull(ren(a)))
-        case StringStartsWith(a, v)   => Some(StringStartsWith(ren(a), v))
-        case StringEndsWith(a, v)     => Some(StringEndsWith(ren(a), v))
-        case StringContains(a, v)     => Some(StringContains(ren(a), v))
-        case And(l, r) => for { a <- go(l); b <- go(r) } yield And(a, b)
-        case Or(l, r)  => for { a <- go(l); b <- go(r) } yield Or(a, b)
-        case Not(c)    => go(c).map(Not)
-        case _         => None
-      }
-      filters.flatMap(go)
-    }
 
   // -------------------------------------------------------- table at a snapshot
 
