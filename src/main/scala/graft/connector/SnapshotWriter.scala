@@ -1,6 +1,6 @@
 package graft.connector
 
-import graft.table.{SnapshotTable, TableFormat}
+import graft.table.{NioLocalFileSystem, SnapshotTable, TableFormat}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskID, TaskType}
@@ -58,7 +58,11 @@ import org.apache.spark.util.SerializableConfiguration
   * (`part-<partitionId>`); (4) publishes manifest-then-CURRENT through
   * [[SnapshotTable.commitEntries]] under its optimistic-concurrency
   * claim. A crash at ANY point leaves the previous snapshot live and only
-  * invisible files on disk.
+  * invisible files on disk. The tasks' and the driver's file operations
+  * run on [[SnapshotWriterUtil.hadoopConf]]: Hadoop's checksummed local
+  * file system, with modes set in process instead of by a forked `chmod`
+  * per file and directory; the bytes, `.crc` sidecars and modes on disk
+  * are Hadoop's.
   */
 final class SnapshotWriteBuilder(dir: String, numBuckets: Int, info: LogicalWriteInfo)
   extends WriteBuilder with SupportsTruncate {
@@ -106,7 +110,16 @@ final class SnapshotWriteBuilder(dir: String, numBuckets: Int, info: LogicalWrit
   * partitions the shuffle has, every file holds contiguous, order-restored
   * conversations, and a task holds one file open at a time. `schema` is
   * the rows' schema as the query produces them; what happens at the
-  * driver commit is the `batch` write's business. */
+  * driver commit is the `batch` write's business.
+  *
+  * The write stage has `min(numBuckets, defaultParallelism)` partitions.
+  * Left to AQE, a commit's shuffle coalesces into partitions of at least
+  * `minPartitionSize` (1 MB), so a ~1 MB commit ran one task that wrote
+  * every bucket file in a row whatever the core count. The exchange
+  * hash-partitions the bucket ids (Murmur3, seed 42), so the spread is
+  * uneven: 16 buckets land 6/4/3/3 on 4 partitions, and on 16 partitions
+  * 10 are non-empty with at most 2 each. A task whose partition holds no
+  * bucket opens no file. */
 final class SnapshotWrite(schema: StructType, numBuckets: Int, batch: BatchWrite)
   extends Write with RequiresDistributionAndOrdering {
 
@@ -116,6 +129,9 @@ final class SnapshotWrite(schema: StructType, numBuckets: Int, batch: BatchWrite
   private val bucket = Expressions.bucket(numBuckets, "conv_id")
 
   override def requiredDistribution(): Distribution = Distributions.clustered(Array(bucket))
+
+  override def requiredNumPartitions(): Int =
+    math.min(numBuckets, SparkSession.active.sparkContext.defaultParallelism)
 
   override def requiredOrdering(): Array[SortOrder] = {
     val keys = Seq(bucket, Expressions.column("conv_id")) ++
@@ -210,13 +226,18 @@ private[graft] object SnapshotWriterUtil {
   def streamScope(spark: SparkSession): String =
     Option(spark.sparkContext.getLocalProperty(StreamExecution.QUERY_ID_KEY)).getOrElse("stream")
 
+  /** The Hadoop conf of a write's own file operations (its tasks' and its
+    * driver commit's): the session's, with `file:` on [[NioLocalFileSystem]]
+    * so no local create or mkdir forks a `chmod`. */
+  def hadoopConf(spark: SparkSession): Configuration =
+    NioLocalFileSystem.install(spark.sessionState.newHadoopConf())
+
   /** The write's task factory. The Hadoop conf (a thousand-odd
     * properties, ~100 KB serialized) travels as one broadcast per write, so
     * a write task deserializes a few KB of factory instead of the conf. */
   def writerFactory(spark: SparkSession, schema: StructType,
       dataPath: String, numBuckets: Int): SnapshotDataWriterFactory = {
-    val hconf = spark.sessionState.newHadoopConfWithOptions(Map.empty)
-    val job = Job.getInstance(hconf)
+    val job = Job.getInstance(hadoopConf(spark))
     val factory = ParquetUtils.prepareWrite(
       spark.sessionState.conf, job, schema,
       new ParquetOptions(Map.empty[String, String], spark.sessionState.conf))
@@ -249,7 +270,7 @@ private[graft] object SnapshotWriterUtil {
   def publish(spark: SparkSession, dir: String, numBuckets: Int,
       dataPath: String, runId: String, schema: StructType,
       messages: Array[WriterCommitMessage], rule: PublishRule = PublishRule()): Option[Long] = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf(spark)
     val fs = new HPath(dataPath).getFileSystem(conf)
 
     // (2) a crashed prior attempt of this run may have renamed files with
@@ -304,7 +325,7 @@ private[graft] object SnapshotWriterUtil {
     * invisible and removeOrphanFiles reclaims them. */
   def guardedAbort(spark: SparkSession, dir: String, numBuckets: Int,
       dataPath: String, runId: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf(spark)
     dropStaging(conf, dataPath)
     if (!runIdCommitted(dir, numBuckets, runId)) {
       val p = new HPath(dataPath)

@@ -4,7 +4,6 @@ import graft.gen.TranscriptGen
 import graft.table.BucketedTable
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The co-located join story (SURVEY §2.10 / VERDICT round-1 gap #7): a
   * conv_id-bucketed fact joined with a conv_id-bucketed dimension must plan
@@ -14,7 +13,7 @@ class BucketedJoinSpec extends AnyFunSuite with SparkTestBase {
 
   test("join of two same-bucketed tables has no Exchange on either side") {
     import testImplicits._
-    val base = Files.createTempDirectory("buck").toString
+    val base = suiteTempDir("buck")
     val turns = TranscriptGen.dataset(spark, 42L, nConvs = 50, hotBase = 100)
     val perConv = turns.groupBy("conv_id")
       .agg(count(lit(1)).as("n_turns"), max("turn_idx").as("last_idx"))

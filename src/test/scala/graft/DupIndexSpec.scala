@@ -18,7 +18,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("self-probe reproduces the in-memory banded candidate set, and exact " +
     "copies score est_jaccard = 1.0 from the stored signatures") {
-    val dir = Files.createTempDirectory("dupidx1").toString + "/idx"
+    val dir = suiteTempDir("dupidx1") + "/idx"
     val idx = DupIndex.build(spark, docs, dir)
 
     val selfPairs = idx.probe(spark, docs, minEst = 0.0)
@@ -43,7 +43,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("probe IO prunes to the probed cells: every scanned file lies in a " +
     "probed cell, and hiding an UNPROBED cell directory does not disturb " +
     "the probe") {
-    val dir = Files.createTempDirectory("dupidx2").toString + "/idx"
+    val dir = suiteTempDir("dupidx2") + "/idx"
     val idx = DupIndex.build(spark, docs, dir)
     val one = docs.limit(1)
     val probedCells = DupIndex.bands(one)
@@ -78,7 +78,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("append: new batch probe-able against base + appended runs; base " +
     "file-set byte-untouched; duplicate runId refused") {
-    val dir = Files.createTempDirectory("dupidx3").toString + "/idx"
+    val dir = suiteTempDir("dupidx3") + "/idx"
     val idx = DupIndex.build(spark, docs.limit(100), dir)
 
     def baseFiles() = {
@@ -114,7 +114,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("ingestBatch gate: index-dups and in-batch lower-id dups dropped, " +
     "survivors appended, replayed batchId is a NO-OP (exactly-once index " +
     "state under foreachBatch's at-least-once delivery)") {
-    val dir = Files.createTempDirectory("dupidx4").toString + "/idx"
+    val dir = suiteTempDir("dupidx4") + "/idx"
     // deterministic membership (a bare limit() takes arbitrary rows)
     val corpus = docs.filter(col("doc_id") < 50)
     val idx = DupIndex.build(spark, corpus, dir)
@@ -160,7 +160,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.streaming.Trigger
     import testImplicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("dupidx5").toString
+    val dir = suiteTempDir("dupidx5")
     val corpus = docs.filter(col("doc_id") < 50)
     val idx = DupIndex.build(spark, corpus, s"$dir/idx")
 
@@ -195,7 +195,7 @@ class DupIndexSpec extends AnyFunSuite with SparkTestBase {
   test("crash-replay: a run directory WITHOUT _SUCCESS (committer died " +
     "mid-append) is cleaned and re-appended on redelivery — bare directory " +
     "existence is not the idempotence marker") {
-    val dir = Files.createTempDirectory("dupidx6").toString + "/idx"
+    val dir = suiteTempDir("dupidx6") + "/idx"
     val idx = DupIndex.build(spark, docs.filter(col("doc_id") < 50), dir)
     // simulate the crash residue a dying writer actually leaves: the run
     // directory with an in-flight _temporary tree and no _SUCCESS

@@ -5,7 +5,6 @@ import graft.kernel.{Extractor, ExtractorContext}
 import graft.model.{ExtractConfig, ExtractedTurn, Turn}
 import graft.pipe.{ExtractPipeline, KernelStep, QuarantineRecord}
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -157,7 +156,7 @@ class KernelStepSpec extends AnyFunSuite with SparkTestBase {
 
   test("the flagship plan has no object (de)serialization and one exchange") {
     import testImplicits._
-    val dir = Files.createTempDirectory("kstep").toString
+    val dir = suiteTempDir("kstep")
     TranscriptGen.dataset(spark, 42L, nConvs = 10, hotBase = 20).write.mode("overwrite").parquet(dir)
     val ds = ExtractPipeline.run(spark, spark.read.parquet(dir).as[Turn])
     val plan = ds.queryExecution.executedPlan.toString

@@ -22,7 +22,7 @@ class LibraryCommitSpec extends AnyFunSuite with SparkTestBase {
 
   test("ExtractJob.runIncremental twice with one runId: the second run fails " +
     "fast and the live snapshot stays readable with every manifest path present") {
-    val dir = Files.createTempDirectory("runid_reuse").toString
+    val dir = suiteTempDir("runid_reuse")
     val table = new SnapshotTable(dir, numBuckets = 4)
     val turns = TranscriptGen.dataset(spark, 42L, 20, 40, partitions = 2)
     assert(ExtractJob.runIncremental(spark, table, turns, runId = "r1").contains(0L))
@@ -53,7 +53,7 @@ class LibraryCommitSpec extends AnyFunSuite with SparkTestBase {
     }
     spark.listenerManager.register(listener)
     try {
-      val table = new SnapshotTable(Files.createTempDirectory("one_append").toString, 4)
+      val table = new SnapshotTable(suiteTempDir("one_append"), 4)
       val turns = TranscriptGen.dataset(spark, 7L, 8, 20, partitions = 2)
       assert(table.commit(spark, ExtractPipeline.extract(spark, turns), "c1").contains(0L))
       // listener delivery is async; poll briefly
@@ -75,7 +75,7 @@ class LibraryCommitSpec extends AnyFunSuite with SparkTestBase {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "16")
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    val table = new SnapshotTable(Files.createTempDirectory("one_file").toString, 4)
+    val table = new SnapshotTable(suiteTempDir("one_file"), 4)
     val turns = TranscriptGen.dataset(s, 3L, 40, 20, partitions = 4)
     assert(table.commit(s, ExtractPipeline.extract(s, turns), "w1").contains(0L))
     table.compact(s, "c1")

@@ -2,7 +2,7 @@ package graft
 
 import graft.table.{SnapshotTable, TableFormat}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.time.{LocalDateTime, ZoneOffset}
 
 /** Manifest lines written by older writers — no `schema`, no `kind`, no
@@ -18,7 +18,7 @@ class ManifestParseSpec extends AnyFunSuite with SparkTestBase {
 
   /** A table dir holding the given manifests (id → lines). */
   private def tableWith(manifests: (Long, Seq[String])*): Path = {
-    val dir = Files.createTempDirectory("legacy-manifest")
+    val dir = Paths.get(suiteTempDir("legacy-manifest"))
     Files.createDirectories(dir.resolve("manifests"))
     manifests.foreach { case (id, lines) =>
       Files.writeString(dir.resolve(s"manifests/snap-$id.json"), lines.mkString("\n"))

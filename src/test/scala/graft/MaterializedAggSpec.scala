@@ -38,7 +38,7 @@ class MaterializedAggSpec extends AnyFunSuite with SparkTestBase {
   test("incremental refresh reads ONLY the delta and equals the full aggregate; " +
     "no-op when current; rewrite falls back to full recompute") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapagg").toString
+    val dir = suiteTempDir("snapagg")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val ma = new MaterializedAgg(table, s"$dir/view")
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
@@ -88,7 +88,7 @@ class MaterializedAggSpec extends AnyFunSuite with SparkTestBase {
     "is bit-identical to a from-scratch sketch of the union, and the decoded " +
     "estimate tracks the exact per-group distinct count") {
     import testImplicits._
-    val dir = Files.createTempDirectory("snapagghll").toString
+    val dir = suiteTempDir("snapagghll")
     val table = new SnapshotTable(dir, numBuckets = 8)
     val ma = new MaterializedAgg(table, s"$dir/view")
     val turns = TranscriptGen.dataset(spark, seed, nConvs, hotBase, partitions = 4)
@@ -148,7 +148,7 @@ class MaterializedAggSpec extends AnyFunSuite with SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.streaming.Trigger
     implicit val sqlCtx = spark.sqlContext
-    val dir = Files.createTempDirectory("snapaggstream").toString
+    val dir = suiteTempDir("snapaggstream")
     val table = new SnapshotTable(s"$dir/table", numBuckets = 4)
     val ma = new MaterializedAgg(table, s"$dir/view")
     val turns = TranscriptGen.corpus(11L, nConvs = 16, hotBase = 30).map(_.turn).toVector

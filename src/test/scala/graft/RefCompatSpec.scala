@@ -3,7 +3,7 @@ package graft
 import graft.model.{ExtractedTurn, Span}
 import graft.table.SnapshotTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
@@ -30,7 +30,7 @@ class RefCompatSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("hand-written refs and stale fixed-name tmps open, commit, tag and fast-forward") {
-    val warehouse = Files.createTempDirectory("refcompat")
+    val warehouse = Paths.get(suiteTempDir("refcompat"))
     val dir: Path = warehouse.resolve("t")
     val writer = new SnapshotTable(dir.toString, 4)
     assert(writer.commit(spark, rows("a", 6), "r0").contains(0L))

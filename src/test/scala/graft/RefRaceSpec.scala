@@ -4,7 +4,6 @@ import graft.connector.{PublishRule, SnapshotWriterUtil}
 import graft.model.{ExtractedTurn, Span}
 import graft.table.SnapshotTable
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 import java.sql.Timestamp
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import scala.concurrent.{Await, ExecutionContext, Future}
@@ -44,7 +43,7 @@ class RefRaceSpec extends AnyFunSuite with SparkTestBase {
   }
 
   private def freshTable(): SnapshotTable = {
-    val table = new SnapshotTable(Files.createTempDirectory("refrace").toString, 4)
+    val table = new SnapshotTable(suiteTempDir("refrace"), 4)
     assert(table.commit(spark, rows("base", 8), "base").contains(0L))
     table
   }

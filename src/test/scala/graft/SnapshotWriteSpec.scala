@@ -1,12 +1,19 @@
 package graft
 
+import graft.connector.SnapshotWriterUtil
 import graft.model.{ExtractedTurn, Span}
-import graft.table.SnapshotTable
+import graft.table.{NioLocalFileSystem, SnapshotTable}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** DataSource V2 WRITE path: df.write.format("graft-snapshot") must create
   * real snapshots — data first, per-task stats merged into manifest entries,
@@ -284,5 +291,134 @@ class SnapshotWriteSpec extends AnyFunSuite with SparkTestBase {
     val bytes = org.apache.spark.SparkEnv.get.closureSerializer.newInstance()
       .serialize(factory).limit()
     assert(bytes < 16 * 1024, s"the write factory serializes to $bytes bytes")
+  }
+
+  private def mode(p: Path): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0x0fff
+
+  private def walk(dir: String): Seq[Path] =
+    Files.walk(Paths.get(dir)).iterator().asScala.toSeq
+
+  test("a commit's data files, .crc sidecars and bucket dirs carry the modes " +
+    "Hadoop's local file system gives, and every .crc verifies") {
+    import testImplicits._
+    val ref = suiteTempDir("v2write_mode_ref")
+    val local = FileSystem.getLocal(new Configuration())
+    local.create(new HPath(s"$ref/f")).close()
+    local.mkdirs(new HPath(s"$ref/d"))
+    val (fileMode, dirMode) = (mode(Paths.get(ref, "f")), mode(Paths.get(ref, "d")))
+    assert(mode(Paths.get(ref, ".f.crc")) == fileMode)
+
+    val dir = suiteTempDir("v2write_mode")
+    val table = new SnapshotTable(dir, 16)
+    table.commit(spark, (0 until 64).map(i => mk(s"m$i", 0)).toDS(), "m1")
+    val files = walk(s"$dir/data").filter(Files.isRegularFile(_))
+    val data = files.filter(_.getFileName.toString.endsWith(".parquet"))
+    val crcs = files.filter(_.getFileName.toString.endsWith(".crc"))
+    val dirs = walk(s"$dir/data/run=m1").filter(Files.isDirectory(_))
+    assert(data.size == table.committedEntries(spark).size && data.nonEmpty)
+    assert(crcs.size == data.size)
+    assert(dirs.count(_.getFileName.toString.startsWith("bucket=")) == data.size)
+    (data ++ crcs).foreach(f => assert(mode(f) == fileMode, f))
+    dirs.foreach(d => assert(mode(d) == dirMode, d))
+    data.foreach { f =>
+      val in = local.open(new HPath(f.toUri))
+      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+    }
+  }
+
+  test("the write's task and commit confs resolve file: to NioLocalFileSystem; " +
+    "the session's conf does not") {
+    val dir = suiteTempDir("v2write_fsclass")
+    val schema = org.apache.spark.sql.Encoders.product[ExtractedTurn].schema
+    val root = new java.net.URI("file:///")
+    val factory = SnapshotWriterUtil.writerFactory(spark, schema, s"$dir/data/run=f", 16)
+    assert(FileSystem.get(root, factory.conf.value.value).isInstanceOf[NioLocalFileSystem])
+    assert(FileSystem.get(root, SnapshotWriterUtil.hadoopConf(spark))
+      .isInstanceOf[NioLocalFileSystem])
+    val session = FileSystem.get(root, spark.sparkContext.hadoopConfiguration)
+    assert(!session.isInstanceOf[NioLocalFileSystem], session.getClass)
+    assert(spark.sparkContext.hadoopConfiguration.get("fs.file.impl") == null)
+    assert(spark.sessionState.newHadoopConf().get("fs.file.impl") == null)
+  }
+
+  /** Tasks of the last stage of every job `body` runs, once the listener
+    * has seen those jobs end. */
+  private def lastStageTasks(body: => Unit): Seq[Int] = {
+    val sc = spark.sparkContext
+    val group = s"probe-${System.nanoTime()}"
+    val lastStage = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val tasks = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val marker = new java.util.concurrent.ConcurrentHashMap[Int, Boolean]()
+    @volatile var markerEnded = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => lastStage.put(e.jobId, e.stageIds.max)
+          case Some(g) if g == s"$group-end" => marker.put(e.jobId, true)
+          case _ => ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        tasks.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (marker.containsKey(e.jobId)) markerEnded = true
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "write-stage probe")
+      try body finally sc.clearJobGroup()
+      // one later job: the listener sees events in order, so once it sees
+      // this job end it has seen every event of `body`
+      sc.setJobGroup(s"$group-end", "write-stage probe marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!markerEnded && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(markerEnded, "listener never saw the marker job end")
+      lastStage.asScala.toSeq.sortBy(_._1).map { case (_, st) => tasks.get(st) }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a 16-bucket commit writes on min(16, defaultParallelism) tasks and " +
+    "still commits one file per bucket") {
+    import testImplicits._
+    assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    val table = new SnapshotTable(suiteTempDir("v2write_width"), 16)
+    val rows = (0 until 400).flatMap(i => Seq(mk(s"w$i", 0), mk(s"w$i", 1)))
+    val perJob = lastStageTasks(table.commit(spark, rows.toDS(), "w1"))
+    assert(perJob.last == math.min(16, spark.sparkContext.defaultParallelism), perJob)
+    val entries = table.committedEntries(spark)
+    assert(entries.size == 16)
+    entries.foreach { e =>
+      val files = Files.list(Paths.get(e.path)).iterator().asScala
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      assert(files == 1, s"${e.path}: $files files")
+    }
+    assert(table.read(spark).count() == rows.size)
+  }
+
+  test("a sticky or non-POSIX permission falls back to Hadoop's own chmod") {
+    val dir = suiteTempDir("v2write_sticky")
+    val conf = NioLocalFileSystem.install(new Configuration())
+    val fs = new HPath(dir).getFileSystem(conf)
+    assert(fs.isInstanceOf[NioLocalFileSystem])
+    val d = new HPath(s"$dir/d")
+    assert(fs.mkdirs(d))
+    fs.setPermission(d, new FsPermission(Integer.parseInt("1750", 8).toShort))
+    assert(mode(Paths.get(dir, "d")) == Integer.parseInt("1750", 8))
+    fs.setPermission(d, new FsPermission(Integer.parseInt("0710", 8).toShort))
+    assert(mode(Paths.get(dir, "d")) == Integer.parseInt("0710", 8))
+
+    val plain = Paths.get(dir, "plain")
+    Files.createFile(plain)
+    assert(!NioLocalFileSystem.chmod(plain, new FsPermission(Integer.parseInt("1644", 8).toShort)))
+    assert(NioLocalFileSystem.chmod(plain, new FsPermission(Integer.parseInt("0604", 8).toShort)))
+    assert(mode(plain) == Integer.parseInt("0604", 8))
+
+    val zip = java.nio.file.FileSystems.newFileSystem(Paths.get(dir, "z.zip"),
+      Map("create" -> "true").asJava)
+    try {
+      val inZip = zip.getPath("/f")
+      Files.write(inZip, Array[Byte](1))
+      assert(!NioLocalFileSystem.chmod(inZip, new FsPermission(Integer.parseInt("0644", 8).toShort)))
+    } finally zip.close()
   }
 }

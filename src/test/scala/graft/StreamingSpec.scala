@@ -162,7 +162,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("snapshot sink: streaming batches land in the table; replayed batches are no-ops") {
     import testImplicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream_snap").toString
+    val dir = suiteTempDir("stream_snap")
     val table = new graft.table.SnapshotTable(s"$dir/table", numBuckets = 4)
     val goldens = TranscriptGen.corpus(11L, nConvs = 12, hotBase = 30).toVector
 
@@ -214,7 +214,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     "(no duplicate beside it); replayed merge batches are no-ops") {
     import testImplicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("stream_upsert").toString
+    val dir = suiteTempDir("stream_upsert")
     val table = new graft.table.SnapshotTable(s"$dir/table", numBuckets = 4)
     val turns = TranscriptGen.corpus(11L, nConvs = 10, hotBase = 20).toVector.map(_.turn)
     val rows = graft.pipe.ExtractPipeline.extract(spark, turns.toDS()).collect().toSeq

@@ -6,7 +6,7 @@ import graft.table.SnapshotTable
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.Paths
 import java.util.concurrent.atomic.AtomicInteger
 
 /** Task-RETRY exactly-once evidence (the failure mode a 1000-executor
@@ -75,8 +75,8 @@ class TaskRetrySpec extends AnyFunSuite with SparkTestBase {
   test("snapshot commit: map-task retry neither double-counts manifest stats nor duplicates rows") {
     withRetrySession { s =>
       val turns = TranscriptGen.dataset(s, seed, nConvs, hotBase, partitions = 4)
-      val dirInj = Files.createTempDirectory("snapretry_inj").toString
-      val dirClean = Files.createTempDirectory("snapretry_clean").toString
+      val dirInj = suiteTempDir("snapretry_inj")
+      val dirClean = suiteTempDir("snapretry_clean")
       val tInj = new SnapshotTable(dirInj, numBuckets = 8)
       val tClean = new SnapshotTable(dirClean, numBuckets = 8)
 
@@ -110,7 +110,7 @@ class TaskRetrySpec extends AnyFunSuite with SparkTestBase {
     withRetrySession { s =>
       import s.implicits._
       val turns = TranscriptGen.dataset(s, seed, nConvs, hotBase, partitions = 4)
-      val out = Files.createTempDirectory("retry_parquet").resolve("out").toString
+      val out = Paths.get(suiteTempDir("retry_parquet"), "out").toString
 
       TaskRetrySpec.fired.set(0)
       // wrapper fuses into the post-shuffle RESULT task (order-restore sort

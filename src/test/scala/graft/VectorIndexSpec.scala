@@ -26,7 +26,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("build → open → search reproduces the in-memory q_knn_ivf result " +
     "bit-for-bit (same training sample, same plan semantics, persisted lists)") {
-    val dir = Files.createTempDirectory("vidx").toString + "/idx"
+    val dir = suiteTempDir("vidx") + "/idx"
     VectorIndex.build(spark, vecs, dir)
     val idx = VectorIndex.open(dir)
     val got = rows(idx.search(spark, queriesDf(100, 110), k = 5, nprobe = 2))
@@ -37,7 +37,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("search opens ONLY the probed lists: hiding an unprobed cent_id " +
     "directory does not disturb the search") {
-    val dir = Files.createTempDirectory("vidx2").toString + "/idx"
+    val dir = suiteTempDir("vidx2") + "/idx"
     val idx = VectorIndex.build(spark, vecs, dir)
     val q = queriesDf(100, 102)
     val baseline = rows(idx.search(spark, q, k = 5, nprobe = 2))
@@ -71,7 +71,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestBase {
 
   test("searchAdc reproduces the in-memory q_knn_pq result bit-for-bit " +
     "from the PERSISTED codes (IVF-ADC + exact refine, on-disk layout)") {
-    val dir = Files.createTempDirectory("vidx4").toString + "/idx"
+    val dir = suiteTempDir("vidx4") + "/idx"
     VectorIndex.build(spark, vecs, dir)
     val idx = VectorIndex.open(dir)
     val got = rows(idx.searchAdc(spark, queriesDf(100, 110), k = 5, nprobe = 2))
@@ -85,7 +85,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestBase {
   test("append encodes against the FIXED codebooks (no retrain): CODEBOOKS " +
     "byte-identical after append, appended copy found by ADC search") {
     import testImplicits._
-    val dir = Files.createTempDirectory("vidx5").toString + "/idx"
+    val dir = suiteTempDir("vidx5") + "/idx"
     val idx = VectorIndex.build(spark, vecs, dir)
     val booksBefore = Files.readAllBytes(Paths.get(s"$dir/CODEBOOKS")).toSeq
 
@@ -103,7 +103,7 @@ class VectorIndexSpec extends AnyFunSuite with SparkTestBase {
   test("append without retraining: an exact copy of a query vector becomes " +
     "its top-1 neighbor; the base file-set is byte-untouched") {
     import testImplicits._
-    val dir = Files.createTempDirectory("vidx3").toString + "/idx"
+    val dir = suiteTempDir("vidx3") + "/idx"
     val idx = VectorIndex.build(spark, vecs, dir)
     def baseFiles = {
       val w = Files.walk(Paths.get(s"$dir/lists/run=base"))

@@ -29,7 +29,7 @@ class WapSpec extends AnyFunSuite with SparkTestBase {
 
   private def freshTable(n: Int): (String, SnapshotTable) = {
     import testImplicits._
-    val dir = Files.createTempDirectory("wap").toString
+    val dir = suiteTempDir("wap")
     (0 until n).map(i => mk(s"w$i", 0, "base")).toDS().toDF()
       .write.format("graft-snapshot").mode("append")
       .option("numBuckets", "4").option("runId", "w1").save(dir)
